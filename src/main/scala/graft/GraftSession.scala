@@ -25,21 +25,17 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   def configure(
-      b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = {
-    val c = b
-      .config("spark.sql.adaptive.enabled", "true")
+      b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+    b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-    // file:// permission writes as NIO syscalls, not forked chmod
-    // processes (see NoForkLocalFs) — kill-switch for A/B disputes
-    if (sys.env.getOrElse("SPARK_GRAFT_NOFORKFS", "1") != "0")
-      c.config("spark.hadoop.fs.file.impl",
+      // file:// permission writes as NIO syscalls, not forked chmod
+      // processes (see NoForkLocalFs)
+      .config("spark.hadoop.fs.file.impl",
         classOf[graft.sources.NoForkLocalFileSystem].getName)
-    else c
-  }
 
   /** The harness shape: local[cpus], UI off, partitions = cores. */
   def local(cpus: Int): SparkSession = {

@@ -189,6 +189,14 @@ object MambaEtlJob {
     * encounters live in (dynamic partition overwrite + explicit
     * removeKeys, so a fully-voided encounter's row disappears from
     * its old month). Write amplification per tick tracks the delta.
+    *
+    * A type wider than `config.columns` ticks each of its
+    * continuation tables the same way. When the type's concept set
+    * has changed since its tables were written (a concept first used,
+    * voided away or renamed), the delta's columns no longer match the
+    * stored ones; that tick rebuilds every table of the type from the
+    * sources, laid out as [[runPersisted]] writes them, each through a
+    * crash-safe swap.
     */
   def tickPersisted(spark: SparkSession, config: EtlConfig, src: Sources,
       encounterTypeId: Int, storeRoot: String,
@@ -197,6 +205,7 @@ object MambaEtlJob {
     val cfg = flatConfigs.getOrElse(encounterTypeId,
       Flatten.autoConfig(src.obs, src.encounter, src.concept,
         encounterTypeId, locale = Some(config.locale)))
+      .copy(tableName = s"mamba_flat_encounter_$encounterTypeId")
     val changed = graft.operators.Incremental
       .changedSince(src.obs, changedSince, Seq("obs_datetime"))
       .select("encounter_id").distinct()
@@ -204,11 +213,30 @@ object MambaEtlJob {
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)
       .select("encounter_id", "patient_id", "encounter_datetime")
-    val flatDelta = withVisitMonth(
-      Flatten.flattenObs(affected, cfg).join(encIds, Seq("encounter_id")))
-    graft.sources.AnalysisStore.writeIncrementalPartitioned(spark, flatDelta,
-      s"$storeRoot/mamba_flat_encounter_$encounterTypeId",
-      keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
-      removeKeys = Some(changed))
+    // (store path, wide rows) per continuation table of the type
+    def flat(obs: DataFrame) =
+      Flatten.flattenObsSplit(obs, cfg, config.columns).map { case (t, df) =>
+        s"$storeRoot/$t" ->
+          withVisitMonth(df.join(encIds, Seq("encounter_id")))
+      }
+    val deltas = flat(affected)
+    val store = graft.sources.AnalysisStore
+    val stored = deltas.map { case (path, _) => store.readExisting(spark, path) }
+    val reshaped = stored.exists(_.isDefined) &&
+      stored.zip(deltas).exists { case (table, (_, delta)) =>
+        !table.exists(_.columns.toSet == delta.columns.toSet)
+      }
+    if (reshaped)
+      flat(src.obs).foreach { case (path, df) =>
+        store.stageAndSwap(spark, path) { staging =>
+          store.writeFull(df, staging, Seq("visit_month"))
+        }
+      }
+    else
+      deltas.zip(stored).foreach { case ((path, delta), table) =>
+        store.writeIncrementalPartitioned(spark, delta, path,
+          keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
+          removeKeys = Some(changed), existing = table)
+      }
   }
 }

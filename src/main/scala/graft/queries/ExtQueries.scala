@@ -732,17 +732,18 @@ object ExtQueries {
         .withColumn("value", round(col("value"), 4))
     },
 
-    "pca_gate" -> QueryDef(
+    "pca_gate" -> QueryDef.gateFrame(
       doc = "PCA internal-consistency gate (the ann_recall_* pattern): axes orthonormal, eigenvalues descending, explained ratio in (0,1], corpus-avg reconstruction error == residual eigen mass (1e-6 rel), per-component projection variance == eigenvalue (1e-6 rel) — the identities that fail if fit, project, or reconstruct drift",
-      oracle = "SELECT CAST(1 AS INTEGER) AS orthonormal_ok, CAST(1 AS INTEGER) AS eigvals_ok, CAST(1 AS INTEGER) AS explained_ok, CAST(1 AS INTEGER) AS recon_ok, CAST(1 AS INTEGER) AS projvar_ok") { (s, dir) =>
+      "orthonormal_ok", "eigvals_ok", "explained_ok", "recon_ok",
+      "projvar_ok") { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val model = graft.operators.Pca.fit(e, "embedding", k = 16)
       graft.operators.Pca.consistencyGate(e, "embedding", model)
     },
 
-    "pca_delta_gate" -> QueryDef(
+    "pca_delta_gate" -> QueryDef.gate(
       doc = "incremental-PCA gate: the model refit from persisted-base + delta moment statistics (additive sufficient stats — the historical corpus is never re-scanned) must match the full-corpus model — eigenvalues to 1e-9 rel, every axis aligned (dot > 1−1e-9), total variance to 1e-9",
-      oracle = "SELECT CAST(1 AS INTEGER) AS eig_ok, CAST(1 AS INTEGER) AS axes_ok, CAST(1 AS INTEGER) AS var_ok") { (s, dir) =>
+      "eig_ok", "axes_ok", "var_ok") { (s, dir) =>
       import graft.operators.Pca
       val e = Tables.load(s, dir, "embeddings")
       val merged = Pca.fitFromStats(
@@ -759,11 +760,7 @@ object ExtQueries {
       }
       val varOk =
         math.abs(merged.totalVariance - full.totalVariance) < 1e-9
-      import s.implicits._
-      Seq((eigOk, axesOk, varOk)).toDF("e", "a", "v")
-        .select(col("e").cast("int").as("eig_ok"),
-          col("a").cast("int").as("axes_ok"),
-          col("v").cast("int").as("var_ok"))
+      Seq(eigOk, axesOk, varOk)
     },
 
     "ann_topk_pca" -> QueryDef.dynamicOracle(
@@ -987,9 +984,9 @@ object ExtQueries {
         "vec_id", "embedding", threshold = 0.4, bitsPerTable = b, tables = t)
     },
 
-    "dedup_semantic_gate" -> QueryDef(
+    "dedup_semantic_gate" -> QueryDef.gateFrame(
       doc = "agreement gate: recall of the LSH semantic-pair set vs exact all-pairs cosine (≥0.9 ⇒ semantic_ok=1) — the driver-visible regression check for the approximate semantic-dedup path",
-      oracle = "SELECT CAST(1 AS INTEGER) AS semantic_ok") { (s, dir) =>
+      "semantic_ok") { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val (b, t) = Dedup.signLshPlan(Tables.count(s, dir, "embeddings"), 0.4)
       // exact baseline ∥ approximate path (Par: guide §2.6 overlap)
@@ -1005,7 +1002,7 @@ object ExtQueries {
         .agg((sum(coalesce(col("hit"), lit(0))).cast("double") /
           count(lit(1))).as("recall"))
         .select((coalesce(col("recall"), lit(1.0)) >= 0.9)
-          .cast("int").as("semantic_ok"))
+          .as("semantic_ok"))
     },
 
     "dedup_semdedup" -> QueryDef.dynamicOracle(
@@ -1049,9 +1046,9 @@ object ExtQueries {
         cents, "vec_id", threshold = 0.4)
     },
 
-    "dedup_semdedup_gate" -> QueryDef(
+    "dedup_semdedup_gate" -> QueryDef.gateFrame(
       doc = "SemDeDup invariant gate (k-means not SQL-expressible — the text_bpe_gate pattern): output partitions the corpus exactly; recomputing the drop set from the EXACT all-pairs cosine edges restricted to the operator's clusters reproduces it verbatim; and no surviving same-cluster pair is above threshold",
-      oracle = "SELECT CAST(1 AS INTEGER) AS drops_ok, CAST(1 AS INTEGER) AS no_dup_kept_ok, CAST(1 AS INTEGER) AS partition_ok") { (s, dir) =>
+      "drops_ok", "no_dup_kept_ok", "partition_ok") { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val nCorpus = Tables.count(s, dir, "embeddings")
       // operator output ∥ exact ground truth (Par: guide §2.6 overlap)
@@ -1083,8 +1080,7 @@ object ExtQueries {
         (col("dup_a") || col("dup_b")).cast("int")), lit(1))
         .as("no_dup_kept_ok"))
       val partitionOk = out.agg(((count(lit(1)) === nCorpus) &&
-        (countDistinct(col("vec_id")) === nCorpus)).cast("int")
-        .as("partition_ok"))
+        (countDistinct(col("vec_id")) === nCorpus)).as("partition_ok"))
       dropsOk.crossJoin(noDupKeptOk).crossJoin(partitionOk)
     },
 
@@ -1110,9 +1106,9 @@ object ExtQueries {
         SELECT qid, nid, rank, cos FROM g0"""
     } { (s, dir) => celledKnnGraph(s, dir) },
 
-    "knn_graph_gate" -> QueryDef(
+    "knn_graph_gate" -> QueryDef.gateFrame(
       doc = "agreement gate: edge recall of the cell-local kNN graph (the SAME shared-model build the knn_graph row and the graph_* family compute on) vs the brute-force graph (>=0.7 => knn_graph_ok=1; measured 0.82/0.81 at sf0.01/0.1 on the near-random fixture) — the driver-visible regression check for the approximate graph path. Deliberately quadratic (the brute side) — a FIXTURE-SCALE gate, never a production path; the production rows all ride the celled build it certifies",
-      oracle = "SELECT CAST(1 AS INTEGER) AS knn_graph_ok") { (s, dir) =>
+      "knn_graph_ok") { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       // independent legs materialize CONCURRENTLY (Par: guide §2.6) —
       // the brute side's few long tasks leave most cores idle, and
@@ -1128,12 +1124,12 @@ object ExtQueries {
         .agg((sum(coalesce(col("hit"), lit(0))).cast("double") /
           count(lit(1))).as("recall"))
         .select((coalesce(col("recall"), lit(1.0)) >= 0.7)
-          .cast("int").as("knn_graph_ok"))
+          .as("knn_graph_ok"))
     },
 
-    "knn_graph_delta_gate" -> QueryDef(
+    "knn_graph_delta_gate" -> QueryDef.gate(
       doc = "incremental-graph gate: the graph maintained by knnGraphDelta (old corpus's prior edges + a 1-in-7 delta folded through delta-bounded probes) must EQUAL a full knnGraphFromIndex rebuild over the maintained index — edge-set equality both directions, plus a non-vacuity check that the delta actually changed the graph; the merge ≡ rebuild proof for the graph family",
-      oracle = "SELECT CAST(1 AS INTEGER) AS delta_eq_full, CAST(1 AS INTEGER) AS delta_changed_graph") { (s, dir) =>
+      "delta_eq_full", "delta_changed_graph") { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val old = e.filter(col("vec_id") % 7 =!= 0)
       val delta = e.filter(col("vec_id") % 7 === 0)
@@ -1161,12 +1157,9 @@ object ExtQueries {
       // r12 store-gate fold), run concurrently over the checkpointed
       // frames
       val (eq, changed) = Par.two(
-        got.exceptAll(want).unionByName(want.exceptAll(got)).isEmpty,
-        !prior.exceptAll(want).unionByName(want.exceptAll(prior)).isEmpty)
-      val spark = s
-      import spark.implicits._
-      Seq((if (eq) 1 else 0, if (changed) 1 else 0))
-        .toDF("delta_eq_full", "delta_changed_graph")
+        Gate.sameRows(got, want),
+        !Gate.sameRows(prior, want))
+      Seq(eq, changed)
     },
 
     "corpus_centrality" -> QueryDef.dynamicOracle(
@@ -1284,9 +1277,9 @@ object ExtQueries {
       Similarity.kCore(celledKnnGraph(s, dir), k = 6, rounds = 10)
     },
 
-    "quality_model_gate" -> QueryDef(
+    "quality_model_gate" -> QueryDef.gateFrame(
       doc = "model-based quality scoring gate (L-BFGS training is iterative, not SQL-expressible — the text_bpe_gate pattern): the classifier trained on the rule gate's weak labels must emit calibrated probabilities in [0,1], separate rule-positive from rule-negative docs by >= 0.2 mean probability, agree with the weak labels on >= 80% of docs, and reach training AUC >= 0.9",
-      oracle = "SELECT CAST(1 AS INTEGER) AS probs_ok, CAST(1 AS INTEGER) AS separable_ok, CAST(1 AS INTEGER) AS agree_ok, CAST(1 AS INTEGER) AS auc_ok") { (s, dir) =>
+      "probs_ok", "separable_ok", "agree_ok", "auc_ok") { (s, dir) =>
       val feats = graft.operators.QualityModel.features(
         Tables.load(s, dir, "documents"), "doc_id", "text")
         .localCheckpoint(true)
@@ -1297,10 +1290,10 @@ object ExtQueries {
           .as("probs_ok"),
         ((avg(when(col("is_quality"), col("quality_prob"))) -
           avg(when(!col("is_quality"), col("quality_prob")))) >= 0.2)
-          .cast("int").as("separable_ok"),
+          .as("separable_ok"),
         (avg((col("pred_quality") === col("is_quality")).cast("int"))
-          >= 0.8).cast("int").as("agree_ok"))
-        .withColumn("auc_ok", lit(aucOk).cast("int"))
+          >= 0.8).as("agree_ok"))
+        .withColumn("auc_ok", lit(aucOk))
     },
 
     "dedup_contamination" -> QueryDef(
@@ -1424,9 +1417,9 @@ object ExtQueries {
         rerankWith = Some(corpus), minCandidates = 20)
     },
 
-    "dedup_containment_gate" -> QueryDef(
+    "dedup_containment_gate" -> QueryDef.gateFrame(
       doc = "agreement gate: recall of containmentLsh's pair set vs exact shingleContainment (≥0.95 ⇒ containment_ok=1) — the driver-visible regression check for the approximate containment path",
-      oracle = "SELECT CAST(1 AS INTEGER) AS containment_ok") { (s, dir) =>
+      "containment_ok") { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       // exact baseline ∥ approximate path (Par: guide §2.6 overlap)
       val (exact, lsh) = Par.two(
@@ -1441,7 +1434,7 @@ object ExtQueries {
         .agg((sum(coalesce(col("hit"), lit(0))).cast("double") /
           count(lit(1))).as("recall"))
         .select((coalesce(col("recall"), lit(1.0)) >= 0.95)
-          .cast("int").as("containment_ok"))
+          .as("containment_ok"))
     },
 
     "multimodal_frames" -> QueryDef(
@@ -2075,9 +2068,9 @@ object ExtQueries {
         "doc_id", "text", nTopics = 8, topTerms = 5)
     },
 
-    "corpus_topics_gate" -> QueryDef(
+    "corpus_topics_gate" -> QueryDef.gateFrame(
       doc = "topic-map invariant gate (k-means not SQL-expressible — the text_bpe_gate pattern): topic sizes sum to the embedded-doc count (every doc in exactly one topic), ranks are contiguous 1..topTerms per topic, scores non-increasing in rank; term membership holds by construction (terms come from the topic's own docs' tf-idf join)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS partition_ok, CAST(1 AS INTEGER) AS ranks_ok, CAST(1 AS INTEGER) AS order_ok") { (s, dir) =>
+      "partition_ok", "ranks_ok", "order_ok") { (s, dir) =>
       // deterministic 1-in-3 SLICE (the layout_pointindex_gate diet):
       // the gate pins ALGORITHM invariants — partition sums, rank
       // contiguity, score monotonicity — which are corpus-size-free,
@@ -2111,7 +2104,7 @@ object ExtQueries {
           col("prev") >= col("score")).cast("int")), lit(1)).as("order_ok"))
       val partitionOk = perTopic.agg(
         ((sum(col("n_docs")) === nEmbedded) &&
-          (count(lit(1)) <= 8)).cast("int").as("partition_ok"))
+          (count(lit(1)) <= 8)).as("partition_ok"))
       val ranksOk = perTopic.agg(coalesce(min(
         ((col("min_rank") === 1) && (col("max_rank") === col("n_terms")))
           .cast("int")), lit(1)).as("ranks_ok"))
@@ -2804,11 +2797,9 @@ object ExtQueries {
         .select("o_orderkey", "hval")
     },
 
-    "layout_hilbert_gate" -> QueryDef(
+    "layout_hilbert_gate" -> QueryDef.gate(
       doc = "Hilbert-curve guarantees, driver-checked: (1) BIJECTION - on the full 64x64 grid every index 0..4095 is hit exactly once (no two cells share an index, so range partitioning on it is lossless); (2) ADJACENCY - consecutive indexes are grid neighbors (|dx|+|dy| = 1), the defining Hilbert property that is FALSE for Morton and the reason its boxes are tighter; (3) hilbertWrite files prune a second-dimension band at least as hard as the z-order bound (<= half of 16 files) while round-tripping every row",
-      oracle = "SELECT CAST(1 AS INTEGER) AS hilbert_bijective, " +
-        "CAST(1 AS INTEGER) AS hilbert_adjacent, " +
-        "CAST(1 AS INTEGER) AS hilbert_prunes") { (s, dir) =>
+      "hilbert_bijective", "hilbert_adjacent", "hilbert_prunes") { (s, dir) =>
       import s.implicits._
       import graft.operators.Layout
       val bits = 6
@@ -2851,9 +2842,7 @@ object ExtQueries {
           touched <= numFiles / 2 &&
             s.read.parquet(path).count() == Tables.count(s, dir, "orders")
         })
-      Seq((if (bijective) 1 else 0, if (adjacent) 1 else 0,
-        if (prunes) 1 else 0))
-        .toDF("hilbert_bijective", "hilbert_adjacent", "hilbert_prunes")
+      Seq(bijective, adjacent, prunes)
     },
 
     "layout_skip" -> QueryDef(
@@ -2918,13 +2907,10 @@ object ExtQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
     },
 
-    "layout_autoskip_gate" -> QueryDef(
+    "layout_autoskip_gate" -> QueryDef.gate(
       doc = "predicate-extraction guarantees for autoPrunedRead: (1) auto_lossless - a predicate mixing extractable bounds with an unextractable modulo conjunct returns EXACTLY the plain filtered scan's rows, both directions (the full predicate re-applies to survivors, so extraction coverage is a perf knob, never a correctness one); (2) auto_prunes - the extractable band + equality actually skip files (surviving list strictly under half the 16-file budget); (3) auto_one_sided - a single one-sided >= bound alone both prunes and stays row-identical (no silent requirement for two-sided bands); (4) auto_no_extract_safe - a predicate made ONLY of unextractable conjuncts yields no bounds at all (None, not 'zero files survive') and autoPrunedRead degrades to the plain filtered scan - the failure mode where no-extraction reads as empty-result is the one that silently loses rows",
-      oracle = "SELECT CAST(1 AS INTEGER) AS auto_lossless, " +
-        "CAST(1 AS INTEGER) AS auto_prunes, " +
-        "CAST(1 AS INTEGER) AS auto_one_sided, " +
-        "CAST(1 AS INTEGER) AS auto_no_extract_safe") { (s, dir) =>
-      import s.implicits._
+      "auto_lossless", "auto_prunes", "auto_one_sided",
+      "auto_no_extract_safe") { (s, dir) =>
       import graft.operators.Layout
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -2934,9 +2920,6 @@ object ExtQueries {
         bits = 8, numFiles = 16, path = tmp)
       val idx = Layout.fileIndex(s, tmp,
         Seq("o_custkey", "o_totalprice")).localCheckpoint(true)
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       def plain(p: org.apache.spark.sql.Column) =
         s.read.parquet(tmp).filter(p)
       // the four invariant legs are independent read-only probes of
@@ -2946,7 +2929,7 @@ object ExtQueries {
       val mixed = col("o_totalprice") >= 100000 &&
         col("o_totalprice") <= 150000 && col("o_orderkey") % 3 === 0
       val (lossless, prunes, oneOk, safe) = Par.four(
-        eq(Layout.autoPrunedRead(s, tmp, idx, mixed),
+        Gate.sameRows(Layout.autoPrunedRead(s, tmp, idx, mixed),
           plain(mixed)),
         {
           val banded = Layout.autoPruneFiles(s, tmp, idx, mixed)
@@ -2958,32 +2941,28 @@ object ExtQueries {
           val eqFiles = Layout.autoPruneFiles(s, tmp, idx, eqPred)
           banded.exists(_.size <= 8) &&
             eqFiles.exists(_.size < 8) &&
-            eq(Layout.autoPrunedRead(s, tmp, idx, eqPred), plain(eqPred))
+            Gate.sameRows(Layout.autoPrunedRead(s, tmp, idx, eqPred),
+              plain(eqPred))
         },
         {
           val oneSided = col("o_totalprice") >= 400000
           Layout.autoPruneFiles(s, tmp, idx, oneSided)
             .exists(_.size < 16) &&
-            eq(Layout.autoPrunedRead(s, tmp, idx, oneSided),
+            Gate.sameRows(Layout.autoPrunedRead(s, tmp, idx, oneSided),
               plain(oneSided))
         },
         {
           val noExtract = col("o_orderkey") % 2 === 0
           Layout.autoPruneFiles(s, tmp, idx, noExtract).isEmpty &&
-            eq(Layout.autoPrunedRead(s, tmp, idx, noExtract),
+            Gate.sameRows(Layout.autoPrunedRead(s, tmp, idx, noExtract),
               plain(noExtract))
         })
-      Seq((if (lossless) 1 else 0, if (prunes) 1 else 0,
-        if (oneOk) 1 else 0, if (safe) 1 else 0))
-        .toDF("auto_lossless", "auto_prunes", "auto_one_sided",
-          "auto_no_extract_safe")
+      Seq(lossless, prunes, oneOk, safe)
     },
 
-    "layout_skip_gate" -> QueryDef(
+    "layout_skip_gate" -> QueryDef.gate(
       doc = "data-skipping guarantees: (1) losslessness - prunedRead's row set EQUALS the full filtered scan's, both directions, for a second-dimension band (soundness of the index + residual filter); (2) non-vacuity - the band's surviving file set is at most HALF the 16 files (the z-curve's bounding boxes are genuinely tight on dimension 2); (3) superiority - the same 16-file budget sorted linearly on the FIRST dimension alone skips (almost) nothing for the same predicate (>= 15 of 16 files touched), which is the multi-dimensional-clustering claim made quantitative. Band = the [0.10, 0.20] span quantiles of o_totalprice, away from the curve's degenerate midpoint split",
-      oracle = "SELECT CAST(1 AS INTEGER) AS skip_lossless, " +
-        "CAST(1 AS INTEGER) AS skip_nonvacuous, " +
-        "CAST(1 AS INTEGER) AS skip_beats_linear") { (s, dir) =>
+      "skip_lossless", "skip_nonvacuous", "skip_beats_linear") { (s, dir) =>
       import s.implicits._
       import graft.operators.Layout
       val numFiles = 16
@@ -3011,12 +2990,9 @@ object ExtQueries {
         Seq(Layout.Range("o_totalprice", lo, hi)))
       val full = orders.filter(
         col("o_totalprice") >= lo && col("o_totalprice") <= hi)
-      val lossless = pruned.exceptAll(full)
-        .unionByName(full.exceptAll(pruned)).isEmpty
-      Seq((if (lossless) 1 else 0,
-        if (survivors(zPath) <= numFiles / 2) 1 else 0,
-        if (survivors(linPath) >= numFiles - 1) 1 else 0))
-        .toDF("skip_lossless", "skip_nonvacuous", "skip_beats_linear")
+      val lossless = Gate.sameRows(pruned, full)
+      Seq(lossless, survivors(zPath) <= numFiles / 2,
+        survivors(linPath) >= numFiles - 1)
     },
 
     "layout_compact" -> QueryDef(
@@ -3033,12 +3009,10 @@ object ExtQueries {
       s.read.parquet(dst)
     },
 
-    "layout_compact_gate" -> QueryDef(
+    "layout_compact_gate" -> QueryDef.gate(
       doc = "compaction guarantees on a mixed layout (40 fragments + one well-sized file, target = the big file's own length so the split is size-relative and holds at every sf): (1) counts - 1 kept, 40 packed, dst holds exactly kept + bins files; (2) the kept file is preserved at its exact byte length (copied, never re-encoded); (3) rows - dst row count equals src's (both copies of orders), nothing lost or duplicated by the re-pack",
-      oracle = "SELECT CAST(1 AS INTEGER) AS compact_counts_ok, " +
-        "CAST(1 AS INTEGER) AS compact_kept_bytes_ok, " +
-        "CAST(1 AS INTEGER) AS compact_rows_ok") { (s, dir) =>
-      import s.implicits._
+      "compact_counts_ok", "compact_kept_bytes_ok",
+      "compact_rows_ok") { (s, dir) =>
       import graft.operators.Layout
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3061,9 +3035,7 @@ object ExtQueries {
         f.getPath.getName == big.getPath.getName && f.getLen == big.getLen)
       val rowsOk = s.read.parquet(dst).count() ==
         2 * Tables.count(s, dir, "orders")
-      Seq((if (countsOk) 1 else 0, if (keptOk) 1 else 0,
-        if (rowsOk) 1 else 0))
-        .toDF("compact_counts_ok", "compact_kept_bytes_ok", "compact_rows_ok")
+      Seq(countsOk, keptOk, rowsOk)
     },
 
     "layout_compact_part" -> QueryDef(
@@ -3087,14 +3059,10 @@ object ExtQueries {
           col("bucket").cast("int").as("bucket"))
     },
 
-    "layout_compact_part_gate" -> QueryDef(
+    "layout_compact_part_gate" -> QueryDef.gate(
       doc = "partitioned-compaction guarantees: four fragmented bucket dirs (10 smalls + 1 well-sized each, target = the big file's own length so the split is size-relative) plus one COLD single-file dir (bucket=9). (1) counts - 5 leaf dirs visited, 4 compacted, the cold dir skipped (byte-copied whole, never read as a compute job - the selective-maintenance rule at partition granularity); (2) clean_bytes - every kept file preserved at its exact byte length IN ITS OWN partition dir (never re-encoded, never moved across partitions); (3) packed per dir - each hot dir's file count shrinks and dst holds exactly kept+bins files per dir, bins never mix partitions; (4) rows - dst reads row-identical to src including partition values; (5) mixed layouts (top-level parquet next to partition dirs) rejected loudly",
-      oracle = "SELECT CAST(1 AS INTEGER) AS part_counts_ok, " +
-        "CAST(1 AS INTEGER) AS part_clean_bytes_ok, " +
-        "CAST(1 AS INTEGER) AS part_bins_ok, " +
-        "CAST(1 AS INTEGER) AS part_rows_ok, " +
-        "CAST(1 AS INTEGER) AS part_mixed_rejected") { (s, dir) =>
-      import s.implicits._
+      "part_counts_ok", "part_clean_bytes_ok", "part_bins_ok", "part_rows_ok",
+      "part_mixed_rejected") { (s, dir) =>
       import graft.operators.Layout
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3146,8 +3114,7 @@ object ExtQueries {
       } && dirs(src) == dirs(dst)
       val srcRead = s.read.parquet(src)
       val dstRead = s.read.parquet(dst)
-      val rowsOk = dstRead.exceptAll(srcRead)
-        .unionByName(srcRead.exceptAll(dstRead)).isEmpty
+      val rowsOk = Gate.sameRows(dstRead, srcRead)
       val mixed = root.resolve("mixed").toString
       orders.limit(10).withColumn("bucket", lit(1))
         .write.partitionBy("bucket").parquet(mixed)
@@ -3158,11 +3125,7 @@ object ExtQueries {
         false
       } catch { case e: IllegalArgumentException =>
         e.getMessage.contains("mixes") }
-      Seq((if (countsOk) 1 else 0, if (cleanOk) 1 else 0,
-        if (binsOk) 1 else 0, if (rowsOk) 1 else 0,
-        if (rejected) 1 else 0))
-        .toDF("part_counts_ok", "part_clean_bytes_ok", "part_bins_ok",
-          "part_rows_ok", "part_mixed_rejected")
+      Seq(countsOk, cleanOk, binsOk, rowsOk, rejected)
     },
 
     "layout_bloomindex" -> QueryDef(
@@ -3187,12 +3150,9 @@ object ExtQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
     },
 
-    "layout_bloomindex_gate" -> QueryDef(
+    "layout_bloomindex_gate" -> QueryDef.gate(
       doc = "bloom-index guarantees: (1) lookup_eq - bloomLookup's row set EQUALS the full filtered scan's both directions (false positives open files, the residual filter closes them); (2) skips - for a single probe the sketch keeps <= 4 of 16 hash-scattered files (expected 1 + 15 x fpp at 1%) while min/max keeps >= 12 AND the sketch strictly beats min/max - the quantitative case for the probabilistic rung; (3) delta_merge - after appending files, existing UNION bloomIndexDelta equals a full rebuild BIT-exactly (per-file sketches are deterministic seeded murmur, no RNG) - append maintenance costs one narrow scan of the new files",
-      oracle = "SELECT CAST(1 AS INTEGER) AS lookup_eq, " +
-        "CAST(1 AS INTEGER) AS skips, " +
-        "CAST(1 AS INTEGER) AS delta_merge") { (s, dir) =>
-      import s.implicits._
+      "lookup_eq", "skips", "delta_merge") { (s, dir) =>
       import graft.operators.{Layout, ModelCollect}
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3217,8 +3177,7 @@ object ExtQueries {
               probes)
             .select("o_orderkey", "o_custkey", "o_totalprice")
           val full = orders.filter(col("o_orderkey") % 997 === 0)
-          looked.exceptAll(full)
-            .unionByName(full.exceptAll(looked)).isEmpty
+          Gate.sameRows(looked, full)
         },
         idx0.filter(
           graft.functions.BloomContainsAny.column(
@@ -3234,19 +3193,14 @@ object ExtQueries {
         perFile)
       val merged = idx0.unionByName(delta)
       val rebuilt = Layout.bloomIndex(s, tmp, "o_orderkey", perFile)
-      val deltaMerge = merged.exceptAll(rebuilt)
-        .unionByName(rebuilt.exceptAll(merged)).isEmpty
-      Seq((if (lookupEq) 1 else 0, if (skips) 1 else 0,
-        if (deltaMerge) 1 else 0))
-        .toDF("lookup_eq", "skips", "delta_merge")
+      val deltaMerge = Gate.sameRows(merged, rebuilt)
+      Seq(lookupEq, skips, deltaMerge)
     },
 
-    "layout_index_delta_gate" -> QueryDef(
+    "layout_index_delta_gate" -> QueryDef.gate(
       doc = "incremental file-index maintenance (merge == rebuild for the layout family): index a 8-file orders layout, append 4 more files, fileIndexDelta must stat ONLY the 4 new files, and existing UNION delta must equal a full fileIndex rebuild EXACTLY (per-file stats are independent, so the incremental path is lossless) - plus the empty-delta edge: a second delta against the merged index is 0 rows",
-      oracle = "SELECT CAST(1 AS INTEGER) AS idx_delta_only_new, " +
-        "CAST(1 AS INTEGER) AS idx_merge_eq_rebuild, " +
-        "CAST(1 AS INTEGER) AS idx_empty_delta") { (s, dir) =>
-      import s.implicits._
+      "idx_delta_only_new", "idx_merge_eq_rebuild",
+      "idx_empty_delta") { (s, dir) =>
       import graft.operators.Layout
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3264,13 +3218,10 @@ object ExtQueries {
       val full = Layout.fileIndex(s, path, Seq("o_totalprice"))
       val onlyNew = delta.count() == 4 &&
         delta.join(before, Seq("file"), "left_semi").count() == 0
-      val mergeEq = merged.exceptAll(full)
-        .unionByName(full.exceptAll(merged)).isEmpty
+      val mergeEq = Gate.sameRows(merged, full)
       val emptyDelta = Layout.fileIndexDelta(s, path, Seq("o_totalprice"),
         merged).count() == 0
-      Seq((if (onlyNew) 1 else 0, if (mergeEq) 1 else 0,
-        if (emptyDelta) 1 else 0))
-        .toDF("idx_delta_only_new", "idx_merge_eq_rebuild", "idx_empty_delta")
+      Seq(onlyNew, mergeEq, emptyDelta)
     },
 
     "layout_bloomindex_str" -> QueryDef(
@@ -3300,12 +3251,9 @@ object ExtQueries {
         .select("o_uuid", "o_custkey", "o_totalprice")
     },
 
-    "layout_bloomindex_str_gate" -> QueryDef(
+    "layout_bloomindex_str_gate" -> QueryDef.gate(
       doc = "string-bloom guarantees (the layout_bloomindex_gate legs replayed for the xxhash64 canonicalization): (1) str_lookup_eq - the uuid lookup equals the full filtered scan, both exceptAll directions; (2) str_skips - a single uuid probe keeps <= 4 of 12 hash-scattered files (1 + 11 x fpp expected at 1%); min/max pruning is no competition for scattered uuids; (3) str_delta_merge - after an append, existing UNION bloomIndexDelta equals a full rebuild BIT-exactly (xxhash64 is seeded, sketches deterministic) - so string-keyed append maintenance costs one narrow scan of the new files too. Fixture is a <=9000-key slice (semantics, not IO)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS str_lookup_eq, " +
-        "CAST(1 AS INTEGER) AS str_skips, " +
-        "CAST(1 AS INTEGER) AS str_delta_merge") { (s, dir) =>
-      import s.implicits._
+      "str_lookup_eq", "str_skips", "str_delta_merge") { (s, dir) =>
       import graft.operators.{Layout, ModelCollect}
       val orders = Tables.load(s, dir, "orders")
         .filter(col("o_orderkey") < 9000) // slice: semantics, not IO
@@ -3328,8 +3276,7 @@ object ExtQueries {
         .select("o_uuid", "o_custkey", "o_totalprice")
       val full = s.read.parquet(tmp).filter(col("o_uuid").isin(probes: _*))
         .select("o_uuid", "o_custkey", "o_totalprice")
-      val lookupEq = looked.exceptAll(full)
-        .unionByName(full.exceptAll(looked)).isEmpty
+      val lookupEq = Gate.sameRows(looked, full)
       val oneProbe = probes.max
       val bloomFiles = Layout.bloomProbeFiles(s, tmp, idx0, "o_uuid",
         Seq(oneProbe)).size
@@ -3339,11 +3286,8 @@ object ExtQueries {
       val delta = Layout.bloomIndexDelta(s, tmp, "o_uuid", idx0, perFile)
       val merged = idx0.unionByName(delta)
       val rebuilt = Layout.bloomIndex(s, tmp, "o_uuid", perFile)
-      val deltaEq = merged.exceptAll(rebuilt)
-        .unionByName(rebuilt.exceptAll(merged)).isEmpty
-      Seq((if (lookupEq) 1 else 0, if (skips) 1 else 0,
-        if (deltaEq) 1 else 0))
-        .toDF("str_lookup_eq", "str_skips", "str_delta_merge")
+      val deltaEq = Gate.sameRows(merged, rebuilt)
+      Seq(lookupEq, skips, deltaEq)
     },
 
     "layout_dv" -> QueryDef(
@@ -3361,14 +3305,10 @@ object ExtQueries {
       Layout.readWithDv(s, src, dv)
     },
 
-    "layout_dv_gate" -> QueryDef(
+    "layout_dv_gate" -> QueryDef.gate(
       doc = "deletion-vector maintenance guarantees: (1) mat_eq - materializeDv's output table == the DV-subtracted read of the source, both directions (folding the vector into the data changes nothing a reader can see); (2) clean_bytes - files with NO vectored rows are byte-identical copies in the destination (the compactTo rule: never re-encode the clean majority - source files are range-partitioned on the delete key so the point delete dirties SOME files, not all); (3) dv_sized - the vector holds exactly the deleted-row count (write amplification is |deleted|, not |touched files|); (4) both kept and rewritten files exist (non-vacuity: the selective path actually divided the layout); (5) merge_noop - re-merging an already-applied vector adds nothing (re-deletes are idempotent)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS mat_eq, " +
-        "CAST(1 AS INTEGER) AS clean_bytes, " +
-        "CAST(1 AS INTEGER) AS dv_sized, " +
-        "CAST(1 AS INTEGER) AS split_nonvacuous, " +
-        "CAST(1 AS INTEGER) AS merge_noop") { (s, dir) =>
-      import s.implicits._
+      "mat_eq", "clean_bytes", "dv_sized", "split_nonvacuous",
+      "merge_noop") { (s, dir) =>
       import graft.operators.Layout
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3381,8 +3321,7 @@ object ExtQueries {
       val st = Layout.materializeDv(s, src, dv, dst)
       val want = Layout.readWithDv(s, src, dv).localCheckpoint(true)
       val out = s.read.parquet(dst)
-      val matEq = out.exceptAll(want)
-        .unionByName(want.exceptAll(out)).isEmpty
+      val matEq = Gate.sameRows(out, want)
       val fs = new org.apache.hadoop.fs.Path(src)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       def parquetFiles(p: String) =
@@ -3399,19 +3338,12 @@ object ExtQueries {
       val split = st.kept >= 1 && st.rewritten >= 1 &&
         st.kept + st.rewritten == st.nIn
       val mergeNoop = Layout.mergeDv(dv, dv).count() == dv.count()
-      Seq((if (matEq) 1 else 0, if (cleanBytes) 1 else 0,
-        if (dvSized) 1 else 0, if (split) 1 else 0,
-        if (mergeNoop) 1 else 0))
-        .toDF("mat_eq", "clean_bytes", "dv_sized", "split_nonvacuous",
-          "merge_noop")
+      Seq(matEq, cleanBytes, dvSized, split, mergeNoop)
     },
 
-    "layout_dpp_gate" -> QueryDef(
+    "layout_dpp_gate" -> QueryDef.gate(
       doc = "dynamic partition pruning driver-visible (the star-schema scan killer at 100 TB: the selective predicate lives on the DIM, so static pruning cannot see it, and without runtime pruning the partitioned fact scans WHOLE): lineitem written partitioned by ship month (~83 dirs), joined on the partition column to a month-dim whose YEAR attribute comes out of an AGGREGATE (max over the group - semantically the month's year, but opaque to InferFiltersFromConstraints, which would otherwise rewrite a plain substring alias into a STATIC fact filter and make the runtime claim vacuous) filtered to 1997. Gate: (1) dpp_planned - the executed fact scan carries a dynamicpruningexpression partition filter; (2) dpp_pruned - the scan's numPartitions metric records 12 of the ~83 partitions actually listed (runtime pruning, not plan cosmetics; scans found by recursing through AQE QueryStageExec wrappers, which plain collect misses); (3) rows_eq - the identical query with spark.sql.optimizer.dynamicPartitionPruning.enabled=false returns the same rows AND its fact scan lists ALL ~83 partitions (proving no static rewrite exists and the knob changed IO, nothing else)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS dpp_planned, " +
-        "CAST(1 AS INTEGER) AS dpp_pruned, " +
-        "CAST(1 AS INTEGER) AS rows_eq") { (s, dir) =>
-      import s.implicits._
+      "dpp_planned", "dpp_pruned", "rows_eq") { (s, dir) =>
       import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       val linesAll = Tables.load(s, dir, "lineitem")
@@ -3491,21 +3423,15 @@ object ExtQueries {
         val (offParts, offPlan, off) = run(q())
         !offPlan.contains("dynamicpruningexpression") &&
           offParts == totalParts && // full scan: no static rewrite
-          onRows.exceptAll(off)
-          .unionByName(off.exceptAll(onRows)).isEmpty
+          Gate.sameRows(onRows, off)
       } finally s.conf.set(
         "spark.sql.optimizer.dynamicPartitionPruning.enabled", prev)
-      Seq((if (planned) 1 else 0, if (pruned) 1 else 0,
-        if (rowsEq) 1 else 0))
-        .toDF("dpp_planned", "dpp_pruned", "rows_eq")
+      Seq(planned, pruned, rowsEq)
     },
 
-    "runtime_bloom_gate" -> QueryDef(
+    "runtime_bloom_gate" -> QueryDef.gate(
       doc = "runtime bloom-filter join pruning driver-visible (the row-level sibling of layout_dpp_gate's partition pruning: the selective predicate lives on the DIM and is NOT on the join key - round(o_totalprice) % 17 - so neither static pushdown nor constraint inference can shrink the fact side; Spark injects a bloom sketch of the filtered dim keys into the fact scan's shuffle input). Gate: (1) bloom_planned - the executed plan carries might_contain AND the bloom-off twin does not; (2) bloom_prunes - total shuffle recordsRead with the filter on is < 1/4 of the off run (the fact side sheds ~16/17 of its rows BEFORE the join exchange - at 100 TB that is the difference between shuffling a table and shuffling a match set); (3) rows_eq - on == off row-for-row, the knob changed IO and nothing else. Thresholds are set in-query (the 10 GB application-side default exists to protect small scans; the semantics are scale-free) and restored",
-      oracle = "SELECT CAST(1 AS INTEGER) AS bloom_planned, " +
-        "CAST(1 AS INTEGER) AS bloom_prunes, " +
-        "CAST(1 AS INTEGER) AS rows_eq") { (s, dir) =>
-      import s.implicits._
+      "bloom_planned", "bloom_prunes", "rows_eq") { (s, dir) =>
       import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -3551,21 +3477,15 @@ object ExtQueries {
         val planned = onPlan.contains("might_contain") &&
           !offPlan.contains("might_contain")
         val prunes = onRec > 0 && offRec > 0 && onRec * 4 < offRec
-        val rowsEq = onRows.exceptAll(offRows)
-          .unionByName(offRows.exceptAll(onRows)).isEmpty
-        Seq((if (planned) 1 else 0, if (prunes) 1 else 0,
-          if (rowsEq) 1 else 0))
-          .toDF("bloom_planned", "bloom_prunes", "rows_eq")
+        val rowsEq = Gate.sameRows(onRows, offRows)
+        Seq(planned, prunes, rowsEq)
       } finally saved.foreach { case (k, v) =>
         v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
     },
 
-    "runtime_skew_gate" -> QueryDef(
+    "runtime_skew_gate" -> QueryDef.gate(
       doc = "AQE skew-join splitting driver-visible (the third leg of the runtime-replan family next to layout_dpp_gate and runtime_bloom_gate): a fact with ~40% of its rows on ONE key (plus a high-entropy payload so lz4 shuffle compression cannot erase the byte skew - the hot partition is a run of identical keys and compresses away without it) sort-merge-joins a tiny dim; the hot shuffle partition must SPLIT into map-chunk ranges with the dim partition duplicated per split. Self-calibrating and scale-free: a skew-OFF baseline run measures the stage's per-partition bytes, then advisory = hot/4 and a 1KB floor threshold let the x2-median factor criterion decide - the same gate passes at sf0.001 and sf1. The fact is pre-repartitioned to widen the MAP side: a single-mapper stage yields one indivisible chunk per reduce partition and the rule correctly declines (found the hard way - the probe's single parquet file scanned as one task). Gate: (1) skew_planned - SortMergeJoin(skew=true) + an 'AQEShuffleRead ... skewed' node in the ON plan, neither in the OFF plan; (2) skew_split - the skewed read materializes MORE partitions than the baseline (real splits, not a plan annotation); (3) rows_eq - on == off",
-      oracle = "SELECT CAST(1 AS INTEGER) AS skew_planned, " +
-        "CAST(1 AS INTEGER) AS skew_split, " +
-        "CAST(1 AS INTEGER) AS rows_eq") { (s, dir) =>
-      import s.implicits._
+      "skew_planned", "skew_split", "rows_eq") { (s, dir) =>
       import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
       def allNodes(p: SparkPlan): Seq[SparkPlan] = {
@@ -3625,21 +3545,15 @@ object ExtQueries {
           onPlan.contains("skewed") && !offPlan.contains("skew=true")
         val split = onSplits.maxOption.getOrElse(0) >= 2 &&
           offSplits.forall(_ == 0)
-        val rowsEq = onRows.exceptAll(offRows)
-          .unionByName(offRows.exceptAll(onRows)).isEmpty
-        Seq((if (planned) 1 else 0, if (split) 1 else 0,
-          if (rowsEq) 1 else 0))
-          .toDF("skew_planned", "skew_split", "rows_eq")
+        val rowsEq = Gate.sameRows(onRows, offRows)
+        Seq(planned, split, rowsEq)
       } finally saved.foreach { case (k, v) =>
         v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
     },
 
-    "runtime_coalesce_gate" -> QueryDef(
+    "runtime_coalesce_gate" -> QueryDef.gate(
       doc = "AQE shuffle-partition coalescing driver-visible (the fourth leg of the runtime-replan family next to layout_dpp_gate / runtime_bloom_gate / runtime_skew_gate, and the one that fires on EVERY query: spark.sql.shuffle.partitions is a static guess - 32 here, thousands on a cluster - and post-shuffle data volume is only known at runtime; without coalescing a small aggregate schedules 32 near-empty reduce tasks, which at 100 TB cluster scale is the task-scheduling storm that makes small stages slower than their data). Gate: (1) coalesce_planned - the executed plan carries an 'AQEShuffleRead coalesced' node and the off-knob twin does not; (2) coalesce_shrinks - the coalesced read materializes STRICTLY FEWER partitions than the stage's map output was computed for (real runtime re-plan, not cosmetics: mapStats still shows all 32 reduce buckets); (3) rows_eq - on == off row-for-row, the knob changed scheduling and nothing else",
-      oracle = "SELECT CAST(1 AS INTEGER) AS coalesce_planned, " +
-        "CAST(1 AS INTEGER) AS coalesce_shrinks, " +
-        "CAST(1 AS INTEGER) AS rows_eq") { (s, dir) =>
-      import s.implicits._
+      "coalesce_planned", "coalesce_shrinks", "rows_eq") { (s, dir) =>
       import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
       def allNodes(p: SparkPlan): Seq[SparkPlan] = {
@@ -3677,11 +3591,8 @@ object ExtQueries {
           !offPlan.contains("coalesced")
         val shrinks = onReadParts > 0 && onMapParts > 0 &&
           onReadParts < onMapParts
-        val rowsEq = onRows.exceptAll(offRows)
-          .unionByName(offRows.exceptAll(onRows)).isEmpty
-        Seq((if (planned) 1 else 0, if (shrinks) 1 else 0,
-          if (rowsEq) 1 else 0))
-          .toDF("coalesce_planned", "coalesce_shrinks", "rows_eq")
+        val rowsEq = Gate.sameRows(onRows, offRows)
+        Seq(planned, shrinks, rowsEq)
       } finally saved.fold(s.conf.unset(key))(s.conf.set(key, _))
     },
 
@@ -3713,13 +3624,10 @@ object ExtQueries {
           sum(col("cents") * col("attr")).as("total"))
     },
 
-    "salted_adaptive_gate" -> QueryDef(
+    "salted_adaptive_gate" -> QueryDef.gate(
       doc = "the adaptive-salting cost/shape claims the hash query cannot see: (1) hot_found - the planted hot key (~40% of rows) is IN the MG-detected hot set and the set is k-bounded; (2) histogram_flattened - after salting, the largest (key, salt) group is <= 1/4 of the unsalted hot-key group (the reducer-stall fix actually fired; 8 salts give ~1/8, 1/4 is the determinism slack); (3) replication_cheap - the replicated dim row count is EXACTLY |dim| + |hot| x (factor - 1), independent of the dim's cold mass (blanket salting would pay factor x |dim|); (4) cold_untouched - every cold row keeps salt 0 (no spurious scatter of well-behaved keys)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS hot_found, " +
-        "CAST(1 AS INTEGER) AS histogram_flattened, " +
-        "CAST(1 AS INTEGER) AS replication_cheap, " +
-        "CAST(1 AS INTEGER) AS cold_untouched") { (s, dir) =>
-      import s.implicits._
+      "hot_found", "histogram_flattened", "replication_cheap",
+      "cold_untouched") { (s, dir) =>
       import graft.operators.SkewJoin
       val fact = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"))
@@ -3752,10 +3660,7 @@ object ExtQueries {
       val coldZero = salted.filter(
         !col("k").cast("string").isin(hot: _*) &&
           col("__salt") =!= 0).count() == 0
-      Seq((if (hotFound) 1 else 0, if (flattened) 1 else 0,
-        if (cheap) 1 else 0, if (coldZero) 1 else 0))
-        .toDF("hot_found", "histogram_flattened", "replication_cheap",
-          "cold_untouched")
+      Seq(hotFound, flattened, cheap, coldZero)
     },
 
     "layout_pointindex" -> QueryDef(
@@ -3779,12 +3684,9 @@ object ExtQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice")
     },
 
-    "layout_pointindex_gate" -> QueryDef(
+    "layout_pointindex_gate" -> QueryDef.gate(
       doc = "point-index guarantees: (1) lookup_eq - pointLookup's row set EQUALS the full filtered scan's, both directions (sound index + residual filter); (2) beats_minmax - for a single probe key the index names at most a handful of files while the min/max fileIndex prunes (almost) NOTHING on the hash-scattered layout (>= 12 of 16 files survive its range check) - the quantitative case for a record-level index where bounding boxes are useless; (3) delta_merge - after appending new files, mergeKeyIndex(old, keyIndexDelta) equals a full keyIndex rebuild EXACTLY (sorted-array canonical form makes the fold bit-equal), so append maintenance costs one narrow scan of the new files, never a table rescan",
-      oracle = "SELECT CAST(1 AS INTEGER) AS lookup_eq, " +
-        "CAST(1 AS INTEGER) AS beats_minmax, " +
-        "CAST(1 AS INTEGER) AS delta_merge") { (s, dir) =>
-      import s.implicits._
+      "lookup_eq", "beats_minmax", "delta_merge") { (s, dir) =>
       import graft.operators.{Layout, ModelCollect}
       val orders = Tables.load(s, dir, "orders")
         // deterministic half-slice: the gate proves index SEMANTICS
@@ -3820,8 +3722,7 @@ object ExtQueries {
               probes)
             .select("o_orderkey", "o_custkey", "o_totalprice")
           val full = orders.filter(col("o_orderkey") % 997 === 0)
-          looked.exceptAll(full)
-            .unionByName(full.exceptAll(looked)).isEmpty
+          Gate.sameRows(looked, full)
         },
         idx0.filter(col("o_orderkey") === probe)
           .select(explode(col("files"))).count(),
@@ -3836,19 +3737,14 @@ object ExtQueries {
       val delta = Layout.keyIndexDelta(s, tmp, "o_orderkey", idx0)
       val merged = Layout.mergeKeyIndex(idx0, delta)
       val rebuilt = Layout.keyIndex(s, tmp, "o_orderkey")
-      val deltaMerge = merged.exceptAll(rebuilt)
-        .unionByName(rebuilt.exceptAll(merged)).isEmpty
-      Seq((if (lookupEq) 1 else 0, if (beats) 1 else 0,
-        if (deltaMerge) 1 else 0))
-        .toDF("lookup_eq", "beats_minmax", "delta_merge")
+      val deltaMerge = Gate.sameRows(merged, rebuilt)
+      Seq(lookupEq, beats, deltaMerge)
     },
 
-    "wap_gate" -> QueryDef(
+    "wap_gate" -> QueryDef.gate(
       doc = "write-audit-publish (the Iceberg WAP pattern): a table write stages OFF the serving path, every audit runs against the STAGED data, and only a clean bill swaps it live - atomicity OF the quality gate, the third leg next to stage-and-swap crash atomicity and the DataQuality checks themselves. Gate: (1) a clean write publishes and serves; (2) a write with planted negative prices is REJECTED by the composed DataQuality audits and the published v1 stays byte-untouched (readers can never observe failing data, not even transiently; staging cleaned up); (3) the result names exactly the failing audit",
-      oracle = "SELECT CAST(1 AS INTEGER) AS wap_publishes, " +
-        "CAST(1 AS INTEGER) AS wap_rejects_preserves_v1, " +
-        "CAST(1 AS INTEGER) AS wap_names_failed_audit") { (s, dir) =>
-      import s.implicits._
+      "wap_publishes", "wap_rejects_preserves_v1",
+      "wap_names_failed_audit") { (s, dir) =>
       import graft.operators.DataQuality
       import graft.sources.AnalysisStore
       val orders = Tables.load(s, dir, "orders")
@@ -3876,10 +3772,7 @@ object ExtQueries {
         served.filter(col("o_totalprice") < 0).count() == 0 &&
         served.count() == Tables.count(s, dir, "orders")
       val names = r2.failed == Seq("price_non_negative")
-      Seq((if (publishes) 1 else 0, if (preserves) 1 else 0,
-        if (names) 1 else 0))
-        .toDF("wap_publishes", "wap_rejects_preserves_v1",
-          "wap_names_failed_audit")
+      Seq(publishes, preserves, names)
     },
 
     "events_funnel" -> QueryDef(
@@ -4166,13 +4059,10 @@ object ExtQueries {
         "o_orderkey", "content")
     },
 
-    "store_erasure_gate" -> QueryDef(
+    "store_erasure_gate" -> QueryDef.gate(
       doc = "the right-to-erasure flow at 100 TB, composed from the lakehouse layers: delete every row of ONE customer from an 8-file orders table via deletion vector (addresses recorded by one filtered scan), materialize through stageAndSwap (crash-safe in-place rewrite: clean files byte-copied under their own names, only the customer's file re-encodes), then REPAIR the record-level key index - vanished-file entries drop, surviving-file entries keep verbatim, only rewritten files rescan (repairKeyIndex; a naive rebuild rescans the table). Gate: (1) erase_applied - the DV was non-empty and the swapped table holds ZERO rows of the customer; (2) others_intact - every other row survives byte-for-row (both exceptAll directions); (3) selective - exactly 1 of 8 files re-encoded (the customer's hash file), 7 byte-copied under stageAndSwap; (4) index_repaired - repair == full rebuild EXACTLY, the erased orders are UNFINDABLE through pointLookup, and a surviving probe still resolves - the index layer forgets the customer too, which naive erasure flows miss",
-      oracle = "SELECT CAST(1 AS INTEGER) AS erase_applied, " +
-        "CAST(1 AS INTEGER) AS others_intact, " +
-        "CAST(1 AS INTEGER) AS selective, " +
-        "CAST(1 AS INTEGER) AS index_repaired") { (s, dir) =>
-      import s.implicits._
+      "erase_applied", "others_intact", "selective",
+      "index_repaired") { (s, dir) =>
       import graft.operators.{Layout, ModelCollect}
       import graft.sources.AnalysisStore
       val orders = Tables.load(s, dir, "orders")
@@ -4208,15 +4098,13 @@ object ExtQueries {
           after.filter(col("o_custkey") === target).count() == 0,
         {
           val want = orders.filter(col("o_custkey") =!= target)
-          after.exceptAll(want)
-            .unionByName(want.exceptAll(after)).isEmpty
+          Gate.sameRows(after, want)
         },
         Layout.repairKeyIndex(s, src, "o_orderkey", idx0)
           .localCheckpoint(true),
         Layout.keyIndex(s, src, "o_orderkey").localCheckpoint(true))
       val (repairEq, unfindable, survivorFound) = Par.three(
-        idx1.exceptAll(rebuilt)
-          .unionByName(rebuilt.exceptAll(idx1)).isEmpty,
+        Gate.sameRows(idx1, rebuilt),
         Layout.pointLookup(s, src, idx1, "o_orderkey",
           erasedKeys).count() == 0,
         {
@@ -4225,19 +4113,13 @@ object ExtQueries {
             Seq(survivorKey)).count() >= 1
         })
       val indexRepaired = repairEq && unfindable && survivorFound
-      Seq((if (eraseApplied) 1 else 0, if (othersIntact) 1 else 0,
-        if (selective) 1 else 0, if (indexRepaired) 1 else 0))
-        .toDF("erase_applied", "others_intact", "selective",
-          "index_repaired")
+      Seq(eraseApplied, othersIntact, selective, indexRepaired)
     },
 
-    "store_erasure_part_gate" -> QueryDef(
+    "store_erasure_part_gate" -> QueryDef.gate(
       doc = "the erasure flow on the layout a 100 TB table actually HAS - hive-partitioned (writeFull's partitionBy posture): delete one customer from a 4-partition x 2-file orders table via deletion vector, materialize through stageAndSwap with materializeDvPartitioned (COLD partitions byte-copy whole without a Spark job - dirtiness is known from the vector's own file list; dirty partitions rewrite only their hit files), then repair the record-level key index across the partition tree. Same four-leg contract as the flat store_erasure_gate: (1) erase_applied - DV non-empty and the swapped table holds ZERO rows of the customer; (2) others_intact - every other row survives, both exceptAll directions, partition column included; (3) selective - exactly 1 of 4 partitions touched and 1 of 8 files re-encoded; (4) index_repaired - repair == full rebuild exactly, erased orders unfindable via pointLookup, surviving probe resolves. Fixture is a deterministic <=6000-key slice (semantics, not IO)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS erase_applied, " +
-        "CAST(1 AS INTEGER) AS others_intact, " +
-        "CAST(1 AS INTEGER) AS selective, " +
-        "CAST(1 AS INTEGER) AS index_repaired") { (s, dir) =>
-      import s.implicits._
+      "erase_applied", "others_intact", "selective",
+      "index_repaired") { (s, dir) =>
       import graft.operators.{Layout, ModelCollect}
       import graft.sources.AnalysisStore
       val orders = Tables.load(s, dir, "orders")
@@ -4271,26 +4153,21 @@ object ExtQueries {
       // source frame's LONG before the row comparison
       val afterAligned = after.withColumn("b", col("b").cast("long"))
         .select(want.columns.map(col): _*)
-      val othersIntact = afterAligned.exceptAll(want)
-        .unionByName(want.exceptAll(afterAligned)).isEmpty
+      val othersIntact = Gate.sameRows(afterAligned, want)
       val selective = st.partitions == 4 && st.touched == 1 &&
         st.files.nIn == 8 && st.files.rewritten == 1 &&
         st.files.kept == 7
       val idx1 = Layout.repairKeyIndex(s, src, "o_orderkey", idx0)
         .localCheckpoint(true)
       val rebuilt = Layout.keyIndex(s, src, "o_orderkey")
-      val repairEq = idx1.exceptAll(rebuilt)
-        .unionByName(rebuilt.exceptAll(idx1)).isEmpty
+      val repairEq = Gate.sameRows(idx1, rebuilt)
       val unfindable = Layout.pointLookup(s, src, idx1, "o_orderkey",
         erasedKeys).count() == 0
       val survivorKey = after.agg(max("o_orderkey")).head.getLong(0)
       val survivorFound = Layout.pointLookup(s, src, idx1, "o_orderkey",
         Seq(survivorKey)).count() >= 1
       val indexRepaired = repairEq && unfindable && survivorFound
-      Seq((if (eraseApplied) 1 else 0, if (othersIntact) 1 else 0,
-        if (selective) 1 else 0, if (indexRepaired) 1 else 0))
-        .toDF("erase_applied", "others_intact", "selective",
-          "index_repaired")
+      Seq(eraseApplied, othersIntact, selective, indexRepaired)
     },
 
     "store_catalog_tx" -> QueryDef(
@@ -4330,14 +4207,10 @@ object ExtQueries {
           "c_name", "c_acctbal")
     },
 
-    "store_catalog_gate" -> QueryDef(
+    "store_catalog_gate" -> QueryDef.gate(
       doc = "catalog transaction guarantees: (1) tx_atomic - a two-table commit whose SECOND table fails its audit rolls back BOTH staged tables and the claim (pointer, catalog map, versions, and every serving byte unchanged - a reader can never observe new-A next to old-B, not even transiently); (2) tx_snapshot - catalog time travel: AS OF catalog v1, BOTH tables read their tx1 content even after tx2 republished one of them; (3) tx_carry - the table tx2 did not touch serves its v1 bytes through the v2 catalog (map carry-forward names only complete versions); (4) tx_claim - a same-number racer collides on the exclusive catalog claim and fails loudly BEFORE writing any data; (5) tx_mvcc - reads off a snapshot resolved BEFORE a later commit still see their transaction's content (snapshot isolation: the pointer is resolved once, immutable dirs do the rest)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS tx_atomic, " +
-        "CAST(1 AS INTEGER) AS tx_snapshot, " +
-        "CAST(1 AS INTEGER) AS tx_carry, " +
-        "CAST(1 AS INTEGER) AS tx_claim, " +
-        "CAST(1 AS INTEGER) AS tx_mvcc") { (s, dir) =>
-      import s.implicits._
+      "tx_atomic", "tx_snapshot", "tx_carry", "tx_claim",
+      "tx_mvcc") { (s, dir) =>
       import graft.sources.CatalogStore
       import graft.sources.CatalogStore.Audit
       val orders = Tables.load(s, dir, "orders")
@@ -4345,9 +4218,6 @@ object ExtQueries {
         .filter(col("o_orderkey") < 6000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-catg")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       val a1 = orders.filter(col("o_orderkey") % 2 === 0)
       val b1 = orders.filter(col("o_orderkey") % 3 === 0)
       CatalogStore.commit(s, root, Map("a" -> a1, "b" -> b1))
@@ -4360,8 +4230,9 @@ object ExtQueries {
       val atomic = bad == CatalogStore.CatalogTx(None, Some("b_min_rows")) &&
         snapAfterFail.version == 1 &&
         CatalogStore.catalogVersions(s, root) == Seq(1) &&
-        eq(CatalogStore.read(s, root, "a", snapAfterFail), a1.toDF()) &&
-        eq(CatalogStore.read(s, root, "b", snapAfterFail), b1.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "a", snapAfterFail),
+          a1.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "b", snapAfterFail), b1.toDF())
       // tx2 republishes only `a`
       val a2 = orders.filter(col("o_orderkey") % 2 === 1)
       CatalogStore.commit(s, root, Map("a" -> a2))
@@ -4369,11 +4240,11 @@ object ExtQueries {
       // (2) catalog time travel to tx1
       val snap1 = CatalogStore.snapshot(s, root, Some(1))
       val travel = snap1.tables == Map("a" -> 1, "b" -> 1) &&
-        eq(CatalogStore.read(s, root, "a", snap1), a1.toDF()) &&
-        eq(CatalogStore.read(s, root, "b", snap1), b1.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "a", snap1), a1.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "b", snap1), b1.toDF())
       // (3) carry-forward through the v2 catalog
       val carry = snap2.tables == Map("a" -> 2, "b" -> 1) &&
-        eq(CatalogStore.read(s, root, "b", snap2), b1.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "b", snap2), b1.toDF())
       // (4) claim collision, loudly, before any data moves (two
       // racers computing the SAME next meet at the exclusive create)
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -4393,22 +4264,17 @@ object ExtQueries {
       val pinned = CatalogStore.snapshot(s, root)
       CatalogStore.commit(s, root,
         Map("a" -> orders.limit(7), "b" -> orders.limit(7)))
-      val mvcc = eq(CatalogStore.read(s, root, "a", pinned), a2.toDF()) &&
-        eq(CatalogStore.read(s, root, "b", pinned), b1.toDF()) &&
+      val mvcc = Gate.sameRows(CatalogStore.read(s, root, "a", pinned),
+        a2.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "b", pinned), b1.toDF()) &&
         CatalogStore.snapshot(s, root).tables.values.toSet == Set(3)
-      Seq((if (atomic) 1 else 0, if (travel) 1 else 0,
-        if (carry) 1 else 0, if (claim) 1 else 0, if (mvcc) 1 else 0))
-        .toDF("tx_atomic", "tx_snapshot", "tx_carry", "tx_claim",
-          "tx_mvcc")
+      Seq(atomic, travel, carry, claim, mvcc)
     },
 
-    "store_catalog_vacuum_gate" -> QueryDef(
+    "store_catalog_vacuum_gate" -> QueryDef.gate(
       doc = "catalog GC with carry-forward refcounting (the lifecycle leg that bounds the transactional store's storage): vacuum keeps the newest N catalog versions (never the pointer target) and drops every table version NO kept catalog references - the subtlety being that liveness is a REFCOUNT over kept catalog maps, not an age cutoff: a dim committed once rides through every later transaction's carry-forward, so after many commits that never touched it, vacuum(keep=1) must KEEP the dim's original version dir while sweeping the fact's superseded ones. Gate: (1) trimmed - only the newest catalog survives and the fact's old versions are gone from disk; (2) carry_survives - the dim's original version dir still exists and reads row-identically through the kept snapshot (the case an age-based GC deletes and corrupts); (3) dropped_unreadable - time travel to a vacuumed catalog fails loudly; (4) idempotent - a second vacuum removes nothing",
-      oracle = "SELECT CAST(1 AS INTEGER) AS trimmed, " +
-        "CAST(1 AS INTEGER) AS carry_survives, " +
-        "CAST(1 AS INTEGER) AS dropped_unreadable, " +
-        "CAST(1 AS INTEGER) AS idempotent") { (s, dir) =>
-      import s.implicits._
+      "trimmed", "carry_survives", "dropped_unreadable",
+      "idempotent") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -4433,31 +4299,23 @@ object ExtQueries {
         !dirExists("fact", 1) && !dirExists("fact", 2) &&
         dirExists("fact", 3)
       val snap = CatalogStore.snapshot(s, root)
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       val carry = dirExists("dim", 1) &&
         snap.tables == Map("dim" -> 1, "fact" -> 3) &&
-        eq(CatalogStore.read(s, root, "dim", snap), dim.toDF()) &&
-        eq(CatalogStore.read(s, root, "fact", snap), factFinal.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "dim", snap), dim.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "fact", snap),
+          factFinal.toDF())
       val unreadable = try {
         CatalogStore.snapshot(s, root, Some(1)); false
       } catch { case _: Exception => true }
       val again = CatalogStore.vacuum(s, root, keep = 1)
       val idem = again.catalogs.isEmpty && again.tableVersions.isEmpty
-      Seq((if (trimmed) 1 else 0, if (carry) 1 else 0,
-        if (unreadable) 1 else 0, if (idem) 1 else 0))
-        .toDF("trimmed", "carry_survives", "dropped_unreadable",
-          "idempotent")
+      Seq(trimmed, carry, unreadable, idem)
     },
 
-    "stats_join_order_gate" -> QueryDef(
+    "stats_join_order_gate" -> QueryDef.gate(
       doc = "publish-time statistics feed Catalyst's join planning (the CBO gap a path-based lakehouse has vs metastore tables: a bare parquet scan estimates ONLY file bytes, so build/broadcast-side selection runs blind until AQE's runtime re-plan - one shuffle too late at 100 TB): CatalogStore.analyze profiles each committed table once (rowCount/NDV/nulls/min-max via Profile, bytes from the listing), persists a sidecar INSIDE the immutable version dir, and ScanStatsRule attaches them to matching scans as catalog statistics. Gate legs: (1) stats_injected - a catalog read's optimized plan carries the ANALYZEd sizeInBytes, not the raw file estimate; (2) honest_broadcasts_dim - with truthful stats the star join broadcasts the 40-row dim; (3) flipped_broadcasts_fact - re-registering LYING stats (fact claimed tiny, dim claimed huge) flips the broadcast side: the planner provably follows the registered stats, the q39-style build-side decision is stats-driven; (4) rows_eq - both plans return identical rows (stats steer scheduling, never results)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS stats_injected, " +
-        "CAST(1 AS INTEGER) AS honest_broadcasts_dim, " +
-        "CAST(1 AS INTEGER) AS flipped_broadcasts_fact, " +
-        "CAST(1 AS INTEGER) AS rows_eq") { (s, dir) =>
-      import s.implicits._
+      "stats_injected", "honest_broadcasts_dim", "flipped_broadcasts_fact",
+      "rows_eq") { (s, dir) =>
       import graft.plans.{ScanStatsCatalog, TableStats}
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
@@ -4499,12 +4357,8 @@ object ExtQueries {
         val flippedSides = broadcastLeaves(flipped)
         val flippedFact = flippedSides.exists(_.contains("fact_sales")) &&
           !flippedSides.exists(_.contains("dim_seg"))
-        val rowsEq = flipped.exceptAll(honestRows)
-          .unionByName(honestRows.exceptAll(flipped)).isEmpty
-        Seq((if (injected) 1 else 0, if (honestDim) 1 else 0,
-          if (flippedFact) 1 else 0, if (rowsEq) 1 else 0))
-          .toDF("stats_injected", "honest_broadcasts_dim",
-            "flipped_broadcasts_fact", "rows_eq")
+        val rowsEq = Gate.sameRows(flipped, honestRows)
+        Seq(injected, honestDim, flippedFact, rowsEq)
       } finally ScanStatsCatalog.clear()
     },
 
@@ -4564,13 +4418,9 @@ object ExtQueries {
       CatalogStore.history(s, root)
     },
 
-    "store_schema_evolve_gate" -> QueryDef(
+    "store_schema_evolve_gate" -> QueryDef.gate(
       doc = "commit-time schema contract on the transactional catalog (the enforcement/evolution split Delta ships and a bare-path lakehouse lacks - at 100 TB the common failure is an upstream job silently growing a column and every consumer discovering it in prod): (1) enforced - a commit that widens a committed table's schema WITHOUT the explicit evolve flag is rejected loudly (message names the column and the fix) BEFORE any metadata moves: version, dirs, and claim all byte-identical after the rejection; (2) evolved - the same commit with evolve=true lands, and the current read serves the new column; (3) travel_schema - time travel to v1 reads exactly the OLD columns (each version serves its own schema; evolution never rewrites history); (4) immutable_types - dropping or retyping a committed column is rejected even under evolve (a rename/retype is a new table, not an evolution)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS enforced, " +
-        "CAST(1 AS INTEGER) AS evolved, " +
-        "CAST(1 AS INTEGER) AS travel_schema, " +
-        "CAST(1 AS INTEGER) AS immutable_types") { (s, dir) =>
-      import s.implicits._
+      "enforced", "evolved", "travel_schema", "immutable_types") { (s, dir) =>
       import graft.sources.CatalogStore
       val base = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -4579,9 +4429,6 @@ object ExtQueries {
         .toString
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       CatalogStore.commit(s, root, Map("t" -> base))
       val widened = base.withColumn("channel",
         concat(lit("c"), col("o_custkey") % 3))
@@ -4601,12 +4448,12 @@ object ExtQueries {
         evolve = true)
       val snap2 = CatalogStore.snapshot(s, root)
       val evolved = tx2.version.contains(2) &&
-        eq(CatalogStore.read(s, root, "t", snap2), widened.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "t", snap2), widened.toDF())
       // (3) each version serves its OWN schema: v1 has no `channel`
       val snap1 = CatalogStore.snapshot(s, root, Some(1))
       val travel = CatalogStore.read(s, root, "t", snap1)
         .columns.toSeq == base.columns.toSeq &&
-        eq(CatalogStore.read(s, root, "t", snap1), base.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "t", snap1), base.toDF())
       // (4) drop and retype are rejected EVEN under evolve
       val dropRejected = try {
         CatalogStore.commit(s, root,
@@ -4619,27 +4466,18 @@ object ExtQueries {
       } catch { case _: CatalogStore.SchemaEvolutionException => true }
       val immutable = dropRejected && retypeRejected &&
         CatalogStore.snapshot(s, root).version == 2
-      Seq((if (enforced) 1 else 0, if (evolved) 1 else 0,
-        if (travel) 1 else 0, if (immutable) 1 else 0))
-        .toDF("enforced", "evolved", "travel_schema", "immutable_types")
+      Seq(enforced, evolved, travel, immutable)
     },
 
-    "store_branch_wap_gate" -> QueryDef(
+    "store_branch_wap_gate" -> QueryDef.gate(
       doc = "named-ref branches on the transactional catalog - write-audit-publish at BRANCH granularity (the Nessie/Iceberg-refs tier: stage whole multi-table transactions on a movable ref, inspect them with full engine SQL, publish to main as one metadata-only merge): (1) isolated - commits to the branch never move the main pointer and main readers never observe branch data, even transiently; (2) branch_reads - snapshotRef serves the branch's own commits PLUS main's untouched tables carried forward (the branch is a complete world, not a diff); (3) audited_merge - a failing audit on the branch blocks nothing on main and costs main nothing; after a fixing branch commit, mergeBranch publishes the branch's tables to main ATOMICALLY; (4) zero_copy - the merged main map POINTS at the branch's immutable version dir (same physical path, zero bytes rewritten - Nessie's merge model, which is what makes branch workflows affordable at 100 TB)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS isolated, " +
-        "CAST(1 AS INTEGER) AS branch_reads, " +
-        "CAST(1 AS INTEGER) AS audited_merge, " +
-        "CAST(1 AS INTEGER) AS zero_copy") { (s, dir) =>
-      import s.implicits._
+      "isolated", "branch_reads", "audited_merge", "zero_copy") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .filter(col("o_orderkey") < 6000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-brw")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       val dim = orders.filter(col("o_orderkey") % 3 === 0)
       CatalogStore.commit(s, root, Map("dim" -> dim)) // main v1
       CatalogStore.createBranch(s, root, "load")
@@ -4653,8 +4491,8 @@ object ExtQueries {
       // the branch world: its fact plus main's dim carried forward
       val bSnap = CatalogStore.snapshotRef(s, root, "load")
       val branchReads = bSnap.tables.keySet == Set("dim", "fact") &&
-        eq(CatalogStore.read(s, root, "dim", bSnap), dim.toDF()) &&
-        eq(CatalogStore.read(s, root, "fact", bSnap), bad.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "dim", bSnap), dim.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "fact", bSnap), bad.toDF())
       // audit ON the branch (full engine SQL over the staged world)
       // fails -> fix with another branch commit -> merge publishes
       val auditFailed = CatalogStore
@@ -4667,31 +4505,23 @@ object ExtQueries {
       val mainSnap = CatalogStore.snapshot(s, root)
       val auditedMerge = auditFailed && merge.tables == Seq("fact") &&
         mainSnap.tables == Map("dim" -> 1, "fact" -> factVer) &&
-        eq(CatalogStore.read(s, root, "fact", mainSnap), good.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "fact", mainSnap), good.toDF())
       // zero-copy: main serves the branch's PHYSICAL dir
       val zeroCopy = CatalogStore.tablePath(root, "fact", mainSnap) ==
         s"$root/fact/v=$factVer" && merge.fastForward
-      Seq((if (isolated) 1 else 0, if (branchReads) 1 else 0,
-        if (auditedMerge) 1 else 0, if (zeroCopy) 1 else 0))
-        .toDF("isolated", "branch_reads", "audited_merge", "zero_copy")
+      Seq(isolated, branchReads, auditedMerge, zeroCopy)
     },
 
-    "store_branch_merge_gate" -> QueryDef(
+    "store_branch_merge_gate" -> QueryDef.gate(
       doc = "divergent-history merges on the catalog's named refs: (1) disjoint_merged - branch changed table B while main changed table A; the merge commit combines BOTH (main's A at main's version, branch's B at the branch's version) with no fast-forward and no data copy; (2) conflict_loud - when the SAME table changed on both sides since the fork, mergeBranch refuses with the table named (a silent last-writer-wins here is how a 100 TB lakehouse loses a day of writes) and main is byte-unchanged by the refused merge; (3) force_wins - force=true is the explicit override: branch wins at table granularity; (4) numbers_shared - version numbers are one claim namespace across refs, yet main's frontier NEVER adopts a branch catalog: a branch commit between two main commits leaves main's history linear and its map free of branch tables",
-      oracle = "SELECT CAST(1 AS INTEGER) AS disjoint_merged, " +
-        "CAST(1 AS INTEGER) AS conflict_loud, " +
-        "CAST(1 AS INTEGER) AS force_wins, " +
-        "CAST(1 AS INTEGER) AS numbers_shared") { (s, dir) =>
-      import s.implicits._
+      "disjoint_merged", "conflict_loud", "force_wins",
+      "numbers_shared") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .filter(col("o_orderkey") < 6000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-brm")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       CatalogStore.commit(s, root, Map(
         "a" -> orders.limit(10), "b" -> orders.limit(10)))
       CatalogStore.createBranch(s, root, "wip")
@@ -4709,8 +4539,10 @@ object ExtQueries {
       val m = CatalogStore.mergeBranch(s, root, "wip")
       val postMerge = CatalogStore.snapshot(s, root)
       val disjoint = !m.fastForward && m.tables == Seq("b") &&
-        eq(CatalogStore.read(s, root, "a", postMerge), aMain.toDF()) &&
-        eq(CatalogStore.read(s, root, "b", postMerge), bBranch.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "a", postMerge),
+          aMain.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "b", postMerge),
+          bBranch.toDF())
       // (2) conflict: both sides change b since the new fork
       CatalogStore.createBranch(s, root, "wip2")
       CatalogStore.commit(s, root, Map("b" -> orders.limit(7)),
@@ -4727,28 +4559,18 @@ object ExtQueries {
       CatalogStore.mergeBranch(s, root, "wip2", force = true)
       val forceWins = CatalogStore.read(s, root, "b",
         CatalogStore.snapshot(s, root)).count() == 7
-      Seq((if (disjoint) 1 else 0, if (conflictLoud) 1 else 0,
-        if (forceWins) 1 else 0, if (numbersShared) 1 else 0))
-        .toDF("disjoint_merged", "conflict_loud", "force_wins",
-          "numbers_shared")
+      Seq(disjoint, conflictLoud, forceWins, numbersShared)
     },
 
-    "store_tag_gate" -> QueryDef(
+    "store_tag_gate" -> QueryDef.gate(
       doc = "immutable tags on the transactional catalog (release names for time travel: 'the eval ran against v2024.1' must stay answerable for as long as the tag lives, whatever vacuum does meanwhile): (1) tag_read - snapshotRef by tag name serves the tagged catalog's exact content after later commits superseded it; (2) immutable - re-creating an existing tag fails loudly, and committing TO a tag is rejected with the branch/tag distinction named; (3) vacuum_pins - vacuum(keep=1) that would drop the tagged catalog keeps it AND every table version its map references (an age/keep-based GC alone deletes the bytes a compliance replay needs); (4) drop_sweeps - dropTag ends the pin: the next vacuum reclaims the catalog and its now-unreferenced table versions, and time travel to it fails loudly",
-      oracle = "SELECT CAST(1 AS INTEGER) AS tag_read, " +
-        "CAST(1 AS INTEGER) AS immutable, " +
-        "CAST(1 AS INTEGER) AS vacuum_pins, " +
-        "CAST(1 AS INTEGER) AS drop_sweeps") { (s, dir) =>
-      import s.implicits._
+      "tag_read", "immutable", "vacuum_pins", "drop_sweeps") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .filter(col("o_orderkey") < 6000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-tag")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       val rel = orders.filter(col("o_orderkey") % 4 === 0)
       CatalogStore.commit(s, root, Map("t" -> rel)) // v1
       CatalogStore.createTag(s, root, "v2024.1")
@@ -4756,7 +4578,7 @@ object ExtQueries {
       CatalogStore.commit(s, root, Map("t" -> orders.limit(70)))
       val tagged = CatalogStore.snapshotRef(s, root, "v2024.1")
       val tagRead = tagged.version == 1 &&
-        eq(CatalogStore.read(s, root, "t", tagged), rel.toDF())
+        Gate.sameRows(CatalogStore.read(s, root, "t", tagged), rel.toDF())
       val immutable = (try {
         CatalogStore.createTag(s, root, "v2024.1"); false
       } catch { case _: IllegalArgumentException => true }) &&
@@ -4772,7 +4594,7 @@ object ExtQueries {
       val vacuumPins = vac.catalogs == Seq(2) &&
         vac.tableVersions == Map("t" -> Seq(2)) &&
         fs.exists(new org.apache.hadoop.fs.Path(root, "t/v=1")) &&
-        eq(CatalogStore.read(s, root, "t",
+        Gate.sameRows(CatalogStore.read(s, root, "t",
           CatalogStore.snapshotRef(s, root, "v2024.1")), rel.toDF())
       CatalogStore.dropTag(s, root, "v2024.1")
       val vac2 = CatalogStore.vacuum(s, root, keep = 1, claimAgeMs = 0L)
@@ -4781,9 +4603,7 @@ object ExtQueries {
         !fs.exists(new org.apache.hadoop.fs.Path(root, "t/v=1")) &&
         (try { CatalogStore.snapshot(s, root, Some(1)); false }
          catch { case _: Exception => true })
-      Seq((if (tagRead) 1 else 0, if (immutable) 1 else 0,
-        if (vacuumPins) 1 else 0, if (dropSweeps) 1 else 0))
-        .toDF("tag_read", "immutable", "vacuum_pins", "drop_sweeps")
+      Seq(tagRead, immutable, vacuumPins, dropSweeps)
     },
 
     "report_branch_audit" -> QueryDef(
@@ -4821,14 +4641,10 @@ object ExtQueries {
         .localCheckpoint(true)
     },
 
-    "store_constraint_gate" -> QueryDef(
+    "store_constraint_gate" -> QueryDef.gate(
       doc = "declarative catalog-persisted constraints (Delta's ADD CONSTRAINT tier: the contract lives IN the catalog and outlives the pipeline that declared it - the 100 TB failure it closes is the second writer, or the human with a notebook, publishing the same table without the first pipeline's checks): (1) add_validates - ADD CONSTRAINT over data that already violates it is rejected (a contract nobody validated is worse than none) and the catalog records nothing; (2) enforced - after a clean add, a violating commit is rejected BEFORE any metadata moves (claim, version dirs, pointer all byte-identical) with the constraint, kind, and an offending row named; (3) carried - the constraint rides the catalog's carry-forward: still enforced after unrelated commits, and dropConstraint ends enforcement; (4) unique_key - UNIQUE over the order key rejects a duplicated load and passes the deduplicated one (one aggregation per commit, the documented cost); (5) merge_gated - a branch that forked BEFORE the constraint existed stages violating data; mergeBranch enforces MAIN's set on the merged tables and refuses - the WAP close",
-      oracle = "SELECT CAST(1 AS INTEGER) AS add_validates, " +
-        "CAST(1 AS INTEGER) AS enforced, " +
-        "CAST(1 AS INTEGER) AS carried, " +
-        "CAST(1 AS INTEGER) AS unique_key, " +
-        "CAST(1 AS INTEGER) AS merge_gated") { (s, dir) =>
-      import s.implicits._
+      "add_validates", "enforced", "carried", "unique_key",
+      "merge_gated") { (s, dir) =>
       import graft.sources.CatalogStore
       import graft.sources.CatalogStore.{Constraint,
         ConstraintViolationException}
@@ -4896,11 +4712,7 @@ object ExtQueries {
       } catch { case e: ConstraintViolationException =>
         e.constraint == "key_pos"
       }) && CatalogStore.snapshot(s, root) == preMergeSnap
-      Seq((if (addValidates) 1 else 0, if (enforced) 1 else 0,
-        if (carried) 1 else 0, if (uniqueKey) 1 else 0,
-        if (mergeGated) 1 else 0))
-        .toDF("add_validates", "enforced", "carried", "unique_key",
-          "merge_gated")
+      Seq(addValidates, enforced, carried, uniqueKey, mergeGated)
     },
 
     "store_upsert" -> QueryDef(
@@ -4960,13 +4772,10 @@ object ExtQueries {
         "k", "content").localCheckpoint(true)
     },
 
-    "store_rename_gate" -> QueryDef(
+    "store_rename_gate" -> QueryDef.gate(
       doc = "column rename WITHOUT rewrite (the Iceberg field-mapping answer, recovered as a version-stamped rename chain in the catalog metadata - closing the schema contract's 'a rename is a new table' with the feature real lakehouses ship; at 100 TB a rename that rewrites the table is a day of cluster time, this is one metadata file): (1) metadata_only - renameColumn lands a data-free catalog commit: no new table version, the old version's files byte-identical, yet the current read serves the NEW name over the OLD bytes; (2) travel_names - time travel to the pre-rename catalog serves the OLD name (old catalogs simply don't carry the mapping); (3) chained_generations - a post-rename commit writes the new name physically and a SECOND rename maps BOTH physical generations; upsert reads and writes the logical name across them; (4) guarded - renaming a constraint-referenced column is refused with the constraint named (the stored expression would silently stop matching); renaming onto an existing column is refused",
-      oracle = "SELECT CAST(1 AS INTEGER) AS metadata_only, " +
-        "CAST(1 AS INTEGER) AS travel_names, " +
-        "CAST(1 AS INTEGER) AS chained_generations, " +
-        "CAST(1 AS INTEGER) AS guarded") { (s, dir) =>
-      import s.implicits._
+      "metadata_only", "travel_names", "chained_generations",
+      "guarded") { (s, dir) =>
       import graft.sources.CatalogStore
       import graft.sources.CatalogStore.Constraint
       val orders = Tables.load(s, dir, "orders")
@@ -4977,9 +4786,6 @@ object ExtQueries {
         .toString
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       CatalogStore.commit(s, root, Map("t" -> orders))
       val filesBefore = fs.listStatus(
         new org.apache.hadoop.fs.Path(root, "t/v=1"))
@@ -4992,7 +4798,7 @@ object ExtQueries {
         fs.listStatus(new org.apache.hadoop.fs.Path(root, "t/v=1"))
           .filter(_.isFile)
           .map(f => f.getPath.getName -> f.getLen).toMap == filesBefore &&
-        eq(CatalogStore.read(s, root, "t", snap),
+        Gate.sameRows(CatalogStore.read(s, root, "t", snap),
           orders.withColumnRenamed("cents", "amount"))
       val travelNames = CatalogStore.read(s, root, "t",
         CatalogStore.snapshot(s, root, Some(1)))
@@ -5006,7 +4812,7 @@ object ExtQueries {
       CatalogStore.upsertTable(s, root, "t",
         orders.withColumnRenamed("cents", "amt")
           .filter(col("k") % 2 === 1), Seq("k"))
-      val chained = eq(CatalogStore.read(s, root, "t",
+      val chained = Gate.sameRows(CatalogStore.read(s, root, "t",
         CatalogStore.snapshot(s, root)),
         orders.withColumnRenamed("cents", "amt")) &&
         // generation 1 (physical `cents`) through the chain at the
@@ -5023,20 +4829,13 @@ object ExtQueries {
       }) && (try {
         CatalogStore.renameColumn(s, root, "t", "k", "amt"); false
       } catch { case _: IllegalArgumentException => true })
-      Seq((if (metadataOnly) 1 else 0, if (travelNames) 1 else 0,
-        if (chained) 1 else 0, if (guarded) 1 else 0))
-        .toDF("metadata_only", "travel_names", "chained_generations",
-          "guarded")
+      Seq(metadataOnly, travelNames, chained, guarded)
     },
 
-    "store_sql_ddl_gate" -> QueryDef(
+    "store_sql_ddl_gate" -> QueryDef.gate(
       doc = "the catalog's TEXT command surface (CatalogSql - the reference's whole operational posture is SQL text and JSON config, so an engine tier reachable only from Scala would be a regression for that user): one regular grammar, each statement mapping 1:1 onto a CatalogStore API so the parser adds a surface, never semantics. The gate drives a full lifecycle purely through text - CREATE TAG/BRANCH, DELETE FROM..WHERE (SQL NULL semantics ride through), ADD CONSTRAINT CHECK + UNIQUE (enforcement bites a later commit), DROP CONSTRAINT, ALTER TABLE RENAME COLUMN (guarded by the constraint first, landing after the drop), OPTIMIZE (compact + ZORDER BY), MERGE BRANCH, RESTORE TO, SHOW REFS/CONSTRAINTS, VACUUM KEEP - and pins: (1) text_dml - the delete/rename/optimize sequence reads back exactly right; (2) text_guards - constraint enforcement and the rename guard fire through the text path; (3) text_refs - tag time travel and branch merge land; (4) text_restore - RESTORE TO republishes the v1 world as a data-free FORWARD commit (the whole DML/rename/merge era undone in one metadata file, history still auditable); (5) text_loud - an unsupported statement fails naming the grammar",
-      oracle = "SELECT CAST(1 AS INTEGER) AS text_dml, " +
-        "CAST(1 AS INTEGER) AS text_guards, " +
-        "CAST(1 AS INTEGER) AS text_restore, " +
-        "CAST(1 AS INTEGER) AS text_refs, " +
-        "CAST(1 AS INTEGER) AS text_loud") { (s, dir) =>
-      import s.implicits._
+      "text_dml", "text_guards", "text_restore", "text_refs",
+      "text_loud") { (s, dir) =>
       import graft.sources.{CatalogSql, CatalogStore}
       val orders = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
@@ -5044,9 +4843,6 @@ object ExtQueries {
         .filter(col("k") < 6000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-sqd")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       def x(stmt: String) = CatalogSql.exec(s, root, stmt)
       CatalogStore.commit(s, root, Map("t" -> orders))
       x("CREATE TAG rel AT 1")
@@ -5060,7 +4856,8 @@ object ExtQueries {
       x("OPTIMIZE t ZORDER BY (k)")
       val expected = orders.filter(col("k") % 2 === 0)
         .withColumnRenamed("cents", "amount")
-      val textDml = eq(CatalogStore.readCurrent(s, root, "t"), expected)
+      val textDml = Gate.sameRows(CatalogStore.readCurrent(s, root, "t"),
+        expected)
       // guards fire THROUGH the text path
       val uniqBit = try {
         CatalogStore.commit(s, root,
@@ -5079,7 +4876,7 @@ object ExtQueries {
       val textRefs = CatalogStore.snapshot(s, root).tables
         .contains("side") &&
         CatalogStore.snapshotRef(s, root, "rel").version == 1 &&
-        eq(CatalogStore.read(s, root, "t",
+        Gate.sameRows(CatalogStore.read(s, root, "t",
           CatalogStore.snapshotRef(s, root, "rel")), orders.toDF()) &&
         // collect-bound: |refs| rows (one per named ref)
         x("SHOW REFS").collect().map(_.getString(0)).toSet ==
@@ -5090,34 +4887,25 @@ object ExtQueries {
       x("RESTORE TO 1")
       val restored = CatalogStore.snapshot(s, root)
       val textRestore = restored.tables == Map("t" -> 1) &&
-        eq(CatalogStore.read(s, root, "t", restored), orders.toDF()) &&
+        Gate.sameRows(CatalogStore.read(s, root, "t", restored),
+          orders.toDF()) &&
         { x(s"RESTORE TO ${preRestore.version}")
           CatalogStore.snapshot(s, root).tables == preRestore.tables }
       val textLoud = try { x("TRUNCATE TABLE t"); false }
         catch { case e: IllegalArgumentException =>
           e.getMessage.contains("supported:") }
-      Seq((if (textDml) 1 else 0, if (textGuards) 1 else 0,
-        if (textRestore) 1 else 0, if (textRefs) 1 else 0,
-        if (textLoud) 1 else 0))
-        .toDF("text_dml", "text_guards", "text_restore", "text_refs",
-          "text_loud")
+      Seq(textDml, textGuards, textRestore, textRefs, textLoud)
     },
 
-    "store_sql_dml_gate" -> QueryDef(
+    "store_sql_dml_gate" -> QueryDef.gate(
       doc = "the catalog's TEXT DML surface (closing the r11 asymmetry: the most common write verb was Scala-only while the reference's operational posture is SQL text): MERGE INTO t USING <view|(query)> ON (keys) -> upsertTable, INSERT INTO -> appendTable, INSERT OVERWRITE -> commit. Pins: (1) sql_merge_eq_scala - the text MERGE result row-equals the Scala upsertTable over a mirror store (the 1:1 parser contract, both source forms exercised); (2) sql_insert_into - INSERT INTO appends to existing rows and first-publishes a missing table; (3) sql_overwrite - INSERT OVERWRITE replaces the table wholesale; (4) sql_guard_preclaim - a persisted CHECK rejects a violating text INSERT and text MERGE before anything claims (catalog version and rows byte-identical after)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS sql_merge_eq_scala, " +
-        "CAST(1 AS INTEGER) AS sql_insert_into, " +
-        "CAST(1 AS INTEGER) AS sql_overwrite, " +
-        "CAST(1 AS INTEGER) AS sql_guard_preclaim") { (s, dir) =>
-      import s.implicits._
+      "sql_merge_eq_scala", "sql_insert_into", "sql_overwrite",
+      "sql_guard_preclaim") { (s, dir) =>
       import graft.sources.{CatalogSql, CatalogStore}
       val orders = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
         .filter(col("k") < 6000) // slice: semantics, not IO
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       val root = java.nio.file.Files.createTempDirectory("graft-sqm")
         .toString
       val mirror = java.nio.file.Files.createTempDirectory("graft-sqm2")
@@ -5146,7 +4934,7 @@ object ExtQueries {
           upd.filter(col("k") >= 4500)
             .withColumn("cents", col("cents") + 1), Seq("k"))
       })
-      val mergeEqScala = eq(CatalogStore.readCurrent(s, root, "t"),
+      val mergeEqScala = Gate.sameRows(CatalogStore.readCurrent(s, root, "t"),
         CatalogStore.readCurrent(s, mirror, "t"))
       // INSERT INTO appends; on a missing table it first-publishes
       val nBefore = CatalogStore.readCurrent(s, root, "t").count()
@@ -5157,10 +4945,10 @@ object ExtQueries {
       val insertInto =
         CatalogStore.readCurrent(s, root, "t").count() ==
           nBefore + nAppend &&
-        eq(CatalogStore.readCurrent(s, root, "fresh"), base.toDF())
+        Gate.sameRows(CatalogStore.readCurrent(s, root, "fresh"), base.toDF())
       // INSERT OVERWRITE replaces wholesale
       x("INSERT OVERWRITE fresh SELECT * FROM sqldml_upd")
-      val overwrite = eq(CatalogStore.readCurrent(s, root, "fresh"),
+      val overwrite = Gate.sameRows(CatalogStore.readCurrent(s, root, "fresh"),
         upd.toDF())
       // persisted CHECK bites pre-claim through both text verbs
       x("ALTER TABLE fresh ADD CONSTRAINT cents_pos CHECK (cents >= 0)")
@@ -5176,26 +4964,18 @@ object ExtQueries {
         case _: CatalogStore.ConstraintViolationException => true }
       val guard = insRejected && mrgRejected &&
         CatalogStore.snapshot(s, root).version == vBefore &&
-        eq(CatalogStore.readCurrent(s, root, "fresh"), upd.toDF())
-      Seq((if (mergeEqScala) 1 else 0, if (insertInto) 1 else 0,
-        if (overwrite) 1 else 0, if (guard) 1 else 0))
-        .toDF("sql_merge_eq_scala", "sql_insert_into", "sql_overwrite",
-          "sql_guard_preclaim")
+        Gate.sameRows(CatalogStore.readCurrent(s, root, "fresh"), upd.toDF())
+      Seq(mergeEqScala, insertInto, overwrite, guard)
     },
 
-    "store_dml_gate" -> QueryDef(
+    "store_dml_gate" -> QueryDef.gate(
       doc = "the DML tier's guarantees: (1) delete_sql - deleteWhere removes exactly the rows where the predicate is TRUE; FALSE and NULL rows stay (SQL DELETE semantics - a naive filter(!p) silently deletes every NULL row too); (2) upsert_checked - the persisted constraints gate the MERGED result: a violating update batch rejects pre-claim and the store is byte-identical; (3) no_lost_update - the derived-CAS loop: a concurrent commit landing between an upsert's read and its claim triggers RE-derivation against the new version, so the concurrent writer's rows survive into the merged result (the optimistic-concurrency conflict Delta surfaces as ConcurrentModificationException, closed here by replay); (4) history - every pre-DML version still serves its own bytes (DML writes new versions, never rewrites history)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS delete_sql, " +
-        "CAST(1 AS INTEGER) AS upsert_checked, " +
-        "CAST(1 AS INTEGER) AS no_lost_update, " +
-        "CAST(1 AS INTEGER) AS history") { (s, dir) =>
+      "delete_sql", "upsert_checked", "no_lost_update",
+      "history") { (s, dir) =>
       import s.implicits._
       import graft.sources.CatalogStore
       import graft.sources.CatalogStore.{Constraint,
         ConstraintViolationException}
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       val root = java.nio.file.Files.createTempDirectory("graft-dml")
         .toString
       // (1) DELETE semantics over a NULL-bearing column
@@ -5203,7 +4983,7 @@ object ExtQueries {
         (3, None: Option[Long])).toDF("k", "v")
       CatalogStore.commit(s, root, Map("t" -> base))
       CatalogStore.deleteWhere(s, root, "t", col("v") < 0)
-      val deleteSql = eq(CatalogStore.readCurrent(s, root, "t"),
+      val deleteSql = Gate.sameRows(CatalogStore.readCurrent(s, root, "t"),
         Seq((1, Some(5L)), (3, None: Option[Long])).toDF("k", "v"))
       // (2) constraints gate the merged result
       CatalogStore.addConstraints(s, root, Seq(
@@ -5232,24 +5012,18 @@ object ExtQueries {
       }
       // the concurrent writer's k=9 row survived, doubled — a stale
       // derivation of the pre-interference version would have lost it
-      val noLostUpdate = eq(CatalogStore.readCurrent(s, root, "t"),
+      val noLostUpdate = Gate.sameRows(CatalogStore.readCurrent(s, root, "t"),
         Seq((1, Some(10L)), (9, Some(180L))).toDF("k", "v"))
       // (4) history: v1 still serves the original three rows
-      val history = eq(CatalogStore.read(s, root, "t",
+      val history = Gate.sameRows(CatalogStore.read(s, root, "t",
         CatalogStore.snapshot(s, root, Some(1))), base.toDF())
-      Seq((if (deleteSql) 1 else 0, if (upsertChecked) 1 else 0,
-        if (noLostUpdate) 1 else 0, if (history) 1 else 0))
-        .toDF("delete_sql", "upsert_checked", "no_lost_update",
-          "history")
+      Seq(deleteSql, upsertChecked, noLostUpdate, history)
     },
 
-    "store_optimize_gate" -> QueryDef(
+    "store_optimize_gate" -> QueryDef.gate(
       doc = "catalog-integrated OPTIMIZE (Delta OPTIMIZE / Iceberg rewrite_data_files as a TRANSACTION - maintenance that can never tear a reader): (1) compacted - 16 deliberately tiny files (the streaming-append shape that turns every 100 TB scan into a task storm) land as a new version with fewer files via the claim protocol; (2) rows_eq - the optimized version is row-identical to the base, both directions; (3) travel_intact - the PRE-optimize version keeps its exact file count and rows (optimize writes a new version; history is immutable until vacuum); (4) zorder_clusters - the zorder mode plus ride-along indexCols: the persisted file index on the clustered version prunes a narrow key band to <= 2 files while the SAME index columns on the unclustered version keep all 16 (random partitioning makes every file span the full key range - clustering is what turns min/max boxes into real IO pruning)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS compacted, " +
-        "CAST(1 AS INTEGER) AS rows_eq, " +
-        "CAST(1 AS INTEGER) AS travel_intact, " +
-        "CAST(1 AS INTEGER) AS zorder_clusters") { (s, dir) =>
-      import s.implicits._
+      "compacted", "rows_eq", "travel_intact",
+      "zorder_clusters") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -5258,9 +5032,6 @@ object ExtQueries {
         .toString
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       def nFiles(v: Int) = fs.listStatus(
         new org.apache.hadoop.fs.Path(root, s"t/v=$v"))
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -5272,9 +5043,9 @@ object ExtQueries {
       // two independent read-only equality legs — overlap them
       // (Par: guide §2.6)
       val (rowsEq, travelIntact) = Par.two(
-        eq(CatalogStore.read(s, root, "t", snap2), orders.toDF()),
+        Gate.sameRows(CatalogStore.read(s, root, "t", snap2), orders.toDF()),
         nFiles(1) == 16 &&
-          eq(CatalogStore.read(s, root, "t",
+          Gate.sameRows(CatalogStore.read(s, root, "t",
             CatalogStore.snapshot(s, root, Some(1))), orders.toDF()))
       // (4) clustering turns the file index into real pruning: the
       // same narrow band survives <= 2 clustered files vs all 16
@@ -5292,20 +5063,14 @@ object ExtQueries {
       val zorderClusters =
         band(CatalogStore.fileIndexOf(s, root, snap3, "t").get) <= 2 &&
         band(idx1) >= 12 &&
-        eq(CatalogStore.read(s, root, "t", snap3), orders.toDF())
-      Seq((if (compacted) 1 else 0, if (rowsEq) 1 else 0,
-        if (travelIntact) 1 else 0, if (zorderClusters) 1 else 0))
-        .toDF("compacted", "rows_eq", "travel_intact",
-          "zorder_clusters")
+        Gate.sameRows(CatalogStore.read(s, root, "t", snap3), orders.toDF())
+      Seq(compacted, rowsEq, travelIntact, zorderClusters)
     },
 
-    "stats_metadata_agg_gate" -> QueryDef(
+    "stats_metadata_agg_gate" -> QueryDef.gate(
       doc = "metadata-only aggregates from the publish-time stats sidecar (what Delta/Iceberg answer from the manifest and a bare-path lakehouse re-scans for - at 100 TB the dashboard's SELECT count(*), max(event_time) is one small-file read, not an ~800k-file scan): CatalogStore.metaAgg serves COUNT(*)/null-counts/MIN/MAX from the sidecar CatalogStore.analyze wrote into the immutable version dir. Legs: (1) meta_counts - row count and per-column null counts equal the full-scan aggregates; (2) meta_bounds - min/max equal the full-scan values IN THE COLUMN'S TYPE, and the gate proves the lexicographic trap is real and dodged (the string-order max of the key differs from the typed max - a sidecar recording report-form strings would serve a bound that excludes live values); (3) meta_local - the optimized plan is a LocalRelation: zero scans, the answer is constant-folded from metadata; (4) meta_strings - string-column min/max (where lexicographic IS the right order) also match the scan",
-      oracle = "SELECT CAST(1 AS INTEGER) AS meta_counts, " +
-        "CAST(1 AS INTEGER) AS meta_bounds, " +
-        "CAST(1 AS INTEGER) AS meta_local, " +
-        "CAST(1 AS INTEGER) AS meta_strings") { (s, dir) =>
-      import s.implicits._
+      "meta_counts", "meta_bounds", "meta_local",
+      "meta_strings") { (s, dir) =>
       import graft.sources.CatalogStore
       val df = Tables.load(s, dir, "orders")
         .filter(col("o_orderkey") < 6000) // slice: semantics, not IO
@@ -5346,18 +5111,13 @@ object ExtQueries {
         String.valueOf(m.getAs[Any]("max_k")) !=
           sc.getAs[String]("lexmaxk")
       val strings = same("min_clerk", "minc") && same("max_clerk", "maxc")
-      Seq((if (counts) 1 else 0, if (bounds) 1 else 0,
-        if (local) 1 else 0, if (strings) 1 else 0))
-        .toDF("meta_counts", "meta_bounds", "meta_local", "meta_strings")
+      Seq(counts, bounds, local, strings)
     },
 
-    "stats_histogram_gate" -> QueryDef(
+    "stats_histogram_gate" -> QueryDef.gate(
       doc = "equi-height histograms complete the publish-time CBO feed (min/max + uniformity is off by ~the skew factor on a hot-value column - the estimate that picks the wrong join order at 100 TB): analyze(histCols) computes percentile-boundary bins with per-bin sketched NDV in one boundary pass + one group-by-bin pass, persists them in the same immutable stats sidecar, and ScanStatsRule attaches them as catalog histogram stats. Legs on a 90%-one-value fixture where the tail predicate's truth is ~5% and the uniform interpolation says ~50%: (1) hist_persisted - sidecar round-trips the histogram (reload == analyze, nothing recomputed); (2) hist_crowds - equi-HEIGHT boundaries crowd at the hot value (most bins are zero-width at it), which is the property equi-width lacks; (3) hist_sharpens - under spark.sql.cbo.enabled the optimizer's row estimate with the histogram is >=3x smaller than the same stats without it and lands near the truth; (4) rows_eq - estimates steer planning, never results",
-      oracle = "SELECT CAST(1 AS INTEGER) AS hist_persisted, " +
-        "CAST(1 AS INTEGER) AS hist_crowds, " +
-        "CAST(1 AS INTEGER) AS hist_sharpens, " +
-        "CAST(1 AS INTEGER) AS rows_eq") { (s, dir) =>
-      import s.implicits._
+      "hist_persisted", "hist_crowds", "hist_sharpens",
+      "rows_eq") { (s, dir) =>
       import graft.plans.ScanStatsCatalog
       import graft.sources.CatalogStore
       // 90% of rows hold k = 0; the tail is uniform over 1..1000
@@ -5405,28 +5165,19 @@ object ExtQueries {
         savedCbo.fold(s.conf.unset("spark.sql.cbo.enabled"))(
           s.conf.set("spark.sql.cbo.enabled", _))
       }
-      Seq((if (persisted) 1 else 0, if (crowds) 1 else 0,
-        if (sharpens) 1 else 0, if (rowsEq) 1 else 0))
-        .toDF("hist_persisted", "hist_crowds", "hist_sharpens",
-          "rows_eq")
+      Seq(persisted, crowds, sharpens, rowsEq)
     },
 
-    "store_readwhere_gate" -> QueryDef(
+    "store_readwhere_gate" -> QueryDef.gate(
       doc = "catalog-integrated data skipping (the layout tier's file index promoted to the catalog's DEFAULT filtered-read path): indexTable persists a per-file min/max box index INSIDE the immutable version dir (underscore-hidden like _SUCCESS, dropped by vacuum with its version, a second call is a no-op because the bytes cannot change), and readWhere answers any WHERE-shaped predicate through autoPrunedRead - extractable bounds prune files against the persisted index, the FULL predicate re-applies to survivors. Legs: (1) rw_lossless - readWhere == read().filter for a band + unextractable-modulo predicate, both directions; (2) rw_prunes - the band survives at most 2 of the 8 range-partitioned files (the index is doing real IO work, not riding along); (3) rw_invisible - the sidecar never changes what a plain read returns (the underscore-hiding contract the whole design leans on); (4) rw_unindexed_safe - a table without an index degrades to the plain filtered read, row-identical",
-      oracle = "SELECT CAST(1 AS INTEGER) AS rw_lossless, " +
-        "CAST(1 AS INTEGER) AS rw_prunes, " +
-        "CAST(1 AS INTEGER) AS rw_invisible, " +
-        "CAST(1 AS INTEGER) AS rw_unindexed_safe") { (s, dir) =>
-      import s.implicits._
+      "rw_lossless", "rw_prunes", "rw_invisible",
+      "rw_unindexed_safe") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .filter(col("o_orderkey") < 12000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-rw")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       CatalogStore.commit(s, root, Map("t" ->
         orders.repartitionByRange(8, col("o_orderkey"))))
       val snap = CatalogStore.snapshot(s, root)
@@ -5437,7 +5188,7 @@ object ExtQueries {
       val hi = orders.agg(percentile_approx(col("o_orderkey"),
         lit(0.12), lit(1000))).head().getLong(0)
       val pred = col("o_orderkey") <= hi && col("o_custkey") % 2 === 0
-      val lossless = eq(
+      val lossless = Gate.sameRows(
         CatalogStore.readWhere(s, root, "t", snap, pred),
         CatalogStore.read(s, root, "t", snap).filter(pred))
       val prunes = graft.operators.Layout.autoPruneFiles(s,
@@ -5446,33 +5197,24 @@ object ExtQueries {
         .exists(_.size <= 2)
       CatalogStore.commit(s, root, Map("u" -> orders.limit(200)))
       val snap2 = CatalogStore.snapshot(s, root)
-      val unindexed = eq(
+      val unindexed = Gate.sameRows(
         CatalogStore.readWhere(s, root, "u", snap2,
           col("o_orderkey") % 3 === 0),
         CatalogStore.read(s, root, "u", snap2)
           .filter(col("o_orderkey") % 3 === 0))
-      Seq((if (lossless) 1 else 0, if (prunes) 1 else 0,
-        if (invisible) 1 else 0, if (unindexed) 1 else 0))
-        .toDF("rw_lossless", "rw_prunes", "rw_invisible",
-          "rw_unindexed_safe")
+      Seq(lossless, prunes, invisible, unindexed)
     },
 
-    "store_sql_skipping_gate" -> QueryDef(
+    "store_sql_skipping_gate" -> QueryDef.gate(
       doc = "SQL-transparent data skipping (the readWhere behavior promoted under Spark's own scan planning, the Delta design: a custom FileIndex consults the persisted per-file boxes inside FileSourceStrategy's listing, so plain text SQL - the reports.json surface - prunes files without naming any graft API): registerSkippingView builds a LogicalRelation over GraftSkippingIndex for one immutable snapshot version. Soundness is load-bearing: file-level listing is NOT re-checked downstream (a wrongly dropped file is silent row loss), so the index prunes only on provable box misses and keeps everything else. Legs: (1) sql_lossless - the view's WHERE-band rows equal the unregistered scan's, both directions; (2) sql_prunes - the scan node's own numFiles metric opens <=2 of the 8 range-partitioned files where the plain scan opens all 8; (3) sql_or_safe - an OR predicate (unextractable) opens ALL files and returns identical rows - no false pruning; (4) sql_unregistered_loud - registering a view over an unindexed table fails loudly naming indexTable (a silently-plain view would read as 'skipping works' in a benchmark that never skipped)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS sql_lossless, " +
-        "CAST(1 AS INTEGER) AS sql_prunes, " +
-        "CAST(1 AS INTEGER) AS sql_or_safe, " +
-        "CAST(1 AS INTEGER) AS sql_unregistered_loud") { (s, dir) =>
-      import s.implicits._
+      "sql_lossless", "sql_prunes", "sql_or_safe",
+      "sql_unregistered_loud") { (s, dir) =>
       import graft.sources.CatalogStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .filter(col("o_orderkey") < 12000) // slice: semantics, not IO
       val root = java.nio.file.Files.createTempDirectory("graft-sqlsk")
         .toString
-      def eq(a: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame) =
-        a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
       def scanFiles(df: org.apache.spark.sql.DataFrame): Long =
         graft.plans.PlanMetrics.scanFiles(df)
       CatalogStore.commit(s, root, Map("t" ->
@@ -5491,29 +5233,23 @@ object ExtQueries {
         lit(0.12), lit(1000))).head().getLong(0)
       val band = s.sql(s"SELECT * FROM t_sqlsk WHERE o_orderkey <= $hi")
       val wantBand = plain.filter(col("o_orderkey") <= hi)
-      val lossless = eq(band, wantBand)
+      val lossless = Gate.sameRows(band, wantBand)
       val prunes = scanFiles(
         s.sql(s"SELECT * FROM t_sqlsk WHERE o_orderkey <= $hi")) <= 2L &&
         scanFiles(plain.filter(col("o_orderkey") <= hi)) == 8L
       val orq = s.sql(s"SELECT * FROM t_sqlsk WHERE o_orderkey <= " +
         s"$hi OR o_custkey % 2 = 0")
-      val orSafe = eq(orq, plain.filter(col("o_orderkey") <= hi ||
+      val orSafe = Gate.sameRows(orq, plain.filter(col("o_orderkey") <= hi ||
         col("o_custkey") % 2 === 0)) &&
         scanFiles(s.sql(s"SELECT * FROM t_sqlsk WHERE o_orderkey <= " +
           s"$hi OR o_custkey % 2 = 0")) == 8L
       s.catalog.dropTempView("t_sqlsk")
-      Seq((if (lossless) 1 else 0, if (prunes) 1 else 0,
-        if (orSafe) 1 else 0, if (loud) 1 else 0))
-        .toDF("sql_lossless", "sql_prunes", "sql_or_safe",
-          "sql_unregistered_loud")
+      Seq(lossless, prunes, orSafe, loud)
     },
 
-    "store_versioned_gate" -> QueryDef(
+    "store_versioned_gate" -> QueryDef.gate(
       doc = "versioned serving store (time travel + rollback + vacuum with plain parquet dirs - the Delta/Iceberg snapshot idea reduced to its load-bearing parts: immutable v=N dirs + an atomically-renamed one-line pointer, so a publish can never tear a running scan and rollback is a data-free pointer flip): (1) two publishes - current serves v2 while v1 stays byte-intact for time travel; (2) rollback flips to v1 and a subsequent publish NEVER reuses a live version number; (3) vacuum keeps the newest N but never deletes the pointer target",
-      oracle = "SELECT CAST(1 AS INTEGER) AS ver_travel_ok, " +
-        "CAST(1 AS INTEGER) AS ver_rollback_ok, " +
-        "CAST(1 AS INTEGER) AS ver_vacuum_ok") { (s, dir) =>
-      import s.implicits._
+      "ver_travel_ok", "ver_rollback_ok", "ver_vacuum_ok") { (s, dir) =>
       import graft.sources.VersionedStore
       // deterministic SLICE, not the full table: the gate's contract
       // is pointer/version semantics (counts relative to what was
@@ -5541,9 +5277,7 @@ object ExtQueries {
       val vacuum = gone == Seq(2) &&
         VersionedStore.versions(s, path) == Seq(1, 3) &&
         VersionedStore.read(s, path).count() == full
-      Seq((if (travel) 1 else 0, if (rollback) 1 else 0,
-        if (vacuum) 1 else 0))
-        .toDF("ver_travel_ok", "ver_rollback_ok", "ver_vacuum_ok")
+      Seq(travel, rollback, vacuum)
     },
 
     "src_schema_drift" -> QueryDef(
@@ -5577,11 +5311,9 @@ object ExtQueries {
       AnalysisStore.read(s, path, format = "orc")
     },
 
-    "ivm_delete_gate" -> QueryDef(
+    "ivm_delete_gate" -> QueryDef.gate(
       doc = "the honest half of IVM - deletes: count/sum could take retractions algebraically but min/max are NOT subtractable (a deleted minimum says nothing about the next-smallest), so recomputeKeys re-aggregates DIRTY KEYS ONLY from the post-delete base (anti-join passes untouched view rows through; left_semi pushes the dirty-key filter into the base scan) - cost scales with the dirty footprint, never the table. Gate: maintained == full rebuild both directions after deleting every 11th event, AND non-vacuity - some dirty key's min or max actually moved (the recompute did work retraction algebra could not)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS ivm_delete_eq_rebuild, " +
-        "CAST(1 AS INTEGER) AS ivm_extremes_moved") { (s, dir) =>
-      import s.implicits._
+      "ivm_delete_eq_rebuild", "ivm_extremes_moved") { (s, dir) =>
       import graft.operators.Incremental
       import graft.operators.Incremental.AggCol
       val keys = Seq("user_id", "event_type")
@@ -5598,16 +5330,14 @@ object ExtQueries {
       val maintained = Incremental.recomputeKeys(view, after,
         deletes, keys, specs).localCheckpoint(true)
       val rebuilt = Incremental.aggView(after, keys, specs)
-      val eq = maintained.exceptAll(rebuilt)
-        .unionByName(rebuilt.exceptAll(maintained)).isEmpty
+      val eq = Gate.sameRows(maintained, rebuilt)
       val moved = maintained
         .join(view.select(col("user_id"), col("event_type"),
           col("min_cents").as("om"), col("max_cents").as("ox")), keys)
         .filter(col("min_cents") =!= col("om") ||
           col("max_cents") =!= col("ox"))
         .count() > 0
-      Seq((if (eq) 1 else 0, if (moved) 1 else 0))
-        .toDF("ivm_delete_eq_rebuild", "ivm_extremes_moved")
+      Seq(eq, moved)
     },
 
     "ivm_join_view" -> QueryDef(
@@ -5634,11 +5364,9 @@ object ExtQueries {
           col("l_extendedprice"))
     },
 
-    "ivm_join_delete_gate" -> QueryDef(
+    "ivm_join_delete_gate" -> QueryDef.gate(
       doc = "delete handling for JOIN views - the recomputeKeys posture (a row-granular delete on either side cannot be anti-joined away: a surviving base row may still pair with others on the same key): dirty-key view rows leave wholesale, then re-join from the post-delete bases restricted to those keys (left_semi prune BOTH sides). Gate: maintained == full post-delete rebuild both directions after deleting every 7th lineitem row, AND non-vacuity - some dirty key still has surviving pairs (the recompute re-created rows a pure anti-join would have lost)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS ivm_jd_eq_rebuild, " +
-        "CAST(1 AS INTEGER) AS ivm_jd_nonvacuous") { (s, dir) =>
-      import s.implicits._
+      "ivm_jd_eq_rebuild", "ivm_jd_nonvacuous") { (s, dir) =>
       import graft.operators.Incremental
       val keys = Seq("o_orderkey")
       val orders = Tables.load(s, dir, "orders")
@@ -5657,15 +5385,13 @@ object ExtQueries {
       // two independent check actions over the checkpointed frames —
       // overlap them (Par: guide §2.6)
       val (eq, survivors) = Par.two(
-        maintained.exceptAll(rebuilt)
-          .unionByName(rebuilt.exceptAll(maintained)).isEmpty,
+        Gate.sameRows(maintained, rebuilt),
         // non-vacuity: a dirty key that kept OTHER pairs after the
         // delete — the case where anti-join-only maintenance is wrong
         maintained
           .join(broadcast(doomed.select(keys.map(col): _*).distinct()),
             keys, "left_semi").count() > 0)
-      Seq((if (eq) 1 else 0, if (survivors) 1 else 0))
-        .toDF("ivm_jd_eq_rebuild", "ivm_jd_nonvacuous")
+      Seq(eq, survivors)
     },
 
     "ivm_rewrite" -> QueryDef(
@@ -5743,14 +5469,10 @@ object ExtQueries {
           avg("vc").as("avg_cents"))
     },
 
-    "ivm_rewrite_gate" -> QueryDef(
+    "ivm_rewrite_gate" -> QueryDef.gate(
       doc = "the non-vacuity half of ivm_rewrite (+_distinct): (1) rewrite_fired - the optimized plan's scan is the VIEW parquet and the base table is gone from the plan (otherwise the hash-green twin would be trivially true of a non-firing rule); (2) rewrite_eq - the routed result equals the direct aggregation computed with the catalog cleared, both directions; (3) filter_guard - a NON-key filter declines (the view has no row detail to filter); (4) distinct_fired / (5) distinct_eq - the COUNT(DISTINCT in-grain)+AVG+approx_count_distinct report ALSO routes to the view and equals the direct answer (the ivm_rewrite_distinct shapes, scan-moved-proven; the HLL column is duplicate-insensitive so the routed sketch is bit-identical - same-engine equality, exactly what exceptAll checks)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS rewrite_fired, " +
-        "CAST(1 AS INTEGER) AS rewrite_eq, " +
-        "CAST(1 AS INTEGER) AS filter_guard, " +
-        "CAST(1 AS INTEGER) AS distinct_fired, " +
-        "CAST(1 AS INTEGER) AS distinct_eq") { (s, dir) =>
-      import s.implicits._
+      "rewrite_fired", "rewrite_eq", "filter_guard", "distinct_fired",
+      "distinct_eq") { (s, dir) =>
       import graft.operators.Incremental
       import graft.operators.Incremental.AggCol
       import graft.plans.{AggViewCatalog, MaterializedAggView}
@@ -5802,23 +5524,15 @@ object ExtQueries {
         .exists(_.contains("curated_events_g"))
       AggViewCatalog.clear()
       val direct = report()
-      val eq = routedRows.exceptAll(direct)
-        .unionByName(direct.exceptAll(routedRows)).isEmpty
+      val eq = Gate.sameRows(routedRows, direct)
       val ddirect = dreport()
-      val deq = droutedRows.exceptAll(ddirect)
-        .unionByName(ddirect.exceptAll(droutedRows)).isEmpty
-      Seq((if (fired) 1 else 0, if (eq) 1 else 0, if (guarded) 1 else 0,
-        if (dfired) 1 else 0, if (deq) 1 else 0))
-        .toDF("rewrite_fired", "rewrite_eq", "filter_guard",
-          "distinct_fired", "distinct_eq")
+      val deq = Gate.sameRows(droutedRows, ddirect)
+      Seq(fired, eq, guarded, dfired, deq)
     },
 
-    "ivm_lattice_gate" -> QueryDef(
+    "ivm_lattice_gate" -> QueryDef.gate(
       doc = "rollup-lattice view selection (the BigQuery/Databricks MV-routing refinement of ivm_rewrite): TWO materialized grains of the same curated events base coexist in the catalog - (user_id, event_type) and the 8x-smaller (user_id) rollup - and the rule must route each report to the COARSEST adequate grain: (1) coarse_wins - a per-user report scans the (user_id) view (fewest groups = least state re-aggregated), base and fine view absent from the plan; (2) fine_serves - a per-(user, type) report falls through to the fine view (the coarse grain cannot serve it); (3) both routed answers equal the direct aggregations with the catalog cleared",
-      oracle = "SELECT CAST(1 AS INTEGER) AS coarse_wins, " +
-        "CAST(1 AS INTEGER) AS fine_serves, " +
-        "CAST(1 AS INTEGER) AS lattice_eq") { (s, dir) =>
-      import s.implicits._
+      "coarse_wins", "fine_serves", "lattice_eq") { (s, dir) =>
       import graft.operators.Incremental
       import graft.operators.Incremental.AggCol
       import graft.plans.{AggViewCatalog, MaterializedAggView}
@@ -5865,21 +5579,14 @@ object ExtQueries {
           p.contains("coarse_view_l"))
       val (uRows, utRows) = (u.localCheckpoint(true), ut.localCheckpoint(true))
       AggViewCatalog.clear()
-      val eq = uRows.exceptAll(perUser())
-        .unionByName(perUser().exceptAll(uRows)).isEmpty &&
-        utRows.exceptAll(perUserType())
-          .unionByName(perUserType().exceptAll(utRows)).isEmpty
-      Seq((if (coarseWins) 1 else 0, if (fineServes) 1 else 0,
-        if (eq) 1 else 0))
-        .toDF("coarse_wins", "fine_serves", "lattice_eq")
+      val eq = Gate.sameRows(uRows, perUser()) &&
+        Gate.sameRows(utRows, perUserType())
+      Seq(coarseWins, fineServes, eq)
     },
 
-    "store_bucketed_gate" -> QueryDef(
+    "store_bucketed_gate" -> QueryDef.gate(
       doc = "bucketed co-located join (AnalysisStore.writeBucketed made driver-visible): orders and lineitem bucket-sorted by the join key into catalog tables - the write pays ONE shuffle so every later equi-join/aggregation ON THE BUCKET KEY between co-bucketed tables plans with NO shuffle exchange at all (the 100 TB answer to 'this join runs every tick': the store owns the shuffle, not each query). The join is merge-hinted so fixture-sized stats can't flip a broadcast and mask the co-location claim. Gate: (1) no_shuffle - the bucketed join + per-key aggregate's physical plan contains ZERO shuffle exchanges, while (2) plain_shuffles - the IDENTICAL query over plain parquet plans >= 2 (both join sides repartition: the cost the bucketed store amortized); (3) bucketed_eq - both produce the same rows, so co-location changed the plan and nothing else",
-      oracle = "SELECT CAST(1 AS INTEGER) AS no_shuffle, " +
-        "CAST(1 AS INTEGER) AS plain_shuffles, " +
-        "CAST(1 AS INTEGER) AS bucketed_eq") { (s, dir) =>
-      import s.implicits._
+      "no_shuffle", "plain_shuffles", "bucketed_eq") { (s, dir) =>
       import graft.sources.AnalysisStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -5936,30 +5643,22 @@ object ExtQueries {
       require(b.count() > 0 && p.count() > 0,
         s"bucketed-gate: a side materialized empty (b=${b.count()}, " +
           s"p=${p.count()}) — bucketed table resolution failed")
-      val diffs = b.exceptAll(p)
-        .withColumn("__side", lit("bucketed-only"))
-        .unionByName(p.exceptAll(b).withColumn("__side", lit("plain-only")))
-        .localCheckpoint(true)
-      val eq = diffs.isEmpty
+      val eq = Gate.sameRows(b, p)
       if (!eq) {
         System.err.println(s"[bucketed-gate] MISMATCH: b=${b.count()} " +
-          s"p=${p.count()} diff=${diffs.count()}")
-        // collect-bound: 20-row diagnostic sample, mismatch path only
-        diffs.limit(20).collect()
-          .foreach(r => System.err.println(s"[bucketed-gate] $r"))
+          s"p=${p.count()}")
+        // collect-bound: 20-row diagnostic samples, mismatch path only
+        Seq("bucketed-only" -> b.exceptAll(p), "plain-only" -> p.exceptAll(b))
+          .foreach { case (side, d) => d.limit(20).collect()
+            .foreach(r => System.err.println(s"[bucketed-gate] $side $r")) }
       }
-      Seq((if (noShuffle) 1 else 0, if (plainShuffles) 1 else 0,
-        if (eq) 1 else 0))
-        .toDF("no_shuffle", "plain_shuffles", "bucketed_eq")
+      Seq(noShuffle, plainShuffles, eq)
     },
 
-    "store_bucketed_append_gate" -> QueryDef(
+    "store_bucketed_append_gate" -> QueryDef.gate(
       doc = "bucketed APPEND (AnalysisStore.appendBucketed): a daily delta lands in per-bucket files at |delta| cost - the table's earlier files are never touched - and the zero-shuffle bucket-key join SURVIVES the append. Gate: (1) rows_eq - appended table == base UNION delta; (2) still_no_shuffle - the merge-hinted join + per-key aggregate against a co-bucketed table still plans ZERO exchanges after the append; (3) bucket_honest - EVERY row (old and new) sits in the file whose name-embedded bucket id equals pmod(murmur3(key), n) - the physical invariant the no-shuffle plan silently RELIES on (scan-side bucket pruning and co-located joins are wrong the moment one row strays); (4) spec_guarded - an append claiming a DIFFERENT bucket count is rejected loudly (Spark itself would accept it and scatter rows outside their claimed bucket)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS rows_eq, " +
-        "CAST(1 AS INTEGER) AS still_no_shuffle, " +
-        "CAST(1 AS INTEGER) AS bucket_honest, " +
-        "CAST(1 AS INTEGER) AS spec_guarded") { (s, dir) =>
-      import s.implicits._
+      "rows_eq", "still_no_shuffle", "bucket_honest",
+      "spec_guarded") { (s, dir) =>
       import graft.sources.AnalysisStore
       val orders = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -5985,8 +5684,7 @@ object ExtQueries {
       val tblC = tbl.localCheckpoint(true)
       require(tblC.count() > 0,
         "bucketed-append-gate: table materialized empty")
-      val rowsEq = tblC.exceptAll(orders)
-        .unionByName(orders.exceptAll(tblC)).isEmpty
+      val rowsEq = Gate.sameRows(tblC, orders)
       val joined = tbl.hint("merge")
         .join(s.table("graft_bkta_lines"), Seq("o_orderkey"))
         .groupBy("o_orderkey")
@@ -6009,10 +5707,7 @@ object ExtQueries {
         false
       } catch { case e: IllegalArgumentException =>
         e.getMessage.contains("bucket spec") }
-      Seq((if (rowsEq) 1 else 0, if (noShuffle) 1 else 0,
-        if (strays == 0) 1 else 0, if (guarded) 1 else 0))
-        .toDF("rows_eq", "still_no_shuffle", "bucket_honest",
-          "spec_guarded")
+      Seq(rowsEq, noShuffle, strays == 0, guarded)
     },
 
     "store_upsert_ticks" -> QueryDef(
@@ -6133,14 +5828,10 @@ object ExtQueries {
       Incremental.applyChanges(existing, changes, Seq("k"))
     },
 
-    "cdc_apply_gate" -> QueryDef(
+    "cdc_apply_gate" -> QueryDef.gate(
       doc = "the CDC-apply algebra the hash query cannot see: (1) tick_fold - the late log split into three seq-range ticks folds to EXACTLY the one-shot apply (out-of-order histories straddle tick boundaries, so the per-tick max_by + stored-seq stale guard genuinely compose); (2) replay_noop - REdelivering the LAST tick leaves the table bit-identical (the at-least-once foreachBatch crash-replay case: every redelivered change loses or ties-identical against the stored seq); (3) delete_nonvacuous - keys present in the base table are gone from the final state (hard deletes actually fired); (4) revive_nonvacuous - some deleted-then-reinserted key survives (seq order, not op order, decides); (5) stale_cross_delete - replaying the FIRST tick after the third RESURRECTS some key deleted in between (hard deletes keep no tombstone, so out-of-order tick redelivery is the documented hazard - this field proves the scaladoc's warning is real, not theoretical)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS tick_fold, " +
-        "CAST(1 AS INTEGER) AS replay_noop, " +
-        "CAST(1 AS INTEGER) AS delete_nonvacuous, " +
-        "CAST(1 AS INTEGER) AS revive_nonvacuous, " +
-        "CAST(1 AS INTEGER) AS stale_cross_delete") { (s, dir) =>
-      import s.implicits._
+      "tick_fold", "replay_noop", "delete_nonvacuous", "revive_nonvacuous",
+      "stale_cross_delete") { (s, dir) =>
       import graft.operators.Incremental
       val base = Tables.load(s, dir, "events")
         .select((col("event_id") % 400).as("k"), col("event_type"),
@@ -6174,12 +5865,10 @@ object ExtQueries {
         })
       val (tickFold, replayNoop, deleted, revived, staleCross) =
         Par.five(
-          f3.exceptAll(oneShot)
-            .unionByName(oneShot.exceptAll(f3)).isEmpty,
+          Gate.sameRows(f3, oneShot),
           {
             val replayed = Incremental.applyChanges(f3, t3, Seq("k"))
-            replayed.exceptAll(f3)
-              .unionByName(f3.exceptAll(replayed)).isEmpty
+            Gate.sameRows(replayed, f3)
           },
           existing.join(oneShot, Seq("k"), "left_anti").count() > 0,
           // a key whose late history is delete-then-upsert: alive at
@@ -6197,11 +5886,7 @@ object ExtQueries {
             val outOfOrder = Incremental.applyChanges(f3, t1, Seq("k"))
             outOfOrder.join(f3, Seq("k"), "left_anti").count() > 0
           })
-      Seq((if (tickFold) 1 else 0, if (replayNoop) 1 else 0,
-        if (deleted) 1 else 0, if (revived) 1 else 0,
-        if (staleCross) 1 else 0))
-        .toDF("tick_fold", "replay_noop", "delete_nonvacuous",
-          "revive_nonvacuous", "stale_cross_delete")
+      Seq(tickFold, replayNoop, deleted, revived, staleCross)
     },
 
     "bitext_margin" -> QueryDef(
@@ -6264,11 +5949,9 @@ object ExtQueries {
         "vec_id", "embedding", k = 4, minMargin = 1.0)
     },
 
-    "bitext_index_gate" -> QueryDef(
+    "bitext_index_gate" -> QueryDef.gate(
       doc = "bitext serving path: mineFromIndexes over two PERSISTED IVF indexes (written to parquet stores and read back - the weekly re-mine reads stored (nid, cv, cid) tables and pays only probe joins + margin algebra, no re-training/re-assignment) must EQUAL mineIvf's from-scratch build both directions (deterministic centroids, no RNG - the FromIndex == rebuild proof, the knn_graph_delta_gate pattern for the bitext family), plus non-vacuity",
-      oracle = "SELECT CAST(1 AS INTEGER) AS bitext_index_eq, " +
-        "CAST(1 AS INTEGER) AS bitext_index_nonvacuous") { (s, dir) =>
-      import s.implicits._
+      "bitext_index_eq", "bitext_index_nonvacuous") { (s, dir) =>
       import graft.operators.{Bitext, Similarity}
       val e = Tables.load(s, dir, "embeddings")
       val (x, y) = (e.filter(col("vec_id") % 2 === 0),
@@ -6297,17 +5980,14 @@ object ExtQueries {
           .localCheckpoint(true),
         Bitext.mineIvf(x, y, "vec_id", "embedding",
           k = 4, minMargin = 1.0).localCheckpoint(true))
-      val eq = served.exceptAll(scratch)
-        .unionByName(scratch.exceptAll(served)).isEmpty
+      val eq = Gate.sameRows(served, scratch)
       val nonvac = served.count() > 0
-      Seq((if (eq) 1 else 0, if (nonvac) 1 else 0))
-        .toDF("bitext_index_eq", "bitext_index_nonvacuous")
+      Seq(eq, nonvac)
     },
 
-    "bitext_ivf_gate" -> QueryDef(
+    "bitext_ivf_gate" -> QueryDef.gateFrame(
       doc = "bitext scale-path gate: pairs mined by mineIvf (two ivfCrossTopK bipartite probes - cell-co-partitioned shuffle-hash joins, NEITHER corpus broadcast, cells scaled with the indexed side) vs the brute miner: pair agreement >= 0.5 (approximate neighborhoods shift both candidates AND margin normalizers, so mutual-best survival is the honest metric - measured ~0.9 at sf0.01 on the isotropic fixture) and non-vacuity (brute mines > 0 pairs)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS bitext_agree_ok, " +
-        "CAST(1 AS INTEGER) AS bitext_nonvacuous") { (s, dir) =>
+      "bitext_agree_ok", "bitext_nonvacuous") { (s, dir) =>
       import graft.operators.Bitext
       val e = Tables.load(s, dir, "embeddings")
       val (x, y) = (e.filter(col("vec_id") % 2 === 0),
@@ -6326,8 +6006,8 @@ object ExtQueries {
           sum(coalesce(col("hit"), lit(0))).as("agree"))
         .select(
           (coalesce(col("agree").cast("double") / col("n"), lit(1.0))
-            >= 0.5).cast("int").as("bitext_agree_ok"),
-          (col("n") > 0).cast("int").as("bitext_nonvacuous"))
+            >= 0.5).as("bitext_agree_ok"),
+          (col("n") > 0).as("bitext_nonvacuous"))
     },
 
     "dsir_scores" -> QueryDef(

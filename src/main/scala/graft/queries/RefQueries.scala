@@ -955,9 +955,9 @@ object RefQueries {
           percentile_approx(col("l_extendedprice"), lit(0.99), lit(1000)).as("p99_price"))
     },
 
-    "approx_error_gate" -> QueryDef(
+    "approx_error_gate" -> QueryDef.gateFrame(
       doc = "hash-verified error gate for q21's sketches: per group, HLL++ distinct within 10% of exact (5× the 2% rsd), approx percentiles between the exact quantiles at q∓0.01 (10× the sketch's 0.001 rank-error bound) — booleans the literal oracle pins to 1, so a sketch regression flips the hash",
-      oracle = "SELECT CAST(1 AS INTEGER) AS hll_ok, CAST(1 AS INTEGER) AS p50_ok, CAST(1 AS INTEGER) AS p99_ok") { (s, dir) =>
+      "hll_ok", "p50_ok", "p99_ok") { (s, dir) =>
       // sketches + exact quantiles in one grouped pass (array-form
       // percentiles: ONE sort buffer each, not one per quantile), and
       // the exact distinct count as its OWN two-key aggregation — a
@@ -999,9 +999,9 @@ object RefQueries {
           col("n_rows"))
     },
 
-    "sketch_error_gate" -> QueryDef(
+    "sketch_error_gate" -> QueryDef.gateFrame(
       doc = "hash-verified gate for the sketch state: per event_type, the rolled-up HLL estimate within 10% of exact distinct users (6× the lgK=12 rsd of 1.6%); an even/odd event_id split rebuilt as two partial states and merged yields the IDENTICAL rollup (register-max associativity — merge ≡ rebuild exactly, not within-error); merged n_rows bookkeeping exact — booleans the literal oracle pins to 1",
-      oracle = "SELECT CAST(1 AS INTEGER) AS est_ok, CAST(1 AS INTEGER) AS merge_eq_ok, CAST(1 AS INTEGER) AS rows_ok") { (s, dir) =>
+      "est_ok", "merge_eq_ok", "rows_ok") { (s, dir) =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"),
           to_date(col("ts")).as("day"), col("user_id"))
@@ -1265,9 +1265,10 @@ object RefQueries {
         minPassRate = 0.7)
     },
 
-    "dq_unique_gate" -> QueryDef(
+    "dq_unique_gate" -> QueryDef.gateFrame(
       doc = "agreement gate for the 100 TB uniqueness screen: exact unique() and the shuffle-free HLL uniqueApprox() must agree on a genuinely-unique key (orders.o_orderkey — both pass) AND on a duplicated one (lineitem's (l_orderkey, l_linenumber), ~24% dup rows in this fixture — both trip); booleans the literal oracle pins to 1",
-      oracle = "SELECT CAST(1 AS INTEGER) AS clean_exact_ok, CAST(1 AS INTEGER) AS clean_approx_ok, CAST(1 AS INTEGER) AS dirty_exact_trips, CAST(1 AS INTEGER) AS dirty_approx_trips") { (s, dir) =>
+      "clean_exact_ok", "clean_approx_ok", "dirty_exact_trips",
+      "dirty_approx_trips") { (s, dir) =>
       val ord = t(s, dir, "orders").select("o_orderkey")
       val li = t(s, dir, "lineitem").select("l_orderkey", "l_linenumber")
       DataQuality.unique(ord, Seq("o_orderkey"))
@@ -1280,10 +1281,10 @@ object RefQueries {
         .crossJoin(DataQuality.uniqueApprox(li,
           Seq("l_orderkey", "l_linenumber"), minPassRate = 0.9)
           .select(col("passed").as("p4")))
-        .select(col("p1").cast("int").as("clean_exact_ok"),
-          col("p2").cast("int").as("clean_approx_ok"),
-          (!col("p3")).cast("int").as("dirty_exact_trips"),
-          (!col("p4")).cast("int").as("dirty_approx_trips"))
+        .select(col("p1").as("clean_exact_ok"),
+          col("p2").as("clean_approx_ok"),
+          (!col("p3")).as("dirty_exact_trips"),
+          (!col("p4")).as("dirty_approx_trips"))
     },
 
     "q20_rollup" -> QueryDef(

@@ -202,11 +202,9 @@ object StateQueries {
         events.select("user_id").distinct(), "user_id")
     },
 
-    "cms_error_gate" -> QueryDef(
+    "cms_error_gate" -> QueryDef.gateFrame(
       doc = "CMS guarantees, measured over EVERY distinct token: estimates never underestimate (structural one-sided error), ≥98% of keys within the Cormode–Muthukrishnan e·N/width envelope (theory bound: ≥ 1 − e^-depth ≈ 98.2%), and split-state merge ≡ direct build cell-for-cell",
-      oracle = "SELECT CAST(1 AS INTEGER) AS cms_noworse_ok, " +
-        "CAST(1 AS INTEGER) AS cms_bound_ok, " +
-        "CAST(1 AS INTEGER) AS cms_merge_ok") { (s, dir) =>
+      "cms_noworse_ok", "cms_bound_ok", "cms_merge_ok") { (s, dir) =>
       val toks = tokenRows(s, dir).localCheckpoint(true)
       val state = SketchState.freqSketches(toks, Seq("source"), "token")
         .localCheckpoint(true)
@@ -219,9 +217,9 @@ object StateQueries {
       val checks = truth.join(est, "token")
         .agg(
           (sum(when(col("est") < col("true_cnt"), 1).otherwise(0)) === 0)
-            .cast("int").as("cms_noworse_ok"),
+            .as("cms_noworse_ok"),
           (avg(when(col("est") <= col("true_cnt") + bound, 1.0).otherwise(0.0))
-            >= 0.98).cast("int").as("cms_bound_ok"))
+            >= 0.98).as("cms_bound_ok"))
       // merge ≡ rebuild: state from two disjoint halves folded with
       // mergeFreqSketches equals the direct build, cell-for-cell
       val half1 = toks.filter(xxhash64(col("token")) % 2 === 0)
@@ -230,9 +228,8 @@ object StateQueries {
         SketchState.freqSketches(half1, Seq("source"), "token"),
         SketchState.freqSketches(half2, Seq("source"), "token"),
         Seq("source"))
-      val mergeOk = merged.exceptAll(state)
-        .unionByName(state.exceptAll(merged)).isEmpty
-      checks.withColumn("cms_merge_ok", lit(mergeOk).cast("int"))
+      val mergeOk = Gate.sameRows(merged, state)
+      checks.withColumn("cms_merge_ok", lit(mergeOk))
     },
 
     "mg_state" -> QueryDef(
@@ -282,11 +279,9 @@ object StateQueries {
         Seq(), k = 32)
     },
 
-    "mg_error_gate" -> QueryDef(
+    "mg_error_gate" -> QueryDef.gateFrame(
       doc = "MG guarantees over the range, checked for EVERY user (dropped users read est=0): no overestimate (est <= true), the mergeability-theorem bound true <= est + n_range/(k+1) (PODS'12: merging preserves the n/(k+1) envelope — the compress subtractions are absorbed by counters that already underestimate), and the rolled-up state answer within the same envelope of the direct one-shot summary over the range",
-      oracle = "SELECT CAST(1 AS INTEGER) AS mg_noover_ok, " +
-        "CAST(1 AS INTEGER) AS mg_bound_ok, " +
-        "CAST(1 AS INTEGER) AS mg_direct_ok") { (s, dir) =>
+      "mg_noover_ok", "mg_bound_ok", "mg_direct_ok") { (s, dir) =>
       val k = 32
       val ev = Tables.load(s, dir, "events")
         .select(to_date(col("ts")).as("ws"), col("user_id"))
@@ -304,9 +299,9 @@ object StateQueries {
         .withColumn("est", coalesce(col("est"), lit(0L)))
         .agg(
           (sum(when(col("est") > col("true_cnt"), 1).otherwise(0)) === 0)
-            .cast("int").as("mg_noover_ok"),
+            .as("mg_noover_ok"),
           (sum(when(col("true_cnt") > col("est") + bound, 1).otherwise(0))
-            === 0).cast("int").as("mg_bound_ok"))
+            === 0).as("mg_bound_ok"))
       // rolled (per-day summaries merged) vs direct (one-shot over the
       // range): both valid MG(k) summaries of the same stream, so each
       // item's two estimates differ by at most the bound
@@ -320,7 +315,7 @@ object StateQueries {
         .select(coalesce(col("est"), lit(0L)).as("a"),
           coalesce(col("d_est"), lit(0L)).as("b"))
         .agg((sum(when(abs(col("a") - col("b")) > bound, 1).otherwise(0))
-          === 0).cast("int").as("mg_direct_ok"))
+          === 0).as("mg_direct_ok"))
       checks.crossJoin(directOk)
     },
 
@@ -353,10 +348,9 @@ object StateQueries {
         Seq("lang"))
     },
 
-    "qsketch_error_gate" -> QueryDef(
+    "qsketch_error_gate" -> QueryDef.gateFrame(
       doc = "quantile-sketch guarantees vs the exact order statistics, per lang × {p50,p90,p99}: estimate ≤ true ≤ 1.1×estimate (the two-significant-digit bucket envelope), and split-state merge ≡ direct build bucket-for-bucket",
-      oracle = "SELECT CAST(1 AS INTEGER) AS q_envelope_ok, " +
-        "CAST(1 AS INTEGER) AS q_merge_ok") { (s, dir) =>
+      "q_envelope_ok", "q_merge_ok") { (s, dir) =>
       val counts = tokenCounts(s, dir).localCheckpoint(true)
       val state = SketchState.quantileSketches(counts, Seq("lang"), "n_tokens")
         .localCheckpoint(true)
@@ -384,17 +378,15 @@ object StateQueries {
            col("p90") <= col("x90") && col("x90") <= col("p90") * 1.1 &&
            col("p99") <= col("x99") && col("x99") <= col("p99") * 1.1)
             .as("ok"))
-        .agg((sum(when(col("ok"), 0).otherwise(1)) === 0).cast("int")
-          .as("q_envelope_ok"))
+        .agg((sum(when(col("ok"), 0).otherwise(1)) === 0).as("q_envelope_ok"))
       val merged = SketchState.mergeQuantileSketches(
         SketchState.quantileSketches(
           counts.filter(col("n_tokens") % 2 === 0), Seq("lang"), "n_tokens"),
         SketchState.quantileSketches(
           counts.filter(col("n_tokens") % 2 =!= 0), Seq("lang"), "n_tokens"),
         Seq("lang"))
-      val mergeOk = merged.exceptAll(state)
-        .unionByName(state.exceptAll(merged)).isEmpty
-      envOk.withColumn("q_merge_ok", lit(mergeOk).cast("int"))
+      val mergeOk = Gate.sameRows(merged, state)
+      envOk.withColumn("q_merge_ok", lit(mergeOk))
     },
 
     "cms_heavy_drift" -> QueryDef(
@@ -478,11 +470,9 @@ object StateQueries {
         idCol = "doc_id", textCol = "text", k = 3, threshold = 0.5)
     },
 
-    "contamination_bloom_gate" -> QueryDef(
+    "contamination_bloom_gate" -> QueryDef.gateFrame(
       doc = "Bloom-decontamination guarantees vs the exact path, per doc: flagged set is a superset (no false negatives — every exact-contaminated doc stays flagged), per-doc overlap_ratio never shrinks, and the FP inflation stays within 2× the configured fpp on both flags and mean ratio",
-      oracle = "SELECT CAST(1 AS INTEGER) AS bloom_superset_ok, " +
-        "CAST(1 AS INTEGER) AS bloom_ratio_ok, " +
-        "CAST(1 AS INTEGER) AS bloom_fp_ok") { (s, dir) =>
+      "bloom_superset_ok", "bloom_ratio_ok", "bloom_fp_ok") { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val corpus = d.filter(col("doc_id") >= 50)
       val eval = d.filter(col("doc_id") < 50)
@@ -498,12 +488,12 @@ object StateQueries {
         .localCheckpoint(true)
       exact.join(bloom, "doc_id").agg(
         (sum(when(col("c_exact") && !col("c_bloom"), 1).otherwise(0)) === 0)
-          .cast("int").as("bloom_superset_ok"),
+          .as("bloom_superset_ok"),
         (sum(when(col("r_bloom") < col("r_exact"), 1).otherwise(0)) === 0)
-          .cast("int").as("bloom_ratio_ok"),
+          .as("bloom_ratio_ok"),
         ((avg((col("c_bloom") && !col("c_exact")).cast("int")) <= 0.02) &&
          (avg(col("r_bloom") - col("r_exact")) <= 0.02))
-          .cast("int").as("bloom_fp_ok"))
+          .as("bloom_fp_ok"))
     },
 
     "kmv_state" -> QueryDef(
@@ -607,11 +597,9 @@ object StateQueries {
         "lang", k = 256, buildK = 256)
     },
 
-    "kmv_jaccard_gate" -> QueryDef(
+    "kmv_jaccard_gate" -> QueryDef.gateFrame(
       doc = "overlap-estimate envelopes, every lang pair vs EXACT distinct-shingle set arithmetic: |jaccard_est - J| <= 0.125 (4x the binomial sigma <= 1/(2*sqrt(256))) and union_est within 25% (4x the KMV RSE) - and non-vacuity: the fixture's lang shingle sets genuinely overlap (some pair with J > 0)",
-      oracle = "SELECT CAST(1 AS INTEGER) AS kmv_j_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_u_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_nonvacuous") { (s, dir) =>
+      "kmv_j_ok", "kmv_u_ok", "kmv_nonvacuous") { (s, dir) =>
       val k = 256
       val rows = langShingleRows(s, dir)
         .select(col("lang"), col("item")).distinct().localCheckpoint(true)
@@ -637,10 +625,10 @@ object StateQueries {
           coalesce(col("u_true"), lit(0.0)).as("ut"))
         .agg(
           (sum(when(abs(col("je") - col("jt")) > 0.125, 1).otherwise(0)) === 0)
-            .cast("int").as("kmv_j_ok"),
+            .as("kmv_j_ok"),
           (sum(when(abs(col("ue") / col("ut") - 1) > 0.25, 1).otherwise(0))
-            === 0).cast("int").as("kmv_u_ok"),
-          (max(col("jt")) > 0).cast("int").as("kmv_nonvacuous"))
+            === 0).as("kmv_u_ok"),
+          (max(col("jt")) > 0).as("kmv_nonvacuous"))
     },
 
     "kmv_joinsize" -> QueryDef(
@@ -689,11 +677,9 @@ object StateQueries {
         k = 256, buildK = 256)
     },
 
-    "kmv_joinsize_gate" -> QueryDef(
+    "kmv_joinsize_gate" -> QueryDef.gate(
       doc = "join-size estimator envelopes vs the TRUE join size (exact sum of cA*cB over matching keys): (1) estimator mode (750 composite keys > k = 256) within 30% of truth - the measured fixture error is 1.5%, the 30% bound is the distribution-free slack for skewier keys; (2) exact fall-through - on user_id alone (150 keys < k) the estimate EQUALS the true size as an integer; (3) non-vacuity: the true join size is positive",
-      oracle = "SELECT CAST(1 AS INTEGER) AS kmv_js_est_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_js_exact_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_js_nonvacuous") { (s, dir) =>
+      "kmv_js_est_ok", "kmv_js_exact_ok", "kmv_js_nonvacuous") { (s, dir) =>
       import s.implicits._
       def truth(a: org.apache.spark.sql.DataFrame,
           b: org.apache.spark.sql.DataFrame): Long =
@@ -719,11 +705,8 @@ object StateQueries {
       val (caD, cbD) = (coarse.filter(col("event_id") % 2 === 0),
         coarse.filter(col("event_id") % 2 === 1))
       val (tCoarse, eCoarse) = (truth(caD, cbD), est(caD, cbD))
-      Seq((
-        if (math.abs(eFine / tFine - 1) <= 0.30) 1 else 0,
-        if (eCoarse == tCoarse.toDouble) 1 else 0,
-        if (tFine > 0 && tCoarse > 0) 1 else 0))
-        .toDF("kmv_js_est_ok", "kmv_js_exact_ok", "kmv_js_nonvacuous")
+      Seq(math.abs(eFine / tFine - 1) <= 0.30, eCoarse == tCoarse.toDouble,
+        tFine > 0 && tCoarse > 0)
     },
 
     "theta_window_sample" -> QueryDef(
@@ -759,12 +742,10 @@ object StateQueries {
         Seq(), k = 8)
     },
 
-    "kmv_error_gate" -> QueryDef(
+    "kmv_error_gate" -> QueryDef.gate(
       doc = "KMV guarantees: split-corpus merge == direct build BIT-EXACTLY (row-set equality both directions - stronger than the MG/HLL within-bound contracts, because the hash order is a fixed function of the item), every surviving sample row's count exact vs ground truth (AKMV closure), per-lang windowed state rolled up == direct global build exactly, and the k=256 distinct estimate within 4 RSE (25%) of the true distinct count",
-      oracle = "SELECT CAST(1 AS INTEGER) AS kmv_merge_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_counts_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_rollup_ok, " +
-        "CAST(1 AS INTEGER) AS kmv_est_ok") { (s, dir) =>
+      "kmv_merge_ok", "kmv_counts_ok", "kmv_rollup_ok",
+      "kmv_est_ok") { (s, dir) =>
       val k = 64
       // deterministic 1-in-3 SLICE (the corpus_topics_gate diet): the
       // four legs are corpus-size-free invariants — merge ≡ direct is
@@ -804,24 +785,18 @@ object StateQueries {
       // per-lang windowed state → global rollup ≡ direct global build
       val rolledGlobal = SketchState.sampleRollup(direct, Seq(), k)
       val (mergeOk, countsOk, rollupOk, estOk) = Par.four(
-        merged.exceptAll(direct)
-          .unionByName(direct.exceptAll(merged)).isEmpty,
+        Gate.sameRows(merged, direct),
         direct.join(truth, Seq("lang", "item"), "left")
           .agg((sum(when(col("cnt") =!= col("true_cnt"), 1).otherwise(0)) === 0)
             .cast("int")).first().getInt(0) == 1,
-        rolledGlobal.exceptAll(directGlobal)
-          .unionByName(directGlobal.exceptAll(rolledGlobal)).isEmpty,
+        Gate.sameRows(rolledGlobal, directGlobal),
         est
           .join(truth.groupBy("lang").agg(
             count(lit(1)).cast("double").as("true_d")), "lang")
           .agg((sum(when(
             abs(col("est_distinct") / col("true_d") - 1) > 0.25, 1)
             .otherwise(0)) === 0).cast("int")).first().getInt(0) == 1)
-      s.range(1).select(
-        lit(if (mergeOk) 1 else 0).as("kmv_merge_ok"),
-        lit(if (countsOk) 1 else 0).as("kmv_counts_ok"),
-        lit(if (rollupOk) 1 else 0).as("kmv_rollup_ok"),
-        lit(if (estOk) 1 else 0).as("kmv_est_ok"))
+      Seq(mergeOk, countsOk, rollupOk, estOk)
     }
   )
 }

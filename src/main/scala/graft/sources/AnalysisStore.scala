@@ -77,6 +77,16 @@ object AnalysisStore {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
   }
 
+  /** The parquet table at `path` after healing an interrupted swap;
+    * None when there is no table yet.
+    */
+  def readExisting(spark: SparkSession, path: String): Option[DataFrame] = {
+    recover(spark, path)
+    if (fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
+      Some(spark.read.parquet(path))
+    else None
+  }
+
   /** Read a store table back, honoring the format it was written in. */
   def read(spark: SparkSession, path: String,
       format: String = "parquet"): DataFrame =
@@ -195,18 +205,36 @@ object AnalysisStore {
   def stageAndSwap(
       spark: SparkSession, path: String)(
       write: String => Unit): Unit = {
-    val fs = fsOf(spark, path)
+    stage(spark, path)(write)
+    swap(spark, path)
+  }
+
+  /** Heal any interrupted swap, then `write` fresh contents into the
+    * staging dir next to `path`; returns the staging path.
+    */
+  private def stage(
+      spark: SparkSession, path: String)(
+      write: String => Unit): String = {
     recover(spark, path)
+    val staging = path + "__staging"
+    fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(staging), true)
+    write(staging)
+    staging
+  }
+
+  /** Publish the staging dir [[stage]] wrote: the live table moves to
+    * `__old`, staging takes its name, then the backup goes. A crash
+    * anywhere in between is healed by [[recover]].
+    */
+  private def swap(spark: SparkSession, path: String): Unit = {
+    val fs = fsOf(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-    fs.delete(staging, true)
-    write(staging.toString)
     val backup = new org.apache.hadoop.fs.Path(path + "__old")
     fs.delete(backup, true)
     // first-ever publish: nothing to back up (local FS rename of a
     // missing source throws rather than returning false)
     if (fs.exists(target)) fs.rename(target, backup)
-    fs.rename(staging, target)
+    fs.rename(new org.apache.hadoop.fs.Path(path + "__staging"), target)
     fs.delete(backup, true)
   }
 
@@ -240,25 +268,16 @@ object AnalysisStore {
       write: String => Unit): WapResult = {
     require(audits.nonEmpty, "write-audit-publish with no audits is" +
       " just a write — call stageAndSwap/writeFull instead")
-    val fs = fsOf(spark, path)
-    recover(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-    fs.delete(staging, true)
-    write(staging.toString)
-    val staged = read(spark, staging.toString, format)
+    val staging = stage(spark, path)(write)
+    val staged = read(spark, staging, format)
     val failed = audits.collect {
       case (name, check) if !check(staged) => name
     }
     if (failed.nonEmpty) {
-      fs.delete(staging, true)
+      fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(staging), true)
       WapResult(published = false, failed)
     } else {
-      val backup = new org.apache.hadoop.fs.Path(path + "__old")
-      fs.delete(backup, true)
-      if (fs.exists(target)) fs.rename(target, backup)
-      fs.rename(staging, target)
-      fs.delete(backup, true)
+      swap(spark, path)
       WapResult(published = true, Nil)
     }
   }
@@ -343,19 +362,15 @@ object AnalysisStore {
     */
   def writeIncremental(
       spark: SparkSession, delta: DataFrame, path: String,
-      keys: Seq[String]): Unit = {
-    val fs = fsOf(spark, path)
-    recover(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(target)) {
-      writeFull(delta, path)
-      return
+      keys: Seq[String]): Unit =
+    readExisting(spark, path) match {
+      case None => writeFull(delta, path)
+      case Some(table) =>
+        stageAndSwap(spark, path) { staging =>
+          Incremental.merge(table, delta, keys)
+            .write.mode(SaveMode.Overwrite).parquet(staging)
+        }
     }
-    stageAndSwap(spark, path) { staging =>
-      Incremental.merge(spark.read.parquet(path), delta, keys)
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-    }
-  }
 
   /** Partition-pruned incremental merge — the write-side twin of the
     * read-side partition pruning, and the shape a tick MUST take at
@@ -389,18 +404,23 @@ object AnalysisStore {
     *        written cannot be expressed as "overwrite with empty" —
     *        use the full [[writeIncremental]] rewrite if mass-deletion
     *        can empty partitions.
+    * @param existing the table as the caller already read it with
+    *        [[readExisting]]; read here when absent. Every parquet read
+    *        infers its schema in a Spark job, so a caller that inspects
+    *        the table first shares its read instead of paying twice.
     */
   def writeIncrementalPartitioned(
       spark: SparkSession, delta: DataFrame, path: String,
       keys: Seq[String], partitionBy: Seq[String],
-      removeKeys: Option[DataFrame] = None): Unit = {
+      removeKeys: Option[DataFrame] = None,
+      existing: Option[DataFrame] = None): Unit = {
     require(partitionBy.nonEmpty,
       "use writeIncremental for unpartitioned tables")
-    val fs = fsOf(spark, path)
-    recover(spark, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
-      writeFull(delta, path, partitionBy)
-      return
+    val table = existing.orElse(readExisting(spark, path)) match {
+      case Some(t) => t
+      case None =>
+        writeFull(delta, path, partitionBy)
+        return
     }
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val deltaParts = graft.operators.ModelCollect.bounded(
@@ -412,8 +432,7 @@ object AnalysisStore {
       case None => Array.empty[org.apache.spark.sql.Row]
       case Some(rk) =>
         graft.operators.ModelCollect.bounded(
-          spark.read.parquet(path)
-            .select((keys ++ partitionBy).map(col): _*)
+          table.select((keys ++ partitionBy).map(col): _*)
             .join(broadcast(rk.select(keys.map(col): _*).distinct()),
               keys, "left_semi")
             .select(partitionBy.map(col): _*).distinct(),
@@ -427,7 +446,7 @@ object AnalysisStore {
         col(c) === lit(row.get(i))
       }.reduce(_ && _)
     }.reduce(_ || _)
-    val existingTouched = spark.read.parquet(path).filter(touchedPred)
+    val existingTouched = table.filter(touchedPred)
     val dropKeys = removeKeys.getOrElse(delta)
       .select(keys.map(col): _*).distinct()
     val merged = existingTouched

@@ -32,9 +32,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * (hdfs/s3a/abfs) are untouched: this binds to `fs.file.impl` only,
   * where the stock implementation's fork is pure overhead.
   *
-  * Wired in [[graft.GraftSession]]; `SPARK_GRAFT_NOFORKFS=0` restores
-  * the stock `LocalFileSystem` so any dispute is a one-env-var
-  * experiment.
+  * Wired unconditionally in [[graft.GraftSession]].
   */
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {

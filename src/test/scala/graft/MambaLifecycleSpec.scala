@@ -157,6 +157,91 @@ class MambaLifecycleSpec extends SparkSpec {
       spark.read.parquet(s"$root2/mamba_flat_encounter_7").select(cols: _*))
   }
 
+  /** Install `src` for type `et`, land each tick (the next obs table
+    * and its bookmark) with tickPersisted, then compare every flat
+    * table of the type with a fresh runPersisted install of the final
+    * sources.
+    */
+  private def assertTicksMatchInstall(src: MambaEtlJob.Sources, et: Int,
+      ticks: Seq[(DataFrame => DataFrame, String)],
+      columns: Int = 40): Unit = {
+    import org.apache.spark.sql.functions.col
+    val cfgE = EtlConfig("/src", "/out", columns = columns)
+    val root = java.nio.file.Files.createTempDirectory("mambatick").toString
+    MambaEtlJob.runPersisted(spark, cfgE, src, Seq(et), root)
+    val last = ticks.foldLeft(src) { case (s, (nextObs, bookmark)) =>
+      val next = s.copy(obs = nextObs(s.obs))
+      MambaEtlJob.tickPersisted(spark, cfgE, next, et, root,
+        changedSince = Some(ts(bookmark)))
+      next
+    }
+    val fresh = java.nio.file.Files.createTempDirectory("mambafresh").toString
+    MambaEtlJob.runPersisted(spark, cfgE, last, Seq(et), fresh)
+    val base = s"mamba_flat_encounter_$et"
+    def flatTables(dir: String) = new java.io.File(dir).list().toSeq
+      .filter(n => n == base || n.matches(s"${base}_[0-9]+")).sorted
+    assert(flatTables(root) == flatTables(fresh))
+    flatTables(fresh).foreach { t =>
+      val ticked = spark.read.parquet(s"$root/$t")
+      val want = spark.read.parquet(s"$fresh/$t")
+      assert(ticked.columns.sorted.toSeq == want.columns.sorted.toSeq, t)
+      val cols = want.columns.sorted.map(col).toSeq
+      assertSameRows(ticked.select(cols: _*), want.select(cols: _*))
+    }
+  }
+
+  /** Appends one live numeric or coded obs. */
+  private def addObs(id: Long, enc: Long, concept: Long,
+      num: Option[Double], coded: Option[String],
+      at: String): DataFrame => DataFrame =
+    _.unionByName(Seq((id, enc, concept, num, None: Option[String],
+        coded, ts(at), 0))
+      .toDF("obs_id", "encounter_id", "concept_id", "value_numeric",
+        "value_text", "value_coded", "obs_datetime", "voided"))
+
+  /** The fixture plus a Height concept that no install-time obs uses. */
+  private def withHeight: MambaEtlJob.Sources = sources.copy(
+    concept = sources.concept.unionByName(
+      Seq((101L, "Height (cm)", "Numeric"))
+        .toDF("concept_id", "name", "datatype")))
+
+  test("ticks after a concept is first used in a type equal a fresh install") {
+    // encounter type 7 holds only Weight until a tick records a Height
+    // obs: the auto-config grows a column the stored table lacks
+    assertTicksMatchInstall(withHeight, 7, Seq(
+      addObs(9L, 11L, 101L, Some(170.0), None, "2024-03-10 08:00:00") ->
+        "2024-03-06 00:00:00",
+      addObs(10L, 10L, 100L, Some(64.0), None, "2024-03-12 08:00:00") ->
+        "2024-03-11 00:00:00"))
+  }
+
+  test("ticks after a concept is voided away from a type equal a fresh install") {
+    import org.apache.spark.sql.functions.{lit, when}
+    // encounter type 8's only Counselor Notes obs is voided, its audit
+    // time bumped past the bookmark: the column leaves the auto-config
+    val voidNotes = (obs: DataFrame) => {
+      val hit = $"obs_id" === 5L
+      obs.withColumn("voided", when(hit, lit(1)).otherwise($"voided"))
+        .withColumn("obs_datetime",
+          when(hit, lit(ts("2024-03-10 08:00:00")))
+            .otherwise($"obs_datetime"))
+    }
+    assertTicksMatchInstall(sources, 8, Seq(
+      voidNotes -> "2024-03-06 00:00:00",
+      addObs(11L, 12L, 200L, None, Some("NEGATIVE"),
+        "2024-03-12 08:00:00") -> "2024-03-11 00:00:00"))
+  }
+
+  test("ticks on a type split into continuation tables equal a fresh install") {
+    // a 1-column cap splits type 8 into one table per concept; the
+    // second tick's Height obs re-deals the columns across 3 tables
+    assertTicksMatchInstall(withHeight, 8, Seq(
+      addObs(9L, 12L, 200L, None, Some("NEGATIVE"), "2024-03-10 08:00:00") ->
+        "2024-03-06 00:00:00",
+      addObs(10L, 12L, 101L, Some(150.0), None, "2024-03-12 08:00:00") ->
+        "2024-03-11 00:00:00"), columns = 1)
+  }
+
   test("report SQL runs over the registered views with typed params") {
     outputs // force pipeline run (registers temp views)
     val registry = ReportRegistry.fromJson(
