@@ -179,7 +179,26 @@ object MambaEtlJob {
       else
         graft.sources.AnalysisStore.writeFull(df, s"$storeRoot/$name")
     }
+    // a type's split may have shrunk since an earlier install here
+    results.keys.filter(_.matches("mamba_flat_encounter_[0-9]+"))
+      .flatMap(storedTables(spark, storeRoot, _))
+      .filterNot(results.contains)
+      .foreach(t => graft.sources.AnalysisStore.drop(spark, s"$storeRoot/$t"))
     results
+  }
+
+  /** The flat tables of the type whose main table is `base` as they
+    * stand under `storeRoot`: `base` and its continuation tables
+    * `base_<k>`, including one left as an `__old` backup by an
+    * interrupted swap.
+    */
+  private def storedTables(spark: SparkSession, storeRoot: String,
+      base: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(storeRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName.stripSuffix("__old"))
+      .filter(n => n == base || n.matches(s"${base}_[0-9]+")).distinct
   }
 
   /** A scheduled tick persisted (reference mode 1, "only add/modify
@@ -193,10 +212,11 @@ object MambaEtlJob {
     * A type wider than `config.columns` ticks each of its
     * continuation tables the same way. When the type's concept set
     * has changed since its tables were written (a concept first used,
-    * voided away or renamed), the delta's columns no longer match the
-    * stored ones; that tick rebuilds every table of the type from the
-    * sources, laid out as [[runPersisted]] writes them, each through a
-    * crash-safe swap.
+    * voided away or renamed), the delta's columns or its table list no
+    * longer match the stored ones; that tick rebuilds every table of
+    * the type from the sources, laid out as [[runPersisted]] writes
+    * them, each through a crash-safe swap, and drops the stored
+    * continuation tables the new split no longer has.
     */
   def tickPersisted(spark: SparkSession, config: EtlConfig, src: Sources,
       encounterTypeId: Int, storeRoot: String,
@@ -221,18 +241,21 @@ object MambaEtlJob {
       }
     val deltas = flat(affected)
     val store = graft.sources.AnalysisStore
+    val stale = storedTables(spark, storeRoot, cfg.tableName)
+      .map(t => s"$storeRoot/$t").filterNot(p => deltas.exists(_._1 == p))
     val stored = deltas.map { case (path, _) => store.readExisting(spark, path) }
-    val reshaped = stored.exists(_.isDefined) &&
+    val reshaped = stale.nonEmpty || (stored.exists(_.isDefined) &&
       stored.zip(deltas).exists { case (table, (_, delta)) =>
         !table.exists(_.columns.toSet == delta.columns.toSet)
-      }
-    if (reshaped)
+      })
+    if (reshaped) {
       flat(src.obs).foreach { case (path, df) =>
         store.stageAndSwap(spark, path) { staging =>
           store.writeFull(df, staging, Seq("visit_month"))
         }
       }
-    else
+      stale.foreach(store.drop(spark, _))
+    } else
       deltas.zip(stored).foreach { case ((path, delta), table) =>
         store.writeIncrementalPartitioned(spark, delta, path,
           keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),

@@ -3356,14 +3356,8 @@ object ExtQueries {
       val lines = linesAll.filter(col("l_orderkey") % 5 === 0)
       val root = java.nio.file.Files.createTempDirectory("graft-dpp")
       val factPath = root.resolve("fact").toString
-      // cluster by the partition column before the partitioned write
-      // (guide §6, Iceberg's hash distribution-mode): without it every
-      // scan task emits a file into every one of the ~83 month dirs
-      // (~4×83 files + committer moves, the probe's 1.4 s); with it
-      // each month lands whole in one task — one file per dir, and
-      // the gate's two read-back scans list 4× fewer files
-      graft.sources.AnalysisStore.writeFull(
-        lines.repartition(col("ship_month")), factPath,
+      // writeFull clusters by the partition column: one file per month
+      graft.sources.AnalysisStore.writeFull(lines, factPath,
         partitionBy = Seq("ship_month"))
       val fact = s.read.parquet(factPath)
       // month dim built from the SOURCE table (not the partitioned

@@ -70,12 +70,25 @@ object AnalysisStore {
     } else false
   }
 
+  /** Idempotent overwrite of the table at `path`. A partitioned write
+    * is clustered by its partition columns first ([[partitioned]]), so
+    * each partition value lands in one file unless adaptive execution
+    * splits an oversized one at `advisoryPartitionSizeInBytes`.
+    */
   def writeFull(
       df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
-      format: String = "parquet"): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).format(format)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
-  }
+      format: String = "parquet"): Unit =
+    (if (partitionBy.nonEmpty) partitioned(df, partitionBy)
+     else df.write).mode(SaveMode.Overwrite).format(format).save(path)
+
+  /** The writer of every partitioned store write: a rebalance by the
+    * partition columns, so one task writes a whole partition value
+    * instead of every input task writing a sliver of every partition
+    * directory it sees.
+    */
+  private def partitioned(df: DataFrame, partitionBy: Seq[String]) =
+    df.hint("rebalance", partitionBy.map(org.apache.spark.sql.functions.col): _*)
+      .write.partitionBy(partitionBy: _*)
 
   /** The parquet table at `path` after healing an interrupted swap;
     * None when there is no table yet.
@@ -228,14 +241,38 @@ object AnalysisStore {
     */
   private def swap(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
+    val backup = new org.apache.hadoop.fs.Path(path + "__old")
+    moveAside(spark, path)
+    fs.rename(new org.apache.hadoop.fs.Path(path + "__staging"),
+      new org.apache.hadoop.fs.Path(path))
+    fs.delete(backup, true)
+  }
+
+  /** Rename the live table at `path` to its `__old` backup name,
+    * clearing any older backup first.
+    */
+  private def moveAside(spark: SparkSession, path: String): Unit = {
+    val fs = fsOf(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     val backup = new org.apache.hadoop.fs.Path(path + "__old")
     fs.delete(backup, true)
     // first-ever publish: nothing to back up (local FS rename of a
     // missing source throws rather than returning false)
     if (fs.exists(target)) fs.rename(target, backup)
-    fs.rename(new org.apache.hadoop.fs.Path(path + "__staging"), target)
-    fs.delete(backup, true)
+  }
+
+  /** Remove the table at `path` with the same steps as a swap: heal
+    * an interrupted swap, drop staging leftovers, move the table to
+    * `__old`, then delete the backup. A crash before the delete leaves
+    * a backup that [[recover]] restores, so a retried drop finds the
+    * whole table again rather than a half-deleted one.
+    */
+  def drop(spark: SparkSession, path: String): Unit = {
+    val fs = fsOf(spark, path)
+    recover(spark, path)
+    fs.delete(new org.apache.hadoop.fs.Path(path + "__staging"), true)
+    moveAside(spark, path)
+    fs.delete(new org.apache.hadoop.fs.Path(path + "__old"), true)
   }
 
   /** Outcome of [[writeAuditPublish]]: whether the staged data went
@@ -379,26 +416,39 @@ object AnalysisStore {
     * whole table every tick, which turns a 30-minute schedule into a
     * full-store write amplification.
     *
-    * Mechanism: collect the delta's partition values (bounded — one
-    * tuple per touched partition, model-sized, never row data), read
-    * ONLY those partitions back (the literal predicate prunes at the
-    * directory level), merge by key, and write with dynamic partition
-    * overwrite — Spark replaces exactly the partition directories
-    * present in the written frame and leaves every other directory's
-    * files untouched (asserted byte-identical in AnalysisStoreSpec).
+    * Mechanism, one collect and one write:
+    *  - collect the touched partition values in ONE bounded job — the
+    *    delta's, plus the stored partitions of `removeKeys` (one tuple
+    *    per touched partition, model-sized, never row data);
+    *  - read ONLY those partitions back (the literal predicate prunes
+    *    at the directory level), drop the rows of the removed keys and
+    *    union the delta;
+    *  - write that with dynamic partition overwrite, clustered by the
+    *    partition columns so each touched partition comes out as one
+    *    file. Spark replaces exactly the partition directories present
+    *    in the written frame and leaves every other directory's files
+    *    untouched (asserted byte-identical in AnalysisStoreSpec).
     *
-    * Contract: partition columns must be STABLE under updates (a row's
-    * key never moves between partitions — e.g. an encounter's month).
-    * A moved row would leave its stale copy in the old partition; that
-    * case needs the full [[writeIncremental]] rewrite.
-    */
-  /** @param removeKeys keys whose existing rows must be dropped even
+    * The write reads the path it overwrites. Dynamic overwrite stages
+    * every task's output under `<path>/.spark-staging-*` and moves
+    * partition directories in only after the job has read all its
+    * input, so no materialized copy of the merge is needed, and a
+    * failed job leaves every partition as it was (AnalysisStoreSpec).
+    *
+    * Moved rows: a key whose partition value changes is handled
+    * exactly when it is in `removeKeys` — its old partition is then
+    * located and rewritten without it. Keyed only on the delta, the
+    * old partition is never read and the stale copy stays.
+    *
+    * @param removeKeys keys whose existing rows must be dropped even
     *        when `delta` carries no replacement row (the
     *        deleted/voided-away case — a merge keyed only on the
-    *        delta's rows would leave them behind). Their old partition
-    *        locations are found by a column-pruned scan of
-    *        (keys ++ partitionBy) — O(table) in rows but only a few
-    *        columns of IO, and only when removeKeys is passed.
+    *        delta's rows would leave them behind) or when it carries
+    *        one in another partition. It must cover the delta's own
+    *        keys. Their old partition locations are found by a
+    *        column-pruned scan of (keys ++ partitionBy) — O(table) in
+    *        rows but only a few columns of IO, and only when removeKeys
+    *        is passed.
     *        Limitation (inherent to dynamic partition overwrite): a
     *        partition whose every row is removed with nothing new
     *        written cannot be expressed as "overwrite with empty" —
@@ -423,33 +473,25 @@ object AnalysisStore {
         return
     }
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val deltaParts = graft.operators.ModelCollect.bounded(
-      delta.select(partitionBy.map(col): _*).distinct(),
-      graft.operators.ModelCollect.MaxModelRows, "delta partition values")
+    val dropKeys = removeKeys.getOrElse(delta)
+      .select(keys.map(col): _*).distinct()
     // rows being removed may live in partitions the delta no longer
     // writes to — locate them so their partitions are rewritten too
-    val removedParts = removeKeys match {
-      case None => Array.empty[org.apache.spark.sql.Row]
-      case Some(rk) =>
-        graft.operators.ModelCollect.bounded(
-          table.select((keys ++ partitionBy).map(col): _*)
-            .join(broadcast(rk.select(keys.map(col): _*).distinct()),
-              keys, "left_semi")
-            .select(partitionBy.map(col): _*).distinct(),
-          graft.operators.ModelCollect.MaxModelRows,
-          "removed partition values")
-    }
-    val touched = (deltaParts ++ removedParts).distinct
+    val removedParts = removeKeys.map(_ =>
+      table.select((keys ++ partitionBy).map(col): _*)
+        .join(broadcast(dropKeys), keys, "left_semi")
+        .select(partitionBy.map(col): _*))
+    val touched = graft.operators.ModelCollect.bounded(
+      removedParts.foldLeft(delta.select(partitionBy.map(col): _*))(_ union _)
+        .distinct(),
+      graft.operators.ModelCollect.MaxModelRows, "touched partition values")
     if (touched.isEmpty) return
     val touchedPred = touched.map { row =>
       partitionBy.zipWithIndex.map { case (c, i) =>
         col(c) === lit(row.get(i))
       }.reduce(_ && _)
     }.reduce(_ || _)
-    val existingTouched = table.filter(touchedPred)
-    val dropKeys = removeKeys.getOrElse(delta)
-      .select(keys.map(col): _*).distinct()
-    val merged = existingTouched
+    val merged = table.filter(touchedPred)
       .join(broadcast(dropKeys), keys, "left_anti")
       // strict unionByName ON PURPOSE: this path rewrites only touched
       // partition dirs, so an evolved delta schema would leave the
@@ -458,16 +500,11 @@ object AnalysisStore {
       // here; evolve schemas through the full [[writeIncremental]]
       // rewrite, which re-materializes every row under the new schema.
       .unionByName(delta)
-      // checkpoint breaks the read-write cycle (Spark refuses to
-      // overwrite a path its own plan reads); holds only the touched
-      // partitions' rows — delta-scale, not table-scale
-      .localCheckpoint(true)
-    merged
-      .write.mode(SaveMode.Overwrite)
+    partitioned(merged, partitionBy)
+      .mode(SaveMode.Overwrite)
       // per-write option (not session conf): only THIS write replaces
       // partitions dynamically; static overwrite elsewhere stays safe
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionBy: _*)
       .parquet(path)
   }
 

@@ -199,6 +199,15 @@ class MambaLifecycleSpec extends SparkSpec {
       .toDF("obs_id", "encounter_id", "concept_id", "value_numeric",
         "value_text", "value_coded", "obs_datetime", "voided"))
 
+  /** Voids obs `id`, bumping its audit time to `at` (past the bookmark). */
+  private def voidObs(id: Long, at: String): DataFrame => DataFrame = obs => {
+    import org.apache.spark.sql.functions.{lit, when}
+    val hit = $"obs_id" === id
+    obs.withColumn("voided", when(hit, lit(1)).otherwise($"voided"))
+      .withColumn("obs_datetime",
+        when(hit, lit(ts(at))).otherwise($"obs_datetime"))
+  }
+
   /** The fixture plus a Height concept that no install-time obs uses. */
   private def withHeight: MambaEtlJob.Sources = sources.copy(
     concept = sources.concept.unionByName(
@@ -216,18 +225,10 @@ class MambaLifecycleSpec extends SparkSpec {
   }
 
   test("ticks after a concept is voided away from a type equal a fresh install") {
-    import org.apache.spark.sql.functions.{lit, when}
     // encounter type 8's only Counselor Notes obs is voided, its audit
     // time bumped past the bookmark: the column leaves the auto-config
-    val voidNotes = (obs: DataFrame) => {
-      val hit = $"obs_id" === 5L
-      obs.withColumn("voided", when(hit, lit(1)).otherwise($"voided"))
-        .withColumn("obs_datetime",
-          when(hit, lit(ts("2024-03-10 08:00:00")))
-            .otherwise($"obs_datetime"))
-    }
     assertTicksMatchInstall(sources, 8, Seq(
-      voidNotes -> "2024-03-06 00:00:00",
+      voidObs(5L, "2024-03-10 08:00:00") -> "2024-03-06 00:00:00",
       addObs(11L, 12L, 200L, None, Some("NEGATIVE"),
         "2024-03-12 08:00:00") -> "2024-03-11 00:00:00"))
   }
@@ -240,6 +241,53 @@ class MambaLifecycleSpec extends SparkSpec {
         "2024-03-06 00:00:00",
       addObs(10L, 12L, 101L, Some(150.0), None, "2024-03-12 08:00:00") ->
         "2024-03-11 00:00:00"), columns = 1)
+  }
+
+  test("a tick or reinstall that shrinks a type's split drops the stale continuation table") {
+    // a 2-column cap splits type 8's three concepts into
+    // `_8` (counselor_notes, height_cm_) and `_8_1` (hiv_result);
+    // voiding the only HIV Result obs leaves `_8` as it was
+    val src = withHeight.copy(obs = addObs(9L, 12L, 101L, Some(150.0), None,
+      "2024-02-03 11:07:00")(withHeight.obs))
+    val voidHiv = voidObs(4L, "2024-03-10 08:00:00")
+    assertTicksMatchInstall(src, 8, Seq(voidHiv -> "2024-03-06 00:00:00"),
+      columns = 2)
+    // the same shrink through a reinstall over the existing root
+    val cfg2 = EtlConfig("/src", "/out", columns = 2)
+    val root = java.nio.file.Files.createTempDirectory("mambare").toString
+    MambaEtlJob.runPersisted(spark, cfg2, src, Seq(8), root)
+    assert(new java.io.File(s"$root/mamba_flat_encounter_8_1").isDirectory)
+    MambaEtlJob.runPersisted(spark, cfg2,
+      src.copy(obs = voidHiv(src.obs)), Seq(8), root)
+    assert(!new java.io.File(s"$root/mamba_flat_encounter_8_1").exists)
+  }
+
+  test("install and tick write one parquet file per visit month") {
+    val extraEnc = Seq((14L, "e-14", 7, 2L, ts("2024-03-05 09:00:00"), 0))
+      .toDF("encounter_id", "uuid", "encounter_type", "patient_id",
+        "encounter_datetime", "voided")
+    val src = sources.copy(
+      encounter = sources.encounter.unionByName(extraEnc),
+      obs = addObs(7L, 14L, 100L, Some(70.0), None,
+        "2024-03-05 09:10:00")(sources.obs))
+    val cfgE = EtlConfig("/src", "/out")
+    val root = java.nio.file.Files.createTempDirectory("mambafiles").toString
+    val flat7 = new java.io.File(s"$root/mamba_flat_encounter_7")
+    def filesPerMonth(): Map[String, Int] =
+      flat7.listFiles().filter(_.getName.startsWith("visit_month="))
+        .map(m => m.getName ->
+          m.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    MambaEtlJob.runPersisted(spark, cfgE, src, Seq(7), root)
+    assert(filesPerMonth() ==
+      Map("visit_month=2024-02" -> 1, "visit_month=2024-03" -> 1))
+    // both months touched: an update in February, a new obs in March
+    MambaEtlJob.tickPersisted(spark, cfgE,
+      src.copy(obs = addObs(9L, 14L, 100L, Some(71.0), None,
+        "2024-03-10 08:00:00")(addObs(8L, 10L, 100L, Some(63.0), None,
+        "2024-03-10 08:00:00")(src.obs))),
+      7, root, changedSince = Some(ts("2024-03-06 00:00:00")))
+    assert(filesPerMonth() ==
+      Map("visit_month=2024-02" -> 1, "visit_month=2024-03" -> 1))
   }
 
   test("report SQL runs over the registered views with typed params") {
