@@ -209,6 +209,17 @@ object MambaEtlJob {
     * removeKeys, so a fully-voided encounter's row disappears from
     * its old month). Write amplification per tick tracks the delta.
     *
+    * The delta is pivoted once per table, by the write. The months it
+    * touches come from the changed encounters' `encounter_datetime`
+    * (the visit months of `encIds ⋉ changed`), not from the pivoted
+    * delta: every delta row is one of those encounters and takes its
+    * month from the same row, so the months cover the delta exactly,
+    * and one frame serves every continuation table of the type. The
+    * changed-encounter set is one key per changed obs row, not
+    * deduplicated: it only feeds semi- and anti-joins, where a
+    * duplicate key costs one broadcast entry and a `distinct` would
+    * cost a shuffle; both sizes are bounded by the delta.
+    *
     * A type wider than `config.columns` ticks each of its
     * continuation tables the same way. When the type's concept set
     * has changed since its tables were written (a concept first used,
@@ -228,11 +239,13 @@ object MambaEtlJob {
       .copy(tableName = s"mamba_flat_encounter_$encounterTypeId")
     val changed = graft.operators.Incremental
       .changedSince(src.obs, changedSince, Seq("obs_datetime"))
-      .select("encounter_id").distinct()
+      .select("encounter_id")
     val affected = src.obs.join(broadcast(changed), Seq("encounter_id"), "left_semi")
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)
       .select("encounter_id", "patient_id", "encounter_datetime")
+    val touchedMonths = withVisitMonth(
+      encIds.join(broadcast(changed), Seq("encounter_id"), "left_semi"))
     // (store path, wide rows) per continuation table of the type
     def flat(obs: DataFrame) =
       Flatten.flattenObsSplit(obs, cfg, config.columns).map { case (t, df) =>
@@ -259,7 +272,8 @@ object MambaEtlJob {
       deltas.zip(stored).foreach { case ((path, delta), table) =>
         store.writeIncrementalPartitioned(spark, delta, path,
           keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
-          removeKeys = Some(changed), existing = table)
+          removeKeys = Some(changed), parts = Some(touchedMonths),
+          existing = table)
       }
   }
 }

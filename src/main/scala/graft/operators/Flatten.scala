@@ -24,9 +24,12 @@ import graft.model.{FlatColumn, FlatTableConfig}
   *  - '''Deterministic collision rule.''' The reference doesn't
   *    document which obs wins when an encounter has two values for one
   *    concept (SURVEY §7.5); we define latest-`obs_datetime` (tie:
-  *    highest id) via a `row_number` window. The window shares the
-  *    same `entity` hash partitioning as the final aggregation, so AQE
-  *    plans window+agg inside one exchange.
+  *    highest id) via a `row_number` window. The input is hash
+  *    partitioned by `entity` before the window: that one exchange
+  *    clusters both the window's `(entity, attr)` and the aggregate's
+  *    `entity`, so window+agg run behind a single shuffle. Left to the
+  *    planner, the window would shuffle by `(entity, attr)` and the
+  *    aggregate by `entity` again.
   *  - '''Width cap is opt-in, not structural.''' MySQL's row-width cap
   *    (reference README.md:130-131,154) doesn't exist in columnar
   *    Parquet, so the default path emits one wide table (SURVEY §1.4);
@@ -45,7 +48,9 @@ object Flatten {
     *                 value_* columns, SURVEY §1.3).
     * @param tieBreak descending-priority ordering; pass Nil when the
     *                 input is already unique per (entity, attr) to
-    *                 skip the window pass entirely.
+    *                 skip the window pass entirely. Otherwise the input
+    *                 is repartitioned by `entityCol` once, and the
+    *                 window and the aggregate share that exchange.
     */
   def pivotLatest(
       eav: DataFrame,
@@ -60,7 +65,8 @@ object Flatten {
       else {
         val w = Window.partitionBy(col(entityCol), col(attrCol))
           .orderBy(tieBreak: _*)
-        relevant.withColumn("__rn", row_number().over(w))
+        relevant.repartition(col(entityCol))
+          .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       }
     val aggs = labels.map { case (label, key, value) =>

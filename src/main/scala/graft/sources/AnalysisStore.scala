@@ -418,8 +418,10 @@ object AnalysisStore {
     *
     * Mechanism, one collect and one write:
     *  - collect the touched partition values in ONE bounded job — the
-    *    delta's, plus the stored partitions of `removeKeys` (one tuple
-    *    per touched partition, model-sized, never row data);
+    *    values of `parts` (the delta's own when absent), plus the
+    *    stored partitions of `removeKeys` with the files holding them
+    *    (a tuple per touched partition and removed-key file,
+    *    model-sized, never row data);
     *  - read ONLY those partitions back (the literal predicate prunes
     *    at the directory level), drop the rows of the removed keys and
     *    union the delta;
@@ -427,7 +429,15 @@ object AnalysisStore {
     *    partition columns so each touched partition comes out as one
     *    file. Spark replaces exactly the partition directories present
     *    in the written frame and leaves every other directory's files
-    *    untouched (asserted byte-identical in AnalysisStoreSpec).
+    *    untouched (asserted byte-identical in AnalysisStoreSpec);
+    *  - delete the partitions the merge left empty. Dynamic overwrite
+    *    cannot express "overwrite with nothing", so a partition whose
+    *    every row is removed and that gains no delta row keeps its old
+    *    files through the write. A removed-key file still present
+    *    after the write names such a partition, and its directory is
+    *    deleted.
+    *    This runs after the commit: a crash between the two leaves the
+    *    stale rows until the next merge that removes them.
     *
     * The write reads the path it overwrites. Dynamic overwrite stages
     * every task's output under `<path>/.spark-staging-*` and moves
@@ -448,12 +458,19 @@ object AnalysisStore {
     *        keys. Their old partition locations are found by a
     *        column-pruned scan of (keys ++ partitionBy) — O(table) in
     *        rows but only a few columns of IO, and only when removeKeys
-    *        is passed.
-    *        Limitation (inherent to dynamic partition overwrite): a
-    *        partition whose every row is removed with nothing new
-    *        written cannot be expressed as "overwrite with empty" —
-    *        use the full [[writeIncremental]] rewrite if mass-deletion
-    *        can empty partitions.
+    *        is passed. Not deduplicated: it only feeds a semi-join
+    *        and an anti-join, so a duplicate key costs one more entry
+    *        in the broadcast (Spark does not deduplicate broadcast
+    *        join keys) where a `distinct` would cost a shuffle.
+    * @param parts a frame carrying `partitionBy` whose values cover
+    *        every partition value of `delta`. Only those columns are
+    *        read, so a caller that knows where its delta lands (say,
+    *        from the changed keys' dates) spares the collect an
+    *        evaluation of an expensive delta. Naming a value the delta
+    *        does not land in is harmless: that partition is rewritten
+    *        with its own rows, less those of the removed keys. Missing
+    *        one is not: its directory would be replaced by the delta's
+    *        rows alone. Defaults to `delta`.
     * @param existing the table as the caller already read it with
     *        [[readExisting]]; read here when absent. Every parquet read
     *        infers its schema in a Spark job, so a caller that inspects
@@ -463,6 +480,7 @@ object AnalysisStore {
       spark: SparkSession, delta: DataFrame, path: String,
       keys: Seq[String], partitionBy: Seq[String],
       removeKeys: Option[DataFrame] = None,
+      parts: Option[DataFrame] = None,
       existing: Option[DataFrame] = None): Unit = {
     require(partitionBy.nonEmpty,
       "use writeIncremental for unpartitioned tables")
@@ -473,23 +491,26 @@ object AnalysisStore {
         return
     }
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val dropKeys = removeKeys.getOrElse(delta)
-      .select(keys.map(col): _*).distinct()
+    val dropKeys = removeKeys.getOrElse(delta).select(keys.map(col): _*)
     // rows being removed may live in partitions the delta no longer
-    // writes to — locate them so their partitions are rewritten too
+    // writes to — locate them, and the files holding them, so their
+    // partitions are rewritten too
+    val file = "__file"
     val removedParts = removeKeys.map(_ =>
-      table.select((keys ++ partitionBy).map(col): _*)
+      table.select((keys ++ partitionBy).map(col) :+
+          col("_metadata.file_path").as(file): _*)
         .join(broadcast(dropKeys), keys, "left_semi")
-        .select(partitionBy.map(col): _*))
+        .select((partitionBy :+ file).map(col): _*))
     val touched = graft.operators.ModelCollect.bounded(
-      removedParts.foldLeft(delta.select(partitionBy.map(col): _*))(_ union _)
+      removedParts.foldLeft(
+        parts.getOrElse(delta).select(partitionBy.map(col) :+
+          lit(null).cast("string").as(file): _*))(_ union _)
         .distinct(),
       graft.operators.ModelCollect.MaxModelRows, "touched partition values")
     if (touched.isEmpty) return
-    val touchedPred = touched.map { row =>
-      partitionBy.zipWithIndex.map { case (c, i) =>
-        col(c) === lit(row.get(i))
-      }.reduce(_ && _)
+    val touchedPred = touched.map(_.toSeq.init).distinct.map { values =>
+      partitionBy.zip(values).map { case (c, v) => col(c) === lit(v) }
+        .reduce(_ && _)
     }.reduce(_ || _)
     val merged = table.filter(touchedPred)
       .join(broadcast(dropKeys), keys, "left_anti")
@@ -506,6 +527,14 @@ object AnalysisStore {
       // partitions dynamically; static overwrite elsewhere stays safe
       .option("partitionOverwriteMode", "dynamic")
       .parquet(path)
+    // the write replaced every partition it produced rows for, so a
+    // removed key's file still present marks a partition the merge
+    // left empty: its every row was removed and nothing landed there
+    val fs = fsOf(spark, path)
+    touched.flatMap(r => Option(r.getString(partitionBy.size)))
+      .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)))
+      .filter(fs.exists).map(_.getParent).distinct
+      .foreach(fs.delete(_, true))
   }
 
   /** Retention: drop whole partition DIRECTORIES whose partition

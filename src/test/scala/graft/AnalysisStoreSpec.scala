@@ -255,6 +255,31 @@ class AnalysisStoreSpec extends SparkSpec {
       .collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "a1"), (2L, "b2"), (3L, "c1"),
       (4L, "d1"), (5L, "e2")))
+    // the same with the touched values given as their own frame
+    AnalysisStore.writeIncrementalPartitioned(spark,
+      Seq((1L, "2024-01", "a3")).toDF("k", "m", "v"), dir, Seq("k"), Seq("m"),
+      parts = Some(Seq("2024-01").toDF("m")))
+    assert(snap("2024-02") == before02, "2024-02 must not be rewritten")
+    assert(snap("2024-03") == before03, "2024-03 must not be rewritten")
+    assert(spark.read.parquet(dir).filter($"k" === 1L).select("v")
+      .as[String].collect().toSeq == Seq("a3"))
+  }
+
+  test("writeIncrementalPartitioned: a parts frame naming an extra partition leaves its rows intact") {
+    val dir = Files.createTempDirectory("store").resolve("incparts").toString
+    val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
+      (3L, "2024-02", "c1"), (4L, "2024-03", "d1")).toDF("k", "m", "v")
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    // the delta lands in 2024-01 only; parts also names 2024-02, which
+    // holds rows, and 2024-04, which does not exist
+    AnalysisStore.writeIncrementalPartitioned(spark,
+      Seq((1L, "2024-01", "a2")).toDF("k", "m", "v"), dir, Seq("k"), Seq("m"),
+      parts = Some(Seq("2024-01", "2024-02", "2024-04").toDF("m")))
+    val rows = spark.read.parquet(dir).select("k", "m", "v")
+      .as[(Long, String, String)].collect().sortBy(_._1)
+    assert(rows.toSeq == Seq((1L, "2024-01", "a2"), (2L, "2024-02", "b1"),
+      (3L, "2024-02", "c1"), (4L, "2024-03", "d1")))
+    assert(!new java.io.File(s"$dir/m=2024-04").exists)
   }
 
   test("writeIncrementalPartitioned removeKeys drops rows even in partitions the delta skips") {
@@ -293,6 +318,23 @@ class AnalysisStoreSpec extends SparkSpec {
       .as[(Long, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "2024-01", "a1"), (2L, "2024-03", "b2"),
       (4L, "2024-02", "d1")), "k=2 must live only in its new partition")
+  }
+
+  test("writeIncrementalPartitioned: a partition left empty by removeKeys is deleted") {
+    val dir = Files.createTempDirectory("store").resolve("incempty").toString
+    val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
+      (3L, "2024-03", "c1")).toDF("k", "m", "v")
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    // k=2 moves out of 2024-02 and k=3 is removed: neither old
+    // partition keeps a row, and the delta lands in 2024-04
+    AnalysisStore.writeIncrementalPartitioned(spark,
+      Seq((2L, "2024-04", "b2")).toDF("k", "m", "v"), dir,
+      Seq("k"), Seq("m"), removeKeys = Some(Seq(2L, 3L).toDF("k")))
+    val rows = spark.read.parquet(dir).select("k", "m", "v")
+      .as[(Long, String, String)].collect().sortBy(_._1)
+    assert(rows.toSeq == Seq((1L, "2024-01", "a1"), (2L, "2024-04", "b2")))
+    assert(new java.io.File(dir).list().filter(_.startsWith("m=")).sorted
+      .toSeq == Seq("m=2024-01", "m=2024-04"))
   }
 
   test("writeIncrementalPartitioned: a failed merge write leaves the table untouched") {

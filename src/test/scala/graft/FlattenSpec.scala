@@ -127,6 +127,34 @@ class FlattenSpec extends SparkSpec {
     assert(rows(1).getAs[Double]("a") == 30.0 && rows(1).isNullAt(rows(1).fieldIndex("b")))
   }
 
+  test("pivotLatest with a tieBreak runs window and aggregate behind one shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val eav = spark.range(0, 200, 1, 3).select(
+      (col("id") % 20).as("id"), (col("id") % 3).as("attr"),
+      col("id").cast("double").as("v"))
+    val wide = Flatten.pivotLatest(eav, "id", "attr",
+      labels = Seq(("a", 0L, col("v")), ("b", 1L, col("v")), ("c", 2L, col("v"))),
+      tieBreak = Seq(col("v").desc))
+    val rows = wide.collect()
+    // the executed adaptive plan holds each exchange inside a query stage
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }
+      .flatMap {
+        case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+        case q: QueryStageExec => q +: nodes(q.plan)
+        case n => Seq(n)
+      }
+    val shuffles = nodes(wide.queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(shuffles == 1, wide.queryExecution.executedPlan.treeString)
+    // the latest (largest v) row per (id, attr) wins
+    assert(rows.length == 20)
+    val r0 = rows.find(_.getLong(0) == 0L).get
+    assert(r0.getAs[Double]("a") == 180.0 && r0.getAs[Double]("b") == 160.0 &&
+      r0.getAs[Double]("c") == 140.0)
+  }
+
   test("melt → pivotLatest round-trips lineitem (SURVEY §5b identity)") {
     // (l_orderkey, l_linenumber) is NOT unique in the generated data —
     // synthesize a unique rowid (test-only; 6k rows, 1-partition window)

@@ -157,20 +157,20 @@ class MambaLifecycleSpec extends SparkSpec {
       spark.read.parquet(s"$root2/mamba_flat_encounter_7").select(cols: _*))
   }
 
-  /** Install `src` for type `et`, land each tick (the next obs table
+  /** Install `src` for type `et`, land each tick (the next sources
     * and its bookmark) with tickPersisted, then compare every flat
     * table of the type with a fresh runPersisted install of the final
     * sources.
     */
   private def assertTicksMatchInstall(src: MambaEtlJob.Sources, et: Int,
-      ticks: Seq[(DataFrame => DataFrame, String)],
+      ticks: Seq[(MambaEtlJob.Sources => MambaEtlJob.Sources, String)],
       columns: Int = 40): Unit = {
     import org.apache.spark.sql.functions.col
     val cfgE = EtlConfig("/src", "/out", columns = columns)
     val root = java.nio.file.Files.createTempDirectory("mambatick").toString
     MambaEtlJob.runPersisted(spark, cfgE, src, Seq(et), root)
-    val last = ticks.foldLeft(src) { case (s, (nextObs, bookmark)) =>
-      val next = s.copy(obs = nextObs(s.obs))
+    val last = ticks.foldLeft(src) { case (s, (nextSources, bookmark)) =>
+      val next = nextSources(s)
       MambaEtlJob.tickPersisted(spark, cfgE, next, et, root,
         changedSince = Some(ts(bookmark)))
       next
@@ -188,6 +188,35 @@ class MambaLifecycleSpec extends SparkSpec {
       val cols = want.columns.sorted.map(col).toSeq
       assertSameRows(ticked.select(cols: _*), want.select(cols: _*))
     }
+  }
+
+  /** A tick step that changes only the obs table. */
+  private def onObs(f: DataFrame => DataFrame)
+      : MambaEtlJob.Sources => MambaEtlJob.Sources =
+    s => s.copy(obs = f(s.obs))
+
+  /** Appends one live encounter. */
+  private def addEncounter(id: Long, et: Int, patient: Long,
+      at: String): MambaEtlJob.Sources => MambaEtlJob.Sources =
+    s => s.copy(encounter = s.encounter.unionByName(
+      Seq((id, s"e-$id", et, patient, ts(at), 0))
+        .toDF("encounter_id", "uuid", "encounter_type", "patient_id",
+          "encounter_datetime", "voided")))
+
+  /** Moves encounter `id` to `at`, and bumps its obs `obsId` to
+    * `bumped` (past the bookmark) so the tick sees the encounter as
+    * changed.
+    */
+  private def moveEncounter(id: Long, at: String, obsId: Long,
+      bumped: String): MambaEtlJob.Sources => MambaEtlJob.Sources = s => {
+    import org.apache.spark.sql.functions.{lit, when}
+    s.copy(
+      encounter = s.encounter.withColumn("encounter_datetime",
+        when($"encounter_id" === id, lit(ts(at)))
+          .otherwise($"encounter_datetime")),
+      obs = s.obs.withColumn("obs_datetime",
+        when($"obs_id" === obsId, lit(ts(bumped)))
+          .otherwise($"obs_datetime")))
   }
 
   /** Appends one live numeric or coded obs. */
@@ -218,29 +247,61 @@ class MambaLifecycleSpec extends SparkSpec {
     // encounter type 7 holds only Weight until a tick records a Height
     // obs: the auto-config grows a column the stored table lacks
     assertTicksMatchInstall(withHeight, 7, Seq(
-      addObs(9L, 11L, 101L, Some(170.0), None, "2024-03-10 08:00:00") ->
-        "2024-03-06 00:00:00",
-      addObs(10L, 10L, 100L, Some(64.0), None, "2024-03-12 08:00:00") ->
-        "2024-03-11 00:00:00"))
+      onObs(addObs(9L, 11L, 101L, Some(170.0), None,
+        "2024-03-10 08:00:00")) -> "2024-03-06 00:00:00",
+      onObs(addObs(10L, 10L, 100L, Some(64.0), None,
+        "2024-03-12 08:00:00")) -> "2024-03-11 00:00:00"))
   }
 
   test("ticks after a concept is voided away from a type equal a fresh install") {
     // encounter type 8's only Counselor Notes obs is voided, its audit
     // time bumped past the bookmark: the column leaves the auto-config
     assertTicksMatchInstall(sources, 8, Seq(
-      voidObs(5L, "2024-03-10 08:00:00") -> "2024-03-06 00:00:00",
-      addObs(11L, 12L, 200L, None, Some("NEGATIVE"),
-        "2024-03-12 08:00:00") -> "2024-03-11 00:00:00"))
+      onObs(voidObs(5L, "2024-03-10 08:00:00")) -> "2024-03-06 00:00:00",
+      onObs(addObs(11L, 12L, 200L, None, Some("NEGATIVE"),
+        "2024-03-12 08:00:00")) -> "2024-03-11 00:00:00"))
   }
 
   test("ticks on a type split into continuation tables equal a fresh install") {
     // a 1-column cap splits type 8 into one table per concept; the
     // second tick's Height obs re-deals the columns across 3 tables
     assertTicksMatchInstall(withHeight, 8, Seq(
-      addObs(9L, 12L, 200L, None, Some("NEGATIVE"), "2024-03-10 08:00:00") ->
-        "2024-03-06 00:00:00",
-      addObs(10L, 12L, 101L, Some(150.0), None, "2024-03-12 08:00:00") ->
-        "2024-03-11 00:00:00"), columns = 1)
+      onObs(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
+        "2024-03-10 08:00:00")) -> "2024-03-06 00:00:00",
+      onObs(addObs(10L, 12L, 101L, Some(150.0), None,
+        "2024-03-12 08:00:00")) -> "2024-03-11 00:00:00"), columns = 1)
+  }
+
+  test("a tick landing a new encounter in a month with no partition yet equals a fresh install") {
+    // encounter 15 (type 7) opens April; its obs is the tick's only change
+    assertTicksMatchInstall(sources, 7, Seq(
+      addEncounter(15L, 7, 2L, "2024-04-02 09:00:00").andThen(
+        onObs(addObs(9L, 15L, 100L, Some(58.0), None,
+          "2024-04-02 09:05:00"))) -> "2024-03-06 00:00:00"))
+  }
+
+  test("a tick that moves a changed encounter to another month equals a fresh install") {
+    // encounter 11 moves from February to April; bumping its Weight
+    // obs past the bookmark marks it changed. A second tick adds an
+    // obs to the moved encounter in its new month.
+    assertTicksMatchInstall(sources, 7, Seq(
+      moveEncounter(11L, "2024-04-03 10:00:00", 3L,
+        "2024-03-10 08:00:00") -> "2024-03-06 00:00:00",
+      onObs(addObs(9L, 11L, 100L, Some(83.0), None,
+        "2024-03-12 08:00:00")) -> "2024-03-11 00:00:00"))
+  }
+
+  test("a tick that moves a changed encounter on a split type equals a fresh install") {
+    // a 1-column cap splits type 8 into one table per concept; encounter
+    // 12 moves to April through a bumped obs of one chunk only, and a
+    // new type-8 encounter lands in May
+    assertTicksMatchInstall(withHeight, 8, Seq(
+      moveEncounter(12L, "2024-04-03 11:00:00", 5L,
+        "2024-03-10 08:00:00") -> "2024-03-06 00:00:00",
+      addEncounter(16L, 8, 2L, "2024-05-01 09:00:00").andThen(
+        onObs(addObs(9L, 16L, 200L, None, Some("NEGATIVE"),
+          "2024-05-01 09:05:00"))) -> "2024-03-11 00:00:00"),
+      columns = 1)
   }
 
   test("a tick or reinstall that shrinks a type's split drops the stale continuation table") {
@@ -250,8 +311,8 @@ class MambaLifecycleSpec extends SparkSpec {
     val src = withHeight.copy(obs = addObs(9L, 12L, 101L, Some(150.0), None,
       "2024-02-03 11:07:00")(withHeight.obs))
     val voidHiv = voidObs(4L, "2024-03-10 08:00:00")
-    assertTicksMatchInstall(src, 8, Seq(voidHiv -> "2024-03-06 00:00:00"),
-      columns = 2)
+    assertTicksMatchInstall(src, 8,
+      Seq(onObs(voidHiv) -> "2024-03-06 00:00:00"), columns = 2)
     // the same shrink through a reinstall over the existing root
     val cfg2 = EtlConfig("/src", "/out", columns = 2)
     val root = java.nio.file.Files.createTempDirectory("mambare").toString
