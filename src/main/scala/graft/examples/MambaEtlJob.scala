@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{EtlConfig, FlatTableConfig}
-import graft.operators.Flatten
+import graft.operators.{BookmarkStore, Flatten, Incremental}
 import graft.pipeline.{EtlPipeline, Stage}
 
 /** The reference's complete ETL wired end-to-end on this engine — what
@@ -41,7 +41,7 @@ object MambaEtlJob {
       src: Sources,
       encounterTypeIds: Seq[Int],
       flatConfigs: Map[Int, FlatTableConfig] = Map.empty): EtlPipeline = {
-    val p = new EtlPipeline(config)
+    val p = new EtlPipeline()
     val effectiveIds =
       if (config.automatedFlattening == 1 && encounterTypeIds.isEmpty)
         graft.operators.ModelCollect.bounded(
@@ -201,24 +201,71 @@ object MambaEtlJob {
       .filter(n => n == base || n.matches(s"${base}_[0-9]+")).distinct
   }
 
+  /** One firing of the recurring ETL (reference README.md:133-140),
+    * the body of a [[graft.pipeline.EtlScheduler]] loop. `src` is
+    * evaluated once, and the next bookmark is taken from its obs
+    * before any write. With `config.incrementalMode == 0` the store is
+    * reinstalled ([[runPersisted]], "delete and recreate"); with `1`
+    * every type in `encounterTypeIds` ticks from the stored bookmark
+    * ([[tickPersisted]]), and dims and facts stay as installed. The bookmark is written only after every write, so a
+    * failed tick leaves it in place and the next tick replays the same
+    * window; the re-merge is idempotent.
+    */
+  def scheduledTick(spark: SparkSession, config: EtlConfig, src: => Sources,
+      encounterTypeIds: Seq[Int], storeRoot: String, bookmarks: BookmarkStore,
+      flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit = {
+    val sources = src
+    val mark = Incremental.nextBookmark(sources.obs, Seq("obs_datetime"))
+    if (config.incrementalMode == 0)
+      runPersisted(spark, config, sources, encounterTypeIds, storeRoot, flatConfigs)
+    else {
+      val since = bookmarks.read()
+      encounterTypeIds.foreach(tickPersisted(spark, config, sources, _,
+        storeRoot, since, flatConfigs))
+    }
+    mark.foreach(bookmarks.write)
+  }
+
   /** A scheduled tick persisted (reference mode 1, "only add/modify
-    * what has changed"): obs changed since the bookmark identify the
-    * stale encounters; ONLY their wide rows are re-pivoted and merged,
-    * and the store write rewrites ONLY the month partitions those
-    * encounters live in (dynamic partition overwrite + explicit
-    * removeKeys, so a fully-voided encounter's row disappears from
-    * its old month). Write amplification per tick tracks the delta.
+    * what has changed"): the obs changed since the bookmark (by
+    * `obs_datetime`) name the stale encounters, and [[tickChanged]]
+    * re-pivots and merges only those.
+    */
+  def tickPersisted(spark: SparkSession, config: EtlConfig, src: Sources,
+      encounterTypeId: Int, storeRoot: String,
+      changedSince: Option[java.sql.Timestamp],
+      flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit =
+    tickChanged(spark, config, src, encounterTypeId, storeRoot,
+      Incremental.changedSince(src.obs, changedSince, Seq("obs_datetime"))
+        .select("encounter_id"),
+      flatConfigs)
+
+  /** One incremental tick of type `encounterTypeId`'s flat tables —
+    * the core every incremental driver calls ([[tickPersisted]]'s
+    * bookmark, [[graft.streaming.EtlStreaming.incrementalFlatten]]'s
+    * micro-batch, [[scheduledTick]]'s stored bookmark). ONLY the
+    * changed encounters' wide rows are re-pivoted, from their obs in
+    * full, and merged; the store write rewrites ONLY the month
+    * partitions those encounters live in (dynamic partition overwrite
+    * + explicit removeKeys, so a fully-voided encounter's row
+    * disappears from its old month). Write amplification per tick
+    * tracks the delta.
+    *
+    * `changed` has an `encounter_id` column with one row per changed
+    * obs. It is not deduplicated: it only feeds semi- and anti-joins,
+    * where a duplicate key costs one broadcast entry and a `distinct`
+    * would cost a shuffle. It must be delta-sized, because it is
+    * broadcast. It picks the affected obs, gives the touched months
+    * and is the merge's removeKeys. An id of another type, or of a
+    * voided encounter, re-pivots nothing into this type's tables: the
+    * delta is joined with the type's live encounters.
     *
     * The delta is pivoted once per table, by the write. The months it
     * touches come from the changed encounters' `encounter_datetime`
     * (the visit months of `encIds ⋉ changed`), not from the pivoted
     * delta: every delta row is one of those encounters and takes its
     * month from the same row, so the months cover the delta exactly,
-    * and one frame serves every continuation table of the type. The
-    * changed-encounter set is one key per changed obs row, not
-    * deduplicated: it only feeds semi- and anti-joins, where a
-    * duplicate key costs one broadcast entry and a `distinct` would
-    * cost a shuffle; both sizes are bounded by the delta.
+    * and one frame serves every continuation table of the type.
     *
     * A type wider than `config.columns` ticks each of its
     * continuation tables the same way. When the type's concept set
@@ -227,19 +274,16 @@ object MambaEtlJob {
     * longer match the stored ones; that tick rebuilds every table of
     * the type from the sources, laid out as [[runPersisted]] writes
     * them, each through a crash-safe swap, and drops the stored
-    * continuation tables the new split no longer has.
+    * continuation tables the new split no longer has. A table not yet
+    * stored is written from the delta alone.
     */
-  def tickPersisted(spark: SparkSession, config: EtlConfig, src: Sources,
-      encounterTypeId: Int, storeRoot: String,
-      changedSince: Option[java.sql.Timestamp],
+  def tickChanged(spark: SparkSession, config: EtlConfig, src: Sources,
+      encounterTypeId: Int, storeRoot: String, changed: DataFrame,
       flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit = {
     val cfg = flatConfigs.getOrElse(encounterTypeId,
       Flatten.autoConfig(src.obs, src.encounter, src.concept,
         encounterTypeId, locale = Some(config.locale)))
       .copy(tableName = s"mamba_flat_encounter_$encounterTypeId")
-    val changed = graft.operators.Incremental
-      .changedSince(src.obs, changedSince, Seq("obs_datetime"))
-      .select("encounter_id")
     val affected = src.obs.join(broadcast(changed), Seq("encounter_id"), "left_semi")
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)

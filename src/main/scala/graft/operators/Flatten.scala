@@ -133,65 +133,6 @@ object Flatten {
     }
   }
 
-  /** Incremental flattening — the reference's mode 1 ("only add/modify
-    * what has changed", reference README.md:133-134) applied to the
-    * core operator: obs rows changed since the bookmark identify the
-    * encounters whose wide rows are stale; ONLY those encounters are
-    * re-pivoted (semi-join before the shuffle), and the fresh rows
-    * replace same-key rows of the existing flat table.
-    *
-    * Scale shape: per tick, the pivot's shuffle carries only the
-    * changed encounters' obs (typically ≪ the store); the merge
-    * broadcasts the changed-key set so the existing flat table is
-    * never shuffled. Contract (tested): N incremental ticks ≡ one
-    * full [[flattenObs]] over the final obs state — note the changed
-    * encounters' obs must be re-read IN FULL (not just the changed
-    * rows), which is why this keys on encounter, not on obs row.
-    *
-    * Deletion semantics: existing wide rows are anti-joined against
-    * the CHANGED-ENCOUNTER set, not against the fresh rows' keys — an
-    * encounter whose every config-relevant obs became voided in a
-    * tick produces NO fresh row, and keying the merge on fresh rows
-    * would leave its stale wide row behind (a full refresh drops it).
-    * Caveat this implies: voiding/deleting an obs only registers if
-    * it bumps one of `tsCols` past the bookmark (OpenMRS's
-    * date_voided/date_changed audit columns serve exactly this role);
-    * an in-place delete with no audit trail is invisible to any
-    * bookmark-based incremental scheme.
-    */
-  def flattenObsIncremental(
-      obs: DataFrame,
-      existingFlat: DataFrame,
-      config: FlatTableConfig,
-      changedSince: Option[java.sql.Timestamp],
-      tsCols: Seq[String] = Seq("obs_datetime")): DataFrame = {
-    val changedEncounters = Incremental
-      .changedSince(obs, changedSince, tsCols)
-      .select("encounter_id").distinct()
-    mergeChanged(obs, existingFlat, config, changedEncounters)
-  }
-
-  /** The changed-encounter merge both incremental paths share (batch
-    * bookmark ticks above, streaming micro-batches in
-    * [[graft.streaming.EtlStreaming]]): re-pivot the changed
-    * encounters' obs IN FULL, drop their stale wide rows (by changed
-    * id, so fully-voided encounters disappear), and union the fresh
-    * ones. One implementation ⇒ the N-ticks ≡ full-refresh contract
-    * is proven once and holds everywhere.
-    */
-  def mergeChanged(
-      obs: DataFrame,
-      existingFlat: DataFrame,
-      config: FlatTableConfig,
-      changedEncounters: DataFrame): DataFrame = {
-    val affectedObs = obs.join(
-      broadcast(changedEncounters), Seq("encounter_id"), "left_semi")
-    val freshRows = flattenObs(affectedObs, config)
-    existingFlat
-      .join(broadcast(changedEncounters), Seq("encounter_id"), "left_anti")
-      .unionByName(freshRows, allowMissingColumns = true)
-  }
-
   /** Concept datatype → which typed obs value_* column carries the
     * value (SURVEY §1.3 "Column types follow the source concept
     * datatype").

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -516,10 +516,16 @@ final class BookmarkStore(path: String) {
       if (s.isEmpty) None else Some(java.sql.Timestamp.valueOf(s))
     } else None
 
+  /** Replaces the mark whole (temp file + atomic rename), so a crash
+    * mid-write leaves the old mark, never an empty or partial one.
+    */
   def write(ts: java.sql.Timestamp): Unit = {
-    // a bare relative filename has a null getParent — nothing to create
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.write(p, ts.toString.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val dst = new org.apache.hadoop.fs.Path(p.toAbsolutePath.toUri)
+    graft.sources.FsAtomic.writeAtomic(
+      org.apache.hadoop.fs.FileSystem.getLocal(conf), conf,
+      new org.apache.hadoop.fs.Path(dst.getParent,
+        s".${dst.getName}.${java.util.UUID.randomUUID}.tmp"),
+      dst, ts.toString, overwrite = true)
   }
 }

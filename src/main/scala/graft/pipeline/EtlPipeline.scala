@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.EtlConfig
-import graft.operators.{BookmarkStore, Incremental}
 
 /** The reference's ETL orchestration re-expressed as an explicit
   * stage DAG (SURVEY §2.1 S5, §3 E2): the sp_makefile's concatenation
@@ -13,23 +12,16 @@ import graft.operators.{BookmarkStore, Incremental}
   * reference omod/src/main/resources/_etl/sp_makefile:1-14) becomes
   * ordinary Scala composition — stages declare dependencies, the
   * runner topo-sorts, materializes each output once, and registers it
-  * as a temp view for downstream stages and report SQL.
-  *
-  * Full vs incremental (reference README.md:133-134,146):
-  *  - mode 0: every stage recomputed, outputs overwritten (S2).
-  *  - mode 1: a stage with a `mergeKeys` declaration is merged into
-  *    the existing store via anti-join+union (S3) instead of
-  *    overwritten; upstream change detection is the stage author's
-  *    concern (compose [[Incremental.changedSince]] with the
-  *    bookmark).
+  * as a temp view for downstream stages and report SQL. Every run
+  * recomputes every stage; the incremental tick of the flat tables is
+  * [[graft.examples.MambaEtlJob.tickChanged]].
   */
 final case class Stage(
     name: String,
-    dependsOn: Seq[String],
-    mergeKeys: Seq[String] = Nil)(
+    dependsOn: Seq[String])(
     val build: (SparkSession, Map[String, DataFrame]) => DataFrame)
 
-final class EtlPipeline(config: EtlConfig) {
+final class EtlPipeline {
   private val stages = mutable.LinkedHashMap.empty[String, Stage]
 
   def register(stage: Stage): this.type = {
@@ -60,22 +52,12 @@ final class EtlPipeline(config: EtlConfig) {
 
   /** Run every stage; returns name → materialized result. Each output
     * is registered as a temp view so report SQL (E3) and later stages
-    * see it by name. `existing` supplies the prior store for
-    * incremental merges (mode 1).
+    * see it by name.
     */
-  def run(spark: SparkSession,
-      existing: String => Option[DataFrame] = _ => None): Map[String, DataFrame] = {
+  def run(spark: SparkSession): Map[String, DataFrame] = {
     val done = mutable.LinkedHashMap.empty[String, DataFrame]
     topoOrder.foreach { name =>
-      val stage = stages(name)
-      val fresh = stage.build(spark, done.toMap)
-      val out =
-        if (config.incrementalMode == 1 && stage.mergeKeys.nonEmpty)
-          existing(name) match {
-            case Some(old) => Incremental.merge(old, fresh, stage.mergeKeys)
-            case None => fresh
-          }
-        else fresh
+      val out = stages(name).build(spark, done.toMap)
       out.createOrReplaceTempView(name)
       done += name -> out
     }
@@ -87,14 +69,14 @@ final class EtlPipeline(config: EtlConfig) {
   * EVENT firing sp_mamba_etl_schedule every etl_interval seconds
   * (reference mamba_main.sql:11-14, README.md:139-140; SURVEY §2.7
   * T1). A plain loop, not Structured Streaming: the reference's
-  * cadence semantics are "re-run the batch pipeline every N seconds",
-  * and the bookmark (T3) carries incremental state between ticks.
-  * `maxTicks` bounds test runs; production passes Int.MaxValue.
+  * cadence semantics are "run the tick every N seconds", and the tick
+  * ([[graft.examples.MambaEtlJob.scheduledTick]]) keeps its own
+  * bookmark (T3) between firings. `maxTicks` bounds test runs;
+  * production passes Int.MaxValue.
   */
 final class EtlScheduler(
-    pipeline: EtlPipeline,
+    tick: () => Unit,
     config: EtlConfig,
-    bookmarks: BookmarkStore,
     sleep: Long => Unit = Thread.sleep) {
 
   /** Run up to `maxTicks` ticks. A failing tick does NOT kill the
@@ -107,8 +89,7 @@ final class EtlScheduler(
     *
     * @return number of SUCCESSFUL ticks
     */
-  def runLoop(spark: SparkSession, maxTicks: Int,
-      onTick: Map[String, DataFrame] => Unit = _ => (),
+  def runLoop(maxTicks: Int,
       onError: (Int, Throwable) => Unit = (_, _) => (),
       maxConsecutiveFailures: Int = 3): Int = {
     var ticks = 0
@@ -116,8 +97,7 @@ final class EtlScheduler(
     var consecutiveFailures = 0
     while (ticks < maxTicks) {
       try {
-        val results = pipeline.run(spark)
-        onTick(results)
+        tick()
         ok += 1
         consecutiveFailures = 0
       } catch {

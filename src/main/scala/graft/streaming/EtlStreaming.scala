@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.model.FlatTableConfig
-import graft.operators.Flatten
+import graft.examples.MambaEtlJob
+import graft.model.{EtlConfig, FlatTableConfig}
 import graft.sources.AnalysisStore
 
 /** The reference's scheduled ETL tick (SURVEY §2.7 T1/T3) as a real
@@ -17,17 +17,15 @@ import graft.sources.AnalysisStore
   * mode keeps (`Incremental.changedSince` + `BookmarkStore`) is
   * replaced by the engine's own offset tracking + checkpointing —
   * exactly-once per batch, resumable after crashes, no hand-rolled
-  * high-water mark. Inside the batch the semantics are the proven
-  * batch ones ([[Flatten.flattenObsIncremental]] contract): affected
-  * encounters are re-pivoted IN FULL from the store of record and
-  * replace their wide rows.
+  * high-water mark. Inside the batch the tick is the batch one
+  * ([[graft.examples.MambaEtlJob.tickChanged]]): affected encounters
+  * are re-pivoted IN FULL from the sources of record and replace
+  * their wide rows.
   *
   * At 100 TB: per tick the pivot shuffle carries only changed
-  * encounters' obs; the store rewrite is the incremental
-  * read-merge-swap ([[AnalysisStore.writeIncremental]]). The
-  * `allObs` frame is the batch store-of-record (a table/path the
-  * CDC feed lands next to); it is re-read per batch, scanning only
-  * what the semi-join on changed encounter ids needs.
+  * encounters' obs, and the store write rewrites only the month
+  * partitions they touch. The sources are re-read per batch,
+  * scanning only what the semi-join on changed encounter ids needs.
   */
 object EtlStreaming {
 
@@ -339,74 +337,31 @@ object EtlStreaming {
         }
       }
 
-  /** Wire a changed-obs stream into an incrementally-maintained flat
-    * table at `storePath`. Caller starts/stops the returned writer
-    * (attach `.trigger(...)`/checkpoint options as deployment needs).
-    *
-    * With `partitionBy` (the 100 TB deployment shape) the store is a
-    * PARTITIONED table and a tick rewrites only the partitions its
-    * changed encounters touch ([[AnalysisStore
-    * .writeIncrementalPartitioned]] + dynamic partition overwrite)
-    * instead of read-merge-swapping the whole table —
-    * write amplification tracks the delta, not the store.
-    * `withPartitionCols` derives the partition columns on the flat
-    * frame (e.g. month of a flat datetime column); partition values
-    * must be stable per encounter (a visit's month doesn't move).
+  /** Wire a changed-obs stream into type `encounterTypeId`'s flat
+    * tables under `storeRoot`: each micro-batch's `encounter_id`s are
+    * one [[graft.examples.MambaEtlJob.tickChanged]], so the store has
+    * install's layout (month partitions, continuation tables at the
+    * column cap, only the type's live encounters). Caller starts/stops
+    * the returned writer (attach checkpoint options as deployment
+    * needs).
     *
     * @param obsDelta streaming frame of changed obs rows (obs schema)
-    * @param allObs   batch frame of the full obs store of record
+    * @param src      the sources of record, re-evaluated per batch
     */
   def incrementalFlatten(
       obsDelta: DataFrame,
-      allObs: => DataFrame,
-      config: FlatTableConfig,
-      storePath: String,
+      config: EtlConfig,
+      src: => MambaEtlJob.Sources,
+      encounterTypeId: Int,
+      storeRoot: String,
       interval: String = "30 minutes",
-      partitionBy: Seq[String] = Nil,
-      withPartitionCols: DataFrame => DataFrame = identity): DataStreamWriter[org.apache.spark.sql.Row] =
+      flatConfigs: Map[Int, FlatTableConfig] = Map.empty): DataStreamWriter[org.apache.spark.sql.Row] =
     obsDelta.writeStream
       .outputMode("update")
       .trigger(Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val changed = batch.select("encounter_id").distinct()
-        // the store path's OWN filesystem — never fs.defaultFS
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(new org.apache.hadoop.fs.Path(storePath))
-        if (partitionBy.nonEmpty) {
-          val affected = allObs.join(
-            org.apache.spark.sql.functions.broadcast(changed),
-            Seq("encounter_id"), "left_semi")
-          val flatDelta = withPartitionCols(Flatten.flattenObs(affected, config))
-          if (exists)
-            // removeKeys = the changed-encounter set, NOT the fresh
-            // rows' keys: an encounter whose every relevant obs was
-            // voided this tick produces no fresh row, and its stale
-            // wide row must still be dropped (same deletion semantics
-            // Flatten.mergeChanged proves for the full-rewrite path)
-            AnalysisStore.writeIncrementalPartitioned(spark, flatDelta,
-              storePath, Seq("encounter_id"), partitionBy,
-              removeKeys = Some(changed))
-          else
-            AnalysisStore.writeFull(flatDelta, storePath, partitionBy)
-        } else if (exists) {
-          // the SAME changed-encounter merge the batch path proves
-          // (Flatten.mergeChanged), written crash-safely: the staging
-          // write reads the still-intact store, then a rename swap —
-          // a tick that dies mid-write never half-destroys the table
-          AnalysisStore.stageAndSwap(spark, storePath) { staging =>
-            Flatten.mergeChanged(allObs,
-                spark.read.parquet(storePath), config, changed)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(staging)
-          }
-        } else {
-          val affected = allObs.join(
-            org.apache.spark.sql.functions.broadcast(changed),
-            Seq("encounter_id"), "left_semi")
-          AnalysisStore.writeFull(Flatten.flattenObs(affected, config), storePath)
-        }
+        MambaEtlJob.tickChanged(batch.sparkSession, config, src,
+          encounterTypeId, storeRoot, batch.select("encounter_id"), flatConfigs)
       }
 
   /** One transactional-publishing tick against a [[graft.sources

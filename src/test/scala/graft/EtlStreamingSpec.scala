@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.model.{FlatColumn, FlatTableConfig}
+import graft.examples.MambaEtlJob
+import graft.model.{EtlConfig, FlatColumn, FlatTableConfig}
 import graft.operators.Flatten
 import graft.streaming.EtlStreaming
 
@@ -15,7 +16,7 @@ import graft.streaming.EtlStreaming
   * micro-batches drive incremental flattening of the analysis store,
   * and after N batches the store equals one full batch flatten of the
   * final obs state (the same N-ticks ≡ full-refresh contract the
-  * batch path proves in FlattenSpec).
+  * batch tick proves in MambaLifecycleSpec).
   */
 class EtlStreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -30,6 +31,24 @@ class EtlStreamingSpec extends SparkSpec {
   private def toObs(rows: Seq[ObsRow]): DataFrame =
     rows.toDF("obs_id", "encounter_id", "concept_id", "value_numeric",
       "value_text", "value_datetime", "value_coded", "obs_datetime", "voided")
+
+  /** Sources of record for a flat-table stream of encounter type 1:
+    * `obs` plus one live encounter per (id, visit time). Person,
+    * encounter type and concept are never read: every stream passes
+    * its flat config.
+    */
+  private def sourcesOf(obs: Seq[ObsRow],
+      encounters: Seq[(Long, String)]): MambaEtlJob.Sources =
+    MambaEtlJob.Sources(spark.emptyDataFrame, spark.emptyDataFrame,
+      encounters.map { case (id, at) => (id, 1, 1L, ts(at), 0) }
+        .toDF("encounter_id", "encounter_type", "patient_id",
+          "encounter_datetime", "voided"),
+      spark.emptyDataFrame, toObs(obs))
+
+  /** `cfg`'s flat columns of encounter type 1's table under `root`. */
+  private def streamedFlat(root: String, cfg: FlatTableConfig): DataFrame =
+    spark.read.parquet(s"$root/mamba_flat_encounter_1")
+      .select(Flatten.flattenObs(toObs(Nil), cfg).columns.map(col): _*)
 
   test("fromCdcJson: envelopes decode; deletes void; junk is dropped") {
     val schema = toObs(Nil).schema
@@ -74,33 +93,35 @@ class EtlStreamingSpec extends SparkSpec {
       (3L, 1L, 100L, Some(64.0), None, None, None, ts("2024-01-02 09:00:00"), 0),
       (4L, 3L, 200L, None, None, None, Some("NEG"), ts("2024-01-02 10:00:00"), 0))
     var obsStore: Seq[ObsRow] = Seq.empty
+    val encounters = Seq(1L -> "2024-01-01 10:00:00",
+      2L -> "2024-01-01 11:00:00", 3L -> "2024-01-02 10:00:00")
 
-    val storePath = Files.createTempDirectory("etlstream")
-      .resolve("flat").toString
+    val storeRoot = Files.createTempDirectory("etlstream").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[ObsRow]
     val delta = mem.toDF().toDF("obs_id", "encounter_id", "concept_id",
       "value_numeric", "value_text", "value_datetime", "value_coded",
       "obs_datetime", "voided")
-    val q = EtlStreaming.incrementalFlatten(
-      delta, toObs(obsStore), cfg, storePath, interval = "0 seconds").start()
+    val q = EtlStreaming.incrementalFlatten(delta, EtlConfig("/src", "/out"),
+      sourcesOf(obsStore, encounters), 1, storeRoot,
+      interval = "0 seconds", flatConfigs = Map(1 -> cfg)).start()
     try {
       obsStore = batch1
       mem.addData(batch1: _*)
       q.processAllAvailable()
-      assert(spark.read.parquet(storePath).count() == 2)
+      assert(streamedFlat(storeRoot, cfg).count() == 2)
 
       obsStore = batch1 ++ batch2
       mem.addData(batch2: _*)
       q.processAllAvailable()
 
-      val streamed = spark.read.parquet(storePath)
+      val streamed = streamedFlat(storeRoot, cfg)
       assertSameRows(streamed, Flatten.flattenObs(toObs(obsStore), cfg))
       val e1 = streamed.filter(col("encounter_id") === 1).collect().head
       assert(e1.getAs[Double]("weight") == 64.0) // tick replaced the row
-      // crash-safe swap leaves no staging/backup dirs behind
-      val siblings = new java.io.File(storePath).getParentFile.list().toSeq
-      assert(siblings == Seq("flat"), s"leftovers: $siblings")
+      // the merge leaves no staging/backup dirs behind
+      val siblings = new java.io.File(storeRoot).list().toSeq
+      assert(siblings == Seq("mamba_flat_encounter_1"), s"leftovers: $siblings")
     } finally q.stop()
   }
 
@@ -411,7 +432,8 @@ class EtlStreamingSpec extends SparkSpec {
     // 100 TB shape: flat store partitioned by visit month; tick 2
     // changes only January encounters, so February's directory must
     // stay byte-identical (no full-table swap), while a fully-voided
-    // January encounter still disappears (removeKeys semantics).
+    // January encounter still disappears (removeKeys semantics). Each
+    // encounter's visit time is its visit_time obs.
     val cfg = FlatTableConfig("flat", 1, Seq(
       FlatColumn("weight", 100L, "Numeric"),
       FlatColumn("visit_time", 300L, "Datetime")))
@@ -435,24 +457,25 @@ class EtlStreamingSpec extends SparkSpec {
       obsRow(3L, 2L, 100L, Some(70.0), None, jan2, voided = 1),
       obsRow(4L, 2L, 300L, None, Some(ts(jan2)), jan2, voided = 1))
     var obsStore: Seq[ObsRow] = Seq.empty
+    val encounters = Seq(1L -> jan1, 2L -> jan2, 3L -> feb)
     def withMonth(df: DataFrame): DataFrame =
-      df.withColumn("m", date_format(col("visit_time"), "yyyy-MM"))
+      df.withColumn("visit_month", date_format(col("visit_time"), "yyyy-MM"))
 
-    val storePath = Files.createTempDirectory("etlpart")
-      .resolve("flat").toString
+    val storeRoot = Files.createTempDirectory("etlpart").toString
+    val storePath = s"$storeRoot/mamba_flat_encounter_1"
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[ObsRow]
     val delta = mem.toDF().toDF("obs_id", "encounter_id", "concept_id",
       "value_numeric", "value_text", "value_datetime", "value_coded",
       "obs_datetime", "voided")
-    val q = EtlStreaming.incrementalFlatten(
-      delta, toObs(obsStore), cfg, storePath, interval = "0 seconds",
-      partitionBy = Seq("m"), withPartitionCols = withMonth).start()
+    val q = EtlStreaming.incrementalFlatten(delta, EtlConfig("/src", "/out"),
+      sourcesOf(obsStore, encounters), 1, storeRoot,
+      interval = "0 seconds", flatConfigs = Map(1 -> cfg)).start()
     try {
       obsStore = batch1
       mem.addData(batch1: _*)
       q.processAllAvailable()
-      def snapFeb() = new java.io.File(s"$storePath/m=2024-02").listFiles()
+      def snapFeb() = new java.io.File(s"$storePath/visit_month=2024-02").listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getName, f.length, f.lastModified)).toSeq.sortBy(_._1)
       val febBefore = snapFeb()
@@ -466,10 +489,10 @@ class EtlStreamingSpec extends SparkSpec {
       assert(snapFeb() == febBefore,
         "February's partition must not be rewritten by a January tick")
       val streamed = spark.read.parquet(storePath)
-        .select("encounter_id", "weight", "visit_time", "m")
+        .select("encounter_id", "weight", "visit_time", "visit_month")
       assertSameRows(streamed,
         withMonth(Flatten.flattenObs(toObs(obsStore), cfg))
-          .select("encounter_id", "weight", "visit_time", "m"))
+          .select("encounter_id", "weight", "visit_time", "visit_month"))
       assert(streamed.filter(col("encounter_id") === 2).isEmpty,
         "fully-voided encounter's wide row must be dropped")
       assert(streamed.filter(col("encounter_id") === 1)
@@ -493,10 +516,13 @@ class EtlStreamingSpec extends SparkSpec {
       (3L, 1L, 100L, Some(64.0), None, None, None, ts("2024-01-02 09:00:00"), 0),
       (4L, 3L, 200L, None, None, None, Some("NEG"), ts("2024-01-02 10:00:00"), 0))
 
+    val encounters = Seq(1L -> "2024-01-01 10:00:00",
+      2L -> "2024-01-01 11:00:00", 3L -> "2024-01-02 10:00:00")
+
     val root = Files.createTempDirectory("etlfiles")
     val dropDir = root.resolve("drops").toString
     Files.createDirectories(root.resolve("drops"))
-    val storePath = root.resolve("flat").toString
+    val storeRoot = root.resolve("store").toString
     val ckpt = root.resolve("ckpt").toString
     var obsStore: Seq[ObsRow] = Seq.empty
     val schema = toObs(Nil).schema
@@ -504,7 +530,8 @@ class EtlStreamingSpec extends SparkSpec {
     def startQuery() =
       EtlStreaming.incrementalFlatten(
           spark.readStream.schema(schema).parquet(dropDir),
-          toObs(obsStore), cfg, storePath, interval = "0 seconds")
+          EtlConfig("/src", "/out"), sourcesOf(obsStore, encounters), 1,
+          storeRoot, interval = "0 seconds", flatConfigs = Map(1 -> cfg))
         .option("checkpointLocation", ckpt)
         .start()
 
@@ -512,24 +539,30 @@ class EtlStreamingSpec extends SparkSpec {
     obsStore = batch1
     toObs(batch1).write.mode("append").parquet(dropDir)
     val q1 = startQuery()
-    try {
+    val committed = try {
       q1.processAllAvailable()
-      assertSameRows(spark.read.parquet(storePath),
+      assertSameRows(streamedFlat(storeRoot, cfg),
         Flatten.flattenObs(toObs(batch1), cfg))
+      q1.lastProgress.sources.head.endOffset
     } finally q1.stop() // simulated crash/redeploy boundary
 
     // second drop lands while the query is down
     obsStore = batch1 ++ batch2
     toObs(batch2).write.mode("append").parquet(dropDir)
 
-    // restart from the SAME checkpoint: only the new drop is processed
+    // restart from the SAME checkpoint: only the new drop is processed,
+    // in one batch that starts where the first run committed (a tick
+    // scans its batch once per query that reads it, so the input
+    // row count is a multiple of the batch size, not the batch size)
     val q2 = startQuery()
     try {
       q2.processAllAvailable()
-      val replayed = q2.recentProgress.map(_.numInputRows).sum
-      assert(replayed == batch2.size,
-        s"restart must resume from the checkpoint, not reprocess: read $replayed rows")
-      assertSameRows(spark.read.parquet(storePath),
+      val replayed = q2.recentProgress.filter(_.numInputRows > 0)
+        .map(_.sources.head)
+      assert(replayed.map(_.startOffset).toSeq == Seq(committed),
+        "restart must resume from the checkpoint, not reprocess: " +
+          replayed.map(_.json).mkString("; "))
+      assertSameRows(streamedFlat(storeRoot, cfg),
         Flatten.flattenObs(toObs(obsStore), cfg))
     } finally q2.stop()
   }

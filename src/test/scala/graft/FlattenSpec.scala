@@ -172,49 +172,6 @@ class FlattenSpec extends SparkSpec {
       li.select("rowid", valueCols: _*))
   }
 
-  test("incremental flatten ≡ full re-flatten after a change tick") {
-    val t0 = Flatten.flattenObs(obsFixture, config)
-    // tick: a new obs arrives for encounter 1 (heavier weight, later
-    // ts) and a brand-new encounter 3 appears
-    val newObs = Seq(
-      (8L, 1L, 100L, Some(64.0), None: Option[String], None: Option[Timestamp],
-        None: Option[String], ts("2024-01-03 08:00:00"), 0),
-      (9L, 3L, 200L, None, None, None, Some("NEGATIVE"),
-        ts("2024-01-03 09:00:00"), 0)
-    ).toDF("obs_id", "encounter_id", "concept_id", "value_numeric",
-      "value_text", "value_datetime", "value_coded", "obs_datetime", "voided")
-    val obs2 = obsFixture.unionByName(newObs)
-    val incremental = Flatten.flattenObsIncremental(
-      obs2, existingFlat = t0, config,
-      changedSince = Some(ts("2024-01-02 23:59:59")))
-    assertSameRows(incremental, Flatten.flattenObs(obs2, config))
-    // and the changed encounter really did update
-    val e1 = incremental.filter(col("encounter_id") === 1).collect().head
-    assert(e1.getAs[Double]("weight") == 64.0)
-  }
-
-  test("incremental flatten drops an encounter fully voided in a tick") {
-    val t0 = Flatten.flattenObs(obsFixture, config)
-    assert(t0.filter(col("encounter_id") === 2).count() == 1)
-    // tick: every obs of encounter 2 becomes voided, with the audit
-    // timestamp bumped past the bookmark (the documented contract —
-    // an unbumped void is invisible to any bookmark-based scheme)
-    val obs2 = obsFixture
-      .withColumn("voided",
-        when(col("encounter_id") === 2, lit(1)).otherwise(col("voided")))
-      .withColumn("obs_datetime",
-        when(col("encounter_id") === 2, lit(ts("2024-01-03 10:00:00")))
-          .otherwise(col("obs_datetime")))
-    val incremental = Flatten.flattenObsIncremental(
-      obs2, existingFlat = t0, config,
-      changedSince = Some(ts("2024-01-02 23:59:59")))
-    // N ticks ≡ full refresh: the stale wide row must be GONE, not
-    // merely not-refreshed (fresh pivot of a fully-voided encounter
-    // is empty, so a fresh-keyed merge would leave it behind)
-    assertSameRows(incremental, Flatten.flattenObs(obs2, config))
-    assert(incremental.filter(col("encounter_id") === 2).count() == 0)
-  }
-
   test("autoConfig derives labels from metadata; flatten honors them") {
     val encounters = Seq((1L, 7, 0), (2L, 7, 0), (3L, 8, 0))
       .toDF("encounter_id", "encounter_type", "voided")

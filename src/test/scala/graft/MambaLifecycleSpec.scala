@@ -1,12 +1,16 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 
 import graft.examples.MambaEtlJob
 import graft.model.EtlConfig
+import graft.operators.{BookmarkStore, Incremental}
+import graft.pipeline.EtlScheduler
 import graft.reports.ReportRegistry
+import graft.streaming.EtlStreaming
 
 /** The reference's full lifecycle end-to-end on an OpenMRS-shaped
   * fixture (SURVEY §3 E1-E3): sources → dims → per-type flat tables
@@ -157,26 +161,96 @@ class MambaLifecycleSpec extends SparkSpec {
       spark.read.parquet(s"$root2/mamba_flat_encounter_7").select(cols: _*))
   }
 
+  /** Lands tick steps (the next sources and a bookmark) on a store
+    * that was installed from the sources it was built with.
+    */
+  private trait TickDriver {
+    def tick(next: MambaEtlJob.Sources, bookmark: String): Unit
+    def close(): Unit = ()
+  }
+
+  /** A driver over (config, installed sources, type, store root). */
+  private type Driver = (EtlConfig, MambaEtlJob.Sources, Int, String) => TickDriver
+
+  /** Each step is one tickPersisted from the step's bookmark. */
+  private val bookmarkDriver: Driver = (cfg, _, et, root) =>
+    (next, bookmark) => MambaEtlJob.tickPersisted(spark, cfg, next, et,
+      root, changedSince = Some(ts(bookmark)))
+
+  /** Each step's obs changed since its bookmark land as a parquet file
+    * drop, tailed by the streaming driver with the step's sources.
+    */
+  private val streamDriver: Driver = (cfg, installed, et, root) =>
+    new TickDriver {
+      private val dir = Files.createTempDirectory("mambadrops")
+      private val drops = Files.createDirectories(dir.resolve("drops")).toString
+      private var current = installed
+      private val q = EtlStreaming.incrementalFlatten(
+          spark.readStream.schema(installed.obs.schema).parquet(drops),
+          cfg, current, et, root, interval = "0 seconds")
+        .option("checkpointLocation", dir.resolve("ckpt").toString).start()
+      def tick(next: MambaEtlJob.Sources, bookmark: String): Unit = {
+        current = next
+        Incremental.changedSince(next.obs, Some(ts(bookmark)),
+          Seq("obs_datetime")).write.mode("append").parquet(drops)
+        q.processAllAvailable()
+      }
+      override def close(): Unit = q.stop()
+    }
+
+  /** Each step is one scheduler firing of an incremental scheduledTick,
+    * on a bookmark seeded with the install's mark; the scheduler keeps
+    * its own marks, so the step's bookmark is not read.
+    */
+  private val scheduledDriver: Driver = (cfg, installed, et, root) =>
+    new TickDriver {
+      private val bookmarks = new BookmarkStore(
+        Files.createTempDirectory("mambabm").resolve("bookmark").toString)
+      Incremental.nextBookmark(installed.obs, Seq("obs_datetime"))
+        .foreach(bookmarks.write)
+      private var current = installed
+      private val loop = new EtlScheduler(() =>
+        MambaEtlJob.scheduledTick(spark, cfg.copy(incrementalMode = 1),
+          current, Seq(et), root, bookmarks), cfg, _ => ())
+      def tick(next: MambaEtlJob.Sources, bookmark: String): Unit = {
+        current = next
+        loop.runLoop(maxTicks = 1, maxConsecutiveFailures = 1)
+      }
+    }
+
+  private val allDrivers = Seq("tickPersisted" -> bookmarkDriver,
+    "stream" -> streamDriver, "scheduler" -> scheduledDriver)
+
   /** Install `src` for type `et`, land each tick (the next sources
-    * and its bookmark) with tickPersisted, then compare every flat
-    * table of the type with a fresh runPersisted install of the final
-    * sources.
+    * and its bookmark) with `driver`, then compare every flat table of
+    * the type with a fresh runPersisted install of the final sources.
+    * Returns the ticked store's root.
     */
   private def assertTicksMatchInstall(src: MambaEtlJob.Sources, et: Int,
       ticks: Seq[(MambaEtlJob.Sources => MambaEtlJob.Sources, String)],
-      columns: Int = 40): Unit = {
-    import org.apache.spark.sql.functions.col
+      columns: Int = 40, driver: Driver = bookmarkDriver): String = {
     val cfgE = EtlConfig("/src", "/out", columns = columns)
-    val root = java.nio.file.Files.createTempDirectory("mambatick").toString
+    val root = Files.createTempDirectory("mambatick").toString
     MambaEtlJob.runPersisted(spark, cfgE, src, Seq(et), root)
-    val last = ticks.foldLeft(src) { case (s, (nextSources, bookmark)) =>
-      val next = nextSources(s)
-      MambaEtlJob.tickPersisted(spark, cfgE, next, et, root,
-        changedSince = Some(ts(bookmark)))
-      next
-    }
-    val fresh = java.nio.file.Files.createTempDirectory("mambafresh").toString
-    MambaEtlJob.runPersisted(spark, cfgE, last, Seq(et), fresh)
+    val landing = driver(cfgE, src, et, root)
+    val last =
+      try ticks.foldLeft(src) { case (s, (nextSources, bookmark)) =>
+        val next = nextSources(s)
+        landing.tick(next, bookmark)
+        next
+      } finally landing.close()
+    assertStoreMatchesInstall(root, cfgE, last, et)
+    root
+  }
+
+  /** Every flat table of type `et` under `root` equals the one a fresh
+    * runPersisted install of `src` writes.
+    */
+  private def assertStoreMatchesInstall(root: String, cfgE: EtlConfig,
+      src: MambaEtlJob.Sources, et: Int): Unit = {
+    import org.apache.spark.sql.functions.col
+    val fresh = Files.createTempDirectory("mambafresh").toString
+    MambaEtlJob.runPersisted(spark, cfgE, src, Seq(et), fresh)
     val base = s"mamba_flat_encounter_$et"
     def flatTables(dir: String) = new java.io.File(dir).list().toSeq
       .filter(n => n == base || n.matches(s"${base}_[0-9]+")).sorted
@@ -214,9 +288,7 @@ class MambaLifecycleSpec extends SparkSpec {
       encounter = s.encounter.withColumn("encounter_datetime",
         when($"encounter_id" === id, lit(ts(at)))
           .otherwise($"encounter_datetime")),
-      obs = s.obs.withColumn("obs_datetime",
-        when($"obs_id" === obsId, lit(ts(bumped)))
-          .otherwise($"obs_datetime")))
+      obs = bumpObs(obsId, bumped)(s.obs))
   }
 
   /** Appends one live numeric or coded obs. */
@@ -228,13 +300,18 @@ class MambaLifecycleSpec extends SparkSpec {
       .toDF("obs_id", "encounter_id", "concept_id", "value_numeric",
         "value_text", "value_coded", "obs_datetime", "voided"))
 
+  /** Bumps obs `id`'s audit time to `at` (past the bookmark). */
+  private def bumpObs(id: Long, at: String): DataFrame => DataFrame = {
+    import org.apache.spark.sql.functions.{lit, when}
+    _.withColumn("obs_datetime",
+      when($"obs_id" === id, lit(ts(at))).otherwise($"obs_datetime"))
+  }
+
   /** Voids obs `id`, bumping its audit time to `at` (past the bookmark). */
   private def voidObs(id: Long, at: String): DataFrame => DataFrame = obs => {
     import org.apache.spark.sql.functions.{lit, when}
-    val hit = $"obs_id" === id
-    obs.withColumn("voided", when(hit, lit(1)).otherwise($"voided"))
-      .withColumn("obs_datetime",
-        when(hit, lit(ts(at))).otherwise($"obs_datetime"))
+    bumpObs(id, at)(obs.withColumn("voided",
+      when($"obs_id" === id, lit(1)).otherwise($"voided")))
   }
 
   /** The fixture plus a Height concept that no install-time obs uses. */
@@ -265,11 +342,16 @@ class MambaLifecycleSpec extends SparkSpec {
   test("ticks on a type split into continuation tables equal a fresh install") {
     // a 1-column cap splits type 8 into one table per concept; the
     // second tick's Height obs re-deals the columns across 3 tables
-    assertTicksMatchInstall(withHeight, 8, Seq(
-      onObs(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
-        "2024-03-10 08:00:00")) -> "2024-03-06 00:00:00",
-      onObs(addObs(10L, 12L, 101L, Some(150.0), None,
-        "2024-03-12 08:00:00")) -> "2024-03-11 00:00:00"), columns = 1)
+    allDrivers.foreach { case (name, driver) =>
+      withClue(s"$name: ") {
+        assertTicksMatchInstall(withHeight, 8, Seq(
+          onObs(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
+            "2024-03-10 08:00:00")) -> "2024-03-06 00:00:00",
+          onObs(addObs(10L, 12L, 101L, Some(150.0), None,
+            "2024-03-12 08:00:00")) -> "2024-03-11 00:00:00"),
+          columns = 1, driver = driver)
+      }
+    }
   }
 
   test("a tick landing a new encounter in a month with no partition yet equals a fresh install") {
@@ -295,13 +377,68 @@ class MambaLifecycleSpec extends SparkSpec {
     // a 1-column cap splits type 8 into one table per concept; encounter
     // 12 moves to April through a bumped obs of one chunk only, and a
     // new type-8 encounter lands in May
-    assertTicksMatchInstall(withHeight, 8, Seq(
-      moveEncounter(12L, "2024-04-03 11:00:00", 5L,
-        "2024-03-10 08:00:00") -> "2024-03-06 00:00:00",
-      addEncounter(16L, 8, 2L, "2024-05-01 09:00:00").andThen(
-        onObs(addObs(9L, 16L, 200L, None, Some("NEGATIVE"),
-          "2024-05-01 09:05:00"))) -> "2024-03-11 00:00:00"),
-      columns = 1)
+    allDrivers.foreach { case (name, driver) =>
+      withClue(s"$name: ") {
+        assertTicksMatchInstall(withHeight, 8, Seq(
+          moveEncounter(12L, "2024-04-03 11:00:00", 5L,
+            "2024-03-10 08:00:00") -> "2024-03-06 00:00:00",
+          addEncounter(16L, 8, 2L, "2024-05-01 09:00:00").andThen(
+            onObs(addObs(9L, 16L, 200L, None, Some("NEGATIVE"),
+              "2024-05-01 09:05:00"))) -> "2024-03-11 00:00:00"),
+          columns = 1, driver = driver)
+      }
+    }
+  }
+
+  test("a tick that voids every obs of an encounter equals a fresh install") {
+    // encounter 11's only obs is voided, its audit time bumped past
+    // the bookmark (an unbumped void is invisible to any bookmark).
+    // Encounter 10 keeps type 7's Weight column, so the tick merges,
+    // and a merge keyed only on fresh rows would leave 11 behind.
+    val root = assertTicksMatchInstall(sources, 7, Seq(
+      onObs(voidObs(3L, "2024-03-10 08:00:00")) -> "2024-03-06 00:00:00"))
+    assert(spark.read.parquet(s"$root/mamba_flat_encounter_7")
+      .filter($"encounter_id" === 11).isEmpty)
+  }
+
+  test("a stream re-pivots no encounter of another type and no voided encounter into a type's table") {
+    // one drop carries a new Weight obs of encounter 12 (type 8) and
+    // the bumped Weight obs of voided encounter 13 (type 7); type 7
+    // uses Weight too, yet neither encounter belongs in its table
+    val root = assertTicksMatchInstall(sources, 7, Seq(
+      onObs(addObs(9L, 12L, 100L, Some(75.0), None, "2024-03-10 08:00:00")
+        .andThen(bumpObs(6L, "2024-03-10 08:05:00"))) -> "2024-03-06 00:00:00"),
+      driver = streamDriver)
+    assert(spark.read.parquet(s"$root/mamba_flat_encounter_7")
+      .select("encounter_id").as[Long].collect().toSet == Set(10L, 11L))
+  }
+
+  test("a scheduled tick whose sources fail leaves the bookmark; the next tick converges to a fresh install") {
+    // firing 1 installs (mode 0), firing 2 cannot read its sources,
+    // firing 3 ticks (mode 1) over the window firing 2 missed
+    val cfgE = EtlConfig("/src", "/out")
+    val root = Files.createTempDirectory("mambasched").toString
+    val bookmarks = new BookmarkStore(
+      Files.createTempDirectory("mambaschedbm").resolve("bookmark").toString)
+    val moved = moveEncounter(11L, "2024-04-03 10:00:00", 3L,
+      "2024-03-10 08:00:00")(sources)
+    val firings = Iterator[() => MambaEtlJob.Sources](() => sources,
+      () => throw new java.io.IOException("source unreachable"), () => moved)
+    val marks = scala.collection.mutable.ArrayBuffer.empty[Option[Timestamp]]
+    val errors = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var mode = 0
+    val ok = new EtlScheduler(() => {
+        val src = firings.next()
+        try MambaEtlJob.scheduledTick(spark,
+          cfgE.copy(incrementalMode = mode), src(), Seq(7), root, bookmarks)
+        finally { mode = 1; marks += bookmarks.read() }
+      }, cfgE, _ => ())
+      .runLoop(maxTicks = 3, onError = (tick, _) => errors += tick)
+    assert(ok == 2 && errors.toSeq == Seq(1))
+    val installMark = Some(ts("2024-02-04 12:05:00"))
+    assert(marks.toSeq ==
+      Seq(installMark, installMark, Some(ts("2024-03-10 08:00:00"))))
+    assertStoreMatchesInstall(root, cfgE, moved, 7)
   }
 
   test("a tick or reinstall that shrinks a type's split drops the stale continuation table") {

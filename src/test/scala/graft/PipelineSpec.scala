@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.model.EtlConfig
-import graft.operators.BookmarkStore
 import graft.pipeline.{EtlPipeline, EtlScheduler, Stage}
 
 /** Stage-DAG orchestration (SURVEY §3 E2): topo order, cycle/missing
-  * detection, incremental merge mode, scheduler tick cadence.
+  * detection, scheduler tick cadence and failure policy.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -16,7 +15,7 @@ class PipelineSpec extends SparkSpec {
 
   test("stages run in dependency order; ties keep registration order") {
     val ran = scala.collection.mutable.ArrayBuffer.empty[String]
-    val p = new EtlPipeline(cfg)
+    val p = new EtlPipeline()
       .register(Stage("fact", Seq("dim_a", "dim_b")) { (s, deps) =>
         ran += "fact"
         deps("dim_a").join(deps("dim_b"), "k")
@@ -35,64 +34,43 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("cycles and unknown dependencies are rejected eagerly") {
-    val p = new EtlPipeline(cfg)
+    val p = new EtlPipeline()
       .register(Stage("a", Seq("b")) { (_, _) => spark.emptyDataFrame })
       .register(Stage("b", Seq("a")) { (_, _) => spark.emptyDataFrame })
     intercept[IllegalArgumentException](p.topoOrder)
-    val q = new EtlPipeline(cfg)
+    val q = new EtlPipeline()
       .register(Stage("a", Seq("ghost")) { (_, _) => spark.emptyDataFrame })
     intercept[NoSuchElementException](q.topoOrder)
   }
 
-  test("incremental mode merges into the existing store by key") {
-    val p = new EtlPipeline(cfg.copy(incrementalMode = 1))
-      .register(Stage("t", Nil, mergeKeys = Seq("k")) { (_, _) =>
-        Seq((2, "new2"), (3, "new3")).toDF("k", "v")
-      })
-    val existing = Seq((1, "old1"), (2, "old2")).toDF("k", "v")
-    val out = p.run(spark, existing = _ => Some(existing))("t")
-    assert(out.orderBy("k").as[(Int, String)].collect().toSeq ==
-      Seq((1, "old1"), (2, "new2"), (3, "new3")))
-  }
-
   test("scheduler ticks N times and sleeps the configured interval") {
-    val p = new EtlPipeline(cfg)
-      .register(Stage("x", Nil) { (_, _) => Seq(1).toDF("v") })
     val slept = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val bm = new BookmarkStore(
-      java.nio.file.Files.createTempDirectory("sched").resolve("bm").toString)
-    val sched = new EtlScheduler(p, cfg.copy(etlIntervalSeconds = 7), bm, slept += _)
     var seen = 0
-    val ticks = sched.runLoop(spark, maxTicks = 3, onTick = _ => seen += 1)
+    val sched = new EtlScheduler(() => seen += 1,
+      cfg.copy(etlIntervalSeconds = 7), slept += _)
+    val ticks = sched.runLoop(maxTicks = 3)
     assert(ticks == 3 && seen == 3)
     assert(slept.toSeq == Seq(7000L, 7000L)) // no sleep after the last tick
   }
 
   test("scheduler survives transient tick failures, gives up when persistent") {
     var calls = 0
-    val p = new EtlPipeline(cfg)
-    p.register(Stage("flaky", Nil) { (_, _) =>
+    val flaky = () => {
       calls += 1
       if (calls == 2) throw new RuntimeException("transient source hiccup")
-      Seq((calls, "ok")).toDF("tick", "status")
-    })
-    val bm = new graft.operators.BookmarkStore(
-      java.nio.file.Files.createTempDirectory("bm").resolve("b").toString)
+    }
     val errors = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val sched = new EtlScheduler(p, cfg, bm, _ => ())
-    val ok = sched.runLoop(spark, maxTicks = 4,
+    val sched = new EtlScheduler(flaky, cfg, _ => ())
+    val ok = sched.runLoop(maxTicks = 4,
       onError = (tick, _) => errors += tick)
     assert(ok == 3, "3 of 4 ticks succeed")    // tick 2 failed
     assert(errors.toSeq == Seq(1))             // observed at 0-based tick 1
 
     // persistent failure: gives up after maxConsecutiveFailures
-    val pBroken = new EtlPipeline(cfg)
-    pBroken.register(Stage("dead", Nil) { (_, _) =>
-      throw new RuntimeException("permanently broken")
-    })
-    val schedBroken = new EtlScheduler(pBroken, cfg, bm, _ => ())
+    val schedBroken = new EtlScheduler(
+      () => throw new RuntimeException("permanently broken"), cfg, _ => ())
     val e = intercept[RuntimeException](
-      schedBroken.runLoop(spark, maxTicks = 10, maxConsecutiveFailures = 2))
+      schedBroken.runLoop(maxTicks = 10, maxConsecutiveFailures = 2))
     assert(e.getMessage.contains("permanently broken"))
   }
 }
