@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{EtlConfig, FlatTableConfig}
-import graft.operators.{BookmarkStore, Flatten, Incremental}
+import graft.operators.{BookmarkStore, Flatten, Incremental, ModelCollect}
 import graft.pipeline.{EtlPipeline, Stage}
 
 /** The reference's complete ETL wired end-to-end on this engine — what
@@ -206,10 +206,12 @@ object MambaEtlJob {
     * evaluated once, and the next bookmark is taken from its obs
     * before any write. With `config.incrementalMode == 0` the store is
     * reinstalled ([[runPersisted]], "delete and recreate"); with `1`
-    * every type in `encounterTypeIds` ticks from the stored bookmark
-    * ([[tickPersisted]]), and dims and facts stay as installed. The bookmark is written only after every write, so a
-    * failed tick leaves it in place and the next tick replays the same
-    * window; the re-merge is idempotent.
+    * the encounters changed since the stored bookmark are collected
+    * once, and every type in `encounterTypeIds` ticks them
+    * ([[tickChanged]]); dims and facts stay as installed. The bookmark
+    * is written only after every write, so a failed tick leaves it in
+    * place and the next tick replays the same window; the re-merge is
+    * idempotent.
     */
   def scheduledTick(spark: SparkSession, config: EtlConfig, src: => Sources,
       encounterTypeIds: Seq[Int], storeRoot: String, bookmarks: BookmarkStore,
@@ -219,9 +221,9 @@ object MambaEtlJob {
     if (config.incrementalMode == 0)
       runPersisted(spark, config, sources, encounterTypeIds, storeRoot, flatConfigs)
     else {
-      val since = bookmarks.read()
-      encounterTypeIds.foreach(tickPersisted(spark, config, sources, _,
-        storeRoot, since, flatConfigs))
+      val changed = encountersChangedSince(sources, bookmarks.read())
+      encounterTypeIds.foreach(tickChanged(spark, config, sources, _,
+        storeRoot, changed, flatConfigs))
     }
     mark.foreach(bookmarks.write)
   }
@@ -236,9 +238,25 @@ object MambaEtlJob {
       changedSince: Option[java.sql.Timestamp],
       flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit =
     tickChanged(spark, config, src, encounterTypeId, storeRoot,
-      Incremental.changedSince(src.obs, changedSince, Seq("obs_datetime"))
-        .select("encounter_id"),
-      flatConfigs)
+      encountersChangedSince(src, changedSince), flatConfigs)
+
+  /** The encounters whose obs changed since `bookmark` (by
+    * `obs_datetime`), collected once on the driver.
+    */
+  private def encountersChangedSince(src: Sources,
+      bookmark: Option[java.sql.Timestamp]): Set[Long] =
+    changedEncounters(Incremental.changedSince(src.obs, bookmark,
+      Seq("obs_datetime")))
+
+  /** The distinct non-null `encounter_id`s of `changed` (one row per
+    * changed obs), collected on the driver in one bounded job. A null
+    * id names no encounter: no join on it matches.
+    */
+  def changedEncounters(changed: DataFrame): Set[Long] =
+    ModelCollect.bounded(changed.select("encounter_id"),
+        ModelCollect.MaxModelRows, "changed encounter ids")
+      .collect { case r if !r.isNullAt(0) => r.getAs[Number](0).longValue }
+      .toSet
 
   /** One incremental tick of type `encounterTypeId`'s flat tables —
     * the core every incremental driver calls ([[tickPersisted]]'s
@@ -251,21 +269,26 @@ object MambaEtlJob {
     * disappears from its old month). Write amplification per tick
     * tracks the delta.
     *
-    * `changed` has an `encounter_id` column with one row per changed
-    * obs. It is not deduplicated: it only feeds semi- and anti-joins,
-    * where a duplicate key costs one broadcast entry and a `distinct`
-    * would cost a shuffle. It must be delta-sized, because it is
-    * broadcast. It picks the affected obs, gives the touched months
-    * and is the merge's removeKeys. An id of another type, or of a
-    * voided encounter, re-pivots nothing into this type's tables: the
-    * delta is joined with the type's live encounters.
+    * `changed` holds the changed encounter ids on the driver
+    * ([[changedEncounters]]). It must be delta-sized, because each
+    * driver collects it. It enters the tick as one literal predicate,
+    * `encounter_id IN (changed)`, which Catalyst plans as an `InSet`
+    * once it names more than
+    * `spark.sql.optimizer.inSetConversionThreshold` ids; generated
+    * code reads a long key's set by reference, so that code stays
+    * cached from tick to tick. The predicate picks the affected obs
+    * and the type's changed encounters, and marks the merge's removed
+    * keys; no frame of ids is broadcast or joined. An id of another
+    * type, or of a voided encounter, re-pivots nothing into this
+    * type's tables: the delta is joined with the type's live changed
+    * encounters, a delta-sized join.
     *
     * The delta is pivoted once per table, by the write. The months it
-    * touches come from the changed encounters' `encounter_datetime`
-    * (the visit months of `encIds ⋉ changed`), not from the pivoted
-    * delta: every delta row is one of those encounters and takes its
-    * month from the same row, so the months cover the delta exactly,
-    * and one frame serves every continuation table of the type.
+    * touches are the visit months of the type's live changed
+    * encounters, not of the pivoted delta: every delta row is one of
+    * those encounters and takes its month from the same row, so the
+    * months cover the delta exactly, and one frame serves every
+    * continuation table of the type.
     *
     * A type wider than `config.columns` ticks each of its
     * continuation tables the same way. When the type's concept set
@@ -278,25 +301,24 @@ object MambaEtlJob {
     * stored is written from the delta alone.
     */
   def tickChanged(spark: SparkSession, config: EtlConfig, src: Sources,
-      encounterTypeId: Int, storeRoot: String, changed: DataFrame,
+      encounterTypeId: Int, storeRoot: String, changed: Set[Long],
       flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit = {
     val cfg = flatConfigs.getOrElse(encounterTypeId,
       Flatten.autoConfig(src.obs, src.encounter, src.concept,
         encounterTypeId, locale = Some(config.locale)))
       .copy(tableName = s"mamba_flat_encounter_$encounterTypeId")
-    val affected = src.obs.join(broadcast(changed), Seq("encounter_id"), "left_semi")
+    val isChanged = col("encounter_id").isInCollection(changed)
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)
       .select("encounter_id", "patient_id", "encounter_datetime")
-    val touchedMonths = withVisitMonth(
-      encIds.join(broadcast(changed), Seq("encounter_id"), "left_semi"))
+    val changedEncs = encIds.filter(isChanged)
     // (store path, wide rows) per continuation table of the type
-    def flat(obs: DataFrame) =
+    def flat(obs: DataFrame, encs: DataFrame) =
       Flatten.flattenObsSplit(obs, cfg, config.columns).map { case (t, df) =>
         s"$storeRoot/$t" ->
-          withVisitMonth(df.join(encIds, Seq("encounter_id")))
+          withVisitMonth(df.join(encs, Seq("encounter_id")))
       }
-    val deltas = flat(affected)
+    val deltas = flat(src.obs.filter(isChanged), changedEncs)
     val store = graft.sources.AnalysisStore
     val stale = storedTables(spark, storeRoot, cfg.tableName)
       .map(t => s"$storeRoot/$t").filterNot(p => deltas.exists(_._1 == p))
@@ -306,7 +328,7 @@ object MambaEtlJob {
         !table.exists(_.columns.toSet == delta.columns.toSet)
       })
     if (reshaped) {
-      flat(src.obs).foreach { case (path, df) =>
+      flat(src.obs, encIds).foreach { case (path, df) =>
         store.stageAndSwap(spark, path) { staging =>
           store.writeFull(df, staging, Seq("visit_month"))
         }
@@ -316,8 +338,8 @@ object MambaEtlJob {
       deltas.zip(stored).foreach { case ((path, delta), table) =>
         store.writeIncrementalPartitioned(spark, delta, path,
           keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
-          removeKeys = Some(changed), parts = Some(touchedMonths),
-          existing = table)
+          removeKeys = Some(isChanged),
+          parts = Some(withVisitMonth(changedEncs)), existing = table)
       }
   }
 }

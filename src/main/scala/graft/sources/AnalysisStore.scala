@@ -91,13 +91,52 @@ object AnalysisStore {
       .write.partitionBy(partitionBy: _*)
 
   /** The parquet table at `path` after healing an interrupted swap;
-    * None when there is no table yet.
+    * None when there is no table yet, or none with a data file to merge
+    * with. The schema comes from the footer of one data file, read on
+    * the driver: Spark writes a file's schema into its footer
+    * (`org.apache.spark.sql.parquet.row.metadata`), and reading the
+    * path with it spares the schema-inference job every plain parquet
+    * read runs. Partition discovery adds the partition columns as it
+    * does for an inferred read, so the result has the schema
+    * `spark.read.parquet(path)` gives.
     */
   def readExisting(spark: SparkSession, path: String): Option[DataFrame] = {
     recover(spark, path)
-    if (fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
-      Some(spark.read.parquet(path))
-    else None
+    val fs = fsOf(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (!fs.exists(root)) None
+    else anyDataFile(fs, root).map { file =>
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      // a file written by another tool carries only the parquet schema
+      val schema = Option(meta.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(org.apache.spark.sql.types.DataType.fromJson(_)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** Some data file under `dir`, skipping the names Spark's file index
+    * skips (`_`-prefixed unless a `k=v` partition, `.`-prefixed). It
+    * lists with `listStatus`: on the local filesystem a
+    * `LocatedFileStatus` listing forks a process per file to load its
+    * permissions.
+    */
+  private def anyDataFile(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.FileStatus] = {
+    val (files, dirs) = fs.listStatus(dir).filterNot { s =>
+      val n = s.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    }.partition(_.isFile)
+    files.headOption.orElse(
+      dirs.iterator.flatMap(d => anyDataFile(fs, d.getPath)).nextOption())
   }
 
   /** Read a store table back, honoring the format it was written in. */
@@ -450,18 +489,18 @@ object AnalysisStore {
     * located and rewritten without it. Keyed only on the delta, the
     * old partition is never read and the stale copy stays.
     *
-    * @param removeKeys keys whose existing rows must be dropped even
-    *        when `delta` carries no replacement row (the
-    *        deleted/voided-away case — a merge keyed only on the
-    *        delta's rows would leave them behind) or when it carries
-    *        one in another partition. It must cover the delta's own
-    *        keys. Their old partition locations are found by a
-    *        column-pruned scan of (keys ++ partitionBy) — O(table) in
+    * @param removeKeys a predicate over `keys`, true for the stored
+    *        rows that must be dropped even when `delta` carries no
+    *        replacement row (the deleted/voided-away case — a merge
+    *        keyed only on the delta's rows would leave them behind) or
+    *        when it carries one in another partition. It must hold for
+    *        the delta's own keys. A literal predicate such as
+    *        `col(k).isInCollection(ids)` filters the stored table with
+    *        no join. The partitions of the rows it drops are found by
+    *        a column-pruned scan of (keys ++ partitionBy) — O(table) in
     *        rows but only a few columns of IO, and only when removeKeys
-    *        is passed. Not deduplicated: it only feeds a semi-join
-    *        and an anti-join, so a duplicate key costs one more entry
-    *        in the broadcast (Spark does not deduplicate broadcast
-    *        join keys) where a `distinct` would cost a shuffle.
+    *        is passed. A row for which it is null (a null key) is kept,
+    *        as an anti-join on the keys keeps it.
     * @param parts a frame carrying `partitionBy` whose values cover
     *        every partition value of `delta`. Only those columns are
     *        read, so a caller that knows where its delta lands (say,
@@ -472,14 +511,14 @@ object AnalysisStore {
     *        one is not: its directory would be replaced by the delta's
     *        rows alone. Defaults to `delta`.
     * @param existing the table as the caller already read it with
-    *        [[readExisting]]; read here when absent. Every parquet read
-    *        infers its schema in a Spark job, so a caller that inspects
-    *        the table first shares its read instead of paying twice.
+    *        [[readExisting]]; read here when absent, so a caller that
+    *        inspects the table first shares its read (one listing and
+    *        one footer) instead of reading twice.
     */
   def writeIncrementalPartitioned(
       spark: SparkSession, delta: DataFrame, path: String,
       keys: Seq[String], partitionBy: Seq[String],
-      removeKeys: Option[DataFrame] = None,
+      removeKeys: Option[org.apache.spark.sql.Column] = None,
       parts: Option[DataFrame] = None,
       existing: Option[DataFrame] = None): Unit = {
     require(partitionBy.nonEmpty,
@@ -490,16 +529,15 @@ object AnalysisStore {
         writeFull(delta, path, partitionBy)
         return
     }
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val dropKeys = removeKeys.getOrElse(delta).select(keys.map(col): _*)
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
     // rows being removed may live in partitions the delta no longer
     // writes to — locate them, and the files holding them, so their
     // partitions are rewritten too
     val file = "__file"
-    val removedParts = removeKeys.map(_ =>
+    val removedParts = removeKeys.map(removed =>
       table.select((keys ++ partitionBy).map(col) :+
           col("_metadata.file_path").as(file): _*)
-        .join(broadcast(dropKeys), keys, "left_semi")
+        .filter(removed)
         .select((partitionBy :+ file).map(col): _*))
     val touched = graft.operators.ModelCollect.bounded(
       removedParts.foldLeft(
@@ -512,15 +550,19 @@ object AnalysisStore {
       partitionBy.zip(values).map { case (c, v) => col(c) === lit(v) }
         .reduce(_ && _)
     }.reduce(_ || _)
-    val merged = table.filter(touchedPred)
-      .join(broadcast(dropKeys), keys, "left_anti")
-      // strict unionByName ON PURPOSE: this path rewrites only touched
-      // partition dirs, so an evolved delta schema would leave the
-      // table's partitions schema-divergent (readable only with
-      // mergeSchema, silently column-dropping without). Fail fast
-      // here; evolve schemas through the full [[writeIncremental]]
-      // rewrite, which re-materializes every row under the new schema.
-      .unionByName(delta)
+    val kept = removeKeys match {
+      case Some(removed) =>
+        table.filter(touchedPred && !coalesce(removed, lit(false)))
+      case None => table.filter(touchedPred)
+        .join(broadcast(delta.select(keys.map(col): _*)), keys, "left_anti")
+    }
+    // strict unionByName ON PURPOSE: this path rewrites only touched
+    // partition dirs, so an evolved delta schema would leave the
+    // table's partitions schema-divergent (readable only with
+    // mergeSchema, silently column-dropping without). Fail fast
+    // here; evolve schemas through the full [[writeIncremental]]
+    // rewrite, which re-materializes every row under the new schema.
+    val merged = kept.unionByName(delta)
     partitioned(merged, partitionBy)
       .mode(SaveMode.Overwrite)
       // per-write option (not session conf): only THIS write replaces

@@ -25,7 +25,7 @@ import graft.sources.AnalysisStore
   * At 100 TB: per tick the pivot shuffle carries only changed
   * encounters' obs, and the store write rewrites only the month
   * partitions they touch. The sources are re-read per batch,
-  * scanning only what the semi-join on changed encounter ids needs.
+  * scanning only what the predicate on changed encounter ids needs.
   */
 object EtlStreaming {
 
@@ -338,8 +338,9 @@ object EtlStreaming {
       }
 
   /** Wire a changed-obs stream into type `encounterTypeId`'s flat
-    * tables under `storeRoot`: each micro-batch's `encounter_id`s are
-    * one [[graft.examples.MambaEtlJob.tickChanged]], so the store has
+    * tables under `storeRoot`: each micro-batch's `encounter_id`s,
+    * collected once (so the source reads the batch once), are one
+    * [[graft.examples.MambaEtlJob.tickChanged]], so the store has
     * install's layout (month partitions, continuation tables at the
     * column cap, only the type's live encounters). Caller starts/stops
     * the returned writer (attach checkpoint options as deployment
@@ -361,7 +362,8 @@ object EtlStreaming {
       .trigger(Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         MambaEtlJob.tickChanged(batch.sparkSession, config, src,
-          encounterTypeId, storeRoot, batch.select("encounter_id"), flatConfigs)
+          encounterTypeId, storeRoot, MambaEtlJob.changedEncounters(batch),
+          flatConfigs)
       }
 
   /** One transactional-publishing tick against a [[graft.sources

@@ -13,6 +13,8 @@ import graft.sources.AnalysisStore
 class AnalysisStoreSpec extends SparkSpec {
   import spark.implicits._
 
+  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
   test("writeFull overwrites idempotently; partitioning lays out dirs") {
     val dir = Files.createTempDirectory("store").resolve("t").toString
     val v1 = Seq((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b"))
@@ -297,7 +299,7 @@ class AnalysisStoreSpec extends SparkSpec {
     // 2024-02, a partition the delta writes nothing to
     val delta = Seq((1L, "2024-01", "a2")).toDF("k", "m", "v")
     AnalysisStore.writeIncrementalPartitioned(spark, delta, dir,
-      Seq("k"), Seq("m"), removeKeys = Some(Seq(1L, 2L).toDF("k")))
+      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(1L, 2L)))
     val rows = spark.read.parquet(dir).select("k", "v").as[(Long, String)]
       .collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "a2"), (3L, "c1"), (4L, "d1")),
@@ -313,7 +315,7 @@ class AnalysisStoreSpec extends SparkSpec {
     // k=2 moves from 2024-02 to 2024-03; 2024-02 keeps k=4
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((2L, "2024-03", "b2")).toDF("k", "m", "v"), dir,
-      Seq("k"), Seq("m"), removeKeys = Some(Seq(2L).toDF("k")))
+      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(2L)))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
       .as[(Long, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "2024-01", "a1"), (2L, "2024-03", "b2"),
@@ -329,12 +331,48 @@ class AnalysisStoreSpec extends SparkSpec {
     // partition keeps a row, and the delta lands in 2024-04
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((2L, "2024-04", "b2")).toDF("k", "m", "v"), dir,
-      Seq("k"), Seq("m"), removeKeys = Some(Seq(2L, 3L).toDF("k")))
+      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(2L, 3L)))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
       .as[(Long, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "2024-01", "a1"), (2L, "2024-04", "b2")))
     assert(new java.io.File(dir).list().filter(_.startsWith("m=")).sorted
       .toSeq == Seq("m=2024-01", "m=2024-04"))
+  }
+
+  test("writeIncrementalPartitioned: a stored row with a null key survives a removal predicate") {
+    val dir = Files.createTempDirectory("store").resolve("incnull").toString
+    val v1 = Seq((Some(1L), "2024-01", "a1"), (None, "2024-01", "n1"),
+      (Some(2L), "2024-02", "b1")).toDF("k", "m", "v")
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    // the merge rewrites 2024-01, where the null-keyed row lives
+    AnalysisStore.writeIncrementalPartitioned(spark,
+      Seq((Some(1L), "2024-01", "a2")).toDF("k", "m", "v"), dir,
+      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(1L)))
+    val rows = spark.read.parquet(dir).select("k", "m", "v")
+      .as[(Option[Long], String, String)].collect().sortBy(_._3)
+    assert(rows.toSeq == Seq((Some(1L), "2024-01", "a2"),
+      (Some(2L), "2024-02", "b1"), (None, "2024-01", "n1")))
+  }
+
+  test("readExisting reads a partitioned table's schema from a footer, with no Spark job") {
+    val dir = Files.createTempDirectory("store").resolve("readex").toString
+    AnalysisStore.writeFull(Seq((1L, ts("2024-01-05 09:00:00"), 61.5, "2024-01"),
+        (2L, ts("2024-02-07 10:00:00"), 82.0, "2024-02"))
+      .toDF("encounter_id", "encounter_datetime", "weight", "visit_month"),
+      dir, Seq("visit_month"))
+    var table: Option[org.apache.spark.sql.DataFrame] = None
+    val jobs = jobSites { table = AnalysisStore.readExisting(spark, dir) }
+    assert(jobs.isEmpty, jobs.mkString("\n---\n"))
+    val inferred = spark.read.parquet(dir).schema
+    assert(table.map(_.schema).contains(inferred))
+    assert(inferred.last.name == "visit_month" &&
+      inferred.last.dataType == org.apache.spark.sql.types.StringType)
+    assertSameRows(table.get, spark.read.parquet(dir))
+    // a table holding no data file has nothing to merge with
+    val empty = Files.createTempDirectory("store").resolve("readexempty").toString
+    AnalysisStore.writeFull(Seq.empty[(Long, String)].toDF("k", "m"), empty, Seq("m"))
+    assert(new java.io.File(empty).isDirectory)
+    assert(AnalysisStore.readExisting(spark, empty).isEmpty)
   }
 
   test("writeIncrementalPartitioned: a failed merge write leaves the table untouched") {

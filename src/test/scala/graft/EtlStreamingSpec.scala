@@ -551,9 +551,8 @@ class EtlStreamingSpec extends SparkSpec {
     toObs(batch2).write.mode("append").parquet(dropDir)
 
     // restart from the SAME checkpoint: only the new drop is processed,
-    // in one batch that starts where the first run committed (a tick
-    // scans its batch once per query that reads it, so the input
-    // row count is a multiple of the batch size, not the batch size)
+    // in one batch that starts where the first run committed; the tick
+    // reads that batch once, so its input is the drop's 2 rows
     val q2 = startQuery()
     try {
       q2.processAllAvailable()
@@ -561,6 +560,9 @@ class EtlStreamingSpec extends SparkSpec {
         .map(_.sources.head)
       assert(replayed.map(_.startOffset).toSeq == Seq(committed),
         "restart must resume from the checkpoint, not reprocess: " +
+          replayed.map(_.json).mkString("; "))
+      assert(replayed.map(_.numInputRows).toSeq == Seq(2L),
+        "each micro-batch must be read once: " +
           replayed.map(_.json).mkString("; "))
       assertSameRows(streamedFlat(storeRoot, cfg),
         Flatten.flattenObs(toObs(obsStore), cfg))

@@ -441,6 +441,63 @@ class MambaLifecycleSpec extends SparkSpec {
     assertStoreMatchesInstall(root, cfgE, moved, 7)
   }
 
+  /** `src` written to parquet, one file per table, and read back: the
+    * sources' scans then run as Spark jobs, one per collect.
+    */
+  private def onDisk(src: MambaEtlJob.Sources): MambaEtlJob.Sources = {
+    val dir = Files.createTempDirectory("mambasrc")
+    def t(name: String, df: DataFrame): DataFrame = {
+      df.coalesce(1).write.parquet(dir.resolve(name).toString)
+      spark.read.parquet(dir.resolve(name).toString)
+    }
+    MambaEtlJob.Sources(t("person", src.person),
+      t("encounter_type", src.encounterType), t("encounter", src.encounter),
+      t("concept", src.concept), t("obs", src.obs))
+  }
+
+  test("a mode-1 scheduled tick over two types collects the changed set once and equals a fresh install") {
+    // one firing lands a changed obs in a type-7 and in a type-8 encounter
+    val cfgE = EtlConfig("/src", "/out", incrementalMode = 1)
+    val installed = onDisk(sources)
+    val root = Files.createTempDirectory("mambasched2").toString
+    MambaEtlJob.runPersisted(spark, cfgE, installed, Seq(7, 8), root)
+    val bookmarks = new BookmarkStore(
+      Files.createTempDirectory("mambasched2bm").resolve("bookmark").toString)
+    Incremental.nextBookmark(installed.obs, Seq("obs_datetime"))
+      .foreach(bookmarks.write)
+    val next = onDisk(onObs(bumpObs(1L, "2024-03-10 08:00:00")
+      .andThen(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
+        "2024-03-10 08:05:00")))(installed))
+    val sites = jobSites {
+      MambaEtlJob.scheduledTick(spark, cfgE, next, Seq(7, 8), root, bookmarks)
+    }
+    assert(sites.count(_.contains("MambaEtlJob$.changedEncounters")) == 1,
+      sites.mkString("\n---\n"))
+    Seq(7, 8).foreach(assertStoreMatchesInstall(root, cfgE, next, _))
+  }
+
+  test("ticking the same delta twice compiles no new class the second time") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val cfgE = EtlConfig("/src", "/out")
+    val installed = onDisk(sources)
+    val root = Files.createTempDirectory("mambacodegen").toString
+    MambaEtlJob.runPersisted(spark, cfgE, installed, Seq(7), root)
+    val next = onDisk(onObs(bumpObs(3L, "2024-03-10 08:00:00")
+      .andThen(addObs(9L, 10L, 100L, Some(64.0), None,
+        "2024-03-10 08:05:00")))(installed))
+    def compiles(tick: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      tick
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def tick(): Unit = MambaEtlJob.tickPersisted(spark, cfgE, next, 7, root,
+      changedSince = Some(ts("2024-03-09 17:43:21")))
+    // the first tick's bookmark literal is new to this JVM
+    assert(compiles(tick()) > 0)
+    assert(compiles(tick()) == 0)
+    assertStoreMatchesInstall(root, cfgE, next, 7)
+  }
+
   test("a tick or reinstall that shrinks a type's split drops the stale continuation table") {
     // a 2-column cap splits type 8's three concepts into
     // `_8` (counselor_notes, height_cm_) and `_8_1` (hiv_result);

@@ -38,6 +38,30 @@ trait SparkSpec extends AnyFunSuite {
     sys.env.get("SPARK_GRAFT_SLOW_SPECS").contains("1"),
     "slow campaign — set SPARK_GRAFT_SLOW_SPECS=1 to run")
 
+  /** The jobs `body` starts, one long-form call site each (the
+    * caller stack of the job's final stage), in start order. The
+    * listener bus is drained on both sides, so no job of earlier or
+    * later work is counted.
+    */
+  def jobSites(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.sortBy(-_.stageId).headOption
+          .fold("")(_.details))
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
   /** Order-insensitive comparison on fully-collected small results. */
   def assertSameRows(actual: DataFrame, expected: DataFrame): Unit = {
     val a = actual.collect().map(_.toSeq).sortBy(_.mkString("|"))
