@@ -249,14 +249,34 @@ object MambaEtlJob {
       Seq("obs_datetime")))
 
   /** The distinct non-null `encounter_id`s of `changed` (one row per
-    * changed obs), collected on the driver in one bounded job. A null
-    * id names no encounter: no join on it matches.
+    * changed obs), collected on the driver in one bounded collect. Each
+    * input partition ships its distinct ids, so the bound
+    * ([[ModelCollect.MaxModelRows]]) counts encounters, not obs rows
+    * (an encounter whose changed obs span k partitions counts k times).
+    * A global `distinct` would count each once, but it costs a shuffle
+    * and a second job on every tick. A null id names no encounter: no
+    * join on it matches.
     */
-  def changedEncounters(changed: DataFrame): Set[Long] =
-    ModelCollect.bounded(changed.select("encounter_id"),
+  def changedEncounters(changed: DataFrame): Set[Long] = {
+    val spark = changed.sparkSession
+    import spark.implicits._
+    ModelCollect.bounded(
+        changed.where(col("encounter_id").isNotNull)
+          .select(col("encounter_id").cast("long")).as[Long]
+          .mapPartitions(_.distinct).toDF(),
         ModelCollect.MaxModelRows, "changed encounter ids")
-      .collect { case r if !r.isNullAt(0) => r.getAs[Number](0).longValue }
-      .toSet
+      .map(_.getLong(0)).toSet
+  }
+
+  /** Membership in a driver-held id set. A named class, not a lambda:
+    * a UDF's generated code names its function's class, and a lambda's
+    * class name carries a per-JVM address, so the tick's generated
+    * sources, and with them their slots in Spark's codegen cache, would
+    * differ from run to run.
+    */
+  private final case class IsIn(ids: Set[Long]) extends (Long => Boolean) {
+    def apply(id: Long): Boolean = ids(id)
+  }
 
   /** One incremental tick of type `encounterTypeId`'s flat tables —
     * the core every incremental driver calls ([[tickPersisted]]'s
@@ -271,17 +291,23 @@ object MambaEtlJob {
     *
     * `changed` holds the changed encounter ids on the driver
     * ([[changedEncounters]]). It must be delta-sized, because each
-    * driver collects it. It enters the tick as one literal predicate,
-    * `encounter_id IN (changed)`, which Catalyst plans as an `InSet`
-    * once it names more than
-    * `spark.sql.optimizer.inSetConversionThreshold` ids; generated
-    * code reads a long key's set by reference, so that code stays
-    * cached from tick to tick. The predicate picks the affected obs
-    * and the type's changed encounters, and marks the merge's removed
-    * keys; no frame of ids is broadcast or joined. An id of another
-    * type, or of a voided encounter, re-pivots nothing into this
-    * type's tables: the delta is joined with the type's live changed
-    * encounters, a delta-sized join.
+    * driver collects it: a window that changes more than
+    * [[ModelCollect.MaxModelRows]] encounters fails that collect
+    * before any write, and as [[scheduledTick]] keeps its bookmark on
+    * failure, every retry of the window fails the same way; such a
+    * backlog is reinstalled (`incrementalMode` 0) instead. The set
+    * enters the tick as one membership predicate on `encounter_id`, a
+    * UDF that holds it: generated code reaches the set through a
+    * reference, never through inlined ids (as a literal `IN` list's
+    * code does for an INT key, or for 10 ids or fewer), so the stages
+    * that filter on it compile once per JVM, whatever the key type or
+    * the set's size. Being opaque, the predicate is not pushed into
+    * the parquet scans. It picks the affected obs and the type's
+    * changed encounters, and marks the merge's removed keys; no frame
+    * of ids is broadcast or joined. An id of another type, or of a
+    * voided encounter, re-pivots nothing into this type's tables: the
+    * delta is joined with the type's live changed encounters, a
+    * delta-sized join.
     *
     * The delta is pivoted once per table, by the write. The months it
     * touches are the visit months of the type's live changed
@@ -307,7 +333,7 @@ object MambaEtlJob {
       Flatten.autoConfig(src.obs, src.encounter, src.concept,
         encounterTypeId, locale = Some(config.locale)))
       .copy(tableName = s"mamba_flat_encounter_$encounterTypeId")
-    val isChanged = col("encounter_id").isInCollection(changed)
+    val isChanged = udf(IsIn(changed)).apply(col("encounter_id"))
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)
       .select("encounter_id", "patient_id", "encounter_datetime")
@@ -338,7 +364,7 @@ object MambaEtlJob {
       deltas.zip(stored).foreach { case ((path, delta), table) =>
         store.writeIncrementalPartitioned(spark, delta, path,
           keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
-          removeKeys = Some(isChanged),
+          removeKeys = isChanged,
           parts = Some(withVisitMonth(changedEncs)), existing = table)
       }
   }

@@ -96,9 +96,10 @@ object AnalysisStore {
     * the driver: Spark writes a file's schema into its footer
     * (`org.apache.spark.sql.parquet.row.metadata`), and reading the
     * path with it spares the schema-inference job every plain parquet
-    * read runs. Partition discovery adds the partition columns as it
-    * does for an inferred read, so the result has the schema
-    * `spark.read.parquet(path)` gives.
+    * read runs. Every store table is written by Spark, so a footer
+    * without that key is an error. Partition discovery adds the
+    * partition columns as it does for an inferred read, so the result
+    * has the schema `spark.read.parquet(path)` gives.
     */
   def readExisting(spark: SparkSession, path: String): Option[DataFrame] = {
     recover(spark, path)
@@ -108,18 +109,14 @@ object AnalysisStore {
     else anyDataFile(fs, root).map { file =>
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
-      import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
       val reader = ParquetFileReader.open(
         HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
       val meta = try reader.getFooter.getFileMetaData finally reader.close()
-      // a file written by another tool carries only the parquet schema
-      val schema = Option(meta.getKeyValueMetaData
-          .get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .map(org.apache.spark.sql.types.DataType.fromJson(_)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(meta.getSchema))
-      spark.read.schema(schema).parquet(path)
+      val json = meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)
+      require(json != null, s"$file: no Spark schema in its footer")
+      spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(path)
     }
   }
 
@@ -484,23 +481,22 @@ object AnalysisStore {
     * input, so no materialized copy of the merge is needed, and a
     * failed job leaves every partition as it was (AnalysisStoreSpec).
     *
-    * Moved rows: a key whose partition value changes is handled
-    * exactly when it is in `removeKeys` — its old partition is then
-    * located and rewritten without it. Keyed only on the delta, the
-    * old partition is never read and the stale copy stays.
+    * Moved rows: a delta key whose partition value changes holds
+    * `removeKeys`, so its old partition is located and rewritten
+    * without it.
     *
     * @param removeKeys a predicate over `keys`, true for the stored
-    *        rows that must be dropped even when `delta` carries no
-    *        replacement row (the deleted/voided-away case — a merge
-    *        keyed only on the delta's rows would leave them behind) or
-    *        when it carries one in another partition. It must hold for
-    *        the delta's own keys. A literal predicate such as
-    *        `col(k).isInCollection(ids)` filters the stored table with
-    *        no join. The partitions of the rows it drops are found by
-    *        a column-pruned scan of (keys ++ partitionBy) — O(table) in
-    *        rows but only a few columns of IO, and only when removeKeys
-    *        is passed. A row for which it is null (a null key) is kept,
-    *        as an anti-join on the keys keeps it.
+    *        rows that must be dropped: the delta's own keys (their rows
+    *        are replaced), and keys whose rows must go even when
+    *        `delta` carries no replacement row (the deleted/voided-away
+    *        case — a merge keyed only on the delta's rows would leave
+    *        them behind) or carries one in another partition. A
+    *        predicate such as `col(k).isin(ids: _*)` filters the stored
+    *        table with no join. The partitions of the rows it drops are
+    *        found by a column-pruned scan of (keys ++ partitionBy) —
+    *        O(table) in rows but only a few columns of IO. A row for
+    *        which it is null (a null key) is kept, as an anti-join on
+    *        the keys keeps it.
     * @param parts a frame carrying `partitionBy` whose values cover
     *        every partition value of `delta`. Only those columns are
     *        read, so a caller that knows where its delta lands (say,
@@ -518,7 +514,7 @@ object AnalysisStore {
   def writeIncrementalPartitioned(
       spark: SparkSession, delta: DataFrame, path: String,
       keys: Seq[String], partitionBy: Seq[String],
-      removeKeys: Option[org.apache.spark.sql.Column] = None,
+      removeKeys: org.apache.spark.sql.Column,
       parts: Option[DataFrame] = None,
       existing: Option[DataFrame] = None): Unit = {
     require(partitionBy.nonEmpty,
@@ -529,33 +525,26 @@ object AnalysisStore {
         writeFull(delta, path, partitionBy)
         return
     }
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     // rows being removed may live in partitions the delta no longer
     // writes to — locate them, and the files holding them, so their
     // partitions are rewritten too
     val file = "__file"
-    val removedParts = removeKeys.map(removed =>
-      table.select((keys ++ partitionBy).map(col) :+
-          col("_metadata.file_path").as(file): _*)
-        .filter(removed)
-        .select((partitionBy :+ file).map(col): _*))
+    val removedParts = table.select((keys ++ partitionBy).map(col) :+
+        col("_metadata.file_path").as(file): _*)
+      .filter(removeKeys)
+      .select((partitionBy :+ file).map(col): _*)
     val touched = graft.operators.ModelCollect.bounded(
-      removedParts.foldLeft(
-        parts.getOrElse(delta).select(partitionBy.map(col) :+
-          lit(null).cast("string").as(file): _*))(_ union _)
-        .distinct(),
+      parts.getOrElse(delta).select(partitionBy.map(col) :+
+          lit(null).cast("string").as(file): _*)
+        .union(removedParts).distinct(),
       graft.operators.ModelCollect.MaxModelRows, "touched partition values")
     if (touched.isEmpty) return
     val touchedPred = touched.map(_.toSeq.init).distinct.map { values =>
       partitionBy.zip(values).map { case (c, v) => col(c) === lit(v) }
         .reduce(_ && _)
     }.reduce(_ || _)
-    val kept = removeKeys match {
-      case Some(removed) =>
-        table.filter(touchedPred && !coalesce(removed, lit(false)))
-      case None => table.filter(touchedPred)
-        .join(broadcast(delta.select(keys.map(col): _*)), keys, "left_anti")
-    }
+    val kept = table.filter(touchedPred && !coalesce(removeKeys, lit(false)))
     // strict unionByName ON PURPOSE: this path rewrites only touched
     // partition dirs, so an evolved delta schema would leave the
     // table's partitions schema-divergent (readable only with

@@ -24,8 +24,8 @@ import graft.sources.AnalysisStore
   *
   * At 100 TB: per tick the pivot shuffle carries only changed
   * encounters' obs, and the store write rewrites only the month
-  * partitions they touch. The sources are re-read per batch,
-  * scanning only what the predicate on changed encounter ids needs.
+  * partitions they touch. The sources are re-read per batch and
+  * filtered by the batch's changed encounter ids.
   */
 object EtlStreaming {
 

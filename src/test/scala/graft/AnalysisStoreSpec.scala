@@ -236,7 +236,8 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incp").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-01", "b1"),
       (3L, "2024-02", "c1"), (4L, "2024-03", "d1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L, 3L, 4L))
     def snap(part: String): Seq[(String, Long, Long)] = {
       val d = new java.io.File(s"$dir/m=$part")
       assert(d.isDirectory, s"expected partition dir $d")
@@ -249,7 +250,8 @@ class AnalysisStoreSpec extends SparkSpec {
     // tick touches only 2024-01: update k=2, insert k=5
     val delta = Seq((2L, "2024-01", "b2"), (5L, "2024-01", "e2"))
       .toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, delta, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, delta, dir, Seq("k"), Seq("m"),
+      $"k".isin(2L, 5L))
     // untouched partitions: same files, same bytes, same mtimes
     assert(snap("2024-02") == before02, "2024-02 must not be rewritten")
     assert(snap("2024-03") == before03, "2024-03 must not be rewritten")
@@ -260,6 +262,7 @@ class AnalysisStoreSpec extends SparkSpec {
     // the same with the touched values given as their own frame
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((1L, "2024-01", "a3")).toDF("k", "m", "v"), dir, Seq("k"), Seq("m"),
+      $"k".isin(1L),
       parts = Some(Seq("2024-01").toDF("m")))
     assert(snap("2024-02") == before02, "2024-02 must not be rewritten")
     assert(snap("2024-03") == before03, "2024-03 must not be rewritten")
@@ -271,11 +274,13 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incparts").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (3L, "2024-02", "c1"), (4L, "2024-03", "d1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L, 3L, 4L))
     // the delta lands in 2024-01 only; parts also names 2024-02, which
     // holds rows, and 2024-04, which does not exist
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((1L, "2024-01", "a2")).toDF("k", "m", "v"), dir, Seq("k"), Seq("m"),
+      $"k".isin(1L),
       parts = Some(Seq("2024-01", "2024-02", "2024-04").toDF("m")))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
       .as[(Long, String, String)].collect().sortBy(_._1)
@@ -288,7 +293,8 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incrm").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (4L, "2024-02", "d1"), (3L, "2024-03", "c1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L, 3L, 4L))
     def snap(part: String): Seq[(String, Long, Long)] =
       new java.io.File(s"$dir/m=$part").listFiles()
         .filter(_.getName.endsWith(".parquet"))
@@ -299,7 +305,7 @@ class AnalysisStoreSpec extends SparkSpec {
     // 2024-02, a partition the delta writes nothing to
     val delta = Seq((1L, "2024-01", "a2")).toDF("k", "m", "v")
     AnalysisStore.writeIncrementalPartitioned(spark, delta, dir,
-      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(1L, 2L)))
+      Seq("k"), Seq("m"), removeKeys = $"k".isin(1L, 2L))
     val rows = spark.read.parquet(dir).select("k", "v").as[(Long, String)]
       .collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "a2"), (3L, "c1"), (4L, "d1")),
@@ -311,11 +317,12 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incmv").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (4L, "2024-02", "d1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L, 4L))
     // k=2 moves from 2024-02 to 2024-03; 2024-02 keeps k=4
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((2L, "2024-03", "b2")).toDF("k", "m", "v"), dir,
-      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(2L)))
+      Seq("k"), Seq("m"), removeKeys = $"k".isin(2L))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
       .as[(Long, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "2024-01", "a1"), (2L, "2024-03", "b2"),
@@ -326,12 +333,13 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incempty").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (3L, "2024-03", "c1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L, 3L))
     // k=2 moves out of 2024-02 and k=3 is removed: neither old
     // partition keeps a row, and the delta lands in 2024-04
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((2L, "2024-04", "b2")).toDF("k", "m", "v"), dir,
-      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(2L, 3L)))
+      Seq("k"), Seq("m"), removeKeys = $"k".isin(2L, 3L))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
       .as[(Long, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "2024-01", "a1"), (2L, "2024-04", "b2")))
@@ -343,11 +351,12 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incnull").toString
     val v1 = Seq((Some(1L), "2024-01", "a1"), (None, "2024-01", "n1"),
       (Some(2L), "2024-02", "b1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L))
     // the merge rewrites 2024-01, where the null-keyed row lives
     AnalysisStore.writeIncrementalPartitioned(spark,
       Seq((Some(1L), "2024-01", "a2")).toDF("k", "m", "v"), dir,
-      Seq("k"), Seq("m"), removeKeys = Some($"k".isin(1L)))
+      Seq("k"), Seq("m"), removeKeys = $"k".isin(1L))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
       .as[(Option[Long], String, String)].collect().sortBy(_._3)
     assert(rows.toSeq == Seq((Some(1L), "2024-01", "a2"),
@@ -380,7 +389,8 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incfail").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-01", "b1"),
       (3L, "2024-02", "c1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"))
+    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+      $"k".isin(1L, 2L, 3L))
     def snap(): Seq[(String, Long, Long)] =
       Seq("2024-01", "2024-02").flatMap(p =>
         new java.io.File(s"$dir/m=$p").listFiles()
@@ -397,7 +407,8 @@ class AnalysisStoreSpec extends SparkSpec {
       when(col("id") === 2L, raise_error(lit("boom")))
         .otherwise(lit("e2")).as("v"))
     val e = intercept[org.apache.spark.SparkThrowable] {
-      AnalysisStore.writeIncrementalPartitioned(spark, delta, dir, Seq("k"), Seq("m"))
+      AnalysisStore.writeIncrementalPartitioned(spark, delta, dir, Seq("k"), Seq("m"),
+        $"k".isin(2L, 5L))
     }
     assert(e.getCondition == "USER_RAISED_EXCEPTION", e)
     assert(snap() == before, "a failed write must not touch any partition")
@@ -417,7 +428,8 @@ class AnalysisStoreSpec extends SparkSpec {
       Seq((1L, "2024-01", "a3"), (4L, "2024-02", "d3")))
     ticks.foreach { t =>
       AnalysisStore.writeIncrementalPartitioned(spark,
-        t.toDF("k", "m", "v"), incDir, Seq("k"), Seq("m"))
+        t.toDF("k", "m", "v"), incDir, Seq("k"), Seq("m"),
+        $"k".isin(t.map(_._1): _*))
     }
     // full refresh of the same logical state: last write per key wins
     val full = ticks.flatten.groupBy(_._1).map(_._2.last).toSeq

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.examples.MambaEtlJob
 import graft.model.EtlConfig
-import graft.operators.{BookmarkStore, Incremental}
+import graft.operators.{BookmarkStore, Incremental, ModelCollect}
 import graft.pipeline.EtlScheduler
 import graft.reports.ReportRegistry
 import graft.streaming.EtlStreaming
@@ -468,7 +468,7 @@ class MambaLifecycleSpec extends SparkSpec {
     val next = onDisk(onObs(bumpObs(1L, "2024-03-10 08:00:00")
       .andThen(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
         "2024-03-10 08:05:00")))(installed))
-    val sites = jobSites {
+    val sites = querySites {
       MambaEtlJob.scheduledTick(spark, cfgE, next, Seq(7, 8), root, bookmarks)
     }
     assert(sites.count(_.contains("MambaEtlJob$.changedEncounters")) == 1,
@@ -476,25 +476,54 @@ class MambaLifecycleSpec extends SparkSpec {
     Seq(7, 8).foreach(assertStoreMatchesInstall(root, cfgE, next, _))
   }
 
-  test("ticking the same delta twice compiles no new class the second time") {
+  test("ticks of different small deltas compile no new class after the first, on INT and BIGINT keys") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val cfgE = EtlConfig("/src", "/out")
-    val installed = onDisk(sources)
-    val root = Files.createTempDirectory("mambacodegen").toString
-    MambaEtlJob.runPersisted(spark, cfgE, installed, Seq(7), root)
-    val next = onDisk(onObs(bumpObs(3L, "2024-03-10 08:00:00")
-      .andThen(addObs(9L, 10L, 100L, Some(64.0), None,
-        "2024-03-10 08:05:00")))(installed))
+    import org.apache.spark.sql.functions.col
     def compiles(tick: => Unit): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       tick
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
-    def tick(): Unit = MambaEtlJob.tickPersisted(spark, cfgE, next, 7, root,
-      changedSince = Some(ts("2024-03-09 17:43:21")))
-    // the first tick's bookmark literal is new to this JVM
-    assert(compiles(tick()) > 0)
-    assert(compiles(tick()) == 0)
+    val cfgE = EtlConfig("/src", "/out")
+    // OpenMRS stores encounter_id as INT; the ticks below change one
+    // encounter each, a different one each time, from one bookmark
+    Seq("int", "bigint").foreach { keyType =>
+      def keyed(src: MambaEtlJob.Sources) = onDisk(src.copy(
+        encounter = src.encounter
+          .withColumn("encounter_id", col("encounter_id").cast(keyType)),
+        obs = src.obs
+          .withColumn("encounter_id", col("encounter_id").cast(keyType))))
+      val root = Files.createTempDirectory("mambacodegen").toString
+      MambaEtlJob.runPersisted(spark, cfgE, keyed(sources), Seq(7), root)
+      val next11 = keyed(onObs(bumpObs(3L, "2024-03-10 08:00:00"))(sources))
+      val next10 = keyed(onObs(bumpObs(1L, "2024-03-10 08:00:00")
+        .andThen(addObs(9L, 10L, 100L, Some(64.0), None,
+          "2024-03-10 08:05:00")))(sources))
+      def tick(next: MambaEtlJob.Sources): Unit = MambaEtlJob.tickPersisted(
+        spark, cfgE, next, 7, root, changedSince = Some(ts("2024-03-09 17:43:21")))
+      // the first tick's bookmark literal and key type are new to this JVM
+      assert(compiles(tick(next11)) > 0, keyType)
+      assert(compiles(tick(next10)) == 0, keyType)
+      assertStoreMatchesInstall(root, cfgE, next10, 7)
+    }
+  }
+
+  test("a tick whose changed obs rows outnumber the collect's bound, on few encounters, equals a fresh install") {
+    import org.apache.spark.sql.functions.lit
+    // encounter 12 (type 8) gains more notes than ModelCollect's bound;
+    // with obs 3 of encounter 11 (type 7), two encounters changed
+    val notes = spark.range(ModelCollect.MaxModelRows.toLong + 1).select(
+      ($"id" + 1000L).as("obs_id"), lit(12L).as("encounter_id"),
+      lit(300L).as("concept_id"), lit(null).cast("double").as("value_numeric"),
+      lit("note").as("value_text"), lit(null).cast("string").as("value_coded"),
+      lit(ts("2024-03-10 08:05:00")).as("obs_datetime"), lit(0).as("voided"))
+    val cfgE = EtlConfig("/src", "/out")
+    val root = Files.createTempDirectory("mambabound").toString
+    MambaEtlJob.runPersisted(spark, cfgE, sources, Seq(7), root)
+    val next = onObs(bumpObs(3L, "2024-03-10 08:00:00")
+      .andThen(_.unionByName(notes)))(sources)
+    MambaEtlJob.tickPersisted(spark, cfgE, next, 7, root,
+      changedSince = Some(ts("2024-03-09 09:00:00")))
     assertStoreMatchesInstall(root, cfgE, next, 7)
   }
 

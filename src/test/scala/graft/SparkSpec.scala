@@ -39,18 +39,45 @@ trait SparkSpec extends AnyFunSuite {
     "slow campaign — set SPARK_GRAFT_SLOW_SPECS=1 to run")
 
   /** The jobs `body` starts, one long-form call site each (the
-    * caller stack of the job's final stage), in start order. The
-    * listener bus is drained on both sides, so no job of earlier or
-    * later work is counted.
+    * caller stack of the job's final stage), in start order.
     */
   def jobSites(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
+    import org.apache.spark.scheduler.SparkListenerJobStart
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+    listening {
+      case e: SparkListenerJobStart =>
         sites.add(e.stageInfos.sortBy(-_.stageId).headOption
           .fold("")(_.details))
+    }(body)
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
+  /** The SQL queries `body` runs (one per action or write), one
+    * long-form call site each, in start order. A query's jobs may run
+    * on the adaptive executor's threads, whose stacks no longer name
+    * the caller; the query's own call site does.
+    */
+  def querySites(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    listening { case e: SparkListenerSQLExecutionStart => sites.add(e.details) }(body)
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Runs `body` with `on` receiving every listener event it causes.
+    * The listener bus is drained on both sides, so no event of earlier
+    * or later work is seen.
+    */
+  private def listening(
+      on: PartialFunction[org.apache.spark.scheduler.SparkListenerEvent, Unit])(
+      body: => Unit): Unit = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        on.applyOrElse(e, (_: SparkListenerEvent) => ())
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        on.applyOrElse(e, (_: SparkListenerEvent) => ())
     }
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
@@ -59,7 +86,6 @@ trait SparkSpec extends AnyFunSuite {
       org.apache.spark.GraftListenerBus.drain(sc)
       sc.removeSparkListener(listener)
     }
-    sites.toArray(Array.empty[String]).toSeq
   }
 
   /** Order-insensitive comparison on fully-collected small results. */
