@@ -4,6 +4,7 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.Try
 
 /** Concurrent materialization of INDEPENDENT gate legs (optimization
   * guide §2.6: actions are only sequential because driver code calls
@@ -33,21 +34,19 @@ import scala.concurrent.duration.Duration
   *    pool that reaches a nested fan-out (CatalogStore.commit's
   *    per-table staging writes use Par.all) evaluates its thunks
   *    sequentially on its own thread instead of submitting to the
-  *    pool and blocking in Await.result(…, Inf). Without this, N
+  *    pool and blocking in Await.ready(…, Inf). Without this, N
   *    simultaneously blocked outer legs (N = pool width) whose
   *    children all queue behind them is a permanent deadlock;
   *    ParSpec's nested-fan-out case reproduces the shape.
-  *  - SPARK_GRAFT_PAR=0 disables overlap entirely (pure sequential
-  *    evaluation, bit-identical results) so a measurement dispute can
-  *    be adjudicated by flipping one env var, not by reverting code.
+  *  - A failing leg rethrows on the caller only after every other
+  *    leg has finished (the first failure in declaration order), so
+  *    no leg is still writing when the caller's error handling runs:
+  *    CatalogStore.commit's cleanup would otherwise race a sibling
+  *    staging write and leave its copy behind.
   */
 private[graft] object Par {
 
   private val PoolThreadName = "graft-gate-leg"
-
-  private val enabled: Boolean =
-    sys.env.get("SPARK_GRAFT_PAR").forall(v =>
-      v != "0" && !v.equalsIgnoreCase("false"))
 
   // 2 pool threads + the caller's own leg = at most 3 jobs in flight
   // per gate (guide §2.6). Spark's FIFO scheduler arbitrates the
@@ -67,25 +66,17 @@ private[graft] object Par {
   private def onPoolThread: Boolean =
     Thread.currentThread().getName.startsWith(PoolThreadName)
 
-  private def overlap: Boolean = enabled && !onPoolThread
-
   /** Evaluate two independent legs, the first on the caller thread. */
   def two[A, B](a: => A, b: => B): (A, B) =
-    if (!overlap) (a, b)
-    else {
-      val fb = Future(b)(pool)
-      val ra = a
-      (ra, Await.result(fb, Duration.Inf))
+    all(Seq(() => a, () => b)) match {
+      case Seq(ra, rb) => (ra.asInstanceOf[A], rb.asInstanceOf[B])
     }
 
   /** Evaluate three independent legs (caller + up to 2 pooled). */
   def three[A, B, C](a: => A, b: => B, c: => C): (A, B, C) =
-    if (!overlap) (a, b, c)
-    else {
-      val fb = Future(b)(pool)
-      val fc = Future(c)(pool)
-      val ra = a
-      (ra, Await.result(fb, Duration.Inf), Await.result(fc, Duration.Inf))
+    all(Seq(() => a, () => b, () => c)) match {
+      case Seq(ra, rb, rc) =>
+        (ra.asInstanceOf[A], rb.asInstanceOf[B], rc.asInstanceOf[C])
     }
 
   /** Evaluate four independent legs; legs beyond the in-flight cap
@@ -93,41 +84,32 @@ private[graft] object Par {
     */
   def four[A, B, C, D](a: => A, b: => B, c: => C, d: => D)
       : (A, B, C, D) =
-    if (!overlap) (a, b, c, d)
-    else {
-      val fb = Future(b)(pool)
-      val fc = Future(c)(pool)
-      val fd = Future(d)(pool)
-      val ra = a
-      (ra, Await.result(fb, Duration.Inf), Await.result(fc, Duration.Inf),
-        Await.result(fd, Duration.Inf))
+    all(Seq(() => a, () => b, () => c, () => d)) match {
+      case Seq(ra, rb, rc, rd) => (ra.asInstanceOf[A], rb.asInstanceOf[B],
+        rc.asInstanceOf[C], rd.asInstanceOf[D])
     }
 
   /** Evaluate five independent legs; same queueing as [[four]]. */
   def five[A, B, C, D, E](a: => A, b: => B, c: => C, d: => D, e: => E)
       : (A, B, C, D, E) =
-    if (!overlap) (a, b, c, d, e)
-    else {
-      val fb = Future(b)(pool)
-      val fc = Future(c)(pool)
-      val fd = Future(d)(pool)
-      val fe = Future(e)(pool)
-      val ra = a
-      (ra, Await.result(fb, Duration.Inf), Await.result(fc, Duration.Inf),
-        Await.result(fd, Duration.Inf), Await.result(fe, Duration.Inf))
+    all(Seq(() => a, () => b, () => c, () => d, () => e)) match {
+      case Seq(ra, rb, rc, rd, re) => (ra.asInstanceOf[A],
+        rb.asInstanceOf[B], rc.asInstanceOf[C], rd.asInstanceOf[D],
+        re.asInstanceOf[E])
     }
 
   /** Evaluate a sequence of independent thunks, preserving order.
     * Used for per-table staging writes inside a multi-table
     * transaction (each stages under its own tx-private dir, so the
     * writes share nothing but the scheduler). The first thunk runs on
-    * the caller thread; the rest go to the pool.
+    * the caller thread; the rest go to the pool. A failure rethrows
+    * once every thunk has finished.
     */
   def all[T](thunks: Seq[() => T]): Seq[T] =
-    if (thunks.sizeIs <= 1 || !overlap) thunks.map(_.apply())
+    if (thunks.sizeIs <= 1 || onPoolThread) thunks.map(_.apply())
     else {
       val rest = thunks.tail.map(t => Future(t())(pool))
-      val head = thunks.head.apply()
-      head +: rest.map(Await.result(_, Duration.Inf))
+      val head = Try(thunks.head.apply())
+      (head +: rest.map(Await.ready(_, Duration.Inf).value.get)).map(_.get)
     }
 }

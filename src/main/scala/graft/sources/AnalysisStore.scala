@@ -10,13 +10,16 @@ import graft.operators.Incremental
   * directory.
   *
   *  - Full refresh (mode 0) = idempotent overwrite.
-  *  - Incremental (mode 1) = read-merge-rewrite: anti-join the delta's
-  *    keys against the stored table, union, write to a staging dir,
-  *    atomically swap. Parquet files are immutable, so "upsert" at
-  *    100 TB is really "rewrite the affected partitions"; callers
-  *    partitioning by a key prefix (e.g. date) bound the rewrite to
-  *    `partitionBy` dirs touched by the delta via dynamic partition
-  *    overwrite.
+  *  - Incremental (mode 1) = read-merge-rewrite. Parquet files are
+  *    immutable, so "upsert" at 100 TB is really "rewrite the affected
+  *    partitions": the partitioned tick
+  *    ([[writeIncrementalPartitioned]]) reads back only the partitions
+  *    the delta touches, drops the stored rows its removal predicate
+  *    names, unions the delta and rewrites those partition dirs by
+  *    dynamic partition overwrite, leaving every other partition's
+  *    files untouched. An unpartitioned table ([[writeIncremental]])
+  *    is merged by key into a staging dir and swapped in
+  *    ([[stageAndSwap]]).
   */
 object AnalysisStore {
 
@@ -47,7 +50,9 @@ object AnalysisStore {
     * writer would fall back to writeFull(delta) and silently replace
     * all prior state. Called by every read-modify-write entry point;
     * callers that only READ state at tick start should call it for
-    * each state path before their exists() checks.
+    * each state path before their exists() checks. The state-folding
+    * streams heal in one place, `graft.streaming.FoldAndSwap`, before
+    * they ask whether state exists.
     *
     * @return true if a backup was restored
     */

@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 import graft.examples.MambaEtlJob
 import graft.model.{EtlConfig, FlatTableConfig}
-import graft.sources.AnalysisStore
+import graft.operators.{Incremental, Layout}
+import graft.sources.CatalogStore
 
 /** The reference's scheduled ETL tick (SURVEY §2.7 T1/T3) as a real
   * incremental dataflow: a stream of changed `obs` rows drives
@@ -26,6 +28,13 @@ import graft.sources.AnalysisStore
   * encounters' obs, and the store write rewrites only the month
   * partitions they touch. The sources are re-read per batch and
   * filtered by the batch's changed encounter ids.
+  *
+  * The other streams here fold each micro-batch into state they keep
+  * themselves (an SCD2 history, a CDC-applied table, a deletion
+  * vector, a join view); each is only its fold, ticked by
+  * [[FoldAndSwap]], which heals a crashed swap and publishes every
+  * tick, the first included, with one stage-and-swap. The catalog
+  * streams commit through [[graft.sources.CatalogStore]] instead.
   */
 object EtlStreaming {
 
@@ -46,7 +55,6 @@ object EtlStreaming {
     */
   def fromCdcJson(raw: DataFrame,
       rowSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val envelope = StructType(Seq(
       StructField("op", StringType),
@@ -67,83 +75,57 @@ object EtlStreaming {
     * dimension history ([[graft.operators.Incremental.scd2History]]
     * semantics, maintained by [[graft.operators.Incremental
     * .scd2Merge]] per tick — cost tracks the tick, never the
-    * history).
+    * history; the first tick merges into an empty history).
     *
     * Crash/redelivery safety: foreachBatch is at-least-once, and an
     * SCD2 fold is NOT naturally idempotent (re-folding a batch
     * double-counts n_events), so the store carries its fold
     * high-water mark — max `ordCol` folded — as a constant column
     * (`__max_ord`) on every history row: mark and history swap in ONE
-    * [[AnalysisStore.stageAndSwap]] rename, so they cannot tear, and
-    * a redelivered batch (all ords ≤ mark) filters to empty and
-    * no-ops. Contract: `ordCol` is a monotonically increasing event
-    * id across batches (the append-only event-log contract — the
-    * same ordering [[graft.operators.Incremental.changedSince]]'s
-    * bookmark assumes), which also discharges scd2Merge's
-    * later-than-history requirement.
+    * [[FoldAndSwap]] rename, so they cannot tear, and a redelivered
+    * batch (all ords ≤ mark) filters to empty and no-ops. Contract:
+    * `ordCol` is a monotonically increasing event id across batches
+    * (the append-only event-log contract — the same ordering
+    * [[graft.operators.Incremental.changedSince]]'s bookmark assumes),
+    * which also discharges scd2Merge's later-than-history requirement.
     */
   def scd2Ticks(
       eventsDelta: DataFrame,
       storePath: String,
       keyCol: String, tsCol: String, ordCol: String, attrCol: String,
-      interval: String = "30 minutes"): DataStreamWriter[org.apache.spark.sql.Row] =
-    eventsDelta.writeStream
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(interval))
-      .foreachBatch { (rawBatch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = rawBatch.sparkSession
-        // materialize once: the batch feeds the filter, the merge and
-        // the new mark (un-materialized foreachBatch frames re-read
-        // the source per action)
-        val batch = rawBatch.localCheckpoint(true)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(new org.apache.hadoop.fs.Path(storePath))
-        val (history, mark) =
-          if (exists) {
-            val st = spark.read.parquet(storePath)
-            // cast-to-long on BOTH mark reads: an IntegerType order
-            // column (a plain int event id) would otherwise throw
-            // ClassCastException in getLong and kill the stream at
-            // the first tick
-            (st.drop("__max_ord"),
-              st.agg(max(col("__max_ord").cast("long"))).head().getLong(0))
-          } else (batch.limit(0), Long.MinValue)
-        val fresh = batch.filter(col(ordCol).cast("long") > mark)
-          .localCheckpoint(true)
-        if (!fresh.isEmpty) {
-          val folded =
-            if (exists)
-              graft.operators.Incremental.scd2Merge(history, fresh,
-                keyCol, tsCol, ordCol, attrCol)
-            else
-              graft.operators.Incremental.scd2History(fresh,
-                keyCol, tsCol, ordCol, attrCol)
-          val newMark =
-            fresh.agg(max(col(ordCol).cast("long"))).head().getLong(0)
-          val stamped = folded.withColumn("__max_ord", lit(newMark))
-          if (exists)
-            // the staging write reads the still-intact store, then a
-            // rename swap — a tick that dies mid-write never
-            // half-destroys the history (and mark + rows move in the
-            // same rename, so they cannot tear)
-            AnalysisStore.stageAndSwap(spark, storePath) { staging =>
-              stamped.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(staging)
-            }
-          else
-            stamped.write.parquet(storePath)
-        }
+      interval: String = "30 minutes"): DataStreamWriter[Row] =
+    FoldAndSwap.ticks(eventsDelta, storePath, OutputMode.Update(),
+        interval) { (batch, exists) =>
+      val (history, mark) =
+        if (exists) {
+          val st = batch.sparkSession.read.parquet(storePath)
+          // cast-to-long on BOTH mark reads: an IntegerType order
+          // column (a plain int event id) would otherwise throw
+          // ClassCastException in getLong and kill the stream at
+          // the first tick
+          (st.drop("__max_ord"),
+            st.agg(max(col("__max_ord").cast("long"))).head().getLong(0))
+        } else (Incremental.scd2History(batch.limit(0),
+          keyCol, tsCol, ordCol, attrCol), Long.MinValue)
+      val fresh = batch.filter(col(ordCol).cast("long") > mark)
+      if (fresh.isEmpty) None
+      else {
+        val newMark =
+          fresh.agg(max(col(ordCol).cast("long"))).head().getLong(0)
+        Some(FoldAndSwap.overwrite(
+          Incremental.scd2Merge(history, fresh, keyCol, tsCol, ordCol,
+            attrCol).withColumn("__max_ord", lit(newMark))))
       }
+    }
 
   /** Wire a decoded CDC stream ([[fromCdcJson]]'s output shape plus
     * `opCol`/`seqCol`) into a continuously-maintained keyed table at
     * `storePath` — the streaming twin of [[graft.operators
     * .Incremental.applyChanges]] (same fold per tick, so the twins
     * cannot drift; tick-split ≡ one-shot is the batch gate's pinned
-    * algebra, cdc_apply_gate).
+    * algebra, cdc_apply_gate). The first tick folds against an empty
+    * table of the change shape (minus op): inserts land, deletes of
+    * absent keys no-op, exactly the batch semantics.
     *
     * Unlike [[scd2Ticks]], NO high-water mark column is needed:
     * applyChanges is idempotent under redelivery by construction
@@ -151,50 +133,22 @@ object EtlStreaming {
     * seq in the same max_by reduction), so at-least-once foreachBatch
     * delivery is safe with zero extra state — foreachBatch replays
     * are always the LATEST batch, which is exactly the in-order
-    * redelivery applyChanges' no-tombstone contract requires. Store swaps are
-    * rename-atomic ([[AnalysisStore.stageAndSwap]]): a tick that dies
-    * mid-write never half-destroys the table.
+    * redelivery applyChanges' no-tombstone contract requires.
     */
   def cdcApplyTicks(
       changes: DataFrame,
       storePath: String,
       keys: Seq[String],
       opCol: String = "op", seqCol: String = "seq",
-      interval: String = "30 minutes"): DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(interval))
-      .foreachBatch { (rawBatch: DataFrame, _: Long) =>
-        val spark = rawBatch.sparkSession
-        val batch = rawBatch.localCheckpoint(true)
-        if (!batch.isEmpty) {
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val exists = fs.exists(new org.apache.hadoop.fs.Path(storePath))
-          if (exists) {
-            val folded = graft.operators.Incremental.applyChanges(
-              spark.read.parquet(storePath), batch, keys, opCol, seqCol)
-            AnalysisStore.stageAndSwap(spark, storePath) { staging =>
-              folded.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(staging)
-            }
-          } else {
-            // first tick: fold against an empty table of the change
-            // shape (minus op) — inserts land, deletes of absent keys
-            // no-op, exactly the batch semantics. Staged like every
-            // later tick: existence must imply completeness
-            val empty = batch.drop(opCol).limit(0)
-            val first = graft.operators.Incremental
-              .applyChanges(empty, batch, keys, opCol, seqCol)
-            AnalysisStore.stageAndSwap(spark, storePath) { staging =>
-              first.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(staging)
-            }
-          }
-        }
-      }
+      interval: String = "30 minutes"): DataStreamWriter[Row] =
+    FoldAndSwap.ticks(changes, storePath, OutputMode.Update(),
+        interval) { (batch, exists) =>
+      val prior =
+        if (exists) batch.sparkSession.read.parquet(storePath)
+        else batch.drop(opCol).limit(0)
+      Some(FoldAndSwap.overwrite(
+        Incremental.applyChanges(prior, batch, keys, opCol, seqCol)))
+    }
 
   /** Wire a stream of DELETE-REQUEST KEYS (the GDPR-erasure feed)
     * into a continuously-maintained deletion-vector store for the
@@ -217,45 +171,20 @@ object EtlStreaming {
       tablePath: String,
       dvPath: String,
       keys: Seq[String],
-      interval: String = "30 minutes"): DataStreamWriter[org.apache.spark.sql.Row] =
-    deleteKeys.writeStream
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(interval))
-      .foreachBatch { (rawBatch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = rawBatch.sparkSession
-        val batch = rawBatch.localCheckpoint(true)
-        if (!batch.isEmpty) {
-          val keyCols = keys.map(col)
-          val hit = spark.read.parquet(tablePath)
-            .select(col("_metadata.file_path").as("__raw_file"),
-              col("_metadata.row_index").as("pos"), col("*"))
-            .join(broadcast(batch.select(keyCols: _*).distinct()),
-              keys, "left_semi")
-            .select(regexp_replace(col("__raw_file"), "^file:/+", "/")
-              .as("file"), col("pos"))
-          val fs = new org.apache.hadoop.fs.Path(dvPath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(new org.apache.hadoop.fs.Path(dvPath))) {
-            val merged = graft.operators.Layout.mergeDv(
-              spark.read.parquet(dvPath), hit)
-            AnalysisStore.stageAndSwap(spark, dvPath) { staging =>
-              merged.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(staging)
-            }
-          } else {
-            // first vector: staged too — a half-written DV store
-            // must never exist for the next tick to merge against
-            val first = hit.distinct()
-            AnalysisStore.stageAndSwap(spark, dvPath) { staging =>
-              first.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(staging)
-            }
-          }
-        }
-      }
+      interval: String = "30 minutes"): DataStreamWriter[Row] =
+    FoldAndSwap.ticks(deleteKeys, dvPath, OutputMode.Update(),
+        interval) { (batch, exists) =>
+      val spark = batch.sparkSession
+      val hit = spark.read.parquet(tablePath)
+        .select(col("_metadata.file_path").as("__raw_file"),
+          col("_metadata.row_index").as("pos"), col("*"))
+        .join(broadcast(batch.select(keys.map(col): _*).distinct()),
+          keys, "left_semi")
+        .select(regexp_replace(col("__raw_file"), "^file:/+", "/")
+          .as("file"), col("pos"))
+      val prior = if (exists) spark.read.parquet(dvPath) else hit.limit(0)
+      Some(FoldAndSwap.overwrite(Layout.mergeDv(prior, hit)))
+    }
 
   /** Maintain an INNER-JOIN view V = A ⋈ B from a MULTIPLEXED insert
     * feed — the streaming twin of [[graft.operators.Incremental
@@ -267,15 +196,16 @@ object EtlStreaming {
     * (the other side's are null — ignored by the projection).
     *
     * Per tick the Griffin–Libkin insert deltas fold against the
-    * PERSISTED bases, and all four state tables — a, b, view, and
-    * the fold high-water mark — live under ONE store dir and swap in
-    * ONE rename ([[AnalysisStore.stageAndSwap]]): a crash between
-    * tick and checkpoint can never leave bases and view disagreeing,
-    * and a redelivered batch (all `ordCol` ≤ mark, the scd2Ticks
-    * discipline — join folds are NOT naturally idempotent) filters
-    * to empty and no-ops. Insert feed only by contract: deletes go
-    * through [[graft.operators.Incremental.recomputeJoinKeys]] in a
-    * maintenance pass, exactly like the batch family.
+    * PERSISTED bases (empty ones at the first tick), and all four
+    * state tables — a, b, view, and the fold high-water mark — live
+    * under ONE store dir and swap in ONE [[FoldAndSwap]] rename: a
+    * crash between tick and checkpoint can never leave bases and view
+    * disagreeing, and a redelivered batch (all `ordCol` ≤ mark, the
+    * scd2Ticks discipline — join folds are NOT naturally idempotent)
+    * filters to empty and no-ops. Insert feed only by contract:
+    * deletes go through [[graft.operators.Incremental
+    * .recomputeJoinKeys]] in a maintenance pass, exactly like the
+    * batch family.
     */
   def joinViewTicks(
       tagged: DataFrame,
@@ -283,59 +213,40 @@ object EtlStreaming {
       keys: Seq[String],
       aCols: Seq[String], bCols: Seq[String],
       sideCol: String = "side", ordCol: String = "ord",
-      interval: String = "30 minutes"): DataStreamWriter[org.apache.spark.sql.Row] =
-    tagged.writeStream
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(interval))
-      .foreachBatch { (rawBatch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = rawBatch.sparkSession
-        val batch = rawBatch.localCheckpoint(true)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(new org.apache.hadoop.fs.Path(storePath))
-        val mark =
-          if (exists)
-            spark.read.parquet(s"$storePath/mark")
-              .agg(max(col("mark").cast("long"))).head().getLong(0)
-          else Long.MinValue
-        val fresh = batch.filter(col(ordCol).cast("long") > mark)
-          .localCheckpoint(true)
-        if (!fresh.isEmpty) {
-          val dA = fresh.filter(col(sideCol) === "a")
-            .select(aCols.map(col): _*)
-          val dB = fresh.filter(col(sideCol) === "b")
-            .select(bCols.map(col): _*)
-          val (aOld, bOld) =
-            if (exists) (spark.read.parquet(s"$storePath/a"),
-              spark.read.parquet(s"$storePath/b"))
-            else (dA.limit(0), dB.limit(0))
-          val view =
-            if (exists) spark.read.parquet(s"$storePath/view")
-            else aOld.join(bOld, keys)
-          // no checkpoint needed: the staging write reads the still-
-          // intact old store (stageAndSwap renames only afterwards),
-          // so state never has to fit in memory
-          val newView = graft.operators.Incremental.maintainJoinView(
-            view, aOld, dA, bOld, dB, keys)
-          val aNew = aOld.unionByName(dA)
-          val bNew = bOld.unionByName(dB)
-          val newMark =
-            fresh.agg(max(col(ordCol).cast("long"))).head().getLong(0)
-          import spark.implicits._
-          val write = (staging: String) => {
-            aNew.write.parquet(s"$staging/a")
-            bNew.write.parquet(s"$staging/b")
-            newView.write.parquet(s"$staging/view")
-            Seq(newMark).toDF("mark").write.parquet(s"$staging/mark")
-          }
-          // first tick included: stageAndSwap handles a missing
-          // target (no backup leg), so store existence always
-          // implies a COMPLETE tick — a crash mid-first-write must
-          // not leave a partial root the next tick trusts
-          AnalysisStore.stageAndSwap(spark, storePath)(write)
+      interval: String = "30 minutes"): DataStreamWriter[Row] =
+    FoldAndSwap.ticks(tagged, storePath, OutputMode.Update(),
+        interval) { (batch, exists) =>
+      val spark = batch.sparkSession
+      def stored(table: String) = spark.read.parquet(s"$storePath/$table")
+      val mark =
+        if (exists)
+          stored("mark").agg(max(col("mark").cast("long"))).head().getLong(0)
+        else Long.MinValue
+      val fresh = batch.filter(col(ordCol).cast("long") > mark)
+      if (fresh.isEmpty) None
+      else {
+        val dA = fresh.filter(col(sideCol) === "a")
+          .select(aCols.map(col): _*)
+        val dB = fresh.filter(col(sideCol) === "b")
+          .select(bCols.map(col): _*)
+        val (aOld, bOld) =
+          if (exists) (stored("a"), stored("b"))
+          else (dA.limit(0), dB.limit(0))
+        val view =
+          if (exists) stored("view") else aOld.join(bOld, keys)
+        val newView = Incremental.maintainJoinView(
+          view, aOld, dA, bOld, dB, keys)
+        val newMark =
+          fresh.agg(max(col(ordCol).cast("long"))).head().getLong(0)
+        import spark.implicits._
+        Some { (staging: String) =>
+          aOld.unionByName(dA).write.parquet(s"$staging/a")
+          bOld.unionByName(dB).write.parquet(s"$staging/b")
+          newView.write.parquet(s"$staging/view")
+          Seq(newMark).toDF("mark").write.parquet(s"$staging/mark")
         }
       }
+    }
 
   /** Wire a changed-obs stream into type `encounterTypeId`'s flat
     * tables under `storeRoot`: each micro-batch's `encounter_id`s,
@@ -366,6 +277,18 @@ object EtlStreaming {
           flatConfigs)
       }
 
+  /** The batch id of the last tick committed at `root` (the replay
+    * guard's one-row `tick_meta` table), or -1 before the first.
+    */
+  private def lastTickId(spark: SparkSession, root: String): Long =
+    try {
+      val snap = CatalogStore.snapshot(spark, root)
+      if (snap.tables.contains("tick_meta"))
+        CatalogStore.read(spark, root, "tick_meta", snap)
+          .select("batch_id").head.getLong(0)
+      else -1L
+    } catch { case _: IllegalStateException => -1L } // empty store
+
   /** One transactional-publishing tick against a [[graft.sources
     * .CatalogStore]] — the body of [[catalogTicks]], visible so the
     * at-least-once guard is directly testable. `derive` builds the
@@ -380,22 +303,13 @@ object EtlStreaming {
     * Returns true when the tick committed.
     */
   def catalogTickBatch(
-      spark: org.apache.spark.sql.SparkSession, root: String,
+      spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long,
       derive: DataFrame => Map[String, DataFrame],
       indexCols: Map[String, Seq[String]] = Map.empty,
       analyzeStats: Boolean = false): Boolean = {
     import spark.implicits._
-    import graft.sources.CatalogStore
-    val last: Long =
-      try {
-        val snap = CatalogStore.snapshot(spark, root)
-        if (snap.tables.contains("tick_meta"))
-          CatalogStore.read(spark, root, "tick_meta", snap)
-            .select("batch_id").head.getLong(0)
-        else -1L
-      } catch { case _: IllegalStateException => -1L } // empty store
-    if (batchId <= last) false
+    if (batchId <= lastTickId(spark, root)) false
     else {
       val tables = derive(batch)
       require(!tables.contains("tick_meta"),
@@ -423,17 +337,14 @@ object EtlStreaming {
   def catalogTicks(
       events: DataFrame, root: String,
       derive: DataFrame => Map[String, DataFrame],
-      interval: String = "30 minutes"): DataStreamWriter[org.apache.spark.sql.Row] =
+      interval: String = "30 minutes"): DataStreamWriter[Row] =
     events.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(interval))
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val batch = rawBatch.localCheckpoint(true)
-        if (!batch.isEmpty) {
+        FoldAndSwap.materialize(rawBatch).foreach(batch =>
           catalogTickBatch(batch.sparkSession, root, batch, batchId,
-            derive)
-          ()
-        }
+            derive))
       }
 
   /** One streaming-MERGE tick: the micro-batch's rows (through
@@ -450,22 +361,13 @@ object EtlStreaming {
     * every tick fold here: the stream owns its table.
     */
   def upsertTickBatch(
-      spark: org.apache.spark.sql.SparkSession, root: String,
+      spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long, table: String,
       keys: Seq[String],
       transform: DataFrame => DataFrame = identity): Boolean = {
     import spark.implicits._
-    import graft.sources.CatalogStore
     require(table != "tick_meta", "tick_meta is reserved")
-    val last: Long =
-      try {
-        val snap = CatalogStore.snapshot(spark, root)
-        if (snap.tables.contains("tick_meta"))
-          CatalogStore.read(spark, root, "tick_meta", snap)
-            .select("batch_id").head.getLong(0)
-        else -1L
-      } catch { case _: IllegalStateException => -1L } // empty store
-    if (batchId <= last) false
+    if (batchId <= lastTickId(spark, root)) false
     else {
       val updates = transform(batch)
       keys.foreach(k => require(updates.columns.contains(k),
@@ -489,16 +391,13 @@ object EtlStreaming {
       events: DataFrame, root: String, table: String,
       keys: Seq[String],
       transform: DataFrame => DataFrame = identity,
-      interval: String = "30 minutes"): DataStreamWriter[org.apache.spark.sql.Row] =
+      interval: String = "30 minutes"): DataStreamWriter[Row] =
     events.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(interval))
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val batch = rawBatch.localCheckpoint(true)
-        if (!batch.isEmpty) {
+        FoldAndSwap.materialize(rawBatch).foreach(batch =>
           upsertTickBatch(batch.sparkSession, root, batch, batchId,
-            table, keys, transform)
-          ()
-        }
+            table, keys, transform))
       }
 }

@@ -600,8 +600,8 @@ object EventsStreaming {
     * ([[graft.operators.Incremental.merge]] on the window keys), and
     * a redelivered batch re-replaces identical values (byte-stable,
     * spec-pinned) instead of double-counting the way a sketch-union
-    * fold would. Writes go through [[AnalysisStore.stageAndSwap]], so
-    * a tick that dies mid-write never half-destroys the table.
+    * fold would. Ticks through [[FoldAndSwap]]; the first merges
+    * into an empty table.
     *
     * Downstream, any "uniques over [range]" question is
     * [[graft.operators.SketchState.estimateRollup]] over this table —
@@ -612,30 +612,18 @@ object EventsStreaming {
       storePath: String,
       keys: Seq[String] = Seq("event_type", "ws"),
       interval: String = "30 minutes"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    windowSketches.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(interval))
-      .foreachBatch { (rawBatch: DataFrame, _: Long) =>
-        val spark = rawBatch.sparkSession
-        val batch = rawBatch.localCheckpoint(true)
-        if (!batch.isEmpty) {
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-            graft.sources.AnalysisStore.stageAndSwap(spark, storePath) {
-              staging =>
-                val prior = spark.read.parquet(storePath)
-                graft.operators.Incremental.merge(prior, batch, keys)
-                  // merge's key anti-join floats the key columns to
-                  // the front; pin the stored column order so ticks
-                  // (and replays) write a schema-stable table
-                  .select(prior.columns.map(col).toSeq: _*)
-                  .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                  .parquet(staging)
-            }
-          else batch.write.parquet(storePath)
-        }
-      }
+    FoldAndSwap.ticks(windowSketches, storePath, OutputMode.Append,
+        interval) { (batch, exists) =>
+      val prior =
+        if (exists) batch.sparkSession.read.parquet(storePath)
+        else batch.limit(0)
+      Some(FoldAndSwap.overwrite(
+        graft.operators.Incremental.merge(prior, batch, keys)
+          // merge's key anti-join floats the key columns to the
+          // front; pin the stored column order so ticks (and
+          // replays) write a schema-stable table
+          .select(prior.columns.map(col).toSeq: _*)))
+    }
 
   /** Recommended sink wiring for the aggregations above (documentation
     * +  smoke-tested): append mode emits each window exactly once,

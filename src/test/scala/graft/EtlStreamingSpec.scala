@@ -3,14 +3,15 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.examples.MambaEtlJob
 import graft.model.{EtlConfig, FlatColumn, FlatTableConfig}
 import graft.operators.Flatten
-import graft.streaming.EtlStreaming
+import graft.streaming.{EtlStreaming, EventsStreaming}
 
 /** The reference's scheduled ETL tick as a stream: changed-obs
   * micro-batches drive incremental flattening of the analysis store,
@@ -125,20 +126,24 @@ class EtlStreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("scd2Ticks: streamed history ≡ full batch build; redelivery no-ops") {
-    val batch1: Seq[Ev] = Seq(
+  private val scd2Batches: Seq[Seq[Ev]] = Seq(
+    Seq(
       (1L, ts("2024-01-01 10:00:00"), 1L, "A"),
       (1L, ts("2024-01-02 10:00:00"), 2L, "A"),
-      (2L, ts("2024-01-03 10:00:00"), 3L, "X"))
-    val batch2: Seq[Ev] = Seq(
+      (2L, ts("2024-01-03 10:00:00"), 3L, "X")),
+    Seq(
       (1L, ts("2024-02-01 10:00:00"), 4L, "B"), // change for user 1
       (2L, ts("2024-02-02 10:00:00"), 5L, "X"), // extends user 2's open run
-      (3L, ts("2024-02-03 10:00:00"), 6L, "N")) // new key
+      (3L, ts("2024-02-03 10:00:00"), 6L, "N"))) // new key
+
+  private def toEv(rows: Seq[Ev]): DataFrame =
+    rows.toDF("user_id", "ts", "event_id", "event_type")
+
+  test("scd2Ticks: streamed history ≡ full batch build; redelivery no-ops") {
+    val Seq(batch1, batch2) = scd2Batches
     val storePath = Files.createTempDirectory("scd2stream")
       .resolve("scd2").toString
     implicit val sqlCtx = spark.sqlContext
-    def toEv(rows: Seq[Ev]): DataFrame =
-      rows.toDF("user_id", "ts", "event_id", "event_type")
 
     val mem = MemoryStream[Ev]
     val q = EtlStreaming.scd2Ticks(
@@ -167,18 +172,26 @@ class EtlStreamingSpec extends SparkSpec {
     finally q2.stop()
     assert(spark.read.parquet(storePath).collect().toSet == before)
     // crash-safe swap leaves no staging/backup dirs behind
-    val siblings = new java.io.File(storePath).getParentFile.list().toSeq
-    assert(siblings == Seq("scd2"), s"leftovers: $siblings")
+    assertNoSwapLeftovers(storePath)
+  }
+
+  // change rows: (k, v, op, seq)
+  private val cdcBatches: Seq[Seq[(Long, String, String, Long)]] = Seq(
+    Seq((1L, "a", "c", 10L), (2L, "b", "c", 11L), (3L, "c", "c", 12L)),
+    Seq(
+      (2L, "B2", "u", 21L), (2L, "B1", "u", 20L), // out of order in-tick
+      (3L, "dead", "d", 22L),                     // hard delete
+      (4L, "d4", "c", 23L)))
+
+  /** The one-shot fold of every change row: what the store must hold. */
+  private def cdcOneShot(rows: Seq[(Long, String, String, Long)]): DataFrame = {
+    val changes = rows.toDF("k", "v", "op", "seq")
+    graft.operators.Incremental.applyChanges(
+      changes.drop("op").limit(0), changes, Seq("k"))
   }
 
   test("cdcApplyTicks: streamed folds ≡ one-shot applyChanges; redelivery no-ops without a mark") {
-    // change rows: (k, v, op, seq)
-    val batch1: Seq[(Long, String, String, Long)] = Seq(
-      (1L, "a", "c", 10L), (2L, "b", "c", 11L), (3L, "c", "c", 12L))
-    val batch2: Seq[(Long, String, String, Long)] = Seq(
-      (2L, "B2", "u", 21L), (2L, "B1", "u", 20L), // out of order in-tick
-      (3L, "dead", "d", 22L),                     // hard delete
-      (4L, "d4", "c", 23L))
+    val Seq(batch1, batch2) = cdcBatches
     val storePath = Files.createTempDirectory("cdcstream")
       .resolve("cdc").toString
     implicit val sqlCtx = spark.sqlContext
@@ -190,10 +203,7 @@ class EtlStreamingSpec extends SparkSpec {
       mem.addData(batch1: _*); q.processAllAvailable()
       mem.addData(batch2: _*); q.processAllAvailable()
     } finally q.stop()
-    val changes = (batch1 ++ batch2).toDF("k", "v", "op", "seq")
-    val oneShot = graft.operators.Incremental.applyChanges(
-      changes.drop("op").limit(0), changes, Seq("k"))
-    assertSameRows(spark.read.parquet(storePath), oneShot)
+    assertSameRows(spark.read.parquet(storePath), cdcOneShot(batch1 ++ batch2))
 
     // at-least-once: a fresh stream replays batch2 — every change
     // loses (or ties with identical image) against the stored seq, so
@@ -206,8 +216,7 @@ class EtlStreamingSpec extends SparkSpec {
     try { mem2.addData(batch2: _*); q2.processAllAvailable() }
     finally q2.stop()
     assert(spark.read.parquet(storePath).collect().toSet == before)
-    val siblings = new java.io.File(storePath).getParentFile.list().toSeq
-    assert(siblings == Seq("cdc"), s"leftovers: $siblings")
+    assertNoSwapLeftovers(storePath)
   }
 
   test("catalogTicks: per-tick atomic multi-table commits; replay guard no-ops") {
@@ -357,17 +366,29 @@ class EtlStreamingSpec extends SparkSpec {
     assertSameRows(read, table.filter(!col("k").isin(7L, 13L, 42L)))
     // the erasure path never rewrites a data file
     assert(dataFiles() == before)
+    assertNoSwapLeftovers(dvPath)
   }
 
-  test("joinViewTicks: multiplexed insert feed; view ≡ full rebuild; trio swaps atomically; redelivery no-ops") {
-    // tagged rows: (side, k, av, bv, ord) — av null for b-rows, bv for a-rows
-    val b1: Seq[(String, Long, String, String, Long)] = Seq(
+  private type Tagged = (String, Long, String, String, Long)
+
+  // tagged rows: (side, k, av, bv, ord) — av null for b-rows, bv for a-rows
+  private val joinBatches: Seq[Seq[Tagged]] = Seq(
+    Seq(
       ("a", 1L, "a1", null, 1L), ("a", 2L, "a2", null, 2L),
-      ("b", 1L, null, "b1", 3L), ("b", 3L, null, "b3e", 4L))
-    val b2: Seq[(String, Long, String, String, Long)] = Seq(
+      ("b", 1L, null, "b1", 3L), ("b", 3L, null, "b3e", 4L)),
+    Seq(
       ("a", 3L, "a3", null, 5L),                      // late order meets early line
       ("b", 2L, null, "b2", 6L), ("b", 3L, null, "b3l", 7L),
-      ("b", 9L, null, "b9", 8L))                      // unmatched key
+      ("b", 9L, null, "b9", 8L)))                     // unmatched key
+
+  /** One side's rows of `rows`, as that side's base table. */
+  private def joinSide(rows: Seq[Tagged], side: String, c: String) = rows
+    .filter(_._1 == side)
+    .map(r => (r._2, if (side == "a") r._3 else r._4))
+    .toDF("k", c)
+
+  test("joinViewTicks: multiplexed insert feed; view ≡ full rebuild; trio swaps atomically; redelivery no-ops") {
+    val Seq(b1, b2) = joinBatches
     val storePath = Files.createTempDirectory("jvticks")
       .resolve("jv").toString
     implicit val sqlCtx = spark.sqlContext
@@ -380,12 +401,8 @@ class EtlStreamingSpec extends SparkSpec {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    def allRows(rows: Seq[(String, Long, String, String, Long)], side: String, c: String) = rows
-      .filter(_._1 == side)
-      .map(r => (r._2, if (side == "a") r._3 else r._4))
-      .toDF("k", c)
-    val aFull = allRows(b1 ++ b2, "a", "av")
-    val bFull = allRows(b1 ++ b2, "b", "bv")
+    val aFull = joinSide(b1 ++ b2, "a", "av")
+    val bFull = joinSide(b1 ++ b2, "b", "bv")
     assertSameRows(spark.read.parquet(s"$storePath/view"),
       aFull.join(bFull, Seq("k")))
     assertSameRows(spark.read.parquet(s"$storePath/a"), aFull)
@@ -401,8 +418,125 @@ class EtlStreamingSpec extends SparkSpec {
     finally q2.stop()
     assert(spark.read.parquet(s"$storePath/view").collect().toSet == before)
     // one-rename swap leaves no staging/backup siblings
-    val siblings = new java.io.File(storePath).getParentFile.list().toSeq
-    assert(siblings == Seq("jv"), s"leftovers: $siblings")
+    assertNoSwapLeftovers(storePath)
+  }
+
+  /** Runs `rows` as one micro-batch through a fresh stream (a fresh
+    * checkpoint) that `wire` builds on the stream's frame.
+    */
+  private def tickOnce[T: Encoder](rows: Seq[T])(
+      wire: DataFrame => DataStreamWriter[Row]): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[T]
+    val q = wire(mem.toDF()).start()
+    try { mem.addData(rows: _*); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  /** A state-folding stream under the crash-window test: the store its
+    * state lives in, batch i ticked on a fresh stream, and the check
+    * that the store holds the fold of both batches.
+    */
+  private case class Folding(store: String, tick: Int => Unit,
+      foldsBoth: () => Unit)
+
+  private type Event = (Long, Timestamp, Long, String, Double)
+
+  // click windows on two days; each batch's "tick" event closes them
+  private val sketchBatches: Seq[Seq[Event]] = Seq(
+    Seq((1L, ts("2024-01-01 10:05:00"), 1L, "click", 0.0),
+      (2L, ts("2024-01-01 10:10:00"), 2L, "click", 0.0),
+      (3L, ts("2024-01-02 23:00:00"), 9L, "tick", 0.0)),
+    Seq((4L, ts("2024-01-03 10:05:00"), 2L, "click", 0.0),
+      (5L, ts("2024-01-03 10:20:00"), 3L, "click", 0.0),
+      (6L, ts("2024-01-04 23:00:00"), 9L, "tick", 0.0)))
+
+  private val dvKeyBatches: Seq[Seq[Long]] = Seq(Seq(7L, 13L), Seq(13L, 42L))
+
+  private val crashCases: Seq[(String, String => Folding)] = Seq(
+    "scd2Ticks" -> { root =>
+      val path = s"$root/scd2"
+      Folding(path,
+        i => tickOnce(scd2Batches(i))(df => EtlStreaming.scd2Ticks(
+          df.toDF("user_id", "ts", "event_id", "event_type"), path,
+          "user_id", "ts", "event_id", "event_type",
+          interval = "0 seconds")),
+        () => assertSameRows(spark.read.parquet(path).drop("__max_ord"),
+          graft.operators.Incremental.scd2History(toEv(scd2Batches.flatten),
+            "user_id", "ts", "event_id", "event_type")))
+    },
+    "cdcApplyTicks" -> { root =>
+      val path = s"$root/cdc"
+      Folding(path,
+        i => tickOnce(cdcBatches(i))(df => EtlStreaming.cdcApplyTicks(
+          df.toDF("k", "v", "op", "seq"), path, Seq("k"),
+          interval = "0 seconds")),
+        () => assertSameRows(spark.read.parquet(path),
+          cdcOneShot(cdcBatches.flatten)))
+    },
+    "dvTicks" -> { root =>
+      val tablePath = s"$root/t"
+      val path = s"$root/dv"
+      val table = (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
+      table.repartition(3).write.parquet(tablePath)
+      Folding(path,
+        i => tickOnce(dvKeyBatches(i))(df => EtlStreaming.dvTicks(
+          df.toDF("k"), tablePath, path, Seq("k"), interval = "0 seconds")),
+        () => assertSameRows(graft.operators.Layout.readWithDv(
+            spark, tablePath, spark.read.parquet(path)),
+          table.filter(!col("k").isin(dvKeyBatches.flatten: _*))))
+    },
+    "joinViewTicks" -> { root =>
+      val path = s"$root/jv"
+      Folding(path,
+        i => tickOnce(joinBatches(i))(df => EtlStreaming.joinViewTicks(
+          df.toDF("side", "k", "av", "bv", "ord"), path, Seq("k"),
+          aCols = Seq("k", "av"), bCols = Seq("k", "bv"),
+          interval = "0 seconds")),
+        () => {
+          val aFull = joinSide(joinBatches.flatten, "a", "av")
+          val bFull = joinSide(joinBatches.flatten, "b", "bv")
+          assertSameRows(spark.read.parquet(s"$path/view"),
+            aFull.join(bFull, Seq("k")))
+          assertSameRows(spark.read.parquet(s"$path/a"), aFull)
+          assertSameRows(spark.read.parquet(s"$path/b"), bFull)
+        })
+    },
+    "sketchStateTicks" -> { root =>
+      val path = s"$root/sketches"
+      // per click window: its row count and its sketch's estimate
+      def clickWindows(sketches: DataFrame) = sketches
+        .filter(col("event_type") === "click")
+        .select(col("ws"), col("n_rows"),
+          hll_sketch_estimate(col("sketch")).as("users"))
+      Folding(path,
+        i => tickOnce(sketchBatches(i))(df => EventsStreaming.sketchStateTicks(
+          EventsStreaming.uniqueUserSketches(
+            df.toDF("event_id", "ts", "user_id", "event_type", "value"),
+            windowLen = "1 hour", watermarkDelay = "1 hour"),
+          path, interval = "0 seconds")),
+        () => assertSameRows(clickWindows(spark.read.parquet(path)),
+          clickWindows(EventsStreaming.uniqueUserSketches(
+            sketchBatches.flatten
+              .toDF("event_id", "ts", "user_id", "event_type", "value"),
+            windowLen = "1 hour"))))
+    })
+
+  // The state a crash inside AnalysisStore.swap leaves: the live store
+  // renamed to its backup, the staging not yet renamed in. The next
+  // tick must fold against the backed-up state, not against nothing.
+  crashCases.foreach { case (name, make) =>
+    test(s"$name: a crash between the swap's renames loses no state") {
+      val f = make(Files.createTempDirectory("crashwindow").toString)
+      f.tick(0)
+      val fs = new org.apache.hadoop.fs.Path(f.store)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(f.store),
+        new org.apache.hadoop.fs.Path(f.store + "__old")))
+      f.tick(1)
+      f.foldsBoth()
+      assertNoSwapLeftovers(f.store)
+    }
   }
 
   test("scd2Ticks: IntegerType order column survives the mark round-trip") {

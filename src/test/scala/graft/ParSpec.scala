@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +30,31 @@ class ParSpec extends AnyFunSuite {
       Par.two[Int, Int](throw new RuntimeException("leg-a"), 2)
     }
     assert(boomA.getMessage === "leg-a")
+  }
+
+  /** A caller that handles a leg's failure (CatalogStore.commit's
+    * cleanup of its staging dirs) must not race a sibling leg that is
+    * still running: that leg's output would land after the cleanup.
+    */
+  test("a failing leg rethrows only after every other leg has finished") {
+    def slowLeg(done: AtomicBoolean): Int = {
+      Thread.sleep(200)
+      done.set(true)
+      2
+    }
+    val twoDone = new AtomicBoolean(false)
+    val boom = intercept[RuntimeException] {
+      Par.two[Int, Int](throw new RuntimeException("leg-a"), slowLeg(twoDone))
+    }
+    assert(boom.getMessage === "leg-a")
+    assert(twoDone.get, "the second leg was still running")
+    val allDone = new AtomicBoolean(false)
+    val boomAll = intercept[RuntimeException] {
+      Par.all(Seq(() => throw new RuntimeException("thunk-0"),
+        () => slowLeg(allDone)))
+    }
+    assert(boomAll.getMessage === "thunk-0")
+    assert(allDone.get, "the second thunk was still running")
   }
 
   /** The r13 deadlock shape: more outer legs than pool threads, each

@@ -88,6 +88,17 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** No staging or backup sibling (`<name>__staging`, `<name>__old`)
+    * is left next to the store at `path`: a finished or healed swap
+    * cleans up after itself.
+    */
+  def assertNoSwapLeftovers(path: String): Unit = {
+    val store = new java.io.File(path)
+    val siblings = store.getParentFile.list().toSeq
+      .filter(_.startsWith(store.getName)).sorted
+    assert(siblings == Seq(store.getName), s"leftovers: $siblings")
+  }
+
   /** Order-insensitive comparison on fully-collected small results. */
   def assertSameRows(actual: DataFrame, expected: DataFrame): Unit = {
     val a = actual.collect().map(_.toSeq).sortBy(_.mkString("|"))

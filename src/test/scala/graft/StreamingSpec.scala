@@ -653,5 +653,6 @@ class StreamingSpec extends SparkSpec {
         case x => x
       }).toSet
     assert(after == before)
+    assertNoSwapLeftovers(storePath)
   }
 }
