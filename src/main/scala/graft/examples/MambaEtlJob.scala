@@ -221,7 +221,8 @@ object MambaEtlJob {
     if (config.incrementalMode == 0)
       runPersisted(spark, config, sources, encounterTypeIds, storeRoot, flatConfigs)
     else {
-      val changed = encountersChangedSince(sources, bookmarks.read())
+      // collected by the first type's store leg, then shared
+      lazy val changed = encountersChangedSince(sources, bookmarks.read())
       encounterTypeIds.foreach(tickChanged(spark, config, sources, _,
         storeRoot, changed, flatConfigs))
     }
@@ -289,70 +290,99 @@ object MambaEtlJob {
     * disappears from its old month). Write amplification per tick
     * tracks the delta.
     *
-    * `changed` holds the changed encounter ids on the driver
-    * ([[changedEncounters]]). It must be delta-sized, because each
-    * driver collects it: a window that changes more than
-    * [[ModelCollect.MaxModelRows]] encounters fails that collect
-    * before any write, and as [[scheduledTick]] keeps its bookmark on
-    * failure, every retry of the window fails the same way; such a
-    * backlog is reinstalled (`incrementalMode` 0) instead. The set
-    * enters the tick as one membership predicate on `encounter_id`, a
-    * UDF that holds it: generated code reaches the set through a
-    * reference, never through inlined ids (as a literal `IN` list's
-    * code does for an INT key, or for 10 ids or fewer), so the stages
-    * that filter on it compile once per JVM, whatever the key type or
-    * the set's size. Being opaque, the predicate is not pushed into
-    * the parquet scans. It picks the affected obs and the type's
-    * changed encounters, and marks the merge's removed keys; no frame
-    * of ids is broadcast or joined. An id of another type, or of a
-    * voided encounter, re-pivots nothing into this type's tables: the
-    * delta is joined with the type's live changed encounters, a
+    * `changed` names the changed encounter ids, collected on the driver
+    * ([[changedEncounters]]); it is evaluated exactly once. It must be
+    * delta-sized, because each driver collects it: a window that
+    * changes more than [[ModelCollect.MaxModelRows]] encounters fails
+    * that collect before any write, and as [[scheduledTick]] keeps its
+    * bookmark on failure, every retry of the window fails the same
+    * way; such a backlog is reinstalled (`incrementalMode` 0) instead.
+    * The set enters the tick as one membership predicate on
+    * `encounter_id`, a UDF that holds it: generated code reaches the
+    * set through a reference, never through inlined ids (as a literal
+    * `IN` list's code does for an INT key, or for 10 ids or fewer), so
+    * the stages that filter on it compile once per JVM, whatever the
+    * key type or the set's size. Being opaque, the predicate is not
+    * pushed into the parquet scans. It picks the affected obs and the
+    * type's changed encounters, and marks the merge's removed keys; no
+    * frame of ids is broadcast or joined. An id of another type, or of
+    * a voided encounter, re-pivots nothing into this type's tables:
+    * the delta is joined with the type's live changed encounters, a
     * delta-sized join.
+    *
+    * Two lookups share nothing, so they run as two legs of one
+    * [[graft.Par.two]], and the write waits for the longer one instead
+    * of their sum:
+    *  - the store leg, on the caller thread, reads the changed set and
+    *    the store: it evaluates `changed`, lists the type's stored
+    *    tables, reads each ([[graft.sources.AnalysisStore.readExisting]])
+    *    and collects the month partitions a merge into it touches
+    *    ([[graft.sources.AnalysisStore.touchedPartitions]]);
+    *  - the config leg reads the sources only: the type's
+    *    [[FlatTableConfig]], the given one or a
+    *    [[Flatten.autoConfig]] scan.
+    * A failure in either leg is rethrown once both have finished, before
+    * any write.
     *
     * The delta is pivoted once per table, by the write. The months it
     * touches are the visit months of the type's live changed
     * encounters, not of the pivoted delta: every delta row is one of
     * those encounters and takes its month from the same row, so the
-    * months cover the delta exactly, and one frame serves every
-    * continuation table of the type.
+    * months cover the delta exactly, and one collect per stored table
+    * serves whatever columns the config gives its delta.
     *
     * A type wider than `config.columns` ticks each of its
     * continuation tables the same way. When the type's concept set
     * has changed since its tables were written (a concept first used,
     * voided away or renamed), the delta's columns or its table list no
-    * longer match the stored ones; that tick rebuilds every table of
-    * the type from the sources, laid out as [[runPersisted]] writes
-    * them, each through a crash-safe swap, and drops the stored
-    * continuation tables the new split no longer has. A table not yet
-    * stored is written from the delta alone.
+    * longer match the stored ones; that tick discards its touched
+    * collects and rebuilds every table of the type from the sources,
+    * laid out as [[runPersisted]] writes them, each through a
+    * crash-safe swap, and drops the stored continuation tables the new
+    * split no longer has. A table not yet stored is written from the
+    * delta alone.
     */
   def tickChanged(spark: SparkSession, config: EtlConfig, src: Sources,
-      encounterTypeId: Int, storeRoot: String, changed: Set[Long],
+      encounterTypeId: Int, storeRoot: String, changed: => Set[Long],
       flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit = {
-    val cfg = flatConfigs.getOrElse(encounterTypeId,
-      Flatten.autoConfig(src.obs, src.encounter, src.concept,
-        encounterTypeId, locale = Some(config.locale)))
-      .copy(tableName = s"mamba_flat_encounter_$encounterTypeId")
-    val isChanged = udf(IsIn(changed)).apply(col("encounter_id"))
+    val store = graft.sources.AnalysisStore
+    val base = s"mamba_flat_encounter_$encounterTypeId"
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)
       .select("encounter_id", "patient_id", "encounter_datetime")
-    val changedEncs = encIds.filter(isChanged)
+    // store leg (first, so on the caller thread, where a micro-batch's
+    // `changed` is collected): the membership predicate, and per stored
+    // path its table and touched partitions, None for a stored path
+    // with no data file
+    val ((isChanged, stored), cfg) = graft.Par.two({
+        val ids = changed
+        val isChanged = udf(IsIn(ids)).apply(col("encounter_id"))
+        val parts = withVisitMonth(encIds.filter(isChanged))
+        isChanged -> storedTables(spark, storeRoot, base).map { t =>
+          val path = s"$storeRoot/$t"
+          path -> store.readExisting(spark, path).map(table => table ->
+            store.touchedPartitions(table, parts, keys = Seq("encounter_id"),
+              partitionBy = Seq("visit_month"), removeKeys = isChanged))
+        }.toMap
+      },
+      flatConfigs.getOrElse(encounterTypeId,
+        Flatten.autoConfig(src.obs, src.encounter, src.concept,
+          encounterTypeId, locale = Some(config.locale)))
+        .copy(tableName = base))
     // (store path, wide rows) per continuation table of the type
     def flat(obs: DataFrame, encs: DataFrame) =
       Flatten.flattenObsSplit(obs, cfg, config.columns).map { case (t, df) =>
         s"$storeRoot/$t" ->
           withVisitMonth(df.join(encs, Seq("encounter_id")))
       }
-    val deltas = flat(src.obs.filter(isChanged), changedEncs)
-    val store = graft.sources.AnalysisStore
-    val stale = storedTables(spark, storeRoot, cfg.tableName)
-      .map(t => s"$storeRoot/$t").filterNot(p => deltas.exists(_._1 == p))
-    val stored = deltas.map { case (path, _) => store.readExisting(spark, path) }
-    val reshaped = stale.nonEmpty || (stored.exists(_.isDefined) &&
-      stored.zip(deltas).exists { case (table, (_, delta)) =>
-        !table.exists(_.columns.toSet == delta.columns.toSet)
-      })
+    val deltas = flat(src.obs.filter(isChanged), encIds.filter(isChanged))
+    def storedOf(path: String) = stored.get(path).flatten
+    val stale = stored.keys.toSeq.filterNot(p => deltas.exists(_._1 == p))
+    val reshaped = stale.nonEmpty ||
+      (deltas.exists(d => storedOf(d._1).isDefined) &&
+        deltas.exists { case (path, delta) =>
+          !storedOf(path).exists(_._1.columns.toSet == delta.columns.toSet)
+        })
     if (reshaped) {
       flat(src.obs, encIds).foreach { case (path, df) =>
         store.stageAndSwap(spark, path) { staging =>
@@ -361,11 +391,13 @@ object MambaEtlJob {
       }
       stale.foreach(store.drop(spark, _))
     } else
-      deltas.zip(stored).foreach { case ((path, delta), table) =>
-        store.writeIncrementalPartitioned(spark, delta, path,
-          keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
-          removeKeys = isChanged,
-          parts = Some(withVisitMonth(changedEncs)), existing = table)
+      deltas.foreach { case (path, delta) =>
+        storedOf(path) match {
+          case Some((table, touched)) =>
+            store.writeIncrementalPartitioned(spark, delta, path, table,
+              touched, partitionBy = Seq("visit_month"), removeKeys = isChanged)
+          case None => store.writeFull(delta, path, Seq("visit_month"))
+        }
       }
   }
 }

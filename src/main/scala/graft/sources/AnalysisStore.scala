@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 import graft.operators.Incremental
 
@@ -450,6 +450,66 @@ object AnalysisStore {
         }
     }
 
+  /** Partition-pruned incremental merge, step one: the partitions a
+    * merge into `table` touches, in ONE bounded collect ([[graft
+    * .operators.ModelCollect]], model-sized, never row data). They are
+    * the values of `parts`, plus the stored partitions of the rows
+    * `removeKeys` drops, each with the file holding those rows. Each
+    * returned row is the `partitionBy` values followed by that file's
+    * path, null for a value of `parts`; pass it unchanged to
+    * [[writeIncrementalPartitioned]].
+    *
+    * It reads `parts` and the stored table only, never the delta, so a
+    * caller can run it beside whatever builds the delta
+    * ([[graft.examples.MambaEtlJob.tickChanged]] runs it beside the
+    * type's config scan).
+    *
+    * @param table the stored table, as [[readExisting]] gave it
+    * @param parts a frame carrying `partitionBy` whose values cover
+    *        every partition value of the delta. Only those columns are
+    *        read, so a caller that knows where its delta lands (say,
+    *        from the changed keys' dates) spares the collect an
+    *        evaluation of an expensive delta; pass the delta itself
+    *        otherwise. Naming a value the delta does not land in is
+    *        harmless: that partition is rewritten with its own rows,
+    *        less those of the removed keys. Missing one is not: its
+    *        directory would be replaced by the delta's rows alone.
+    * @param removeKeys a predicate over `keys`, true for the stored
+    *        rows that must be dropped: the delta's own keys (their rows
+    *        are replaced), and keys whose rows must go even when the
+    *        delta carries no replacement row (the deleted/voided-away
+    *        case — a merge keyed only on the delta's rows would leave
+    *        them behind) or carries one in another partition. A
+    *        predicate such as `col(k).isin(ids: _*)` filters the stored
+    *        table with no join. The partitions of the rows it drops are
+    *        found by a column-pruned scan of (keys ++ partitionBy) —
+    *        O(table) in rows but only a few columns of IO. A row for
+    *        which it is null (a null key) is kept, as an anti-join on
+    *        the keys keeps it.
+    */
+  def touchedPartitions(
+      table: DataFrame, parts: DataFrame, keys: Seq[String],
+      partitionBy: Seq[String],
+      removeKeys: org.apache.spark.sql.Column): Seq[Row] = {
+    require(partitionBy.nonEmpty,
+      "use writeIncremental for unpartitioned tables")
+    import org.apache.spark.sql.functions.{col, lit}
+    // rows being removed may live in partitions the delta no longer
+    // writes to — locate them, and the files holding them, so their
+    // partitions are rewritten too
+    val file = "__file"
+    val removedParts = table.select((keys ++ partitionBy).map(col) :+
+        col("_metadata.file_path").as(file): _*)
+      .filter(removeKeys)
+      .select((partitionBy :+ file).map(col): _*)
+    graft.operators.ModelCollect.bounded(
+      parts.select(partitionBy.map(col) :+
+          lit(null).cast("string").as(file): _*)
+        .union(removedParts).distinct(),
+      graft.operators.ModelCollect.MaxModelRows, "touched partition values")
+      .toSeq
+  }
+
   /** Partition-pruned incremental merge — the write-side twin of the
     * read-side partition pruning, and the shape a tick MUST take at
     * 100 TB (reference README.md:133-134 "only add/modify what has
@@ -457,15 +517,13 @@ object AnalysisStore {
     * whole table every tick, which turns a 30-minute schedule into a
     * full-store write amplification.
     *
-    * Mechanism, one collect and one write:
-    *  - collect the touched partition values in ONE bounded job — the
-    *    values of `parts` (the delta's own when absent), plus the
-    *    stored partitions of `removeKeys` with the files holding them
-    *    (a tuple per touched partition and removed-key file,
-    *    model-sized, never row data);
-    *  - read ONLY those partitions back (the literal predicate prunes
-    *    at the directory level), drop the rows of the removed keys and
-    *    union the delta;
+    * Step two of the merge, after [[touchedPartitions]] (the caller
+    * holds both the stored table and that collect, so it can run the
+    * collect beside other work; a missing table is a plain
+    * [[writeFull]] of the delta, which the caller does):
+    *  - read ONLY the touched partitions back (the literal predicate
+    *    prunes at the directory level), drop the rows of the removed
+    *    keys and union the delta;
     *  - write that with dynamic partition overwrite, clustered by the
     *    partition columns so each touched partition comes out as one
     *    file. Spark replaces exactly the partition directories present
@@ -490,61 +548,18 @@ object AnalysisStore {
     * `removeKeys`, so its old partition is located and rewritten
     * without it.
     *
-    * @param removeKeys a predicate over `keys`, true for the stored
-    *        rows that must be dropped: the delta's own keys (their rows
-    *        are replaced), and keys whose rows must go even when
-    *        `delta` carries no replacement row (the deleted/voided-away
-    *        case — a merge keyed only on the delta's rows would leave
-    *        them behind) or carries one in another partition. A
-    *        predicate such as `col(k).isin(ids: _*)` filters the stored
-    *        table with no join. The partitions of the rows it drops are
-    *        found by a column-pruned scan of (keys ++ partitionBy) —
-    *        O(table) in rows but only a few columns of IO. A row for
-    *        which it is null (a null key) is kept, as an anti-join on
-    *        the keys keeps it.
-    * @param parts a frame carrying `partitionBy` whose values cover
-    *        every partition value of `delta`. Only those columns are
-    *        read, so a caller that knows where its delta lands (say,
-    *        from the changed keys' dates) spares the collect an
-    *        evaluation of an expensive delta. Naming a value the delta
-    *        does not land in is harmless: that partition is rewritten
-    *        with its own rows, less those of the removed keys. Missing
-    *        one is not: its directory would be replaced by the delta's
-    *        rows alone. Defaults to `delta`.
-    * @param existing the table as the caller already read it with
-    *        [[readExisting]]; read here when absent, so a caller that
-    *        inspects the table first shares its read (one listing and
-    *        one footer) instead of reading twice.
+    * @param table   the stored table at `path`, as [[readExisting]]
+    *                gave it
+    * @param touched [[touchedPartitions]] of `table` with the same
+    *                `partitionBy` and `removeKeys`; nothing is written
+    *                when it is empty
     */
   def writeIncrementalPartitioned(
       spark: SparkSession, delta: DataFrame, path: String,
-      keys: Seq[String], partitionBy: Seq[String],
-      removeKeys: org.apache.spark.sql.Column,
-      parts: Option[DataFrame] = None,
-      existing: Option[DataFrame] = None): Unit = {
-    require(partitionBy.nonEmpty,
-      "use writeIncremental for unpartitioned tables")
-    val table = existing.orElse(readExisting(spark, path)) match {
-      case Some(t) => t
-      case None =>
-        writeFull(delta, path, partitionBy)
-        return
-    }
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    // rows being removed may live in partitions the delta no longer
-    // writes to — locate them, and the files holding them, so their
-    // partitions are rewritten too
-    val file = "__file"
-    val removedParts = table.select((keys ++ partitionBy).map(col) :+
-        col("_metadata.file_path").as(file): _*)
-      .filter(removeKeys)
-      .select((partitionBy :+ file).map(col): _*)
-    val touched = graft.operators.ModelCollect.bounded(
-      parts.getOrElse(delta).select(partitionBy.map(col) :+
-          lit(null).cast("string").as(file): _*)
-        .union(removedParts).distinct(),
-      graft.operators.ModelCollect.MaxModelRows, "touched partition values")
+      table: DataFrame, touched: Seq[Row], partitionBy: Seq[String],
+      removeKeys: org.apache.spark.sql.Column): Unit = {
     if (touched.isEmpty) return
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val touchedPred = touched.map(_.toSeq.init).distinct.map { values =>
       partitionBy.zip(values).map { case (c, v) => col(c) === lit(v) }
         .reduce(_ && _)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{input_file_name, max, min}
 
 import graft.sources.AnalysisStore
@@ -14,6 +15,22 @@ class AnalysisStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
+  /** A partitioned merge as a tick runs it: read the stored table,
+    * collect the partitions the merge touches, then write; a missing
+    * table is a plain partitioned write of the delta.
+    */
+  private def mergePartitioned(delta: DataFrame, path: String,
+      keys: Seq[String], partitionBy: Seq[String], removeKeys: Column,
+      parts: Option[DataFrame] = None): Unit =
+    AnalysisStore.readExisting(spark, path) match {
+      case None => AnalysisStore.writeFull(delta, path, partitionBy)
+      case Some(table) =>
+        val touched = AnalysisStore.touchedPartitions(table,
+          parts.getOrElse(delta), keys, partitionBy, removeKeys)
+        AnalysisStore.writeIncrementalPartitioned(spark, delta, path, table,
+          touched, partitionBy, removeKeys)
+    }
 
   test("writeFull overwrites idempotently; partitioning lays out dirs") {
     val dir = Files.createTempDirectory("store").resolve("t").toString
@@ -236,7 +253,7 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incp").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-01", "b1"),
       (3L, "2024-02", "c1"), (4L, "2024-03", "d1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L, 3L, 4L))
     def snap(part: String): Seq[(String, Long, Long)] = {
       val d = new java.io.File(s"$dir/m=$part")
@@ -250,7 +267,7 @@ class AnalysisStoreSpec extends SparkSpec {
     // tick touches only 2024-01: update k=2, insert k=5
     val delta = Seq((2L, "2024-01", "b2"), (5L, "2024-01", "e2"))
       .toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, delta, dir, Seq("k"), Seq("m"),
+    mergePartitioned(delta, dir, Seq("k"), Seq("m"),
       $"k".isin(2L, 5L))
     // untouched partitions: same files, same bytes, same mtimes
     assert(snap("2024-02") == before02, "2024-02 must not be rewritten")
@@ -260,7 +277,7 @@ class AnalysisStoreSpec extends SparkSpec {
     assert(rows.toSeq == Seq((1L, "a1"), (2L, "b2"), (3L, "c1"),
       (4L, "d1"), (5L, "e2")))
     // the same with the touched values given as their own frame
-    AnalysisStore.writeIncrementalPartitioned(spark,
+    mergePartitioned(
       Seq((1L, "2024-01", "a3")).toDF("k", "m", "v"), dir, Seq("k"), Seq("m"),
       $"k".isin(1L),
       parts = Some(Seq("2024-01").toDF("m")))
@@ -274,11 +291,11 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incparts").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (3L, "2024-02", "c1"), (4L, "2024-03", "d1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L, 3L, 4L))
     // the delta lands in 2024-01 only; parts also names 2024-02, which
     // holds rows, and 2024-04, which does not exist
-    AnalysisStore.writeIncrementalPartitioned(spark,
+    mergePartitioned(
       Seq((1L, "2024-01", "a2")).toDF("k", "m", "v"), dir, Seq("k"), Seq("m"),
       $"k".isin(1L),
       parts = Some(Seq("2024-01", "2024-02", "2024-04").toDF("m")))
@@ -293,7 +310,7 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incrm").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (4L, "2024-02", "d1"), (3L, "2024-03", "c1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L, 3L, 4L))
     def snap(part: String): Seq[(String, Long, Long)] =
       new java.io.File(s"$dir/m=$part").listFiles()
@@ -304,7 +321,7 @@ class AnalysisStoreSpec extends SparkSpec {
     // tick: update k=1 (2024-01) and DELETE k=2 — which lives in
     // 2024-02, a partition the delta writes nothing to
     val delta = Seq((1L, "2024-01", "a2")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, delta, dir,
+    mergePartitioned(delta, dir,
       Seq("k"), Seq("m"), removeKeys = $"k".isin(1L, 2L))
     val rows = spark.read.parquet(dir).select("k", "v").as[(Long, String)]
       .collect().sortBy(_._1)
@@ -317,10 +334,10 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incmv").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (4L, "2024-02", "d1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L, 4L))
     // k=2 moves from 2024-02 to 2024-03; 2024-02 keeps k=4
-    AnalysisStore.writeIncrementalPartitioned(spark,
+    mergePartitioned(
       Seq((2L, "2024-03", "b2")).toDF("k", "m", "v"), dir,
       Seq("k"), Seq("m"), removeKeys = $"k".isin(2L))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
@@ -333,11 +350,11 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incempty").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-02", "b1"),
       (3L, "2024-03", "c1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L, 3L))
     // k=2 moves out of 2024-02 and k=3 is removed: neither old
     // partition keeps a row, and the delta lands in 2024-04
-    AnalysisStore.writeIncrementalPartitioned(spark,
+    mergePartitioned(
       Seq((2L, "2024-04", "b2")).toDF("k", "m", "v"), dir,
       Seq("k"), Seq("m"), removeKeys = $"k".isin(2L, 3L))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
@@ -351,10 +368,10 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incnull").toString
     val v1 = Seq((Some(1L), "2024-01", "a1"), (None, "2024-01", "n1"),
       (Some(2L), "2024-02", "b1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L))
     // the merge rewrites 2024-01, where the null-keyed row lives
-    AnalysisStore.writeIncrementalPartitioned(spark,
+    mergePartitioned(
       Seq((Some(1L), "2024-01", "a2")).toDF("k", "m", "v"), dir,
       Seq("k"), Seq("m"), removeKeys = $"k".isin(1L))
     val rows = spark.read.parquet(dir).select("k", "m", "v")
@@ -389,7 +406,7 @@ class AnalysisStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("store").resolve("incfail").toString
     val v1 = Seq((1L, "2024-01", "a1"), (2L, "2024-01", "b1"),
       (3L, "2024-02", "c1")).toDF("k", "m", "v")
-    AnalysisStore.writeIncrementalPartitioned(spark, v1, dir, Seq("k"), Seq("m"),
+    mergePartitioned(v1, dir, Seq("k"), Seq("m"),
       $"k".isin(1L, 2L, 3L))
     def snap(): Seq[(String, Long, Long)] =
       Seq("2024-01", "2024-02").flatMap(p =>
@@ -407,7 +424,7 @@ class AnalysisStoreSpec extends SparkSpec {
       when(col("id") === 2L, raise_error(lit("boom")))
         .otherwise(lit("e2")).as("v"))
     val e = intercept[org.apache.spark.SparkThrowable] {
-      AnalysisStore.writeIncrementalPartitioned(spark, delta, dir, Seq("k"), Seq("m"),
+      mergePartitioned(delta, dir, Seq("k"), Seq("m"),
         $"k".isin(2L, 5L))
     }
     assert(e.getCondition == "USER_RAISED_EXCEPTION", e)
@@ -427,7 +444,7 @@ class AnalysisStoreSpec extends SparkSpec {
       Seq((2L, "2024-02", "b2"), (3L, "2024-03", "c2")),
       Seq((1L, "2024-01", "a3"), (4L, "2024-02", "d3")))
     ticks.foreach { t =>
-      AnalysisStore.writeIncrementalPartitioned(spark,
+      mergePartitioned(
         t.toDF("k", "m", "v"), incDir, Seq("k"), Seq("m"),
         $"k".isin(t.map(_._1): _*))
     }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 import graft.examples.MambaEtlJob
@@ -456,24 +458,84 @@ class MambaLifecycleSpec extends SparkSpec {
   }
 
   test("a mode-1 scheduled tick over two types collects the changed set once and equals a fresh install") {
-    // one firing lands a changed obs in a type-7 and in a type-8 encounter
+    // one firing lands a changed obs in a type-7 and in a type-8
+    // encounter; a one-type tickPersisted takes the same set by name
     val cfgE = EtlConfig("/src", "/out", incrementalMode = 1)
     val installed = onDisk(sources)
-    val root = Files.createTempDirectory("mambasched2").toString
-    MambaEtlJob.runPersisted(spark, cfgE, installed, Seq(7, 8), root)
-    val bookmarks = new BookmarkStore(
-      Files.createTempDirectory("mambasched2bm").resolve("bookmark").toString)
-    Incremental.nextBookmark(installed.obs, Seq("obs_datetime"))
-      .foreach(bookmarks.write)
+    val mark = Incremental.nextBookmark(installed.obs, Seq("obs_datetime"))
     val next = onDisk(onObs(bumpObs(1L, "2024-03-10 08:00:00")
       .andThen(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
         "2024-03-10 08:05:00")))(installed))
-    val sites = querySites {
-      MambaEtlJob.scheduledTick(spark, cfgE, next, Seq(7, 8), root, bookmarks)
+    Seq[(String, Seq[Int], (String, BookmarkStore) => Unit)](
+      ("scheduledTick", Seq(7, 8), (root, bookmarks) =>
+        MambaEtlJob.scheduledTick(spark, cfgE, next, Seq(7, 8), root, bookmarks)),
+      ("tickPersisted", Seq(7), (root, _) =>
+        MambaEtlJob.tickPersisted(spark, cfgE, next, 7, root, mark))
+    ).foreach { case (driver, types, tick) =>
+      val root = Files.createTempDirectory("mambasched2").toString
+      MambaEtlJob.runPersisted(spark, cfgE, installed, types, root)
+      val bookmarks = new BookmarkStore(
+        Files.createTempDirectory("mambasched2bm").resolve("bookmark").toString)
+      mark.foreach(bookmarks.write)
+      val sites = querySites(tick(root, bookmarks))
+      assert(sites.count(_.contains("MambaEtlJob$.changedEncounters")) == 1,
+        driver + ":\n" + sites.mkString("\n---\n"))
+      types.foreach(assertStoreMatchesInstall(root, cfgE, next, _))
     }
-    assert(sites.count(_.contains("MambaEtlJob$.changedEncounters")) == 1,
-      sites.mkString("\n---\n"))
-    Seq(7, 8).foreach(assertStoreMatchesInstall(root, cfgE, next, _))
+  }
+
+  /** Every file under `root`, by relative path, with its bytes. */
+  private def filesUnder(root: String): Map[String, Seq[Byte]] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(f =>
+        base.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally walk.close()
+  }
+
+  test("a scheduled tick whose config or store leg fails while the other runs writes nothing; the next tick converges to a fresh install") {
+    // each input breaks one leg of a mode-1 firing and returns its undo:
+    // the config leg reads the concept source (autoConfig), the store
+    // leg reads the stored flat table (readExisting, touched months)
+    def unreadable(file: java.nio.file.Path): () => Unit = {
+      val bytes = Files.readAllBytes(file)
+      Files.write(file, Array.fill[Byte](bytes.length)(0))
+      () => Files.write(file, bytes)
+    }
+    def parquetIn(dir: String): java.nio.file.Path = {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted.head
+      finally walk.close()
+    }
+    val breaks = Seq[(String, (MambaEtlJob.Sources, String) => () => Unit)](
+      "concept source" -> ((src, _) => unreadable(java.nio.file.Paths.get(
+        new java.net.URI(src.concept.inputFiles.head)))),
+      "stored data file" -> ((_, root) =>
+        unreadable(parquetIn(s"$root/mamba_flat_encounter_7"))))
+    val cfgE = EtlConfig("/src", "/out")
+    breaks.foreach { case (input, break) =>
+      val installed = onDisk(sources)
+      val root = Files.createTempDirectory("mambaleg").toString
+      val bookmarks = new BookmarkStore(
+        Files.createTempDirectory("mambalegbm").resolve("bookmark").toString)
+      MambaEtlJob.scheduledTick(spark, cfgE, installed, Seq(7), root, bookmarks)
+      val next = onDisk(moveEncounter(11L, "2024-04-03 10:00:00", 3L,
+        "2024-03-10 08:00:00")(installed))
+      val mark = bookmarks.read()
+      val restore = break(next, root)
+      val before = filesUnder(root)
+      intercept[Exception] {
+        MambaEtlJob.scheduledTick(spark, cfgE.copy(incrementalMode = 1), next,
+          Seq(7), root, bookmarks)
+      }
+      assert(filesUnder(root) == before, s"$input: the store changed")
+      assert(bookmarks.read() == mark, s"$input: the bookmark moved")
+      restore()
+      MambaEtlJob.scheduledTick(spark, cfgE.copy(incrementalMode = 1), next,
+        Seq(7), root, bookmarks)
+      assertStoreMatchesInstall(root, cfgE, next, 7)
+    }
   }
 
   test("ticks of different small deltas compile no new class after the first, on INT and BIGINT keys") {
