@@ -45,24 +45,23 @@ import scala.util.Try
   *    staging write and leave its copy behind.
   *
   * It also serves the paper's core path: an incremental tick
-  * ([[graft.examples.MambaEtlJob.tickChanged]]) runs its two lookups as
-  * the two legs of one [[two]]. The store leg collects the changed
-  * encounters and each stored table's touched months; the config leg
-  * runs the type's concept scan (`Flatten.autoConfig`). Neither reads
-  * what the other computes, and the write needs both. Over 20
-  * alternating pairs of `etlbench` `etl_ticks` runs (`--seconds 30`,
-  * Spark local[2] on a 4-core host) the median tick fell from 1,151 ms
-  * [Q1 1,092 - Q3 1,189] to 946 ms [880-979], -17.7 %, won 18 of 20
-  * pairs, with CPU per tick flat (1,847 -> 1,783 ms). In a traced run
-  * the write's SQL execution started 401 ms into the median tick
-  * instead of 707 ms. Jobs (11) and compiles (2.0) per tick did not
-  * change: the gain is overlap, not removed work. Overlap is not free
-  * on a small host: driver planning is CPU-bound, so concurrent SQL
-  * executions can each run longer. An earlier measurement saw about
-  * 30 % (one `autoConfig` took 170 ms alone and 218-234 ms beside the
-  * store leg); the traced run above saw none (202 ms in sequence, 179
-  * ms beside it). A third concurrent leg is therefore not advised
-  * there.
+  * ([[graft.examples.MambaEtlJob.tickChanged]]) runs two legs of one
+  * [[two]], and the first forks twice more. The caller's leg collects
+  * the changed encounters while a pool thread reads each stored table's
+  * footer, which carries the config the table was pivoted with; it then
+  * collects the months a merge touches while a pool thread pivots and
+  * materializes the delta with that stored config. The other leg runs
+  * the type's concept scan (`Flatten.autoConfig`), which only the
+  * reshape check waits for. No leg waits for a value another leg
+  * computes. Over 10 alternating pairs of `etlbench` `etl_ticks` runs
+  * (`--seconds 30`, Spark local[2] on a 4-core host), against a tick
+  * whose write pivoted the delta after two legs, the median tick fell
+  * from 699 ms [Q1 630 - Q3 736] to 536 ms [517-556], -23.3 %, 10 of 10
+  * pairs won, with CPU per tick flat (1,285 -> 1,255 ms). A traced tick
+  * runs one job more (the checkpoint) and its write 2 jobs instead of
+  * 4. Overlap is not free on a small host, since driver planning is
+  * CPU-bound: SQL executions that run together can each run longer.
+  * CHANGES.md keeps the earlier measurements of the tick's legs.
   */
 private[graft] object Par {
 

@@ -310,94 +310,123 @@ object MambaEtlJob {
     * the delta is joined with the type's live changed encounters, a
     * delta-sized join.
     *
-    * Two lookups share nothing, so they run as two legs of one
-    * [[graft.Par.two]], and the write waits for the longer one instead
-    * of their sum:
-    *  - the store leg, on the caller thread, reads the changed set and
-    *    the store: it evaluates `changed`, lists the type's stored
-    *    tables, reads each ([[graft.sources.AnalysisStore.readExisting]])
-    *    and collects the month partitions a merge into it touches
-    *    ([[graft.sources.AnalysisStore.touchedPartitions]]);
-    *  - the config leg reads the sources only: the type's
-    *    [[FlatTableConfig]], the given one or a
-    *    [[Flatten.autoConfig]] scan.
-    * A failure in either leg is rethrown once both have finished, before
+    * The tick runs as two concurrent legs ([[graft.Par.two]]), and the
+    * first of them forks twice more, so no leg waits for a value another
+    * computes:
+    *  - the store leg, on the caller thread (where a micro-batch's
+    *    `changed` is collected), evaluates `changed`, the only time it
+    *    is evaluated, while a pool thread lists the type's stored tables
+    *    and reads each one's footer
+    *    ([[graft.sources.AnalysisStore.readExisting]]), which gives the
+    *    table and the config it was pivoted with
+    *    ([[FlatTableConfig.fromSchema]]). When every stored table
+    *    carries a config, it then prepares their merge as two legs: it
+    *    collects the month partitions a merge into each table touches
+    *    ([[graft.sources.AnalysisStore.touchedPartitions]]) while the
+    *    delta leg pivots the changed encounters with the stored configs
+    *    ([[Flatten.flattenChunks]]), joins them with the type's live
+    *    changed encounters and materializes each table's delta
+    *    (`localCheckpoint`), so the write only merges;
+    *  - the config leg reads the sources only: the type's current
+    *    [[FlatTableConfig]], the given one or a [[Flatten.autoConfig]]
+    *    scan. Only the reshape check below waits for it.
+    * A failure in any leg is rethrown once all have finished, before
     * any write.
     *
-    * The delta is pivoted once per table, by the write. The months it
-    * touches are the visit months of the type's live changed
-    * encounters, not of the pivoted delta: every delta row is one of
-    * those encounters and takes its month from the same row, so the
-    * months cover the delta exactly, and one collect per stored table
-    * serves whatever columns the config gives its delta.
+    * The months a delta touches are the visit months of the type's
+    * live changed encounters, not of the pivoted delta: every delta row
+    * is one of those encounters and takes its month from the same row,
+    * so the months cover the delta exactly, and the touched collects
+    * need no delta.
     *
-    * A type wider than `config.columns` ticks each of its
-    * continuation tables the same way. When the type's concept set
-    * has changed since its tables were written (a concept first used,
-    * voided away or renamed), the delta's columns or its table list no
-    * longer match the stored ones; that tick discards its touched
-    * collects and rebuilds every table of the type from the sources,
-    * laid out as [[runPersisted]] writes them, each through a
-    * crash-safe swap, and drops the stored continuation tables the new
-    * split no longer has. A table not yet stored is written from the
-    * delta alone.
+    * Reshape rule: the tick is steady exactly when the stored tables'
+    * configs equal the current config split at `config.columns`, table
+    * by table. A steady tick merges each table's prepared delta. Any
+    * other tick drops what the store leg prepared and rebuilds every
+    * table of the type from the sources, laid out as [[runPersisted]]
+    * writes them, each through a crash-safe swap, and drops the stored
+    * tables the new split no longer has. That covers a concept first
+    * used, voided away or renamed, a concept whose id or datatype
+    * changes under its label, a changed column cap, and a table written
+    * before flat tables carried their config. When no table of the type
+    * holds data yet, each table is written from its delta alone.
+    *
+    * The delta checkpoints are the tick's own: once the write is done,
+    * or the tick has failed, exactly their RDDs are unpersisted, so a
+    * long-running scheduler keeps no block of an earlier tick. One
+    * case escapes: a checkpoint whose own job fails has persisted its
+    * RDD without returning it, so that RDD stays registered until it
+    * is garbage-collected and Spark's context cleaner drops its blocks.
     */
   def tickChanged(spark: SparkSession, config: EtlConfig, src: Sources,
       encounterTypeId: Int, storeRoot: String, changed: => Set[Long],
       flatConfigs: Map[Int, FlatTableConfig] = Map.empty): Unit = {
     val store = graft.sources.AnalysisStore
     val base = s"mamba_flat_encounter_$encounterTypeId"
+    def path(table: String) = s"$storeRoot/$table"
     val encIds = src.encounter.filter(col("voided") === 0)
       .filter(col("encounter_type") === encounterTypeId)
       .select("encounter_id", "patient_id", "encounter_datetime")
-    // store leg (first, so on the caller thread, where a micro-batch's
-    // `changed` is collected): the membership predicate, and per stored
-    // path its table and touched partitions, None for a stored path
-    // with no data file
-    val ((isChanged, stored), cfg) = graft.Par.two({
-        val ids = changed
-        val isChanged = udf(IsIn(ids)).apply(col("encounter_id"))
-        val parts = withVisitMonth(encIds.filter(isChanged))
-        isChanged -> storedTables(spark, storeRoot, base).map { t =>
-          val path = s"$storeRoot/$t"
-          path -> store.readExisting(spark, path).map(table => table ->
-            store.touchedPartitions(table, parts, keys = Seq("encounter_id"),
-              partitionBy = Seq("visit_month"), removeKeys = isChanged))
-        }.toMap
-      },
-      flatConfigs.getOrElse(encounterTypeId,
-        Flatten.autoConfig(src.obs, src.encounter, src.concept,
-          encounterTypeId, locale = Some(config.locale)))
-        .copy(tableName = base))
-    // (store path, wide rows) per continuation table of the type
-    def flat(obs: DataFrame, encs: DataFrame) =
-      Flatten.flattenObsSplit(obs, cfg, config.columns).map { case (t, df) =>
-        s"$storeRoot/$t" ->
-          withVisitMonth(df.join(encs, Seq("encounter_id")))
+    // (table, wide rows with their visit month) per continuation table
+    def flat(obs: DataFrame, encs: DataFrame, chunks: Seq[FlatTableConfig]) =
+      Flatten.flattenChunks(obs, chunks).map { case (t, df) =>
+        t -> withVisitMonth(df.join(encs, Seq("encounter_id")))
       }
-    val deltas = flat(src.obs.filter(isChanged), encIds.filter(isChanged))
-    def storedOf(path: String) = stored.get(path).flatten
-    val stale = stored.keys.toSeq.filterNot(p => deltas.exists(_._1 == p))
-    val reshaped = stale.nonEmpty ||
-      (deltas.exists(d => storedOf(d._1).isDefined) &&
-        deltas.exists { case (path, delta) =>
-          !storedOf(path).exists(_._1.columns.toSet == delta.columns.toSet)
-        })
-    if (reshaped) {
-      flat(src.obs, encIds).foreach { case (path, df) =>
-        store.stageAndSwap(spark, path) { staging =>
-          store.writeFull(df, staging, Seq("visit_month"))
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.rdd.RDD[_]]
+    try {
+      // per stored table, its config (None: no data file), and the
+      // prepared merge: per table, its data, touched months and delta
+      val ((isChanged, storedCfgs, merges), cfg) = graft.Par.two({
+          val (isChanged, stored) = graft.Par.two(
+            udf(IsIn(changed)).apply(col("encounter_id")),
+            storedTables(spark, storeRoot, base).map { t =>
+              t -> store.readExisting(spark, path(t)).map(table => table ->
+                FlatTableConfig.fromSchema(t, encounterTypeId, table.schema))
+            }.toMap)
+          val storedCfgs = stored.map { case (t, s) => t -> s.map(_._2) }
+          val merges =
+            if (stored.nonEmpty && storedCfgs.values.forall(_.exists(_.columns.nonEmpty))) {
+              val parts = withVisitMonth(encIds.filter(isChanged))
+              val (touched, deltas) = graft.Par.two(
+                stored.map { case (t, s) => t -> store.touchedPartitions(s.get._1,
+                  parts, keys = Seq("encounter_id"), partitionBy = Seq("visit_month"),
+                  removeKeys = isChanged) },
+                flat(src.obs.filter(isChanged), encIds.filter(isChanged),
+                    storedCfgs.values.flatten.toSeq).map { case (t, df) =>
+                  val delta = df.localCheckpoint(eager = true)
+                  delta.queryExecution.logical.collectFirst {
+                    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+                  }.foreach(checkpoints.add)
+                  t -> delta
+                }.toMap)
+              stored.map { case (t, s) => t -> ((s.get._1, touched(t), deltas(t))) }
+            } else Map.empty[String, (DataFrame, Seq[org.apache.spark.sql.Row], DataFrame)]
+          (isChanged, storedCfgs, merges)
+        },
+        flatConfigs.getOrElse(encounterTypeId,
+          Flatten.autoConfig(src.obs, src.encounter, src.concept,
+            encounterTypeId, locale = Some(config.locale)))
+          .copy(tableName = base))
+      val chunks = cfg.split(config.columns)
+      val tables = chunks.map(_.tableName).toSet
+      if (storedCfgs == chunks.map(c => c.tableName -> Some(c)).toMap)
+        merges.foreach { case (t, (table, touched, delta)) =>
+          store.writeIncrementalPartitioned(spark, delta, path(t), table,
+            touched, partitionBy = Seq("visit_month"), removeKeys = isChanged)
         }
-      }
-      stale.foreach(store.drop(spark, _))
-    } else
-      deltas.foreach { case (path, delta) =>
-        storedOf(path) match {
-          case Some((table, touched)) =>
-            store.writeIncrementalPartitioned(spark, delta, path, table,
-              touched, partitionBy = Seq("visit_month"), removeKeys = isChanged)
-          case None => store.writeFull(delta, path, Seq("visit_month"))
+      else if (storedCfgs.forall { case (t, c) => c.isEmpty && tables(t) })
+        flat(src.obs.filter(isChanged), encIds.filter(isChanged), chunks).foreach {
+          case (t, delta) => store.writeFull(delta, path(t), Seq("visit_month"))
         }
+      else {
+        flat(src.obs, encIds, chunks).foreach { case (t, df) =>
+          store.stageAndSwap(spark, path(t)) { staging =>
+            store.writeFull(df, staging, Seq("visit_month"))
+          }
+        }
+        (storedCfgs.keySet -- tables).foreach(t => store.drop(spark, path(t)))
       }
+    } finally checkpoints.forEach(_.unpersist(blocking = false))
   }
 }

@@ -77,6 +77,30 @@ final case class FlatTableConfig(
 object FlatTableConfig {
   implicit private val formats: Formats = DefaultFormats
 
+  /** The field-metadata keys that tag a flat-table column with its
+    * concept (the FIXTURES.md §B config key names).
+    */
+  private val ConceptIdKey = "concept_id"
+  private val DatatypeKey = "datatype"
+
+  /** `column`'s tags: its concept id and datatype. */
+  def metadataOf(column: FlatColumn): org.apache.spark.sql.types.Metadata =
+    new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong(ConceptIdKey, column.conceptId)
+      .putString(DatatypeKey, column.datatype).build()
+
+  /** The config a flat table's schema carries: one column per field
+    * tagged with [[metadataOf]] (as [[graft.operators.Flatten.flattenObs]]
+    * writes them), in schema order. A table written without the tags
+    * carries no columns.
+    */
+  def fromSchema(tableName: String, encounterTypeId: Int,
+      schema: org.apache.spark.sql.types.StructType): FlatTableConfig =
+    FlatTableConfig(tableName, encounterTypeId,
+      schema.fields.toSeq.filter(_.metadata.contains(ConceptIdKey)).map(f =>
+        FlatColumn(f.name, f.metadata.getLong(ConceptIdKey),
+          f.metadata.getString(DatatypeKey))))
+
   /** Parse the project's JSON flat-config shape (FIXTURES.md §B):
     * {"table_name": ..., "encounter_type_id": ...,
     *  "concepts": [{"label": ..., "concept_id": ..., "datatype": ...}]}

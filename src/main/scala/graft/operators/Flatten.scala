@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
 
 import graft.model.{FlatColumn, FlatTableConfig}
 
@@ -51,13 +52,16 @@ object Flatten {
     *                 skip the window pass entirely. Otherwise the input
     *                 is repartitioned by `entityCol` once, and the
     *                 window and the aggregate share that exchange.
+    * @param tags     field metadata per output label; a label without
+    *                 an entry gets none.
     */
   def pivotLatest(
       eav: DataFrame,
       entityCol: String,
       attrCol: String,
       labels: Seq[(String, Any, Column)],
-      tieBreak: Seq[Column]): DataFrame = {
+      tieBreak: Seq[Column],
+      tags: Map[String, Metadata] = Map.empty): DataFrame = {
     val relevant = eav.filter(
       col(attrCol).isin(labels.map(_._2): _*))
     val deduped =
@@ -70,7 +74,8 @@ object Flatten {
           .filter(col("__rn") === 1).drop("__rn")
       }
     val aggs = labels.map { case (label, key, value) =>
-      max(when(col(attrCol) === lit(key), value)).as(label)
+      max(when(col(attrCol) === lit(key), value))
+        .as(label, tags.getOrElse(label, Metadata.empty))
     }
     deduped.groupBy(col(entityCol)).agg(aggs.head, aggs.tail: _*)
   }
@@ -79,6 +84,17 @@ object Flatten {
     * per a [[FlatTableConfig]] (reference README.md:244-253). Voided
     * rows are dropped first (SURVEY §2.2 P6) so they never reach the
     * shuffle.
+    *
+    * Every pivot column carries its config as field metadata
+    * ([[FlatTableConfig.metadataOf]]: its concept id and datatype).
+    * Spark writes field metadata into each parquet file's footer
+    * schema, so a stored flat table holds the config it was pivoted
+    * with, and [[FlatTableConfig.fromSchema]] reads it back from the
+    * schema [[graft.sources.AnalysisStore.readExisting]] gives, with no
+    * Spark job. An incremental tick compares that stored config with
+    * the type's current one ([[graft.examples.MambaEtlJob.tickChanged]]):
+    * a concept whose id or datatype changes under an unchanged label
+    * changes the config, not the column names.
     */
   def flattenObs(obs: DataFrame, config: FlatTableConfig): DataFrame = {
     val labels = config.columns.map { c =>
@@ -89,7 +105,9 @@ object Flatten {
       entityCol = "encounter_id",
       attrCol = "concept_id",
       labels = labels,
-      tieBreak = Seq(col("obs_datetime").desc, col("obs_id").desc))
+      tieBreak = Seq(col("obs_datetime").desc, col("obs_id").desc),
+      tags = config.columns.map(c =>
+        c.label -> FlatTableConfig.metadataOf(c)).toMap)
   }
 
   /** Width-capped flattening — the reference's
@@ -120,18 +138,25 @@ object Flatten {
     */
   def flattenObsSplit(
       obs: DataFrame, config: FlatTableConfig,
-      maxColumns: Int): Seq[(String, DataFrame)] = {
-    val chunks = config.split(maxColumns)
-    if (chunks.size == 1) Seq(config.tableName -> flattenObs(obs, config))
+      maxColumns: Int): Seq[(String, DataFrame)] =
+    flattenChunks(obs, config.split(maxColumns))
+
+  /** [[flattenObsSplit]] over a config already split into `chunks`
+    * (one per continuation table, as [[FlatTableConfig.split]] gives
+    * them): a tick pivots its delta with the chunks its stored tables
+    * carry.
+    */
+  def flattenChunks(obs: DataFrame,
+      chunks: Seq[FlatTableConfig]): Seq[(String, DataFrame)] =
+    if (chunks.size == 1) Seq(chunks.head.tableName -> flattenObs(obs, chunks.head))
     else {
-      val keys = obs.filter(col("voided") === 0 &&
-          col("concept_id").isin(config.columns.map(_.conceptId): _*))
+      val keys = obs.filter(col("voided") === 0 && col("concept_id")
+          .isin(chunks.flatMap(_.columns).map(_.conceptId): _*))
         .select("encounter_id").distinct()
       chunks.map(c =>
         c.tableName -> keys.join(flattenObs(obs, c),
           Seq("encounter_id"), "left"))
     }
-  }
 
   /** Concept datatype → which typed obs value_* column carries the
     * value (SURVEY §1.3 "Column types follow the source concept

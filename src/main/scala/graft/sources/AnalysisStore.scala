@@ -104,7 +104,15 @@ object AnalysisStore {
     * read runs. Every store table is written by Spark, so a footer
     * without that key is an error. Partition discovery adds the
     * partition columns as it does for an inferred read, so the result
-    * has the schema `spark.read.parquet(path)` gives.
+    * has the schema `spark.read.parquet(path)` gives, field metadata
+    * included: a flat table's schema carries the config it was pivoted
+    * with ([[graft.operators.Flatten.flattenObs]]), so the caller gets
+    * the stored config with the table, still with no Spark job.
+    *
+    * The footer is read with the session's Hadoop configuration. A
+    * bare `ParquetFileReader.open(file)` builds its read options over a
+    * fresh `Configuration`, which parses Hadoop's default XML resources
+    * again on every call.
     */
   def readExisting(spark: SparkSession, path: String): Option[DataFrame] = {
     recover(spark, path)
@@ -112,11 +120,13 @@ object AnalysisStore {
     val root = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(root)) None
     else anyDataFile(fs, root).map { file =>
+      import org.apache.parquet.HadoopReadOptions
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
       import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+        HadoopReadOptions.builder(conf).build())
       val meta = try reader.getFooter.getFileMetaData finally reader.close()
       val json = meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)
       require(json != null, s"$file: no Spark schema in its footer")
@@ -462,7 +472,7 @@ object AnalysisStore {
     * It reads `parts` and the stored table only, never the delta, so a
     * caller can run it beside whatever builds the delta
     * ([[graft.examples.MambaEtlJob.tickChanged]] runs it beside the
-    * type's config scan).
+    * type's config scan and the pivot of its delta).
     *
     * @param table the stored table, as [[readExisting]] gave it
     * @param parts a frame carrying `partitionBy` whose values cover

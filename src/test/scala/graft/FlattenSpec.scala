@@ -55,6 +55,21 @@ class FlattenSpec extends SparkSpec {
     assert(e2.getAs[Timestamp]("visit_date") == ts("2024-01-02 00:00:00"))
   }
 
+  test("flattenObs tags each pivot column with its concept; a split table's config reads back from its parquet footer") {
+    val flat = Flatten.flattenObs(obsFixture, config)
+    assert(FlatTableConfig.fromSchema(config.tableName, 1, flat.schema) == config)
+    // each continuation table carries its own chunk through a write
+    val dir = java.nio.file.Files.createTempDirectory("flattags").toString
+    val chunks = config.split(2)
+    Flatten.flattenObsSplit(obsFixture, config, 2).foreach { case (t, df) =>
+      df.write.parquet(s"$dir/$t")
+    }
+    assert(chunks.map(c => FlatTableConfig.fromSchema(c.tableName, 1,
+      spark.read.parquet(s"$dir/${c.tableName}").schema)) == chunks)
+    // an untagged table carries no config
+    assert(FlatTableConfig.fromSchema("t", 1, obsFixture.schema).columns.isEmpty)
+  }
+
   test("continuation split: naming, cap, key-sharing, lossless rejoin") {
     // cap 2 over 4 columns → t (weight, hiv_result), t_1 (note,
     // visit_date) — reference README.md:130-131 layout

@@ -238,15 +238,24 @@ class MambaLifecycleSpec extends SparkSpec {
     val last =
       try ticks.foldLeft(src) { case (s, (nextSources, bookmark)) =>
         val next = nextSources(s)
-        landing.tick(next, bookmark)
+        val left = persistedBy(landing.tick(next, bookmark))
+        assert(left.isEmpty, s"the tick from $bookmark left RDDs persisted: $left")
         next
       } finally landing.close()
     assertStoreMatchesInstall(root, cfgE, last, et)
     root
   }
 
+  /** The ids of the RDDs that `body` leaves persisted. */
+  private def persistedBy(body: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
   /** Every flat table of type `et` under `root` equals the one a fresh
-    * runPersisted install of `src` writes.
+    * runPersisted install of `src` writes: the same tables, each with
+    * the same schema (names, types and field metadata) and rows.
     */
   private def assertStoreMatchesInstall(root: String, cfgE: EtlConfig,
       src: MambaEtlJob.Sources, et: Int): Unit = {
@@ -260,7 +269,9 @@ class MambaLifecycleSpec extends SparkSpec {
     flatTables(fresh).foreach { t =>
       val ticked = spark.read.parquet(s"$root/$t")
       val want = spark.read.parquet(s"$fresh/$t")
-      assert(ticked.columns.sorted.toSeq == want.columns.sorted.toSeq, t)
+      def fields(df: DataFrame) = df.schema.fields.toSeq
+        .map(f => (f.name, f.dataType, f.metadata)).sortBy(_._1)
+      assert(fields(ticked) == fields(want), t)
       val cols = want.columns.sorted.map(col).toSeq
       assertSameRows(ticked.select(cols: _*), want.select(cols: _*))
     }
@@ -459,25 +470,49 @@ class MambaLifecycleSpec extends SparkSpec {
 
   test("a mode-1 scheduled tick over two types collects the changed set once and equals a fresh install") {
     // one firing lands a changed obs in a type-7 and in a type-8
-    // encounter; a one-type tickPersisted takes the same set by name
+    // encounter; a one-type tickPersisted takes the same set by name.
+    // Each driver runs once with autoConfig scanning beside the store
+    // leg, and once with given configs, which leave the config leg
+    // nothing to scan: either way the set is collected once, on the
+    // caller's thread
     val cfgE = EtlConfig("/src", "/out", incrementalMode = 1)
     val installed = onDisk(sources)
     val mark = Incremental.nextBookmark(installed.obs, Seq("obs_datetime"))
     val next = onDisk(onObs(bumpObs(1L, "2024-03-10 08:00:00")
       .andThen(addObs(9L, 12L, 200L, None, Some("NEGATIVE"),
         "2024-03-10 08:05:00")))(installed))
-    Seq[(String, Seq[Int], (String, BookmarkStore) => Unit)](
-      ("scheduledTick", Seq(7, 8), (root, bookmarks) =>
-        MambaEtlJob.scheduledTick(spark, cfgE, next, Seq(7, 8), root, bookmarks)),
-      ("tickPersisted", Seq(7), (root, _) =>
-        MambaEtlJob.tickPersisted(spark, cfgE, next, 7, root, mark))
-    ).foreach { case (driver, types, tick) =>
+    val autoConfigs = Seq(7, 8).map(et => et ->
+      graft.operators.Flatten.autoConfig(next.obs, next.encounter, next.concept, et)).toMap
+    Seq(Map.empty[Int, graft.model.FlatTableConfig], autoConfigs).flatMap(flatConfigs =>
+      Seq[(String, Seq[Int], (String, BookmarkStore) => Unit)](
+        ("scheduledTick", Seq(7, 8), (root, bookmarks) =>
+          MambaEtlJob.scheduledTick(spark, cfgE, next, Seq(7, 8), root, bookmarks,
+            flatConfigs)),
+        ("tickPersisted", Seq(7), (root, _) =>
+          MambaEtlJob.tickPersisted(spark, cfgE, next, 7, root, mark, flatConfigs))
+      ).map { case (driver, types, tick) =>
+        (s"$driver, ${flatConfigs.size} given configs", types, flatConfigs, tick)
+      }
+    ).foreach { case (driver, types, flatConfigs, tick) =>
       val root = Files.createTempDirectory("mambasched2").toString
-      MambaEtlJob.runPersisted(spark, cfgE, installed, types, root)
+      MambaEtlJob.runPersisted(spark, cfgE, installed, types, root, flatConfigs)
       val bookmarks = new BookmarkStore(
         Files.createTempDirectory("mambasched2bm").resolve("bookmark").toString)
       mark.foreach(bookmarks.write)
-      val sites = querySites(tick(root, bookmarks))
+      // a job carries the local properties of the thread that started
+      // its query. The legs' pool threads exist before the marker is
+      // set, so none of them inherits it
+      Par.three((), (), ())
+      val sc = spark.sparkContext
+      sc.setLocalProperty("graft.test.thread", "caller")
+      var collects = Seq.empty[org.apache.spark.scheduler.SparkListenerJobStart]
+      val sites = try querySites {
+          collects = jobStarts(tick(root, bookmarks)).filter(_.stageInfos
+            .exists(_.details.contains("MambaEtlJob$.changedEncounters")))
+        } finally sc.setLocalProperty("graft.test.thread", null)
+      val threads = collects.map(_.properties.getProperty("graft.test.thread"))
+      assert(threads.nonEmpty && threads.forall(_ == "caller"),
+        s"$driver: the changed collect ran off the caller's thread")
       assert(sites.count(_.contains("MambaEtlJob$.changedEncounters")) == 1,
         driver + ":\n" + sites.mkString("\n---\n"))
       types.foreach(assertStoreMatchesInstall(root, cfgE, next, _))
@@ -494,9 +529,15 @@ class MambaLifecycleSpec extends SparkSpec {
   }
 
   test("a scheduled tick whose config or store leg fails while the other runs writes nothing; the next tick converges to a fresh install") {
-    // each input breaks one leg of a mode-1 firing and returns its undo:
-    // the config leg reads the concept source (autoConfig), the store
-    // leg reads the stored flat table (readExisting, touched months)
+    import org.apache.spark.sql.functions.{col, udf}
+    // each input breaks one leg of a mode-1 firing (the delta leg too)
+    // while the others run; the firing must throw within a timeout and
+    // leave the store, the bookmark and the persisted RDDs as they were.
+    // A break returns the sources the firing reads and the undo. The
+    // config leg reads the concept source (autoConfig); the store leg
+    // reads the stored flat table's footer; the delta leg alone reads
+    // the obs values it pivots (type 7 pivots only Weight, a
+    // value_numeric), beside the touched collect
     def unreadable(file: java.nio.file.Path): () => Unit = {
       val bytes = Files.readAllBytes(file)
       Files.write(file, Array.fill[Byte](bytes.length)(0))
@@ -508,11 +549,16 @@ class MambaLifecycleSpec extends SparkSpec {
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted.head
       finally walk.close()
     }
-    val breaks = Seq[(String, (MambaEtlJob.Sources, String) => () => Unit)](
-      "concept source" -> ((src, _) => unreadable(java.nio.file.Paths.get(
+    val failing = udf((v: java.lang.Double) =>
+      if (v != null) throw new IllegalStateException("unreadable value") else v)
+    val breaks = Seq[(String, (MambaEtlJob.Sources, String) =>
+        (MambaEtlJob.Sources, () => Unit))](
+      "concept source" -> ((src, _) => src -> unreadable(java.nio.file.Paths.get(
         new java.net.URI(src.concept.inputFiles.head)))),
-      "stored data file" -> ((_, root) =>
-        unreadable(parquetIn(s"$root/mamba_flat_encounter_7"))))
+      "stored data file" -> ((src, root) =>
+        src -> unreadable(parquetIn(s"$root/mamba_flat_encounter_7"))),
+      "obs values" -> ((src, _) => src.copy(obs = src.obs.withColumn(
+        "value_numeric", failing(col("value_numeric")))) -> (() => ())))
     val cfgE = EtlConfig("/src", "/out")
     breaks.foreach { case (input, break) =>
       val installed = onDisk(sources)
@@ -523,19 +569,90 @@ class MambaLifecycleSpec extends SparkSpec {
       val next = onDisk(moveEncounter(11L, "2024-04-03 10:00:00", 3L,
         "2024-03-10 08:00:00")(installed))
       val mark = bookmarks.read()
-      val restore = break(next, root)
+      val (broken, restore) = break(next, root)
       val before = filesUnder(root)
-      intercept[Exception] {
-        MambaEtlJob.scheduledTick(spark, cfgE.copy(incrementalMode = 1), next,
-          Seq(7), root, bookmarks)
+      val left = persistedBy {
+        val tick = scala.concurrent.Future(
+          MambaEtlJob.scheduledTick(spark, cfgE.copy(incrementalMode = 1), broken,
+            Seq(7), root, bookmarks))(scala.concurrent.ExecutionContext.global)
+        val failed = scala.concurrent.Await.ready(tick,
+          scala.concurrent.duration.Duration(2, "min")).value.get
+        assert(failed.isFailure, s"$input: the tick did not fail")
       }
       assert(filesUnder(root) == before, s"$input: the store changed")
       assert(bookmarks.read() == mark, s"$input: the bookmark moved")
+      assert(left.isEmpty, s"$input: the tick left RDDs persisted: $left")
       restore()
       MambaEtlJob.scheduledTick(spark, cfgE.copy(incrementalMode = 1), next,
         Seq(7), root, bookmarks)
       assertStoreMatchesInstall(root, cfgE, next, 7)
     }
+  }
+
+  test("a tick after a concept's datatype changes under its label equals a fresh install") {
+    import org.apache.spark.sql.functions.{lit, when}
+    // Counselor Notes turns from Text to Coded. Its label and its
+    // column's type (string) stay, but its values now come from
+    // value_coded, so the note of encounter 16, which the tick does not
+    // touch, must go: a check on column names alone merges and keeps it
+    val withNote = addEncounter(16L, 8, 2L, "2024-02-05 09:00:00").andThen(
+      onObs(_.unionByName(Seq((9L, 16L, 300L, None: Option[Double],
+          Some("retest"), None: Option[String], ts("2024-02-05 09:05:00"), 0))
+        .toDF("obs_id", "encounter_id", "concept_id", "value_numeric",
+          "value_text", "value_coded", "obs_datetime", "voided"))))(sources)
+    val coded: MambaEtlJob.Sources => MambaEtlJob.Sources = s =>
+      s.copy(concept = s.concept.withColumn("datatype",
+        when($"concept_id" === 300L, lit("Coded")).otherwise($"datatype")))
+    val root = assertTicksMatchInstall(withNote, 8, Seq(
+      coded.andThen(onObs(addObs(10L, 12L, 200L, None, Some("NEGATIVE"),
+        "2024-03-10 08:00:00"))) -> "2024-03-06 00:00:00"))
+    assert(spark.read.parquet(s"$root/mamba_flat_encounter_8")
+      .filter($"encounter_id" === 16).select("counselor_notes")
+      .as[Option[String]].collect().toSeq == Seq(None))
+  }
+
+  test("a store written before flat tables carried their config is rebuilt by its first tick, then merged") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.Metadata
+    // type 7 spans February and March; the ticks change February only
+    val src = addEncounter(14L, 7, 2L, "2024-03-05 09:00:00").andThen(
+      onObs(addObs(7L, 14L, 100L, Some(70.0), None, "2024-03-05 09:10:00")))(sources)
+    val cfgE = EtlConfig("/src", "/out")
+    val root = Files.createTempDirectory("mambalegacy").toString
+    MambaEtlJob.runPersisted(spark, cfgE, src, Seq(7), root)
+    // the installed table rewritten without its field metadata
+    val flat7 = s"$root/mamba_flat_encounter_7"
+    val installed = spark.read.parquet(flat7)
+    val legacy = Files.createTempDirectory("mambalegacycopy").resolve("t").toString
+    installed.select(installed.columns.map(c => col(c).as(c, Metadata.empty)).toSeq: _*)
+      .write.partitionBy("visit_month").parquet(legacy)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(flat7), true)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(legacy),
+      new org.apache.hadoop.fs.Path(flat7)))
+    assert(graft.model.FlatTableConfig.fromSchema("t", 7,
+      spark.read.parquet(flat7).schema).columns.isEmpty)
+    def snapMarch(): Seq[(String, Long)] =
+      new java.io.File(s"$flat7/visit_month=2024-03").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getName, f.lastModified)).toSeq.sorted
+    val legacyMarch = snapMarch()
+    Thread.sleep(10)
+    val next1 = onObs(addObs(8L, 10L, 100L, Some(63.0), None,
+      "2024-03-10 08:00:00"))(src)
+    MambaEtlJob.tickPersisted(spark, cfgE, next1, 7, root,
+      changedSince = Some(ts("2024-03-06 00:00:00")))
+    assert(snapMarch() != legacyMarch, "the first tick must rebuild the table")
+    assertStoreMatchesInstall(root, cfgE, next1, 7)
+    val rebuiltMarch = snapMarch()
+    Thread.sleep(10)
+    val next2 = onObs(addObs(9L, 11L, 100L, Some(83.0), None,
+      "2024-03-12 08:00:00"))(next1)
+    MambaEtlJob.tickPersisted(spark, cfgE, next2, 7, root,
+      changedSince = Some(ts("2024-03-11 00:00:00")))
+    assert(snapMarch() == rebuiltMarch, "the second tick must merge")
+    assertStoreMatchesInstall(root, cfgE, next2, 7)
   }
 
   test("ticks of different small deltas compile no new class after the first, on INT and BIGINT keys") {

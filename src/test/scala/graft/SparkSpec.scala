@@ -41,15 +41,19 @@ trait SparkSpec extends AnyFunSuite {
   /** The jobs `body` starts, one long-form call site each (the
     * caller stack of the job's final stage), in start order.
     */
-  def jobSites(body: => Unit): Seq[String] = {
+  def jobSites(body: => Unit): Seq[String] =
+    jobStarts(body).map(_.stageInfos.sortBy(-_.stageId).headOption
+      .fold("")(_.details))
+
+  /** The start events of the jobs `body` starts, in start order. Each
+    * carries the local properties of the thread that started its query.
+    */
+  def jobStarts(body: => Unit)
+      : Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
     import org.apache.spark.scheduler.SparkListenerJobStart
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    listening {
-      case e: SparkListenerJobStart =>
-        sites.add(e.stageInfos.sortBy(-_.stageId).headOption
-          .fold("")(_.details))
-    }(body)
-    sites.toArray(Array.empty[String]).toSeq
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    listening { case e: SparkListenerJobStart => starts.add(e) }(body)
+    starts.toArray(Array.empty[SparkListenerJobStart]).toSeq
   }
 
   /** The SQL queries `body` runs (one per action or write), one
