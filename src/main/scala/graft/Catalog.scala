@@ -8,8 +8,9 @@ package graft
   * Usage: Catalog [outFile]
   */
 object Catalog {
-  def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("QUERIES.md")
+
+  /** The full text of QUERIES.md for the current registry. */
+  def render(): String = {
     val defs = queries.Registry.all.toSeq.sortBy(_._1)
     val nOracle = defs.count(_._2.hasOracle)
     val header =
@@ -33,8 +34,15 @@ object Catalog {
       val doc = d.doc.replace("|", "\\|").replace("\n", " ")
       s"| $name | $tier | $doc |"
     }
+    (header +: rows).mkString("", "\n", "\n")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = args.headOption.getOrElse("QUERIES.md")
+    val text = render()
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (header +: rows).mkString("", "\n", "\n").getBytes("UTF-8"))
-    System.err.println(s"[catalog] wrote ${rows.size} rows to $out")
+      text.getBytes("UTF-8"))
+    System.err.println(
+      s"[catalog] wrote ${queries.Registry.all.size} rows to $out")
   }
 }

@@ -145,44 +145,6 @@ object DedupCluster {
       idCol, aCol, bCol)
   }
 
-  /** Re-elect each cluster's canonical member by a QUALITY score
-    * instead of the default min-id: real curation keeps the best copy
-    * of duplicated content (longest / highest LM fluency / classifier
-    * probability), not the one with the accidentally-smallest id.
-    * Highest score wins, ties fall back to the smallest id — fully
-    * deterministic. `cluster_id` is left untouched (min-id labels
-    * stay the stable cluster identity the incremental tier keys on);
-    * only the survivor flag moves.
-    *
-    * Plan shape: per-cluster argmax via aggregate + join-back (the
-    * same AQE-splittable choice as span dedup — a row_number window
-    * would put every hot cluster in one unsplittable partition); the
-    * exchange carries (cluster, best) pairs, cluster-count-sized.
-    *
-    * @param labels (idCol, cluster_id, …) from [[connectedComponents]]
-    * @param scores (idCol, scoreCol) — any deterministic quality
-    *        score. Docs with no score row stay in the labeling (left
-    *        join) but rank below every scored member; an all-unscored
-    *        cluster falls back to min-id election.
-    */
-  def electCanonical(
-      labels: DataFrame, scores: DataFrame,
-      idCol: String = "doc_id", scoreCol: String = "score"): DataFrame = {
-    val scored = labels.select(col(idCol), col("cluster_id"))
-      .join(scores.select(col(idCol), col(scoreCol).as("__s0")), Seq(idCol),
-        "left")
-      .withColumn("__s",
-        coalesce(col("__s0"), lit(Double.NegativeInfinity)))
-      .drop("__s0")
-    val best = scored.groupBy("cluster_id")
-      .agg(min(struct((-col("__s")).as("negs"), col(idCol).as("best_id")))
-        .as("__b"))
-      .select(col("cluster_id"), col("__b.best_id").as("__best"))
-    scored.join(best, Seq("cluster_id"))
-      .select(col(idCol), col("cluster_id"),
-        (col(idCol) === col("__best")).as("is_canonical"))
-  }
-
   /** End-to-end near-dup pruning: MinHash+LSH pairs → components →
     * per-cluster canonical survivor flag. The shingle cache backing
     * the pair pipeline is released as soon as connectedComponents has

@@ -65,20 +65,6 @@ object Dsir {
       .select(bucketOf(col("g"), buckets).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
 
-  /** Doc-keyed bucket counts: (idCol, bucket, cnt) — the PERSISTABLE
-    * form of [[bucketCounts]]. Keeping the doc key is what makes a
-    * maintained counts store idempotent under redelivery (replace a
-    * doc's rows, never blind-add a delta that may already be merged)
-    * and lets retractions subtract exactly (anti-join the keys, not
-    * trust a recomputed negative). `bucketCounts ≡ this grouped by
-    * bucket` — the model never reads more than B rows either way.
-    */
-  def docBucketCounts(df: DataFrame, idCol: String, textCol: String,
-      buckets: Int): DataFrame =
-    df.select(col(idCol), explode(grams(col(textCol))).as("g"))
-      .groupBy(col(idCol), bucketOf(col("g"), buckets).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-
   /** The fitted importance model: `logRatio(b) = ln p_target(b) −
     * ln p_raw(b)` over hashed buckets, Laplace-smoothed (+0.5) so
     * unseen buckets stay finite. Model-sized — lives on the driver,

@@ -215,38 +215,4 @@ object Packing {
         offsetCol + col("__prefix") + row_number().over(w))
       .select(col(idCol), col("phase"), col("curriculum_pos"))
   }
-
-  /** Total token count of a packed frame — the scalar BOOKMARK an
-    * incremental packing run persists between ticks (alongside the
-    * [[graft.operators.Incremental.BookmarkStore]] timestamp).
-    */
-  def tokenBookmark(df: DataFrame, textCol: String,
-      tokenCount: Column => Column = wordCount): Long = {
-    val r = df.agg(sum(tokenCount(col(textCol)).cast("long"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  /** Incremental packing: assign a DELTA of new docs (ids above every
-    * packed doc — the bookmark contract) to context windows CONTINUING
-    * from where the prior packing ended, without touching any prior
-    * assignment. `startTokens` is the prior corpus's total token count
-    * ([[tokenBookmark]], persisted as a scalar). Exactly equal to
-    * re-packing old+delta in one run — the concatenation order is id
-    * order, and delta ids all sort after — so shipped pack files stay
-    * valid and the tick's cost is O(|delta|).
-    */
-  def packSequencesDelta(
-      delta: DataFrame, idCol: String, textCol: String,
-      budget: Int, startTokens: Long, nBuckets: Int = 64,
-      tokenCount: Column => Column = wordCount): DataFrame = {
-    require(startTokens >= 0, "startTokens must be >= 0")
-    val packed = packSequences(delta, idCol, textCol, budget, nBuckets, tokenCount)
-    // undo the delta-local pack arithmetic, re-derive from the global
-    // start: global_start = startTokens + local_start
-    packed.withColumn("__gstart",
-        col("pack_id") * budget + col("pack_offset") + startTokens)
-      .select(col(idCol), col("n_tokens"),
-        expr(s"__gstart DIV $budget").as("pack_id"),
-        (col("__gstart") % budget).as("pack_offset"))
-  }
 }

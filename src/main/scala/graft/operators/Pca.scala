@@ -291,37 +291,6 @@ object Pca {
       order.map(model.eigenvalues), model.totalVariance)
   }
 
-  /** Persist/reload a fitted model next to the index it serves (the
-    * [[Similarity.saveCentroids]] discipline): one row per axis plus
-    * a rank −1 metadata row carrying (mean, totalVariance). A model
-    * is a few k·d doubles — driver-sized by construction.
-    */
-  def saveModel(spark: org.apache.spark.sql.SparkSession,
-      model: Model, path: String): Unit = {
-    import spark.implicits._
-    val axisRows = model.axes.zipWithIndex.map { case (a, i) =>
-      (i, a.toSeq, model.eigenvalues(i))
-    }
-    val metaRow = (-1, model.mean.toSeq, model.totalVariance)
-    (axisRows :+ metaRow).toSeq.toDF("rank", "v", "x")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(path)
-  }
-
-  def loadModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): Model = {
-    val rows = graft.operators.ModelCollect.bounded(
-      spark.read.parquet(path).orderBy("rank"),
-      graft.operators.ModelCollect.MaxModelRows, "pca model load")
-    val (meta, axes) = rows.partition(_.getInt(0) < 0)
-    require(meta.length == 1, s"pca model at $path: missing meta row")
-    Model(
-      mean = meta.head.getSeq[Double](1).toArray,
-      axes = axes.map(_.getSeq[Double](1).toArray),
-      eigenvalues = axes.map(_.getDouble(2)),
-      totalVariance = meta.head.getDouble(2))
-  }
-
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix: returns
     * (eigenvalues, eigenvector columns). Deterministic fixed sweep
     * order, converges quadratically; d is the embedding dim so this

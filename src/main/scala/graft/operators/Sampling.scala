@@ -80,21 +80,6 @@ object Sampling {
       .withColumn("shuffle_key", shuffleKey(col(idCol), seed))
   }
 
-  /** Export the shuffled corpus: ONE uniform hash exchange on the
-    * shard id, in-task sort by (shard, shuffle_key) — that prefix
-    * ordering satisfies the partitioned writer's requirement, so no
-    * second sort is injected — then exactly one key-ordered parquet
-    * file per `shard=` directory. At 100 TB: the exchange carries each
-    * row once with 32-bit-uniform keys (no skew possible), and loaders
-    * stream shards independently.
-    */
-  def writeShuffledShards(df: DataFrame, path: String, idCol: String,
-      seed: String, numShards: Int): Unit =
-    shuffleShards(df, idCol, seed, numShards)
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions("shard", "shuffle_key")
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-
   /** Stratified deterministic sample: per-stratum keep fractions with
     * a default for unlisted strata — the corpus-balancing op (e.g.
     * downsample dominant languages, keep all of a rare one).

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Not in the reference surface (SURVEY §2.5/§2.7 — its "streaming" is
   * a polling batch); this is part of the training-pipeline `ext` tier
-  * over the `events` table. The streaming twin uses
-  * `session_window()` (see graft.streaming.EventsStreaming).
+  * over the `events` table. The per-tick twin over persisted session
+  * state is graft.streaming.EventsStreaming.sessionTickBatch.
   *
   * Scale shape: one shuffle by user, then two window passes over the
   * same partitioning (lag → cumulative sum) that Spark plans inside a

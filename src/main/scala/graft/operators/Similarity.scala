@@ -565,28 +565,6 @@ object Similarity {
     }
   }
 
-  /** Persist/reload the k×dim centroid model next to the index table
-    * (one row per centroid — model-sized, never row data). The loaded
-    * model is bit-identical, so probes against a reloaded index equal
-    * the in-memory run.
-    */
-  def saveCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]], path: String): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cid", "v")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(path)
-  }
-
-  def loadCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
-    ModelCollect.bounded(spark.read.parquet(path).orderBy("cid"),
-        ModelCollect.MaxModelRows, "loadCentroids")
-      .map(_.getSeq[Double](1).toArray)
-
   /** Scalar-quantized (int8) exact-scan top-k: the corpus index holds
     * 8×-smaller code vectors ([[graft.functions.Int8Quantize]] —
     * unit-normalize then round to ±127), and scoring runs cosine over
@@ -1008,9 +986,9 @@ object Similarity {
   }
 
   /** Persist/reload PQ codebooks next to their index table (one row
-    * per (subspace, code) — model-sized, never row data), the
-    * codebook twin of [[saveCentroids]]. Bit-identical on reload, so
-    * probes against a reloaded model equal the in-memory run.
+    * per (subspace, code) — model-sized, never row data).
+    * Bit-identical on reload, so probes against a reloaded model equal
+    * the in-memory run.
     */
   def savePqCodebooks(
       spark: org.apache.spark.sql.SparkSession,

@@ -97,12 +97,11 @@ object TextAnalysis {
     corpusTopicsFromVecs(df, vecs, idCol, textCol, nTopics, topTerms)
   }
 
-  /** [[corpusTopics]] over PREBUILT (id, vec) document vectors — the
-    * streaming-maintenance entry point ([[graft.streaming
-    * .TrainingStreaming]] keeps the per-doc hashed vectors as durable
-    * state because [[hashEmbed]] is doc-local, so only a tick's delta
-    * ever re-embeds; the topic map refit is then a pure function of
-    * (vecs, docs) and byte-matches [[corpusTopics]] on the same set).
+  /** [[corpusTopics]] over PREBUILT (id, vec) document vectors, for a
+    * caller that already holds them ([[hashEmbed]] is doc-local, so
+    * kept vectors only ever need a delta re-embedded; the topic map is
+    * then a pure function of (vecs, docs) and byte-matches
+    * [[corpusTopics]] on the same set).
     */
   def corpusTopicsFromVecs(df: DataFrame, vecs: DataFrame,
       idCol: String, textCol: String,
@@ -452,8 +451,7 @@ object TextAnalysis {
     // cheap column-pruned pass) — deriving them from the postings
     // subplan instead would rebuild the tokenize+explode+shuffle
     // subtree a second time (Catalyst can't reuse the exchange: the
-    // two consumers prune different columns). Same values as the
-    // index-derived stats — parity is spec-pinned.
+    // two consumers prune different columns).
     val stats = df.agg(
       countDistinct(col(idCol)).as("__nd"),
       sum(size(tokens(col(textCol)))).as("__suml"))
@@ -483,10 +481,8 @@ object TextAnalysis {
     searchWeights(bm25(corpus, idCol, textCol, k1, b),
       queries, idCol, textCol, k)
 
-  /** The match/rank half of [[bm25Search]], factored out so a
-    * PERSISTED weight table (from [[bm25FromIndex]] over a merged
-    * [[lexicalIndex]]) serves queries without re-deriving weights
-    * from text each batch.
+  /** The match/rank half of [[bm25Search]]: `weights` is a [[bm25]]
+    * weight table, `queries` the query docs.
     */
   def searchWeights(weights: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, k: Int): DataFrame = {
@@ -503,23 +499,16 @@ object TextAnalysis {
       .select(col("qid"), col("doc_id").as("nid"), col("rank"), col("score"))
   }
 
-  /** Lexical postings index — the persisted, incrementally-mergeable
-    * state behind BM25 retrieval: one row per (doc, token) with the
-    * raw term frequency and the doc's token count. Raw counts (not
-    * weights) are the stored form because every corpus-level BM25
-    * input — df per token, N, Σdl — is an exact integer aggregate of
-    * these rows, so a delta merge keeps the whole weight table
-    * corpus-consistent (idf and avgdl shift as the corpus grows;
-    * stored weights would go stale row-by-row).
+  /** Lexical postings index — the state behind BM25 retrieval: one
+    * row per (doc, token) with the raw term frequency and the doc's
+    * token count, from which every corpus-level BM25 input — df per
+    * token, N, Σdl — is an exact integer aggregate.
     *
     * One (doc, token) shuffle, map-side combine — the [[tfidf]] /
-    * [[bm25]] tokenize+count subplan, materialized. A doc with zero
-    * tokens keeps a PRESENCE row (doc_id, NULL, 0, 0) — explode_outer
-    * + count(token) — so the indexed corpus's N matches the document
-    * set exactly and an update-to-empty (≈ delete of the text) still
-    * counts the doc the way a full text-path rerun would. [[bm25]]
-    * itself delegates here, so served-from-index and direct weights
-    * are one code path, not two kept in sync.
+    * [[bm25]] tokenize+count subplan. A doc with zero tokens keeps a
+    * PRESENCE row (doc_id, NULL, 0, 0) — explode_outer +
+    * count(token) — so the indexed corpus's N matches the document
+    * set exactly.
     */
   def lexicalIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
@@ -528,60 +517,8 @@ object TextAnalysis {
       .groupBy("doc_id", "token")
       .agg(count(col("token")).as("tf"), first(col("__dl")).as("dl"))
 
-  /** Fold a delta of docs into a persisted [[lexicalIndex]] with
-    * replace-by-doc semantics: a re-shipped doc id drops its old
-    * postings first, so updates and at-least-once redelivery are
-    * idempotent. Cost tracks |delta|: the anti-join's build side is
-    * the delta's doc ids (broadcast), the only shuffle is the delta's
-    * own tokenize+count. Merge ≡ rebuild is spec-pinned.
-    */
-  def mergeLexicalIndex(index: DataFrame, delta: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val fresh = lexicalIndex(delta, idCol, textCol)
-    index.join(broadcast(delta.select(col(idCol).as("doc_id")).distinct),
-        Seq("doc_id"), "left_anti")
-      .unionByName(fresh)
-  }
-
-  /** Drop docs from a persisted [[lexicalIndex]] — the retraction
-    * half of serving-layer maintenance over a curation tick
-    * ([[mergeLexicalIndex]] folds the tick's additions in; this
-    * drops its retracted canonicals, e.g. [[graft.examples
-    * .TrainingDataJob.tick]]'s `retractedIds`). Broadcast anti-join
-    * on the tick-sized id set — nothing corpus-sized moves. The
-    * maintained index tracks the shipped document set exactly
-    * (spec-pinned), so N/idf/avgdl stay consistent with what a
-    * rebuild over the post-tick corpus would compute. The id column
-    * is taken from `ids` BY NAME (like [[mergeLexicalIndex]]) — a
-    * frame without it fails analysis instead of silently anti-joining
-    * on whatever column happens to come first.
-    */
-  def removeLexicalDocs(index: DataFrame, ids: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    index.join(
-      broadcast(ids.select(col(idCol).as("doc_id")).distinct),
-      Seq("doc_id"), "left_anti")
-
-  /** BM25 weights from a persisted [[lexicalIndex]] table: tf/dl read
-    * from postings, N and Σdl derived as exact integer aggregates
-    * over them (NULL presence rows count toward N, add 0 to Σdl, and
-    * emit no weight row) — both passes are cheap scans of the stored
-    * postings, nothing re-tokenizes. Run after each
-    * [[mergeLexicalIndex]]; [[searchWeights]] serves from the result.
-    * Same values as [[bm25]] over the corresponding text (spec-pinned
-    * parity, empty docs included).
-    */
-  def bm25FromIndex(index: DataFrame,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Weights(index,
-      index.agg(
-        countDistinct(col("doc_id")).as("__nd"),
-        sum(col("tf")).as("__suml")),
-      k1, b)
-
-  /** THE Okapi weight formula — the single code path both [[bm25]]
-    * and [[bm25FromIndex]] feed (they differ only in where the
-    * corpus scalars come from), so the two can't drift.
+  /** THE Okapi weight formula over a [[lexicalIndex]] and the corpus
+    * scalars [[bm25]] derives.
     *
     * Plan shape: document frequency as a vocab-sized
     * `groupBy(token).count()` joined back onto the checkpointed

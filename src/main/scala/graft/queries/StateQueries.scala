@@ -191,7 +191,7 @@ object StateQueries {
         events.select(to_date(col("ts")).as("ws"), col("user_id")),
         Seq("ws"), "user_id")
       // persist + read back: the query answers from the state DIR,
-      // exactly as a serving layer reads what sketchStateTicks wrote
+      // exactly as a serving layer reads persisted window cells
       val store = java.nio.file.Files
         .createTempDirectory("graft-cms-windows").toString
       state.write.mode("overwrite").parquet(store)

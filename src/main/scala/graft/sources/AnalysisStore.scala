@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
-import graft.operators.Incremental
-
 /** The persisted analysis store (SURVEY §2.1 S2/S3): the reference
   * drops/recreates or upserts MySQL tables per run (reference
   * README.md:133-134,146); here each table family is a Parquet
@@ -17,9 +15,8 @@ import graft.operators.Incremental
   *    the delta touches, drops the stored rows its removal predicate
   *    names, unions the delta and rewrites those partition dirs by
   *    dynamic partition overwrite, leaving every other partition's
-  *    files untouched. An unpartitioned table ([[writeIncremental]])
-  *    is merged by key into a staging dir and swapped in
-  *    ([[stageAndSwap]]).
+  *    files untouched. A rewrite that replaces a whole table goes
+  *    through a staging dir and a swap ([[stageAndSwap]]).
   */
 object AnalysisStore {
 
@@ -50,9 +47,7 @@ object AnalysisStore {
     * writer would fall back to writeFull(delta) and silently replace
     * all prior state. Called by every read-modify-write entry point;
     * callers that only READ state at tick start should call it for
-    * each state path before their exists() checks. The state-folding
-    * streams heal in one place, `graft.streaming.FoldAndSwap`, before
-    * they ask whether state exists.
+    * each state path before their exists() checks.
     *
     * @return true if a backup was restored
     */
@@ -263,8 +258,8 @@ object AnalysisStore {
   /** Crash-safe table rewrite: materialize the new contents into a
     * staging dir (the source stays intact and readable throughout),
     * then swap via renames. Shared by every path that rewrites a
-    * table in place (incremental merge, compaction, streaming ticks)
-    * so the rename choreography lives in exactly one place.
+    * table in place (a tick's reshape rebuild, compaction, audited
+    * publishes) so the rename choreography lives in exactly one place.
     */
   def stageAndSwap(
       spark: SparkSession, path: String)(
@@ -409,57 +404,6 @@ object AnalysisStore {
     nFiles
   }
 
-  /** Z-order rewrite of a store table — the OPTIMIZE ZORDER
-    * maintenance op: compaction (file count sized to
-    * `targetFileBytes`, the [[compact]] rule) and multi-dimensional
-    * clustering ([[graft.operators.Layout]]) in ONE crash-safe
-    * rewrite, so a table that accumulated tick-sized appends comes
-    * out as few, internally sorted files whose per-file min/max
-    * bounding boxes prune predicates on ANY of `zorderCols`. Same
-    * staging-swap as every other rewrite: readers never see a
-    * half-optimized table, and a crash in the swap window is undone
-    * by [[recover]].
-    *
-    * @return number of files after the rewrite
-    */
-  def optimize(
-      spark: SparkSession, path: String, zorderCols: Seq[String],
-      bits: Int = 8, targetFileBytes: Long = 128L << 20,
-      partitionBy: Seq[String] = Nil): Int = {
-    // a table left mid-swap by a crash must be healed BEFORE the size
-    // probe, or the maintenance op can never fix the exact state its
-    // crash-safety doc promises to undo (stageAndSwap recovers too,
-    // but getContentSummary runs first)
-    recover(spark, path)
-    val fs = fsOf(spark, path)
-    val totalBytes = fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(path)).getLength
-    val nFiles = math.max(1,
-      math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    stageAndSwap(spark, path) { staging =>
-      graft.operators.Layout.zorderWrite(
-        read(spark, path), zorderCols, bits, nFiles, staging, partitionBy)
-    }
-    nFiles
-  }
-
-  /** Merge `delta` into the table at `path` by key (rows with a key
-    * present in delta are replaced; new keys appended). Missing table
-    * → plain write. The merged result is staged and swapped so a
-    * failed job never leaves a half-written table.
-    */
-  def writeIncremental(
-      spark: SparkSession, delta: DataFrame, path: String,
-      keys: Seq[String]): Unit =
-    readExisting(spark, path) match {
-      case None => writeFull(delta, path)
-      case Some(table) =>
-        stageAndSwap(spark, path) { staging =>
-          Incremental.merge(table, delta, keys)
-            .write.mode(SaveMode.Overwrite).parquet(staging)
-        }
-    }
-
   /** Partition-pruned incremental merge, step one: the partitions a
     * merge into `table` touches, in ONE bounded collect ([[graft
     * .operators.ModelCollect]], model-sized, never row data). They are
@@ -502,7 +446,7 @@ object AnalysisStore {
       partitionBy: Seq[String],
       removeKeys: org.apache.spark.sql.Column): Seq[Row] = {
     require(partitionBy.nonEmpty,
-      "use writeIncremental for unpartitioned tables")
+      "touchedPartitions needs at least one partition column")
     import org.apache.spark.sql.functions.{col, lit}
     // rows being removed may live in partitions the delta no longer
     // writes to — locate them, and the files holding them, so their
@@ -523,9 +467,9 @@ object AnalysisStore {
   /** Partition-pruned incremental merge — the write-side twin of the
     * read-side partition pruning, and the shape a tick MUST take at
     * 100 TB (reference README.md:133-134 "only add/modify what has
-    * changed"): an unpartitioned [[writeIncremental]] rewrites the
-    * whole table every tick, which turns a 30-minute schedule into a
-    * full-store write amplification.
+    * changed"): an unpartitioned merge would rewrite the whole table
+    * every tick, which turns a 30-minute schedule into a full-store
+    * write amplification.
     *
     * Step two of the merge, after [[touchedPartitions]] (the caller
     * holds both the stored table and that collect, so it can run the
@@ -579,8 +523,8 @@ object AnalysisStore {
     // partition dirs, so an evolved delta schema would leave the
     // table's partitions schema-divergent (readable only with
     // mergeSchema, silently column-dropping without). Fail fast
-    // here; evolve schemas through the full [[writeIncremental]]
-    // rewrite, which re-materializes every row under the new schema.
+    // here; evolve schemas through a full [[writeFull]] rewrite,
+    // which re-materializes every row under the new schema.
     val merged = kept.unionByName(delta)
     partitioned(merged, partitionBy)
       .mode(SaveMode.Overwrite)
@@ -596,37 +540,5 @@ object AnalysisStore {
       .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)))
       .filter(fs.exists).map(_.getParent).distinct
       .foreach(fs.delete(_, true))
-  }
-
-  /** Retention: drop whole partition DIRECTORIES whose partition
-    * value fails `keep` — the time-to-live sweep a partitioned fact
-    * store runs periodically (reference semantics: old encounters age
-    * out of the hot analysis tables). Pure metadata+delete — no row
-    * is read or rewritten, so the sweep costs O(partitions), not
-    * O(data); surviving partitions stay byte-identical (pruned reads
-    * are untouched).
-    *
-    * `keep` receives the LOGICAL partition value: Spark
-    * percent-escapes special characters in partition directory names
-    * (':' → '%3A', ' ' → '%20'), so timestamp-like values must be
-    * unescaped before the predicate sees them or retention would
-    * match (and delete) the wrong directories.
-    *
-    * @return the dropped partition values (unescaped)
-    */
-  def dropPartitions(
-      spark: SparkSession, path: String, partitionCol: String,
-      keep: String => Boolean): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, path)
-    val prefix = s"$partitionCol="
-    val dropped = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map(s => (s.getPath,
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(s.getPath.getName.stripPrefix(prefix))))
-      .filterNot { case (_, v) => keep(v) }
-    dropped.foreach { case (p, _) => fs.delete(p, true) }
-    dropped.map(_._2)
   }
 }

@@ -95,47 +95,4 @@ object JsonLines {
     */
   def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
-
-  /** Streaming twin of [[readRaw]]: jsonl drops landing under `path`
-    * as a structured stream (file-source offsets + checkpointing give
-    * resumable exactly-once-per-batch, the [[graft.streaming
-    * .EtlStreaming]] pattern). Same parse, same blank-line rule.
-    */
-  def readStreamRaw(spark: SparkSession, path: String,
-      schema: StructType): DataFrame = {
-    require(!schema.fieldNames.contains(CorruptCol),
-      s"schema must not already contain $CorruptCol")
-    spark.readStream.text(path)
-      .filter(length(trim(col("value"))) > 0)
-      .select(col("value"), input_file_name().as("src_file"),
-        parsed(schema).as("data"))
-  }
-
-  /** Per-drop ingest loop: each micro-batch is quarantine-split, the
-    * malformed lines land under `quarantineRoot/query=<qid>/batch=<id>`
-    * (overwrite — a replayed batch rewrites its own dir, so
-    * at-least-once redelivery never duplicates quarantine rows; the
-    * query id is stable across restarts FROM THE SAME CHECKPOINT but
-    * fresh for a new/reset checkpoint, whose batch ids restart at 0 —
-    * without the query scope that restart would clobber previously
-    * quarantined raw lines), and the clean rows go to `handle`
-    * (schema columns only). The batch is checkpointed once up front:
-    * both branches would otherwise re-run the file-scan+parse
-    * subtree. Caller attaches trigger/checkpoint options and starts
-    * the writer.
-    */
-  def ingestStream(raw: DataFrame, schema: StructType,
-      quarantineRoot: String)(handle: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    raw.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val b = batch.localCheckpoint(true)
-      val qid = Option(b.sparkSession.sparkContext
-        .getLocalProperty("sql.streaming.queryId")).getOrElse("adhoc")
-      b.filter(!isClean)
-        .select(col("value").as("raw"), col("src_file"))
-        .write.mode("overwrite")
-        .parquet(s"$quarantineRoot/query=$qid/batch=$id")
-      handle(b.filter(isClean)
-        .select(schema.fieldNames.map(f => col(s"data.$f").as(f)).toIndexedSeq: _*))
-    }
 }

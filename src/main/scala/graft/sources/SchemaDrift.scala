@@ -53,20 +53,4 @@ object SchemaDrift {
       .map(d => (d.column, d.status, d.oldType, d.newType))
       .toDF("col_name", "status", "old_type", "new_type")
   }
-
-  /** Admission check for an ingest tick against the stored schema:
-    * additions pass when `allowAdds` (the merge layer null-fills
-    * history), removals pass when `allowRemovals` (the tick's missing
-    * columns null-fill), retypes NEVER pass. Returns the offending
-    * drift rows; empty means admit.
-    */
-  def violations(stored: StructType, incoming: StructType,
-      allowAdds: Boolean = true,
-      allowRemovals: Boolean = false): Seq[Drift] =
-    compare(stored, incoming).filter {
-      case Drift(_, "retyped", _, _) => true
-      case Drift(_, "added", _, _)   => !allowAdds
-      case Drift(_, "removed", _, _) => !allowRemovals
-      case _                         => false
-    }
 }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{input_file_name, max, min}
 
 import graft.sources.AnalysisStore
 
@@ -179,53 +178,6 @@ class AnalysisStoreSpec extends SparkSpec {
     // no staging/backup leftovers
     val parent = new java.io.File(dir).getParentFile.list().toSeq
     assert(parent == Seq("frag"), s"leftovers: $parent")
-  }
-
-  test("optimize z-orders a fragmented table: rows intact, boxes tighten") {
-    val dir = Files.createTempDirectory("store").resolve("zopt").toString
-    // two independent uniform dims, fragmented into 16 random files:
-    // every file's bounding box spans ~the full plane
-    val rnd = new scala.util.Random(11)
-    val data = (1 to 4000)
-      .map(i => (i.toLong, rnd.nextDouble() * 100, rnd.nextDouble() * 100))
-      .toDF("k", "x", "y")
-    data.repartition(16).write.parquet(dir)
-    // force a multi-file rewrite: tiny target size → ≥ 8 files
-    val n = AnalysisStore.optimize(spark, dir, Seq("x", "y"),
-      bits = 8, targetFileBytes = 8L << 10)
-    assert(n >= 8, s"fixture: want a multi-file rewrite, got $n")
-    assertSameRows(spark.read.parquet(dir), data)
-    // post-optimize, per-file y-boxes must prune: a y-band predicate
-    // touches at most half the files (pre-optimize it touches all).
-    // The band sits INSIDE the first-level z split — a band straddling
-    // the midpoint is the curve's known degenerate case (every half
-    // intersects it) and would prove nothing either way
-    val boxes = spark.read.parquet(dir)
-      .groupBy(input_file_name())
-      .agg(min("y").as("lo"), max("y").as("hi"))
-      .select("lo", "hi").as[(Double, Double)].collect().toSeq
-    val touched = boxes.count { case (lo, hi) => hi >= 5.0 && lo <= 15.0 }
-    assert(touched <= boxes.size / 2,
-      s"z-order must localize x: $touched/${boxes.size} files touch the band")
-    val parent = new java.io.File(dir).getParentFile.list().toSeq
-    assert(parent == Seq("zopt"), s"leftovers: $parent")
-  }
-
-  test("optimize keeps a partitioned table's directory layout") {
-    val dir = Files.createTempDirectory("store").resolve("zpart").toString
-    val rnd = new scala.util.Random(5)
-    val data = (1 to 2000)
-      .map(i => (i.toLong, i % 4, rnd.nextDouble() * 100, rnd.nextDouble() * 100))
-      .toDF("k", "p", "x", "y")
-    data.write.partitionBy("p").parquet(dir)
-    AnalysisStore.optimize(spark, dir, Seq("x", "y"), bits = 8,
-      targetFileBytes = 1L << 30, partitionBy = Seq("p"))
-    // directory layout intact — a later dynamic partition overwrite
-    // would otherwise orphan rows sitting in flat root files
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    assert(dirs == Set("p=0", "p=1", "p=2", "p=3"), s"got $dirs")
-    assertSameRows(spark.read.parquet(dir).select("k", "p", "x", "y"), data)
   }
 
   test("compact keeps a partitioned table's directory layout and pruning") {
@@ -455,45 +407,25 @@ class AnalysisStoreSpec extends SparkSpec {
       full.toDF("k", "m", "v"))
   }
 
-  test("writeIncremental: first write, then merge-by-key over ticks") {
-    val dir = Files.createTempDirectory("store").resolve("inc").toString
-    AnalysisStore.writeIncremental(spark,
-      Seq((1L, "a1"), (2L, "b1")).toDF("k", "v"), dir, Seq("k"))
-    AnalysisStore.writeIncremental(spark,
-      Seq((2L, "b2"), (3L, "c2")).toDF("k", "v"), dir, Seq("k"))
-    AnalysisStore.writeIncremental(spark,
-      Seq((1L, "a3")).toDF("k", "v"), dir, Seq("k"))
-    val rows = spark.read.parquet(dir).as[(Long, String)]
-      .collect().sortBy(_._1)
-    assert(rows.toSeq == Seq((1L, "a3"), (2L, "b2"), (3L, "c2")))
-    // schema evolution through the full-rewrite path: the tick's new
-    // column lands uniformly (old rows null) because every row is
-    // re-materialized under the new schema
-    AnalysisStore.writeIncremental(spark,
-      Seq((3L, "c4", 9.0)).toDF("k", "v", "w"), dir, Seq("k"))
-    val evolved = spark.read.parquet(dir).select("k", "v", "w")
-      .as[(Long, String, Option[Double])].collect().sortBy(_._1)
-    assert(evolved.toSeq == Seq((1L, "a3", None), (2L, "b2", None),
-      (3L, "c4", Some(9.0))))
-    // no staging/backup leftovers
-    val parent = new java.io.File(dir).getParentFile.list().toSeq
-    assert(parent == Seq("inc"), s"leftovers: $parent")
-  }
-
-  test("recover restores a mid-swap crash; retrying writeIncremental keeps prior state") {
+  test("recover restores a mid-swap crash; a retried readExisting + " +
+      "stageAndSwap merge keeps prior state") {
     val dir = Files.createTempDirectory("store").resolve("crash").toString
-    AnalysisStore.writeIncremental(spark,
-      Seq((1L, "a1"), (2L, "b1")).toDF("k", "v"), dir, Seq("k"))
+    AnalysisStore.writeFull(Seq((1L, "a1"), (2L, "b1")).toDF("k", "v"), dir)
     // simulate stageAndSwap dying in its non-atomic window: target
     // renamed away to __old, staging never renamed in
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + "__old")))
-    // the retry's incremental write must NOT treat the table as
-    // missing (which would writeFull the delta and erase k=1)
-    AnalysisStore.writeIncremental(spark,
-      Seq((2L, "b2")).toDF("k", "v"), dir, Seq("k"))
+    // the retry's merge must NOT find the table missing (which would
+    // writeFull the delta and erase k=1): readExisting heals first
+    val table = AnalysisStore.readExisting(spark, dir)
+    assert(table.isDefined, "readExisting must restore the backup")
+    AnalysisStore.stageAndSwap(spark, dir) { staging =>
+      graft.operators.Incremental.merge(table.get,
+          Seq((2L, "b2")).toDF("k", "v"), Seq("k"))
+        .write.parquet(staging)
+    }
     val rows = spark.read.parquet(dir).as[(Long, String)]
       .collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, "a1"), (2L, "b2")),
@@ -507,42 +439,6 @@ class AnalysisStoreSpec extends SparkSpec {
     assert(!AnalysisStore.recover(spark, dir)) // idempotent no-op
   }
 
-  test("dropPartitions unescapes partition values before the keep predicate") {
-    val dir = Files.createTempDirectory("ttl").toString + "/esc"
-    // timestamp-like values: ':' and ' ' are %-escaped in dir names
-    Seq((1L, "2024-01-01 00:00:00"), (2L, "2024-02-01 00:00:00"),
-      (3L, "2024-03-01 00:00:00")).toDF("id", "ts")
-      .write.partitionBy("ts").parquet(dir)
-    // on-disk names carry %3A — the predicate must see the logical value
-    assert(new java.io.File(dir).list()
-      .exists(_.contains("%3A")), "fixture should exercise escaping")
-    val dropped = AnalysisStore.dropPartitions(spark, dir, "ts",
-      keep = _ >= "2024-03-01 00:00:00")
-    assert(dropped.toSet ==
-      Set("2024-01-01 00:00:00", "2024-02-01 00:00:00"))
-    assert(spark.read.parquet(dir).select("id").as[Long].collect().toSeq
-      == Seq(3L))
-  }
-
-  test("dropPartitions: TTL sweep deletes whole dirs, survivors untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("ttl").toString + "/t"
-    Seq((1L, "2024-01"), (2L, "2024-02"), (3L, "2024-03"))
-      .toDF("id", "month")
-      .write.partitionBy("month").parquet(dir)
-    // fingerprint the surviving partition's files before the sweep
-    def files(month: String) =
-      new java.io.File(s"$dir/month=$month").listFiles()
-        .map(f => (f.getName, f.length, f.lastModified)).toSeq.sorted
-    val before = files("2024-03")
-    val dropped = AnalysisStore.dropPartitions(spark, dir, "month",
-      keep = _ >= "2024-03")
-    assert(dropped.toSet == Set("2024-01", "2024-02"))
-    assert(!new java.io.File(s"$dir/month=2024-01").exists())
-    assert(files("2024-03") == before, "survivor partition was touched")
-    // the table still reads, containing exactly the survivors
-    assert(spark.read.parquet(dir).select("id").as[Long].collect().toSeq
-      == Seq(3L))
-  }
   test("writeAuditPublish: publishes on pass, rejects preserve v1, staging cleaned") {
     import org.apache.spark.sql.functions.col
     val path = Files.createTempDirectory("wap").resolve("t").toString

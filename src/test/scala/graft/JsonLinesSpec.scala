@@ -89,44 +89,6 @@ class JsonLinesSpec extends SparkSpec {
     assert(a == b, "round-trip must be lossless")
   }
 
-  test("streaming ingest: drops split good/quarantine; checkpoint resumes; replay-safe") {
-    val root = Files.createTempDirectory("jsonlstream")
-    val dropDir = root.resolve("drops")
-    Files.createDirectories(dropDir)
-    val qroot = root.resolve("quarantine").toString
-    val ckpt = root.resolve("ckpt").toString
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-
-    def drop(name: String, lines: Seq[String]): Unit =
-      Files.write(dropDir.resolve(name), lines.mkString("\n").getBytes("UTF-8"))
-    def startQuery() = JsonLines.ingestStream(
-        JsonLines.readStreamRaw(spark, dropDir.toString, schema),
-        schema, qroot) { good =>
-      seen ++= good.as[(Long, String)].collect()
-    }.option("checkpointLocation", ckpt).start()
-
-    drop("d1.jsonl", Seq("""{"id": 1, "txt": "a"}""", "junk1"))
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    q1.stop()
-    assert(seen.toSet == Set((1L, "a")))
-    val quar = spark.read.parquet(qroot)
-    assert(quar.select("raw").as[String].collect().toSeq == Seq("junk1"))
-
-    // restart from checkpoint: only the NEW drop is processed
-    drop("d2.jsonl", Seq("""{"id": 2, "txt": "b"}""", "junk2"))
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop()
-    assert(seen.toSet == Set((1L, "a"), (2L, "b")),
-      "a restart must not reprocess committed drops")
-    assert(seen.size == 2)
-    val quar2 = spark.read.parquet(qroot)
-    assert(quar2.select("raw").as[String].collect().toSet ==
-      Set("junk1", "junk2"),
-      "quarantine accumulates across batch dirs")
-  }
-
   test("a schema already claiming the corrupt column is rejected") {
     intercept[IllegalArgumentException] {
       JsonLines.read(spark, "/tmp/nope.jsonl",

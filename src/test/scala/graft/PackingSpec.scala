@@ -55,26 +55,6 @@ class PackingSpec extends SparkSpec {
     assert(p.contains("Window"), p)
   }
 
-  test("packSequencesDelta continues the prior packing exactly") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val old = docs.filter(col("doc_id") < 300)
-    val delta = docs.filter(col("doc_id") >= 300)
-    val full = Packing.packSequences(docs, "doc_id", "text", budget = 512)
-    // bookmark persists as a scalar between ticks
-    val bookmark = Packing.tokenBookmark(old, "text")
-    val incremental = Packing.packSequencesDelta(delta, "doc_id", "text",
-      budget = 512, startTokens = bookmark)
-    assertSameRows(
-      incremental.orderBy("doc_id"),
-      full.filter(col("doc_id") >= 300).orderBy("doc_id"))
-    // and the old assignments are untouched by construction: the full
-    // run restricted to old docs equals packing old alone
-    assertSameRows(
-      Packing.packSequences(old, "doc_id", "text", budget = 512)
-        .orderBy("doc_id"),
-      full.filter(col("doc_id") < 300).orderBy("doc_id"))
-  }
-
   test("lengthBucketBatches: homogeneous full batches, band-exact thresholds, global ids") {
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
     val out = Packing.lengthBucketBatches(docs, "doc_id", "text",

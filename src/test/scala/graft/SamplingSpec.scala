@@ -94,33 +94,6 @@ class SamplingSpec extends SparkSpec {
     assert(first != epoch2, "a new seed must reshuffle")
   }
 
-  test("writeShuffledShards: one key-ordered file per shard dir, one exchange") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
-    Sampling.writeShuffledShards(docs, out, "doc_id", "train1", 8)
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
-    assert(dirs.map(_.getName).toSet ==
-      (0 until 8).map(i => s"shard=$i").toSet)
-    // exactly ONE parquet file per shard (loaders stream it sequentially)
-    dirs.foreach { d =>
-      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
-        s"${d.getName} must hold exactly one file")
-    }
-    // within a shard file the rows are in shuffle_key order, and the
-    // re-read union is exactly the corpus
-    val shard0 = spark.read.parquet(s"$out/shard=0")
-      .select("shuffle_key").as[String].collect()
-    assert(shard0.toSeq == shard0.toSeq.sorted, "shard file must be key-ordered")
-    assert(spark.read.parquet(out).count() == docs.count())
-    // plan: the export pays exactly one exchange (the shard repartition)
-    val plan = Sampling.shuffleShards(docs, "doc_id", "train1", 8)
-      .repartition(8, col("shard"))
-      .sortWithinPartitions("shard", "shuffle_key")
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(plan).size == 1, plan)
-  }
-
   test("fixedPerStratum: exact n per stratum, seeded, deterministic") {
     val docs = Tables.load(spark, sfDir, "documents")
     val sampled = Sampling.fixedPerStratum(docs, "doc_id", "lang",

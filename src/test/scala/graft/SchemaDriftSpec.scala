@@ -33,23 +33,6 @@ class SchemaDriftSpec extends SparkSpec {
       .find(_.column == "tags").map(_.status).contains("retyped"))
   }
 
-  test("violations: adds tolerated by default, removals opt-in, retypes never") {
-    val incoming = StructType(Seq(
-      StructField("id", StringType),                    // retyped
-      StructField("v", DoubleType),                     // unchanged
-      StructField("extra", IntegerType)))               // added; tags removed
-    val v = SchemaDrift.violations(stored, incoming)
-    assert(v.map(d => (d.column, d.status)) ==
-      Seq(("id", "retyped"), ("tags", "removed")))
-    val tolerant = SchemaDrift.violations(stored, incoming,
-      allowRemovals = true)
-    assert(tolerant.map(_.column) == Seq("id"))
-    val strict = SchemaDrift.violations(stored, incoming,
-      allowAdds = false, allowRemovals = true)
-    assert(strict.map(_.column).toSet == Set("id", "extra"))
-    assert(SchemaDrift.violations(stored, stored).isEmpty)
-  }
-
   test("report frame matches compare") {
     val incoming = StructType(Seq(StructField("id", LongType)))
     val rows = SchemaDrift.report(spark, stored, incoming)

@@ -176,11 +176,10 @@ class SimilaritySpec extends SparkSpec {
     val resR = (exact & resAdc).size.toDouble / exact.size
     assert(resR >= rawR, s"residual ADC recall $resR < raw ADC recall $rawR")
 
-    // serving parity: persisted index + reloaded model answer batches
-    // identically to the in-memory run
+    // serving parity: persisted index + reloaded codebooks answer
+    // batches identically to the in-memory run
     val dir = java.nio.file.Files.createTempDirectory("ivfpq")
     idx.write.parquet(dir.resolve("idx").toString)
-    Similarity.saveCentroids(spark, cents, dir.resolve("cents").toString)
     Similarity.savePqCodebooks(spark, books, dir.resolve("books").toString)
     val loadedBooks = Similarity.loadPqCodebooks(spark, dir.resolve("books").toString)
     loadedBooks.zip(books).foreach { case (a, b) =>
@@ -188,8 +187,7 @@ class SimilaritySpec extends SparkSpec {
     assertSameRows(
       Similarity.ivfPqTopKFromIndex(
         spark.read.parquet(dir.resolve("idx").toString),
-        Similarity.loadCentroids(spark, dir.resolve("cents").toString),
-        loadedBooks, queries, "vec_id", "embedding", 5,
+        cents, loadedBooks, queries, "vec_id", "embedding", 5,
         nProbe = 4, oversample = 5, rerankWith = Some(corpus)),
       Similarity.ivfPqTopKFromIndex(idx, cents, books,
         queries, "vec_id", "embedding", 5,
@@ -214,20 +212,16 @@ class SimilaritySpec extends SparkSpec {
     val q2 = e.filter(col("vec_id") >= 5 && col("vec_id") < 10)
     val dir = java.nio.file.Files.createTempDirectory("annidx")
 
-    // IVF: write (index table + centroid model) once, reload, probe
-    // two query batches — no retraining, no re-assignment
+    // IVF: write the index table once, reload, probe two query
+    // batches — no retraining, no re-assignment
     val centroids = Similarity.trainCentroids(corpus, "vec_id", "embedding", 8)
     val ivfPath = dir.resolve("ivf").toString
-    val ctPath = dir.resolve("centroids").toString
     Similarity.ivfAssign(corpus, "vec_id", "embedding", centroids)
       .write.parquet(ivfPath)
-    Similarity.saveCentroids(spark, centroids, ctPath)
     val loadedIdx = spark.read.parquet(ivfPath)
-    val loadedCt = Similarity.loadCentroids(spark, ctPath)
-    assert(loadedCt.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq)
     for (q <- Seq(q1, q2))
       assertSameRows(
-        Similarity.ivfTopKFromIndex(loadedIdx, loadedCt, q,
+        Similarity.ivfTopKFromIndex(loadedIdx, centroids, q,
           "vec_id", "embedding", k = 5),
         Similarity.ivfTopKFromIndex(
           Similarity.ivfAssign(corpus, "vec_id", "embedding", centroids),
@@ -257,7 +251,7 @@ class SimilaritySpec extends SparkSpec {
 
     // serving-path plan: the index scan feeds the probe join with no
     // corpus-side shuffle — the only hash exchange is the top-k agg
-    val p = Similarity.ivfTopKFromIndex(loadedIdx, loadedCt, q1,
+    val p = Similarity.ivfTopKFromIndex(loadedIdx, centroids, q1,
       "vec_id", "embedding", k = 5)
       .queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)

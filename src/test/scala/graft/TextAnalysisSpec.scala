@@ -323,17 +323,16 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out == Seq((1L, 11L, 1, w(1, 1, 2)), (1L, 10L, 2, w(1, 1, 3))))
   }
 
-  test("bm25FromIndex over lexicalIndex is the text-path bm25, empty docs included") {
+  test("bm25 counts an empty doc toward N; its index keeps a presence row, no weights") {
     // doc 4 is empty: a presence row in the index, no weight rows, but
-    // it counts toward N — exactly like the text path
+    // it counts toward N
     val df = Seq((1L, "a a b"), (2L, "a c"), (3L, "b b c a"), (4L, ""))
       .toDF("doc_id", "text")
     val direct = TextAnalysis.bm25(df, "doc_id", "text")
       .orderBy("doc_id", "token").as[(Long, String, Double)].collect().toSeq
-    val viaIndex = TextAnalysis.bm25FromIndex(
-        TextAnalysis.lexicalIndex(df, "doc_id", "text"))
-      .orderBy("doc_id", "token").as[(Long, String, Double)].collect().toSeq
-    assert(viaIndex == direct)
+    assert(TextAnalysis.lexicalIndex(df, "doc_id", "text")
+      .filter($"doc_id" === 4L).as[(Long, String, Long, Int)].collect()
+      .toSeq == Seq((4L, null, 0L, 0)))
     assert(direct.forall(_._1 != 4L))
     // N=4 (not 3) flows into every idf; pin one weight to prove it:
     // doc 2 token "c": df=2, tf=1, dl=2, Σdl=9
@@ -341,61 +340,6 @@ class TextAnalysisSpec extends SparkSpec {
     val idf = math.log(1.0 + (4 - 2 + 0.5) / (2 + 0.5))
     val w = r4(idf * 2.2 / (1 + 1.2 * (0.25 + 0.75 * (2.0 * 4 / 9))))
     assert(direct.find(t => t._1 == 2L && t._2 == "c").map(_._3).contains(w))
-  }
-
-  test("mergeLexicalIndex equals a rebuild and replaces re-shipped docs") {
-    val part1 = Seq((1L, "a a b"), (2L, "a c")).toDF("doc_id", "text")
-    val part2 = Seq((3L, "b c c"), (4L, "")).toDF("doc_id", "text")
-    val full = part1.unionByName(part2)
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.as[(Long, String, Long, Int)].collect().toSet
-    val merged = TextAnalysis.mergeLexicalIndex(
-      TextAnalysis.lexicalIndex(part1, "doc_id", "text"),
-      part2, "doc_id", "text")
-    assert(rows(merged) == rows(TextAnalysis.lexicalIndex(full, "doc_id", "text")))
-    // an updated doc 2 replaces its postings (no stale "c" row at
-    // tf=1); an update-to-empty doc 3 keeps its presence row only
-    val updated = TextAnalysis.mergeLexicalIndex(
-      merged, Seq((2L, "d d"), (3L, "")).toDF("doc_id", "text"),
-      "doc_id", "text")
-    val expected = TextAnalysis.lexicalIndex(
-      Seq((1L, "a a b"), (2L, "d d"), (3L, ""), (4L, "")).toDF("doc_id", "text"),
-      "doc_id", "text")
-    assert(rows(updated) == rows(expected))
-    assert(rows(updated).contains((3L, null, 0L, 0)))
-  }
-
-  test("merge + remove maintain the index at exactly the shipped set across a tick") {
-    val shipped = Seq((1L, "a a b"), (2L, "a c"), (3L, "b c")).toDF("doc_id", "text")
-    val additions = Seq((4L, "c d"), (5L, "")).toDF("doc_id", "text")
-    val retracted = Seq(Tuple1(2L)).toDF("doc_id")
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.as[(Long, String, Long, Int)].collect().toSet
-    val maintained = TextAnalysis.removeLexicalDocs(
-      TextAnalysis.mergeLexicalIndex(
-        TextAnalysis.lexicalIndex(shipped, "doc_id", "text"),
-        additions, "doc_id", "text"),
-      retracted)
-    val rebuild = TextAnalysis.lexicalIndex(
-      Seq((1L, "a a b"), (3L, "b c"), (4L, "c d"), (5L, ""))
-        .toDF("doc_id", "text"),
-      "doc_id", "text")
-    assert(rows(maintained) == rows(rebuild))
-  }
-
-  test("searchWeights over a merged index serves the full-corpus bm25Search result") {
-    val part1 = Seq((10L, "a a b")).toDF("doc_id", "text")
-    val part2 = Seq((11L, "a c")).toDF("doc_id", "text")
-    val query = Seq((1L, "b c c")).toDF("doc_id", "text")
-    val weights = TextAnalysis.bm25FromIndex(TextAnalysis.mergeLexicalIndex(
-      TextAnalysis.lexicalIndex(part1, "doc_id", "text"),
-      part2, "doc_id", "text"))
-    val served = TextAnalysis.searchWeights(weights, query, "doc_id", "text", k = 2)
-      .as[(Long, Long, Int, Double)].collect().toSeq.sortBy(_._3)
-    val direct = TextAnalysis.bm25Search(part1.unionByName(part2), query,
-        "doc_id", "text", k = 2)
-      .as[(Long, Long, Int, Double)].collect().toSeq.sortBy(_._3)
-    assert(served == direct)
   }
 
   test("pmiPairs reports only pairs at minCount with exact PMI") {
